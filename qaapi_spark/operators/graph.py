@@ -29,6 +29,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# connected_components' driver union-find gate (symmetric edge rows)
+_DRIVER_EDGE_GATE = 2_000_000
+
+
+def union_find_min(pairs) -> dict:
+    """Driver-side union-find over (a, b) edge pairs: {node: min node
+    id of its component} for every endpoint.  Union by MIN id, so every
+    root IS its component's min; pairs with a None endpoint are
+    skipped."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for n in parent}
+
 
 def connected_components(
     nodes: DataFrame,
@@ -43,6 +73,9 @@ def connected_components(
     Isolated nodes (present in ``nodes``, absent from ``edges``) keep
     themselves as their component.
     """
+    # edges with a null endpoint connect nothing — dropped up front so
+    # both routes below agree (the join rounds would drop them anyway)
+    edges = edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
@@ -58,45 +91,25 @@ def connected_components(
     # size-gated driver-sequencing contract as the Lloyd/BPE kernels.
     # comp = min reachable id either way, so the fixpoint (and every
     # consumer's oracle) is unchanged; big graphs keep the distributed
-    # propagation.  Gate: the persisted sym count bounds the collected
-    # payload (two longs per edge; 2M edges ~ 32 MB) and with it the
-    # edge-node set.
-    if sym.count() <= 2_000_000:
-        parent: dict = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in sym.collect():
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN id so every root IS its component's min
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
+    # propagation.  Gate: ONE limit(gate + 1) collect bounds the
+    # payload (two longs per edge; 2M edges ~ 32 MB) whatever the
+    # graph's size, and with it the edge-node set.
+    rows = sym.limit(_DRIVER_EDGE_GATE + 1).collect()
+    if len(rows) <= _DRIVER_EDGE_GATE:
         sym.unpersist()
         from qaapi_spark.session import register_kernel_cache
 
         node_t = dict(nodes.dtypes)[node_col]
         labeled = register_kernel_cache(
             spark.createDataFrame(
-                [(n, find(n)) for n in parent], f"node {node_t}, comp {node_t}"
+                list(union_find_min(rows).items()), f"node {node_t}, comp {node_t}"
             ).persist()
         )
         all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
         return all_nodes.join(labeled, "node", "left").select(
             "node", F.coalesce("comp", F.col("node")).alias("comp")
         )
+    del rows
     # Distributed propagation: iterate ONLY over nodes that touch an
     # edge — in a near-dup graph that is a small fraction of the
     # corpus, so every iteration's join/agg runs on the edge-node set,

@@ -371,21 +371,11 @@ def _has_tombstones(del_root: str) -> bool:
 
 def _store_rows(root: str) -> int | None:
     """Total row count of an epoch-keyed store from parquet FOOTER
-    metadata (driver-side pyarrow, no Spark job — the same trick as
-    streaming.retraction._dir_rows_estimate, summed over epochs);
-    None when unreadable."""
-    import glob
-    import os
+    metadata (driver-side pyarrow, no Spark job); None when unreadable
+    or empty."""
+    from qaapi_spark.sources.tables import footer_rows
 
-    import pyarrow.parquet as pq
-
-    files = glob.glob(os.path.join(root, "epoch=*", "*.parquet"))
-    if not files:
-        return None
-    try:
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return None
+    return footer_rows(root)
 
 
 def compact_view(spark, view_root: str, del_root: str, key_col: str) -> int:

@@ -1,266 +1,79 @@
-"""Structured-Streaming variants of the batch surface (SURVEY.md §2.9
+"""Structured-Streaming twins of the batch surface (SURVEY.md §2.9
 extension: the reference is strictly batch; this is the incremental
-upgrade path).
+upgrade path).  Each twin runs the bounded test data through a real
+streaming query with the availableNow trigger, so the plumbing is the
+one an unbounded source (Kafka, autoloader directory) would use, and
+each final relation equals its batch query's — hence shares its
+DuckDB oracle.
 
-Two shapes:
-  - windowed aggregation over an event stream with watermarked late-
-    data handling (`events_windowed_counts`)
-  - the landing-directory reconcile: stream JSON batches out of a
-    directory and apply the same maintenance semantics via
-    foreachBatch (`stream_landing_reconcile`)
+Three shapes:
+  - memory-sink streams: engine-managed state behind a watermark —
+    windowed counts (`events_windowed_counts`), exact dedup
+    (`stream_dedup_events`), event-time interval joins
+    (`stream_interval_join[_left]`) and a stream-static join
+    (`stream_static_enrich`);
+  - foreachBatch twins that fold each staged slice (an epoch) into
+    parquet stores they own: mergeable state (HLL registers, weighted
+    top-k, first-seen days), epoch-keyed appends (IVF assignments, PQ
+    codes, covariance moments, near-dup keep decisions), ordered-ingest
+    snapshots (packed offsets, SCD2 open rows, the corpus-to-shards
+    pipeline) and incrementally maintained relations (CC labels,
+    ExactSubstr trims) — plus the landing-directory reconcile
+    (`stream_landing_reconcile`), EP1 as a stream;
+  - `compact_epoch_store`, the periodic fold of an epoch store's deltas.
 
-Both run the bounded test data through a real streaming query
-(availableNow trigger + memory sink), so the plumbing is the same one
-an unbounded source (Kafka, autoloader directory) would use.
+The stager, runners, stores, guards and the epoch contract they obey
+live in `streaming/epochs.py`; streaming/retraction.py adds the
+delete-capable twins.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _scratch(prefix: str) -> str:
-    """See :func:`qaapi_spark.session.scratch_dir` (atexit-cleaned
-    mkdtemp; ADVICE r6 #4)."""
-    from qaapi_spark.session import scratch_dir
-
-    return scratch_dir(prefix)
-
-
-def _stage_monotonic_mtimes(stage_dir: str) -> None:
-    """Make FileStreamSource's delivery order EXPLICIT for ordered-ingest
-    streams (ADVICE r9 #3): the source sorts discovered files by
-    modification time, so a timestamp tie or a coarse-mtime filesystem
-    could reorder ``slice=0 .. slice=N`` micro-batches — silently
-    violating the ordered-ingest contract of stream_pack_chunks /
-    stream_scd2_history (wrong offsets / intervals, no error).  Stamp
-    every staged file with strictly increasing mtimes in slice-index
-    order so the sort key IS the intended order on any filesystem."""
-    import os
-
-    t = 946684800.0  # fixed past epoch (2000-01-01): only ORDER matters
-    for d in sorted(
-        (e for e in os.listdir(stage_dir) if e.startswith("slice=")),
-        key=lambda e: int(e.split("=", 1)[1]),
-    ):
-        p = os.path.join(stage_dir, d)
-        for f in sorted(os.listdir(p)):
-            t += 2.0
-            os.utime(os.path.join(p, f), (t, t))
+from qaapi_spark.session import scratch_dir
+from qaapi_spark.streaming.epochs import (
+    ORDERED_CONF,
+    STATE_CONF,
+    EpochStore,
+    Guards,
+    footer_min_max,
+    foreach_epoch,
+    par_writes,
+    range_slices,
+    run_epochs,
+    run_to_memory,
+    stage_slices,
+    swap,
+    tombstones,
+)
 
 
-def _store_swap(store_dir: str) -> None:
-    """Crash-safe promote of ``store_dir + '.next'`` (fully written by
-    the caller) to ``store_dir``.
+def _linked_events(spark: SparkSession, events_path: str, prefix: str, n_links=1):
+    """``events_path`` as a file stream: FileStreamSource wants a
+    directory, so the file is symlinked into one (zero-copy) — ``n_links``
+    times, each link one more arrival of every row.  Returns
+    ``(stage_dir, open_stream)``; ``open_stream()`` starts a new stream
+    over the dir with ``ts`` as a watermarkable TIMESTAMP (the schema
+    must be known up front: the RAW on-disk shape, normalized in-stream)."""
+    from qaapi_spark.sources.tables import events_stream_spec
 
-    The old rmtree-then-move pattern had a window (ADVICE r9 #2): dying
-    between the two calls left NO store, and the next epoch's existence
-    check treated the replayed batch as first-epoch — silently
-    discarding all accumulated state.  Here the old store is renamed
-    (atomic) to a recoverable trash name before the new one is renamed
-    (atomic) into place, so every crash point leaves either the store
-    or its trash on disk for :func:`_store_recover` to restore —
-    mirroring compact_files' ``.__compact_old__`` self-heal
-    (operators/maintain.py)."""
-    import os
-    import shutil
+    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
+    stage_dir = scratch_dir(prefix)
+    for i in range(n_links):
+        os.symlink(
+            os.path.abspath(events_path), os.path.join(stage_dir, f"part-{i}.parquet")
+        )
 
-    trash = store_dir + ".__swap_old__"
-    shutil.rmtree(trash, ignore_errors=True)
-    if os.path.isdir(store_dir):
-        os.rename(store_dir, trash)
-    os.rename(store_dir + ".next", store_dir)
-    shutil.rmtree(trash, ignore_errors=True)
+    def open_stream() -> DataFrame:
+        return normalize_ts(
+            spark.readStream.schema(raw_schema).format("parquet").load(stage_dir)
+        )
 
-
-def _store_recover(store_dir: str) -> bool:
-    """Entry-time self-heal + existence check for a ``_store_swap``
-    store: a crash between the two renames strands the accumulated
-    state at ``.__swap_old__`` with ``store_dir`` absent — restore it
-    (the streaming engine replays the uncommitted batch, and every
-    merge here is retry-idempotent).  A dangling ``.next`` needs no
-    handling: the replayed merge rewrites it in overwrite mode.
-
-    Returns whether the store exists after recovery — the ONLY
-    condition under which a merge may skip reading prior state
-    (first-epoch); any other read error must propagate (ADVICE r8 #2)."""
-    import os
-
-    trash = store_dir + ".__swap_old__"
-    if not os.path.isdir(store_dir) and os.path.isdir(trash):
-        os.rename(trash, store_dir)
-    return os.path.isdir(store_dir)
-
-
-def _footer_min_max(path: str, col: str):
-    """(min, max) of an integer column from parquet FOOTER statistics
-    — driver-side pyarrow, no Spark job (the round-9 sentinel trick,
-    generalized for the stagers' lo/hi probes: every ordered-ingest
-    stager pays one full-scan min/max aggregate job just to derive its
-    slice boundaries).
-
-    Exactness: parquet min/max statistics are EXACT for fixed-width
-    physical types (truncation applies only to BYTE_ARRAY/FLBA per the
-    format spec), and both the stats and Spark's F.min/F.max ignore
-    nulls — so when stats are present for every row group the result
-    is bit-identical to the aggregate.  Returns None (caller falls
-    back to the one-job Spark aggregate) when the path has no files,
-    any row group lacks stats for ``col`` (a writer may disable
-    statistics — ADVICE r9 #4), or the column is not fixed-width.
-    File discovery is the shared recursive helper (VERDICT r15 next
-    #7 / ADVICE r15: the flat glob silently forfeited the optimization
-    on partitioned stage dirs)."""
-    import pyarrow.parquet as _pq
-
-    from qaapi_spark.sources.tables import parquet_files
-
-    files = parquet_files(path)
-    if not files:
-        return None
-    lo = hi = None
-    try:
-        for f in files:
-            pf = _pq.ParquetFile(f)
-            idx = pf.schema_arrow.get_field_index(col)
-            if idx < 0 or not str(pf.schema_arrow.field(idx).type).startswith(
-                ("int", "uint")
-            ):
-                return None
-            for g in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(g).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-    except Exception:
-        return None
-    return None if lo is None else (lo, hi)
-
-
-_PQ_SCHEMAS: dict = {}
-
-try:  # clear between harness queries (no cross-query metadata reuse)
-    from qaapi_spark.session import register_ephemeral_cache
-
-    register_ephemeral_cache(_PQ_SCHEMAS)
-except Exception:  # pragma: no cover - session module always importable
-    pass
-
-
-def _read_pq(spark, path: str, key: str | None = None):
-    """``spark.read.parquet`` with the inferred schema remembered per
-    store root (optimization guide §5 — the driver should do no data
-    work it doesn't need): every un-schema'd parquet read costs a
-    1-task Spark job just to read one footer for schema inference, and
-    the per-epoch callbacks issue 2-5 such reads per epoch over stores
-    whose schema never changes within a stream (r16 job profile: about
-    half the insert epoch's job count was these).  First read infers and
-    caches; later reads of the same ``key`` pass the schema explicitly
-    (zero jobs).
-
-    ``key`` defaults to the literal path — safe because scratch roots
-    are mkdtemp-unique per query.  Callers reading per-epoch SUBDIRS of
-    one root pass ``key=root + "#e"`` so all snapshots share one entry;
-    the root itself (partitioned read, schema includes ``epoch``) keys
-    separately.  The cache is cleared between harness queries."""
-    k = key or path
-    sch = _PQ_SCHEMAS.get(k)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _PQ_SCHEMAS[k] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
-
-
-def _footer_ts_min_max_us(path: str, col: str = "ts"):
-    """(min, max) of ``unix_micros(cast(col as timestamp))`` from
-    parquet FOOTER statistics — the SCD2 stagers' boundary probe
-    (VERDICT r15 next #8: the one remaining per-stream aggregate job;
-    ``us`` is derived from ts so `_footer_min_max` can't answer it).
-
-    Exactness argument, per physical type (raw int64 stats via
-    ``min_raw``/``max_raw`` — never the lossy logical accessors):
-    - timestamp[us] (NTZ): the engine pins session tz UTC, so the
-      NTZ->TIMESTAMP cast is value-preserving and unix_micros == raw.
-    - timestamp[us, tz=UTC]: isAdjustedToUTC micros ARE unix micros.
-    - timestamp[ns]: read via nanosAsLong + ``timestamp_micros(ts div
-      1000)`` (events_stream_spec), so us == raw div 1000; ``div``
-      truncates toward zero while ``//`` floors — identical only for
-      raw >= 0, so negative raws decline.
-    min/max COMMUTE with these strictly monotonic conversions, and
-    both footer stats and F.min/F.max ignore nulls.  Returns None
-    (caller falls back to the one-job aggregate) on any other type,
-    missing stats, non-UTC tz, or no files."""
-    import pyarrow.parquet as _pq
-
-    from qaapi_spark.sources.tables import parquet_files
-
-    files = parquet_files(path)
-    if not files:
-        return None
-    lo = hi = None
-    try:
-        for f in files:
-            pf = _pq.ParquetFile(f)
-            idx = pf.schema_arrow.get_field_index(col)
-            if idx < 0:
-                return None
-            t = str(pf.schema_arrow.field(idx).type)
-            if t in ("timestamp[us]", "timestamp[us, tz=UTC]"):
-                div = 1
-            elif t in ("timestamp[ns]", "timestamp[ns, tz=UTC]"):
-                div = 1000
-            else:
-                return None
-            for g in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(g).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                rmin, rmax = st.min_raw, st.max_raw
-                if not isinstance(rmin, int) or not isinstance(rmax, int):
-                    return None
-                if rmin < 0:
-                    return None
-                lo = rmin // div if lo is None else min(lo, rmin // div)
-                hi = rmax // div if hi is None else max(hi, rmax // div)
-    except Exception:
-        return None
-    return None if lo is None else (lo, hi)
-
-
-def _par_writes(*thunks) -> None:
-    """Run an epoch's INDEPENDENT write jobs concurrently from driver
-    threads (optimization guide §2.6 — overlap jobs so one job's
-    single-task tail doesn't leave 31 cores idle).
-
-    The epoch stores' per-write cost is almost entirely fixed latency
-    (job scheduling + a 1-task coalesce(1) stage + commit, ~0.15-0.5 s
-    each on sf0.1-sized epoch relations — r15 profile_writes
-    decomposition), so N sequential writes cost the SUM of their
-    latencies while overlapped they cost roughly the MAX.
-
-    Safe because write order within an epoch is not load-bearing:
-    every store write is an epoch-keyed overwrite directory and every
-    reader filters ``epoch < N`` (or takes the latest-earlier
-    snapshot), so no consumer can observe a partially-ordered epoch;
-    a replayed epoch overwrites whatever subset landed.  Shared
-    persisted inputs are materialized once under the BlockManager's
-    per-block get-or-compute locks.  Exceptions propagate after all
-    writes settle, so a failed write still fails the stream (and the
-    engine's retry) exactly as the sequential form did."""
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-    for f in futures:
-        f.result()
+    return stage_dir, open_stream
 
 
 def events_windowed_counts(
@@ -276,36 +89,14 @@ def events_windowed_counts(
     group-by result, so the query is DuckDB-oracle checkable while
     still exercising watermark + window state machinery.
     """
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    # schema must be known up-front for a streaming source; take the
-    # RAW on-disk shape and normalize ts to TIMESTAMP in-stream
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    # FileStreamSource wants a directory; stage the single parquet file
-    # behind a symlink dir (zero-copy)
-    import os
-
-    stage_dir = _scratch(prefix="events_stream_")
-    os.symlink(os.path.abspath(events_path), os.path.join(stage_dir, "part-0.parquet"))
-
-    stream = normalize_ts(
-        spark.readStream.schema(raw_schema).format("parquet").load(stage_dir)
-    )
+    _, open_stream = _linked_events(spark, events_path, "events_stream_")
     agg = (
-        stream.withWatermark("ts", watermark)
+        open_stream()
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    name = "events_windowed_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}").select(
+    return run_to_memory(agg, "complete").select(
         F.col("w.start").alias("window_start"),
         "event_type",
         "n",
@@ -325,11 +116,11 @@ def stream_landing_reconcile(
     epoch against an idempotent merge).
     """
     from qaapi_spark import transforms as T
+    from qaapi_spark.operators.maintain import merge_insert_only
     from qaapi_spark.pipeline import CalabrioPipeline
     from qaapi_spark.schemas import ENTITY_SCHEMAS
 
     pipe = CalabrioPipeline(spark, warehouse_dir)
-
     stream = (
         spark.readStream.schema(ENTITY_SCHEMAS["all_contacts"])
         .option("multiLine", "true")
@@ -337,28 +128,20 @@ def stream_landing_reconcile(
         .json(landing_dir)
     )
 
-    from qaapi_spark.operators.maintain import merge_insert_only
-
     def upsert_batch(batch_df: DataFrame, epoch_id: int) -> None:
         new = T.contacts_curated(batch_df).dropDuplicates(["contact_id"])
         tgt = pipe.read("t_contacts")
         merged = new if tgt is None else merge_insert_only(tgt, new, ["contact_id"])
         pipe._swap_write(merged, "t_contacts")
 
-    q = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", warehouse_dir + "/_checkpoints/contacts")
-        .start()
+    foreach_epoch(
+        stream, upsert_batch, checkpoint=warehouse_dir + "/_checkpoints/contacts"
     )
-    q.awaitTermination()
     out = pipe.read("t_contacts")
     return {"t_contacts": out.count() if out is not None else 0}
 
 
-def stream_dedup_events(
-    spark: SparkSession, events_path: str, state_partitions: int | None = 8
-) -> DataFrame:
+def stream_dedup_events(spark: SparkSession, events_path: str) -> DataFrame:
     """Streaming exact dedup: the event file staged TWICE into the
     landing dir (every row arrives at least twice), recovered to one
     row per event_id with watermark + dropDuplicates.
@@ -369,48 +152,130 @@ def stream_dedup_events(
     state, which is the bounded-memory contract an unbounded source
     needs.  Append mode + availableNow => the materialized result is
     exactly the distinct event set, hence DuckDB-oracle checkable.
-
-    ``state_partitions`` sizes the stateful stage's shuffle (each
-    shuffle partition owns a state store whose open/commit cost is per
-    partition per batch, so over-partitioning a modest per-batch key
-    volume pays pure overhead: 32 -> 8 partitions measured 2.7s ->
-    1.7s on sf0.1).  Size it to expected keys-per-batch / ~500k on a
-    real cluster; ``None`` keeps the session's shuffle partitioning.
+    The stateful stage runs at `STATE_CONF` width.
     """
-    import os
-
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    stage_dir = _scratch(prefix="events_dup_stream_")
-    for i in range(2):  # duplicate arrival: same file, two source files
-        os.symlink(os.path.abspath(events_path), os.path.join(stage_dir, f"part-{i}.parquet"))
-
-    stream = normalize_ts(
-        spark.readStream.schema(raw_schema).format("parquet").load(stage_dir)
-    )
+    _, open_stream = _linked_events(spark, events_path, "events_dup_stream_", 2)
     deduped = (
-        stream.withWatermark("ts", "1 hour")
+        open_stream()
+        .withWatermark("ts", "1 hour")
         .dropDuplicates(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    name = "events_dedup_" + uuid.uuid4().hex[:8]
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            # picked up once at stream start; scoped + restored below
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+    return run_to_memory(deduped, "append", STATE_CONF)
+
+
+def _verified_jaccard_pairs(pairs, sa, sb, threshold: float):
+    """Exact bigram-Jaccard verification of LSH candidate ``pairs``
+    (id, other) against shingle-set relations ``sa``/``sb`` (id, sh):
+    keep pairs whose rounded Jaccard clears ``threshold``.  Shared by
+    every near-dup epoch (cross-batch screens, within-batch greedy and
+    CC edges) and the retraction epochs' survivor re-screens."""
+    j = (
+        pairs.join(sa.select(F.col("id"), F.col("sh").alias("sh_a")), "id")
+        .join(
+            sb.select(F.col("id").alias("other"), F.col("sh").alias("sh_b")),
+            "other",
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    return spark.sql(f"SELECT * FROM {name}")
+        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "j",
+            F.round(
+                F.col("inter")
+                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
+                4,
+            ),
+        )
+    )
+    return j.filter(F.col("j") >= threshold).select("id", "other")
+
+
+def _batch_bands(bdf: DataFrame, num_hashes: int, n_bands: int):
+    """``(sets, bands_arr, keys)`` of a batch: its hashed bigram sets
+    (docs with no shingle dropped), one row of pre-exploded band arrays
+    per doc — the form the band stores persist — and the exploded
+    (id, band, bsig) probe keys.  ``sets`` and ``bands_arr`` come back
+    PERSISTED (the caller unpersists): both feed the screens and the
+    store write.
+
+    Signatures derive from the persisted sets (identical arrays —
+    word_shingles is distinct), so an epoch tokenizes the batch text
+    once (round-10 probe: a second tokenize+shingle+hash pass was part
+    of the ~3.2 s/epoch floor), as ONE nested higher-order expression
+    over sequence(0, num_hashes-1) instead of num_hashes array_min
+    columns: identical values (xxhash64(int i, shingle) — sequence
+    elements are INT like F.lit(i)), but an O(1)-wide logical tree that
+    every downstream action re-analyzes (~1 s/epoch of driver-side
+    analysis at 64 hashes, measured round 11)."""
+    from qaapi_spark.operators.dedup import _hashed_shingle_sets, minhash_band_arrays
+
+    sets = (
+        _hashed_shingle_sets(bdf, 2, "text", "doc_id")
+        .filter(F.size("sh") > 0)
+        .persist()
+    )
+    signed = sets.select(
+        "id",
+        F.transform(
+            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+            lambda i: F.array_min(F.transform(F.col("sh"), lambda v: F.xxhash64(i, v))),
+        ).alias("sig"),
+    )
+    bands_arr = minhash_band_arrays(signed, num_hashes, n_bands).persist()
+    return sets, bands_arr, _band_keys(bands_arr)
+
+
+def _band_keys(df: DataFrame, id_as: str = "id") -> DataFrame:
+    """(``id_as``, band, bsig): one row per band of each doc of a
+    band-array relation (a narrow explode, no shuffle)."""
+    return df.select(F.col("id").alias(id_as), F.explode("bands").alias("bk")).select(
+        id_as, "bk.band", "bk.bsig"
+    )
+
+
+def _within_pairs(keys: DataFrame) -> DataFrame:
+    """Band-collision candidate pairs (id, other) with id > other among
+    the docs of ``keys``."""
+    a, b = keys.alias("a"), keys.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bsig") == F.col("b.bsig"))
+            & (F.col("a.id") > F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"))
+        .distinct()
+    )
+
+
+def _greedy_kept(keys, sets, rec, threshold: float) -> DataFrame:
+    """The greedy min-id near-dup decision of a batch: drop every doc
+    with a verified near-dup among the standing kept docs ``rec`` (id,
+    bands, sh; None on the first epoch), then, within the batch, drop a
+    doc iff a smaller-id survivor is a verified near-dup.  Returns the
+    kept batch ids."""
+    if rec is not None:
+        cand = keys.join(_band_keys(rec, "other"), ["band", "bsig"])
+        dup = (
+            _verified_jaccard_pairs(
+                cand.select("id", "other").distinct(), sets, rec.select("id", "sh"), threshold
+            )
+            .select("id")
+            .distinct()
+        )
+        keys = keys.join(dup, "id", "left_anti")
+    smaller = (
+        _verified_jaccard_pairs(_within_pairs(keys), sets, sets, threshold)
+        .select("id")
+        .distinct()
+    )
+    return keys.select("id").distinct().join(smaller, "id", "left_anti")
+
+
+def _parity_slices(df: DataFrame, id_col: str) -> list:
+    """Two slices by ``id_col`` parity: two micro-batches, so each
+    store genuinely accumulates across epochs."""
+    return [df.filter(F.col(id_col) % 2 == 0), df.filter(F.col(id_col) % 2 == 1)]
 
 
 def stream_neardup_dedup(
@@ -427,11 +292,7 @@ def stream_neardup_dedup(
     streaming half of the near-dup surface, where stream_dedup_events
     is the exact half.
 
-    Per batch (foreachBatch; effectively-once because each epoch's
-    writes go to epoch-keyed directories in OVERWRITE mode, so a retry
-    of epoch N replaces epoch N's own output instead of appending
-    duplicates — foreachBatch itself only guarantees at-least-once):
-
+    Per batch:
       1. map-only minhash signatures + band keys for the batch;
       2. cross-batch: (batch doc, kept doc) candidate pairs by band
          equi-join against the store, verified with exact shingle-set
@@ -439,7 +300,7 @@ def stream_neardup_dedup(
          verified near-dups drop;
       3. within the batch, greedy min-id over VERIFIED pairs: drop a
          doc iff a smaller-id batch survivor is a true near-dup;
-      4. append survivors' band keys and shingle sets to the stores.
+      4. append survivors' band keys and shingle sets to the store.
 
     Because candidates are exactly verified (and r=4 banding misses a
     true pair with probability (1-j^4)^16 ~ 2.2e-4 at j=0.8 — equality
@@ -456,8 +317,7 @@ def stream_neardup_dedup(
     production system keeps by retaining the kept corpus itself),
     stored as ONE nested row (id, bands: array<struct<band, bsig>>,
     sh) so each epoch commits a single store write instead of two
-    (VERDICT r3 #5: the epoch-keyed idempotency fix added a write job
-    per store per epoch; nesting halves that and the per-epoch store
+    (VERDICT r3 #5: nesting halves the per-epoch write jobs and store
     re-open cost — the probe side is recovered with one narrow
     explode, no shuffle).  Band probes are equi-joins with the batch
     as the small side; the verify join touches only candidate pairs,
@@ -468,53 +328,11 @@ def stream_neardup_dedup(
     dropped from the kept output — same convention as the batch
     minhash/jaccard kernels, which cannot score empty sets.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from qaapi_spark.operators.dedup import (
-        _hashed_shingle_sets,
-        minhash_band_arrays,
-    )
-
-    # stage the corpus as two files => two micro-batches (docs split by
-    # id parity), so the store genuinely accumulates across epochs
-    stage_dir = _scratch(prefix="docs_neardup_stream_")
-    store_dir = _scratch(prefix="neardup_store_")
     batch_df = spark.read.parquet(docs_path)
-    batch_df.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b0.parquet")
+    stage_dir, schema = stage_slices(
+        "docs_neardup_stream_", _parity_slices(batch_df, "doc_id")
     )
-    batch_df.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b1.parquet")
-    )
-
-    def _jaccard_ge(pairs: DataFrame, sa: DataFrame, sb: DataFrame) -> DataFrame:
-        """pairs (id, other) verified: exact shingle-set Jaccard >=
-        threshold, using sa for `id` and sb for `other` sides."""
-        j = (
-            pairs.join(sa.select(F.col("id"), F.col("sh").alias("sh_a")), "id")
-            .join(
-                sb.select(F.col("id").alias("other"), F.col("sh").alias("sh_b")),
-                "other",
-            )
-            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "j",
-                F.round(
-                    F.col("inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                    4,
-                ),
-            )
-        )
-        return j.filter(F.col("j") >= threshold)
-
-    stream = (
-        spark.readStream.schema(batch_df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/*.parquet")
-    )
+    store = EpochStore(spark, scratch_dir("neardup_store_"))
 
     def dedup_batch(bdf: DataFrame, epoch_id: int) -> None:
         # one file per trigger => the batch arrives as ONE partition;
@@ -528,150 +346,61 @@ def stream_neardup_dedup(
         # keep their natural partitioning — no forced shuffle.
         if bdf.rdd.getNumPartitions() < 8:
             bdf = bdf.repartition(8)
-        sets = (
-            _hashed_shingle_sets(bdf, 2, "text", "doc_id")
-            .filter(F.size("sh") > 0)
-            .persist()
-        )
-        # pre-explode band arrays: one row per doc — the form the store
-        # persists; the exploded probe keys derive with a narrow explode.
-        # persisted: consumed by the candidate/within-batch joins AND the
-        # store write.  Signatures derive from the PERSISTED hashed
-        # shingle sets (identical arrays — word_shingles is distinct)
-        # instead of re-tokenizing text through minhash_signatures, so
-        # each epoch scans/tokenizes the batch text exactly once
-        # (round-10 probe: the duplicated tokenize+shingle+hash pass
-        # was part of the ~3.2 s/epoch floor).
-        # O(1)-wide signature tree (the stream_pipeline shave, VERDICT
-        # r10 next #3, now applied here per VERDICT r11 next #4): one
-        # nested transform over sequence(0, num_hashes-1) instead of a
-        # 64-wide F.array of per-index expressions — value-identical
-        # (xxhash64(i, v) with i the sequence element = xxhash64(lit(i),
-        # v); the CC stream hash-checks the same form against the batch
-        # oracle) but a constant-size tree to analyze/plan per epoch.
-        signed = sets.select(
-            "id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(
-                    F.transform(F.col("sh"), lambda v: F.xxhash64(i, v))
-                ),
-            ).alias("sig"),
-        )
-        bands_arr = minhash_band_arrays(signed, num_hashes, n_bands).persist()
-        keys = bands_arr.select("id", F.explode("bands").alias("bk")).select(
-            "id", "bk.band", "bk.bsig"
-        )
-        # existence check, not try/except (the ADVICE r8 #2 / r9 #2
-        # class): only the genuinely-missing first-epoch store may be
-        # skipped; any other read error must propagate instead of
-        # silently treating a populated store as empty.  The epoch
-        # partition filter makes the screen RETRY-SAFE: a foreachBatch
-        # retry of epoch N would otherwise read epoch N's own prior
-        # output and drop every batch doc against itself (j(d,d) = 1
-        # passes any threshold) — only strictly-earlier epochs are the
-        # legitimate cross-batch state (round-10 fix; partition pruning
-        # skips the excluded directory entirely).
-        if _store_recover(store_dir + "/data"):
-            rec = _read_pq(spark, store_dir + "/data").filter(
-                F.col("epoch") < int(epoch_id)
-            )
-            store = rec.select(
-                F.col("id").alias("other"), F.explode("bands").alias("bk")
-            ).select("bk.band", "bk.bsig", "other")
-            kept_sets = rec.select("id", "sh")
-        else:
-            store = None
-        if store is not None:
-            # cross-batch: band-collision candidates, exactly verified
-            cand = (
-                keys.join(store, ["band", "bsig"])
-                .select("id", "other")
-                .distinct()
-            )
-            dup = _jaccard_ge(cand, sets, kept_sets).select("id").distinct()
-            keys = keys.join(dup, "id", "left_anti")
-        # within-batch greedy min-id on VERIFIED near-dup pairs
-        a, b = keys.alias("a"), keys.alias("b")
-        wpairs = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bsig") == F.col("b.bsig"))
-                & (F.col("a.id") > F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"))
-            .distinct()
-        )
-        smaller = _jaccard_ge(wpairs, sets, sets).select("id").distinct()
-        # single consumer now (the store write) — no persist needed
-        kept_ids = keys.select("id").distinct().join(smaller, "id", "left_anti")
+        sets, bands_arr, keys = _batch_bands(bdf, num_hashes, n_bands)
+        # single consumer (the store write) — no persist needed
+        kept_ids = _greedy_kept(keys, sets, store.read(before=epoch_id), threshold)
         try:
             # SINGLE epoch write (round 10: was two): the nested store
             # row (id, bands[], sh) already identifies the kept docs,
             # so the kept-docs relation derives from the store with one
             # final semi-join against the corpus AFTER the stream ends
-            # instead of a per-epoch bdf join + second write job.
-            # Epoch-keyed dirs + overwrite = idempotent on foreachBatch
-            # retry (a re-run of epoch N replaces its own prior
-            # output); one file each (coalesce(1)) so the store re-read
-            # every later epoch pays minimal per-file open cost.
-            bands_arr.join(kept_ids, "id", "left_semi").join(
-                sets, "id"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{store_dir}/data/epoch={epoch_id}"
-            )
+            # instead of a per-epoch bdf join + second write job; one
+            # file, so the store re-read every later epoch pays minimal
+            # per-file open cost.
+            store.write(bands_arr.join(kept_ids, "id", "left_semi").join(sets, "id"), epoch_id)
         finally:
             bands_arr.unpersist()
             sets.unpersist()
 
-    # An epoch chains ~8 small jobs (signatures, band join, verify,
-    # anti-joins, two writes) over a micro-batch; AQE's per-shuffle
-    # materialize-then-replan adds serial latency to every one of them
-    # (measured 6.8 -> 4.8 s for the two-epoch replay at sf0.1 with it
-    # off) while having nothing to re-plan at micro-batch sizes.
-    # Scoped to this stream and restored; a deployment with large
-    # micro-batches (where AQE's coalescing/skew handling pays for its
-    # latency) would key this on expected batch volume.
-    # NOTE (ADVICE r7 #4): spark.conf is SESSION-global — any query
-    # planned concurrently on this SparkSession loses AQE until the
-    # finally-restore runs.  The catalog/bench runners are single-
-    # threaded per session, so this is safe here; a concurrent caller
-    # should run this stream on a cloned session
-    # (spark.newSession()) so the toggle is isolated.
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", None)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # 8-way shuffles for the epoch's chained micro-batch joins/aggs
-    # (the CC/ExactSubstr stream setting, VERDICT r11 next #4): at
-    # session width (32) each of the ~8 per-epoch jobs pays 4x the
-    # task overhead on batch-sized inputs; restored after.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(dedup_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", store_dir + "/_checkpoint")
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev_aqe is None:
-            spark.conf.unset("spark.sql.adaptive.enabled")
-        else:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    run_epochs(spark, schema, stage_dir, dedup_batch, ORDERED_CONF)
     # kept docs = the store's ids (exactly the survivors, every epoch)
-    # re-attached to the corpus once — the epoch=N partition-discovery
-    # column drops in the select
-    kept = spark.read.parquet(store_dir + "/data").select(
-        F.col("id").alias("doc_id")
-    )
+    # re-attached to the corpus once
+    kept = store.read().select(F.col("id").alias("doc_id"))
     return (
-        spark.read.parquet(docs_path)
-        .join(kept, "doc_id", "left_semi")
+        batch_df.join(kept, "doc_id", "left_semi")
         .select("doc_id", "lang", "source")
     )
+
+
+def _attribution(open_stream, left_type, right_type, horizon, watermark, how):
+    """The click->purchase interval join of the two attribution
+    streams: each ``right_type`` event joins the same user's
+    ``left_type`` events within ``horizon`` BEFORE it.  A stream-stream
+    join keeps FOUR state stores per shuffle partition (left/right x
+    keyToNumValues/keyWithIndexToValue), so it runs at `STATE_CONF`
+    width (measured ~9 s -> ~4 s at sf0.1)."""
+
+    def side(tp: str, alias: str) -> DataFrame:
+        return (
+            open_stream()
+            .filter(F.col("event_type") == tp)
+            .withWatermark("ts", watermark)
+            .select(
+                F.col("event_id").alias(f"{alias}_id"),
+                F.col("user_id").alias(f"{alias}_user"),
+                F.col("ts").alias(f"{alias}_ts"),
+                F.col("value").alias(f"{alias}_value"),
+            )
+        )
+
+    joined = side(left_type, "c").join(
+        side(right_type, "p"),
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {horizon}")),
+        how,
+    )
+    return run_to_memory(joined, "append", STATE_CONF)
 
 
 def stream_interval_join(
@@ -681,7 +410,6 @@ def stream_interval_join(
     right_type: str = "purchase",
     horizon: str = "24 hours",
     watermark: str = "48 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-stream event-time interval join (attribution): each
     ``right_type`` event joins the same user's ``left_type`` events
@@ -698,59 +426,9 @@ def stream_interval_join(
     late-dropped, so the streamed inner join equals the batch interval
     join and the query is DuckDB-oracle checkable.
     """
-    import os
-
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    stage_dir = _scratch(prefix="events_ssj_")
-    os.symlink(os.path.abspath(events_path), os.path.join(stage_dir, "part-0.parquet"))
-
-    def side(tp: str, alias: str) -> DataFrame:
-        s = normalize_ts(
-            spark.readStream.schema(raw_schema).format("parquet").load(stage_dir)
-        )
-        return (
-            s.filter(F.col("event_type") == tp)
-            .withWatermark("ts", watermark)
-            .select(
-                F.col("event_id").alias(f"{alias}_id"),
-                F.col("user_id").alias(f"{alias}_user"),
-                F.col("ts").alias(f"{alias}_ts"),
-                F.col("value").alias(f"{alias}_value"),
-            )
-        )
-
-    clicks, purchases = side(left_type, "c"), side(right_type, "p")
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {horizon}")),
-        "inner",
-    )
-    name = "attrib_" + uuid.uuid4().hex[:8]
-    # a stream-stream join keeps FOUR state stores per shuffle
-    # partition (left/right x keyToNumValues/keyWithIndexToValue), so
-    # store open/commit overhead scales with partitions x 4 per batch;
-    # same sizing rule as stream_dedup_events: keys-per-batch / ~500k
-    # on a real cluster, 8 here (measured ~9s -> ~4s at sf0.1)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", stage_dir + "/_ckpt")
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    return spark.sql(f"SELECT * FROM {name}").select(
+    _, open_stream = _linked_events(spark, events_path, "events_ssj_")
+    out = _attribution(open_stream, left_type, right_type, horizon, watermark, "inner")
+    return out.select(
         F.col("c_id").alias("click_id"),
         F.col("p_id").alias("purchase_id"),
         F.col("c_user").alias("user_id"),
@@ -770,35 +448,17 @@ def stream_static_enrich(
     batch exactly like a batch BroadcastHashJoin).  Output: per-segment
     event counts + value sums, complete mode == the batch group-by.
     """
-    import os
-
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    stage_dir = _scratch(prefix="events_enrich_")
-    os.symlink(os.path.abspath(events_path), os.path.join(stage_dir, "part-0.parquet"))
-    stream = normalize_ts(
-        spark.readStream.schema(raw_schema).format("parquet").load(stage_dir)
-    )
-    dim = (
-        spark.read.parquet(customer_path)
-        .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
+    _, open_stream = _linked_events(spark, events_path, "events_enrich_")
+    dim = spark.read.parquet(customer_path).select(
+        F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     agg = (
-        stream.join(F.broadcast(dim), "user_id")  # static side: no state
+        open_stream()
+        .join(F.broadcast(dim), "user_id")  # static side: no state
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    name = "enrich_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return run_to_memory(agg, "complete")
 
 
 def stream_interval_join_left(
@@ -808,7 +468,6 @@ def stream_interval_join_left(
     right_type: str = "purchase",
     horizon: str = "24 hours",
     watermark: str = "48 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """LEFT OUTER stream-stream event-time interval join: like
     :func:`stream_interval_join`, plus every unmatched ``left_type``
@@ -830,15 +489,10 @@ def stream_interval_join_left(
     watermark keeps advancing); state stays bounded to horizon +
     watermark per side exactly as in the inner variant.
     """
-    import datetime
-    import os
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    stage_dir = _scratch(prefix="events_ssjl_")
-    os.symlink(os.path.abspath(events_path), os.path.join(stage_dir, "part-0.parquet"))
-
+    stage_dir, open_stream = _linked_events(spark, events_path, "events_ssjl_")
     # Derive the watermark-flush sentinel driver-side from parquet
     # footer statistics (no Spark job): the replay previously spent
     # two fixed jobs — a full-scan max(ts) aggregate plus a
@@ -846,114 +500,59 @@ def stream_interval_join_left(
     # file's own row-group stats and a direct pyarrow write answer in
     # milliseconds (round-9 probe: those jobs were ~1.5 s of the
     # ~8 s replay; the join itself is machinery-bound, SCALE.md r9).
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(events_path)
-    ts_idx = pf.schema_arrow.get_field_index("ts")
-    # Footer stats are an OPTIMIZATION, not a format guarantee (ADVICE
-    # r9 #4): a writer may disable column statistics, and a zero-row
-    # file has no row groups — either would surface as an obscure
-    # AttributeError / ValueError here.  Collect only present stats and
-    # fall back to the exact (one-job) Spark max(ts) aggregate when any
-    # are missing.
-    stat_maxes = [
-        st.max
-        for g in range(pf.metadata.num_row_groups)
-        if (st := pf.metadata.row_group(g).column(ts_idx).statistics) is not None
-        and st.has_min_max
-    ]
-    if len(stat_maxes) == pf.metadata.num_row_groups and stat_maxes:
-        max_raw = max(stat_maxes)
+    # Stats are an optimization, not a format guarantee (ADVICE r9 #4),
+    # so the exact one-job aggregate covers files without them.
+    mm = footer_min_max(events_path, "ts")
+    if mm is not None:
+        max_us = mm[1]
     else:
-        max_raw = (
-            spark.read.schema(raw_schema)
-            .parquet(events_path)
-            .agg(F.max("ts"))
+        from qaapi_spark.sources.tables import events_stream_spec
+
+        raw_schema, normalize_ts = events_stream_spec(spark, events_path)
+        max_us = (
+            normalize_ts(spark.read.schema(raw_schema).parquet(events_path))
+            .agg(F.max(F.unix_micros(F.col("ts").cast("timestamp"))))
             .collect()[0][0]
         )
-        if max_raw is None:
-            raise ValueError(
-                f"stream_interval_join_left: {events_path} has no rows "
-                "with a non-null ts — cannot derive a watermark-flush "
-                "sentinel for the bounded replay"
-            )
-    ts_type = pf.schema_arrow.field(ts_idx).type
-    if not isinstance(max_raw, datetime.datetime):
-        # nanos-backed stats surface as integers; sentinel stays in
-        # the same physical unit so the streaming reader's
-        # normalize_ts path treats it exactly like real rows
-        unit_per_day = {"s": 86400, "ms": 86400 * 10**3, "us": 86400 * 10**6, "ns": 86400 * 10**9}[ts_type.unit]
-        flush1, flush2 = max_raw + 10 * unit_per_day, max_raw + 20 * unit_per_day
-    else:
-        flush1 = max_raw + datetime.timedelta(days=10)
-        flush2 = max_raw + datetime.timedelta(days=20)
-    sent_tbl = pa.table(
-        {
-            "event_id": pa.array([-1, -2], pa.int64()),
-            "ts": pa.array([flush1, flush2], ts_type),
-            "user_id": pa.array([-1, -2], pa.int64()),
-            "event_type": pa.array([left_type, right_type], pa.string()),
-            "value": pa.array([None, None], pa.float64()),
-            "props": pa.array([None, None], pa.string()),
-        },
-        schema=pf.schema_arrow,
+    if max_us is None:
+        raise ValueError(
+            f"stream_interval_join_left: {events_path} has no rows "
+            "with a non-null ts — cannot derive a watermark-flush "
+            "sentinel for the bounded replay"
+        )
+    schema = pq.read_schema(events_path)
+    ts_type = schema.field("ts").type
+    # the sentinel stays in the file's own physical unit, so the
+    # streaming reader's normalize_ts path treats it exactly like real rows
+    per_us = {"s": 10**-6, "ms": 10**-3, "us": 1, "ns": 1000}[ts_type.unit]
+    day_us = 86400 * 10**6
+    flush = [int((max_us + k * day_us) * per_us) for k in (10, 20)]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([-1, -2], pa.int64()),
+                "ts": pa.array(flush, ts_type),
+                "user_id": pa.array([-1, -2], pa.int64()),
+                "event_type": pa.array([left_type, right_type], pa.string()),
+                "value": pa.array([None, None], pa.float64()),
+                "props": pa.array([None, None], pa.string()),
+            },
+            schema=schema,
+        ),
+        os.path.join(stage_dir, "part-1.parquet"),
     )
-    pq.write_table(sent_tbl, os.path.join(stage_dir, "part-1.parquet"))
-
-    def side(tp: str, alias: str) -> DataFrame:
-        s = normalize_ts(
-            spark.readStream.schema(raw_schema).format("parquet").load(stage_dir)
-        )
-        return (
-            s.filter(F.col("event_type") == tp)
-            .withWatermark("ts", watermark)
-            .select(
-                F.col("event_id").alias(f"{alias}_id"),
-                F.col("user_id").alias(f"{alias}_user"),
-                F.col("ts").alias(f"{alias}_ts"),
-                F.col("value").alias(f"{alias}_value"),
-            )
-        )
-
-    joined = side(left_type, "c").join(
-        side(right_type, "p"),
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {horizon}")),
-        "leftOuter",
-    )
-    name = "attribl_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return (
-        spark.sql(f"SELECT * FROM {name}")
-        .filter(F.col("c_id") >= 0)
-        .select(
-            F.col("c_id").alias("click_id"),
-            F.col("p_id").alias("purchase_id"),
-            F.col("c_user").alias("user_id"),
-            F.round(F.col("p_value"), 2).alias("purchase_value"),
-        )
+    out = _attribution(open_stream, left_type, right_type, horizon, watermark, "leftOuter")
+    return out.filter(F.col("c_id") >= 0).select(
+        F.col("c_id").alias("click_id"),
+        F.col("p_id").alias("purchase_id"),
+        F.col("c_user").alias("user_id"),
+        F.round(F.col("p_value"), 2).alias("purchase_value"),
     )
 
 
 def stream_hll_running(
     spark: SparkSession,
     events_path: str,
-    state_partitions: int | None = 8,
     n_splits: int = 3,
     p: int = 8,
 ) -> DataFrame:
@@ -970,29 +569,13 @@ def stream_hll_running(
     so availableNow really exercises cross-batch merging (one file per
     trigger), not a single-batch degenerate run.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from qaapi_spark.operators.sketches import hll_portable
     from qaapi_spark.sources.tables import events_stream_spec
 
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
+    raw_schema, _ = events_stream_spec(spark, events_path)
     raw = spark.read.schema(raw_schema).parquet(events_path)
-    mm = _footer_min_max(events_path, "event_id")  # no-job lo/hi (exact)
-    lo, hi = mm if mm else raw.agg(F.min("event_id"), F.max("event_id")).collect()[0]
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="events_hll_stream_")
-    for i in range(n_splits):
-        (
-            raw.filter(
-                (F.col("event_id") >= int(lo) + i * step)
-                & (F.col("event_id") < int(lo) + (i + 1) * step + (1 if i == n_splits - 1 else 0) * (1 << 60))
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    store_dir = _scratch(prefix="events_hll_store_") + "/regs"
+    slices, _, _ = range_slices(raw, "event_id", n_splits, src=events_path)
+    stage_dir, schema = stage_slices("events_hll_stream_", slices, ("event_id",))
+    regs_root = scratch_dir("events_hll_store_") + "/regs"
 
     m = 1 << p
     hex_b = p // 4
@@ -1007,37 +590,18 @@ def stream_hll_running(
             .groupBy("event_type", "bucket")
             .agg(F.max("rho").alias("mj"))
         )
-        # Self-heal + existence check, not try/except (ADVICE r8 #2 /
-        # r9 #2): only the first-epoch missing-store path may skip the
-        # read; any other error must propagate, and a crash-stranded
-        # store is restored before the decision.
-        if _store_recover(store_dir):
-            prev = _read_pq(bdf.sparkSession, store_dir)
+        store = EpochStore(bdf.sparkSession, regs_root)
+        prev = store.current()
+        if prev is not None:
             regs = (
                 regs.unionByName(prev)
                 .groupBy("event_type", "bucket")
                 .agg(F.max("mj").alias("mj"))
             )
         # tiny relation (groups x 2**p rows): rewrite wholesale per epoch
-        regs.coalesce(1).write.mode("overwrite").parquet(store_dir + ".next")
-        _store_swap(store_dir)
+        store.replace(regs)
 
-    stream = spark.readStream.schema(raw_schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(stage_dir + "/slice=*")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="hll_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    run_epochs(spark, schema, stage_dir, merge_batch, STATE_CONF)
 
     # final estimate from the merged register store: reuse the batch
     # estimator arithmetic by round-tripping registers through the
@@ -1045,8 +609,7 @@ def stream_hll_running(
     # synthetic relation would re-hash, so compute from registers
     # directly with the same expressions)
     two49 = 1 << 49
-    regs = spark.read.parquet(store_dir)
-    per_group = regs.groupBy("event_type").agg(
+    per_group = EpochStore(spark, regs_root).current().groupBy("event_type").agg(
         F.sum(F.expr("shiftleft(cast(1 as bigint), 49 - mj)")).alias("s_present"),
         F.count("*").alias("nb"),
     )
@@ -1059,6 +622,26 @@ def stream_hll_running(
         F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double")),
     ).otherwise(e_raw)
     return per_group.select("event_type", F.round(est, 4).alias("hll_est"))
+
+
+def _append_stream(corpus: DataFrame, id_col: str, prefix: str, epoch_fn):
+    """Replay ``corpus`` in two parity slices of ``id_col`` through
+    ``epoch_fn(bdf) -> delta``, each epoch's delta appended to an
+    epoch-keyed store (overwrite per epoch: idempotent on retry).
+    Returns ``(store, stage_dir)``.  The map-only embedding twins: a delta depends
+    only on its batch and a fixed broadcast model, so the store equals
+    the batch relation row for row; no repartition — the kernels are
+    map-only over whatever partitioning the source delivers, and a
+    shuffle on a one-file batch costs more than the kernel."""
+    spark = corpus.sparkSession
+    stage_dir, schema = stage_slices(
+        prefix + "stream_", _parity_slices(corpus, id_col), (id_col,)
+    )
+    store = EpochStore(spark, scratch_dir(prefix + "store_"))
+    run_epochs(
+        spark, schema, stage_dir, lambda bdf, e: store.write(epoch_fn(bdf), e)
+    )
+    return store, stage_dir
 
 
 def stream_ivf_assign(
@@ -1088,8 +671,6 @@ def stream_ivf_assign(
     (broadcast codebook GEMM), one single-file store append; no
     shuffle, no state beyond the store itself.
     """
-    import os
-
     from qaapi_spark.operators.similarity import nearest_broadcast
 
     corpus = spark.read.parquet(embeddings_path)
@@ -1097,27 +678,8 @@ def stream_ivf_assign(
         F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec")
     )
 
-    stage_dir = _scratch(prefix="emb_ivf_stream_")
-    store_dir = _scratch(prefix="emb_ivf_store_")
-    corpus.filter(F.col(id_col) % 2 == 0).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b0.parquet")
-    )
-    corpus.filter(F.col(id_col) % 2 == 1).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b1.parquet")
-    )
-
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/*.parquet")
-    )
-
-    def assign_batch(bdf: DataFrame, epoch_id: int) -> None:
-        # No repartition: the kernel is map-only over whatever
-        # partitioning the source delivers — at scale a micro-batch
-        # spans many files/partitions natively, and forcing a shuffle
-        # on a single-file fixture batch costs more than the GEMM
-        assigned = nearest_broadcast(
+    def assign(bdf: DataFrame) -> DataFrame:
+        return nearest_broadcast(
             bdf, cents, 1,
             stream_id=id_col, stream_vec=vec_col,
             ref_id="centroid_id", ref_vec="cvec",
@@ -1126,21 +688,9 @@ def stream_ivf_assign(
             F.col("cand_id").alias("centroid_id"),
             F.col("cosine").alias("centroid_cosine"),
         )
-        # epoch-keyed overwrite = idempotent on foreachBatch retry
-        assigned.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_dir}/data/epoch={epoch_id}"
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(assign_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_dir + "/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(store_dir + "/data").select(
-        id_col, "centroid_id", "centroid_cosine"
-    )
+    store, _ = _append_stream(corpus, id_col, "emb_ivf_", assign)
+    return store.read().select(id_col, "centroid_id", "centroid_cosine")
 
 
 def stream_pq_encode(
@@ -1168,44 +718,17 @@ def stream_pq_encode(
     shuffle.  At 100 TB the code store (m bytes/vector) IS what ADC
     serving reads.
     """
-    import os
-
     from qaapi_spark.operators.retrieval import pq_codebook, pq_encode
 
     corpus = spark.read.parquet(embeddings_path)
-    cb = pq_codebook(corpus, m=m, ksub=ksub, train_iters=0,
-                     vec_col=vec_col, id_col=id_col)
-
-    stage_dir = _scratch(prefix="emb_pq_stream_")
-    store_dir = _scratch(prefix="emb_pq_store_")
-    corpus.filter(F.col(id_col) % 2 == 0).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b0.parquet")
+    cb = pq_codebook(
+        corpus, m=m, ksub=ksub, train_iters=0, vec_col=vec_col, id_col=id_col
     )
-    corpus.filter(F.col(id_col) % 2 == 1).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b1.parquet")
+    store, _ = _append_stream(
+        corpus, id_col, "emb_pq_",
+        lambda bdf: pq_encode(bdf, cb, vec_col=vec_col, id_col=id_col),
     )
-
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/*.parquet")
-    )
-
-    def encode_batch(bdf: DataFrame, epoch_id: int) -> None:
-        codes = pq_encode(bdf, cb, vec_col=vec_col, id_col=id_col)
-        # epoch-keyed overwrite = idempotent on foreachBatch retry
-        codes.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_dir}/data/epoch={epoch_id}"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(encode_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_dir + "/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(store_dir + "/data").select(
+    return store.read().select(
         F.col("id").alias(id_col),
         F.posexplode("codes").alias("j", "code"),
     )
@@ -1237,61 +760,26 @@ def stream_covariance_update(
     d(d+1)/2 + d + 1 row store append; no shuffle, state is O(d^2)
     regardless of how much the stream has seen — the moment store IS
     the drift monitor a training pipeline consults between snapshots.
+    The staged corpus copy is the one scratch dir here that scales
+    with corpus size, so it is dropped as soon as the stream ends
+    (the moment store the returned lazy DF reads stays until exit).
     """
-    import os
+    from qaapi_spark.operators.linalg import covariance_from_moments, gram_partials
 
-    from qaapi_spark.operators.linalg import (
-        covariance_from_moments,
-        gram_partials,
+    store, stage_dir = _append_stream(
+        spark.read.parquet(embeddings_path), id_col, "emb_cov_",
+        lambda bdf: gram_partials(bdf, vec_col),
     )
+    import shutil
 
-    corpus = spark.read.parquet(embeddings_path)
-
-    stage_dir = _scratch(prefix="emb_cov_stream_")
-    store_dir = _scratch(prefix="emb_cov_store_")
-    corpus.filter(F.col(id_col) % 2 == 0).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b0.parquet")
-    )
-    corpus.filter(F.col(id_col) % 2 == 1).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "b1.parquet")
-    )
-
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/*.parquet")
-    )
-
-    def moments_batch(bdf: DataFrame, epoch_id: int) -> None:
-        # map-only partials; epoch-keyed overwrite = idempotent retry
-        gram_partials(bdf, vec_col).coalesce(1).write.mode("overwrite").parquet(
-            f"{store_dir}/data/epoch={epoch_id}"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(moments_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_dir + "/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
-    # The staged corpus copy is consumed once the availableNow stream
-    # terminates; drop it NOW rather than at interpreter exit — it is
-    # the one scratch dir here that scales with corpus size (the
-    # moment store the returned lazy DF reads is O(epochs * d^2) and
-    # stays until atexit).
-    import shutil as _shutil
-
-    _shutil.rmtree(stage_dir, ignore_errors=True)
-    return covariance_from_moments(
-        spark.read.parquet(store_dir + "/data").select("i", "j", "v"), round_dp
-    )
+    shutil.rmtree(stage_dir, ignore_errors=True)
+    return covariance_from_moments(store.read().select("i", "j", "v"), round_dp)
 
 
 def _merge_weighted_sample_batch(bdf, store_dir: str, k: int, seed: str) -> None:
-    """One foreachBatch merge step of the streaming weighted-WOR
-    sample, module-level so retry-idempotence is unit-testable
-    (tests/test_round9_fixes.py replays the same batch twice).
+    """One merge step of the streaming weighted-WOR sample, module-level
+    so retry-idempotence is unit-testable (tests/test_round9_fixes.py
+    replays the same batch twice).
 
     Merge contract: union new batch keys with the bounded store,
     dedup, keep the k smallest A-ES keys per group, atomically swap
@@ -1302,6 +790,7 @@ def _merge_weighted_sample_batch(bdf, store_dir: str, k: int, seed: str) -> None
     from qaapi_spark.operators.sampling import weighted_sample_wor_per_group
     from qaapi_spark.operators.textstats import ws_tokens
 
+    store = EpochStore(bdf.sparkSession, store_dir)
     toks = bdf.select(
         "doc_id",
         "lang",
@@ -1310,12 +799,9 @@ def _merge_weighted_sample_batch(bdf, store_dir: str, k: int, seed: str) -> None
     batch_top = weighted_sample_wor_per_group(
         toks, "lang", k, "n_tokens", id_col="doc_id", seed=seed
     ).select("grp", "id", "weight", "es_key")
-    # Self-heal + existence check, not try/except: a read error other
-    # than the expected first-epoch missing store must propagate, or it
-    # would silently discard all accumulated state (ADVICE r8 #2), and
-    # a swap-crash-stranded store is restored first (ADVICE r9 #2).
-    if _store_recover(store_dir):
-        batch_top = batch_top.unionByName(_read_pq(bdf.sparkSession, store_dir))
+    prev = store.current()
+    if prev is not None:
+        batch_top = batch_top.unionByName(prev)
     # Retry-idempotence: if foreachBatch replays a batch whose rows
     # already merged into the store, the union holds exact duplicate
     # (grp, id, es_key) rows; both copies would count toward the k
@@ -1324,14 +810,12 @@ def _merge_weighted_sample_batch(bdf, store_dir: str, k: int, seed: str) -> None
     # key-dedup restores idempotence.
     batch_top = batch_top.dropDuplicates(["grp", "id"])
     win = Window.partitionBy("grp").orderBy(F.asc("es_key"), F.asc("id"))
-    merged = (
+    # groups x k rows: rewrite wholesale per epoch (idempotent)
+    store.replace(
         batch_top.withColumn("rn", F.row_number().over(win))
         .filter(F.col("rn") <= k)
         .drop("rn")
     )
-    # groups x k rows: rewrite wholesale per epoch (idempotent)
-    merged.coalesce(1).write.mode("overwrite").parquet(store_dir + ".next")
-    _store_swap(store_dir)
 
 
 def stream_weighted_sample(
@@ -1339,7 +823,6 @@ def stream_weighted_sample(
     docs_path: str,
     k: int = 5,
     n_splits: int = 3,
-    state_partitions: int | None = 8,
     seed: str = "wrs1",
 ) -> DataFrame:
     """Streaming weighted sampling WITHOUT replacement via MERGEABLE
@@ -1358,53 +841,20 @@ def stream_weighted_sample(
     matter how much data streams through; each epoch's work is one
     map-only key computation + a groups-x-k-bounded merge.
     """
-    import os
-
-    from qaapi_spark.operators.sampling import weighted_sample_wor_per_group
-    from qaapi_spark.operators.textstats import ws_tokens
-
-    raw = spark.read.parquet(docs_path)
-    raw_schema = raw.schema
-    mm = _footer_min_max(docs_path, "doc_id")  # no-job lo/hi (exact)
-    lo, hi = mm if mm else raw.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="docs_wrs_stream_")
-    for i in range(n_splits):
-        upper = int(lo) + (i + 1) * step if i < n_splits - 1 else int(hi) + 1
-        (
-            raw.filter(
-                (F.col("doc_id") >= int(lo) + i * step) & (F.col("doc_id") < upper)
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    store_dir = _scratch(prefix="docs_wrs_store_") + "/topk"
-
-    def merge_batch(bdf, epoch_id: int) -> None:
-        _merge_weighted_sample_batch(bdf, store_dir, k, seed)
-
-    stream = spark.readStream.schema(raw_schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(stage_dir + "/slice=*")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="wrs_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-
     from pyspark.sql import Window
 
+    raw = spark.read.parquet(docs_path)
+    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
+    stage_dir, schema = stage_slices("docs_wrs_stream_", slices)
+    store_dir = scratch_dir("docs_wrs_store_") + "/topk"
+    run_epochs(
+        spark, schema, stage_dir,
+        lambda bdf, e: _merge_weighted_sample_batch(bdf, store_dir, k, seed),
+        STATE_CONF,
+    )
     win = Window.partitionBy("grp").orderBy(F.asc("es_key"), F.asc("id"))
     return (
-        spark.read.parquet(store_dir)
+        EpochStore(spark, store_dir).current()
         .withColumn("rank", F.row_number().over(win))
         .select(
             F.col("grp").alias("lang"),
@@ -1420,7 +870,6 @@ def stream_running_distinct(
     spark: SparkSession,
     events_path: str,
     n_splits: int = 3,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming EXACT running-distinct-users curve via MIN-mergeable
     first-seen state: each micro-batch reduces to (user_id, min
@@ -1437,72 +886,33 @@ def stream_running_distinct(
     group).  Per-epoch work: one map-side-combined user aggregate over
     the batch plus a |users|-bounded merge.
     """
-    import os
-
-    from pyspark.sql import functions as F
+    from pyspark.sql import Window
 
     from qaapi_spark.sources.tables import events_stream_spec
 
     raw_schema, normalize_ts = events_stream_spec(spark, events_path)
     raw = spark.read.schema(raw_schema).parquet(events_path)
-    mm = _footer_min_max(events_path, "event_id")  # no-job lo/hi (exact)
-    lo, hi = mm if mm else raw.agg(F.min("event_id"), F.max("event_id")).collect()[0]
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="events_rdist_stream_")
-    for i in range(n_splits):
-        hi_pad = (1 << 60) if i == n_splits - 1 else 0
-        (
-            raw.filter(
-                (F.col("event_id") >= int(lo) + i * step)
-                & (F.col("event_id") < int(lo) + (i + 1) * step + hi_pad)
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    store_dir = _scratch(prefix="events_rdist_store_") + "/first_seen"
+    slices, _, _ = range_slices(raw, "event_id", n_splits, src=events_path)
+    stage_dir, schema = stage_slices("events_rdist_stream_", slices, ("event_id",))
+    seen_root = scratch_dir("events_rdist_store_") + "/first_seen"
 
     def merge_batch(bdf, epoch_id: int) -> None:
-        ts = normalize_ts(bdf)
-        seen = (
-            ts.groupBy("user_id")
-            .agg(F.min(F.floor(F.unix_timestamp("ts") / 86400)).alias("day_s"))
+        seen = normalize_ts(bdf).groupBy("user_id").agg(
+            F.min(F.floor(F.unix_timestamp("ts") / 86400)).alias("day_s")
         )
-        # Self-heal + existence check (ADVICE r8 #2 / r9 #2): only the
-        # first-epoch missing-store path may be skipped; any other read
-        # error must propagate rather than silently dropping all state.
-        if _store_recover(store_dir):
+        store = EpochStore(bdf.sparkSession, seen_root)
+        prev = store.current()
+        if prev is not None:
             seen = (
-                seen.unionByName(_read_pq(bdf.sparkSession, store_dir))
+                seen.unionByName(prev)
                 .groupBy("user_id")
                 .agg(F.min("day_s").alias("day_s"))
             )
-        seen.coalesce(1).write.mode("overwrite").parquet(store_dir + ".next")
-        _store_swap(store_dir)
+        store.replace(seen)
 
-    stream = spark.readStream.schema(raw_schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(stage_dir + "/slice=*")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="rdist_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    run_epochs(spark, schema, stage_dir, merge_batch, STATE_CONF)
 
-    from pyspark.sql import Window
-
-    d = (
-        spark.read.parquet(store_dir)
-        .groupBy("day_s")
-        .agg(F.count("*").alias("new_users"))
-    )
+    d = EpochStore(spark, seen_root).current().groupBy("day_s").agg(F.count("*").alias("new_users"))
     w = Window.orderBy("day_s").rowsBetween(Window.unboundedPreceding, 0)
     return d.select(
         "day_s",
@@ -1511,12 +921,25 @@ def stream_running_distinct(
     )
 
 
+def _chunks(placed: DataFrame, budget: int) -> DataFrame:
+    """The packed-chunk columns of rows carrying ``start_tok``."""
+    return placed.select(
+        "source",
+        "doc_id",
+        F.col("n_toks").cast("long").alias("n_toks"),
+        "start_tok",
+        F.floor(F.col("start_tok") / F.lit(budget)).cast("long").alias("first_chunk"),
+        F.floor((F.col("start_tok") + F.col("n_toks") - 1) / F.lit(budget))
+        .cast("long")
+        .alias("last_chunk"),
+    ).withColumn("n_chunks", F.col("last_chunk") - F.col("first_chunk") + 1)
+
+
 def stream_pack_chunks(
     spark: SparkSession,
     docs_path: str,
     budget: int = 128,
     n_splits: int = 3,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming concat-and-chunk shard formation: documents arrive in
     doc_id-ordered micro-batches and each batch's rows are assigned
@@ -1529,60 +952,35 @@ def stream_pack_chunks(
     ordered feed): slices are doc_id ranges staged as one sorted file
     each, so cross-batch per-source doc_id order holds; within a
     batch the offset window orders by doc_id.  Under that contract
-    the streamed relation is bit-equal to the batch pack.
+    the streamed relation is bit-equal to the batch pack.  Staging
+    only the narrow (source, doc_id, n_toks) projection is the 100 TB
+    shape (the replay never ships text).
 
     Retry-idempotent BY CONSTRUCTION (the ADVICE r8 #1 class of bug
     cannot occur): state is written as per-epoch SNAPSHOTS — epoch e
-    derives everything from the epoch e-1 snapshot plus the batch
+    derives everything from the newest earlier snapshot plus the batch
     content and overwrites its own snapshot and output partition, so
     a replayed epoch reproduces identical bytes instead of
     double-counting into a mutated store.  Snapshot size is
     |sources| rows; per-epoch work is one per-source window over the
     batch plus a |sources|-sized outer merge.
     """
-    import os
-
     from pyspark.sql import Window
 
-    raw = spark.read.parquet(docs_path)
     from qaapi_spark.operators.textstats import ws_tokens
 
-    narrow = raw.select(
+    narrow = spark.read.parquet(docs_path).select(
         "source", "doc_id", F.size(ws_tokens(F.col("text"))).alias("n_toks")
     )
-    mm = _footer_min_max(docs_path, "doc_id")  # projection keeps doc_id intact
-    lo, hi = mm if mm else narrow.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="docs_pack_stream_")
-    for i in range(n_splits):
-        hi_pad = (1 << 60) if i == n_splits - 1 else 0
-        (
-            narrow.filter(
-                (F.col("doc_id") >= int(lo) + i * step)
-                & (F.col("doc_id") < int(lo) + (i + 1) * step + hi_pad)
-            )
-            # one SORTED file per slice: cross-batch doc_id order is
-            # the ordered-ingest contract, and staging only the narrow
-            # (source, doc_id, n_toks) projection is the 100 TB shape
-            # (the replay never ships text)
-            .coalesce(1)
-            .sortWithinPartitions("source", "doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    # ordered ingest is the contract — make the source's mtime sort
-    # key explicit (ADVICE r9 #3)
-    _stage_monotonic_mtimes(stage_dir)
-    store_root = _scratch(prefix="docs_pack_store_")
-    out_root = _scratch(prefix="docs_pack_out_")
+    # the projection keeps doc_id intact, so the file's footer bounds hold
+    slices, _, _ = range_slices(narrow, "doc_id", n_splits, src=docs_path)
+    stage_dir, schema = stage_slices("docs_pack_stream_", slices, ("source", "doc_id"))
+    totals_root = scratch_dir("docs_pack_store_")
+    out = EpochStore(spark, scratch_dir("docs_pack_out_"))
 
     def merge_batch(bdf, epoch_id: int) -> None:
-        ss = bdf.sparkSession
-        prev_dir = os.path.join(store_root, f"epoch={int(epoch_id) - 1}")
-        if int(epoch_id) > 0 and os.path.isdir(prev_dir):
-            prev = _read_pq(ss, prev_dir, key=store_root + "#e")
-        else:
-            prev = ss.createDataFrame([], "source string, total_toks long")
+        totals = EpochStore(bdf.sparkSession, totals_root)
+        prev = totals.latest(epoch_id, "source string, total_toks long")
         b = bdf.filter(F.col("n_toks") > 0)
         w = (
             Window.partitionBy("source")
@@ -1599,68 +997,92 @@ def stream_pack_chunks(
                 .cast("long"),
             )
         )
-        out = placed.select(
-            "source",
-            "doc_id",
-            F.col("n_toks").cast("long").alias("n_toks"),
-            "start_tok",
-            F.floor(F.col("start_tok") / F.lit(budget))
-            .cast("long")
-            .alias("first_chunk"),
-            F.floor((F.col("start_tok") + F.col("n_toks") - 1) / F.lit(budget))
-            .cast("long")
-            .alias("last_chunk"),
-        ).withColumn(
-            "n_chunks", F.col("last_chunk") - F.col("first_chunk") + 1
-        )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"epoch={int(epoch_id)}")
-        )
+        out.write(_chunks(placed, budget), epoch_id, width=None)
         bsum = b.groupBy("source").agg(F.sum("n_toks").alias("b_toks"))
-        totals = (
-            prev.join(bsum, "source", "full_outer")
-            .select(
+        totals.write(
+            prev.join(bsum, "source", "full_outer").select(
                 "source",
                 (
                     F.coalesce(F.col("total_toks"), F.lit(0))
                     + F.coalesce(F.col("b_toks"), F.lit(0))
                 ).cast("long").alias("total_toks"),
-            )
-        )
-        totals.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"epoch={int(epoch_id)}")
+            ),
+            epoch_id,
         )
 
-    stream = (
-        spark.readStream.schema(narrow.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/slice=*")
-    )
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="pack_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-
-    return spark.read.parquet(out_root + "/epoch=*").select(
+    run_epochs(spark, schema, stage_dir, merge_batch, STATE_CONF)
+    return out.read().select(
         "source", "doc_id", "n_toks", "start_tok",
         "first_chunk", "last_chunk", "n_chunks",
     )
+
+
+_SCD2_STATE = "user_id long, status string, event_id long, valid_from_us long"
+
+
+def _scd2_stage_rows(spark: SparkSession, events_path: str):
+    """The SCD2 twins' staged projection of the events: (user_id,
+    status, event_id, us) with ``us`` the unix micros of ``ts``, whose
+    footer statistics bound the time slices."""
+    from qaapi_spark.sources.tables import events_stream_spec
+
+    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
+    return normalize_ts(spark.read.schema(raw_schema).parquet(events_path)).select(
+        "user_id",
+        F.col("event_type").alias("status"),
+        "event_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+    )
+
+
+def _scd2_marked(prev: DataFrame, bdf: DataFrame) -> DataFrame:
+    """One SCD2 epoch's change rows: the standing open rows ``prev``
+    and the batch, collapsed to status changes per user in (us,
+    event_id) order, each carrying ``valid_to_us`` = the next change's
+    start (null for the still-open one).  A state row is always a
+    change — it was one when recorded; in-batch it has no predecessor."""
+    from pyspark.sql import Window
+
+    combined = prev.select(
+        "user_id", "status", "event_id",
+        F.col("valid_from_us").alias("us"), F.lit(True).alias("is_state"),
+    ).unionByName(
+        bdf.select("user_id", "status", "event_id", "us", F.lit(False).alias("is_state"))
+    )
+    w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    changes = combined.withColumn("prev", F.lag("status").over(w)).filter(
+        F.col("prev").isNull() | (F.col("status") != F.col("prev"))
+    )
+    return changes.withColumn("valid_to_us", F.lead("us").over(w))
+
+
+def _scd2_closed(marked: DataFrame) -> DataFrame:
+    return marked.filter(F.col("valid_to_us").isNotNull()).select(
+        "user_id", "status", F.col("us").alias("valid_from_us"), "valid_to_us"
+    )
+
+
+def _scd2_open(marked: DataFrame) -> DataFrame:
+    return marked.filter(F.col("valid_to_us").isNull()).select(
+        "user_id", "status", "event_id", F.col("us").alias("valid_from_us")
+    )
+
+
+def _scd2_result(hist: DataFrame, state: EpochStore) -> DataFrame:
+    """Emitted history + the final open rows, as the batch SCD2 relation."""
+    final_open = state.latest(None, _SCD2_STATE).select(
+        "user_id", "status", "valid_from_us",
+        F.lit(None).cast("long").alias("valid_to_us"),
+    )
+    return hist.select("user_id", "status", "valid_from_us", "valid_to_us").unionByName(
+        final_open
+    ).withColumn("is_current", F.col("valid_to_us").isNull())
 
 
 def stream_scd2_history(
     spark: SparkSession,
     events_path: str,
     n_splits: int = 3,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming SCD2 (type-2) history maintenance — the CDC-apply
     shape: status events arrive in time-ordered micro-batches, each
@@ -1680,120 +1102,72 @@ def stream_scd2_history(
     stream_pack_chunks pattern), so a replayed epoch reproduces
     identical bytes — no retry double-count class.
     """
-    import os
-
-    from pyspark.sql import Window
-
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    raw = normalize_ts(spark.read.schema(raw_schema).parquet(events_path))
-    narrow = raw.select(
-        "user_id",
-        F.col("event_type").alias("status"),
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+    narrow = _scd2_stage_rows(spark, events_path)
+    slices, _, _ = range_slices(narrow, "us", n_splits, src=events_path, src_col="ts")
+    stage_dir, schema = stage_slices(
+        "events_scd2_stream_", slices, ("user_id", "us", "event_id")
     )
-    bounds = _footer_ts_min_max_us(events_path) or tuple(
-        narrow.agg(F.min("us"), F.max("us")).collect()[0]
-    )
-    lo, hi = bounds
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="events_scd2_stream_")
-    for i in range(n_splits):
-        hi_pad = (1 << 60) if i == n_splits - 1 else 0
-        (
-            narrow.filter(
-                (F.col("us") >= int(lo) + i * step)
-                & (F.col("us") < int(lo) + (i + 1) * step + hi_pad)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("user_id", "us", "event_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    # ordered ingest is the contract — make the source's mtime sort
-    # key explicit (ADVICE r9 #3)
-    _stage_monotonic_mtimes(stage_dir)
-    store_root = _scratch(prefix="scd2_store_")
-    out_root = _scratch(prefix="scd2_out_")
-    state_schema = "user_id long, status string, event_id long, valid_from_us long"
+    state_root = scratch_dir("scd2_store_")
+    out = EpochStore(spark, scratch_dir("scd2_out_"))
 
     def merge_batch(bdf, epoch_id: int) -> None:
-        ss = bdf.sparkSession
-        prev_dir = os.path.join(store_root, f"epoch={int(epoch_id) - 1}")
-        if int(epoch_id) > 0 and os.path.isdir(prev_dir):
-            prev = _read_pq(ss, prev_dir, key=store_root + "#e")
-        else:
-            prev = ss.createDataFrame([], state_schema)
-        combined = prev.select(
-            "user_id", "status", "event_id",
-            F.col("valid_from_us").alias("us"), F.lit(True).alias("is_state"),
-        ).unionByName(
-            bdf.select(
-                "user_id", "status", "event_id", "us", F.lit(False).alias("is_state")
-            )
-        )
-        w = Window.partitionBy("user_id").orderBy("us", "event_id")
-        # collapse zero-change rows (a state row is always a change —
-        # it was one when recorded; in-batch it has no predecessor)
-        changes = combined.withColumn("prev", F.lag("status").over(w)).filter(
-            F.col("prev").isNull() | (F.col("status") != F.col("prev"))
-        )
-        nxt = F.lead("us").over(w)
-        marked = changes.withColumn("valid_to_us", nxt)
-        closed = marked.filter(F.col("valid_to_us").isNotNull()).select(
-            "user_id", "status",
-            F.col("us").alias("valid_from_us"), "valid_to_us",
-        )
-        closed.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"epoch={int(epoch_id)}")
-        )
-        open_rows = marked.filter(F.col("valid_to_us").isNull()).select(
-            "user_id", "status", "event_id", F.col("us").alias("valid_from_us")
-        )
-        open_rows.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"epoch={int(epoch_id)}")
-        )
+        state = EpochStore(bdf.sparkSession, state_root)
+        marked = _scd2_marked(state.latest(epoch_id, _SCD2_STATE), bdf)
+        out.write(_scd2_closed(marked), epoch_id, width=None)
+        state.write(_scd2_open(marked), epoch_id)
 
-    stream = (
-        spark.readStream.schema(
-            "user_id long, status string, event_id long, us long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/slice=*")
-    )
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="scd2_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    run_epochs(spark, schema, stage_dir, merge_batch, STATE_CONF)
+    return _scd2_result(out.read(), EpochStore(spark, state_root))
 
-    import glob as _glob
 
-    # numeric epoch sort: lexicographic would put epoch=10 before
-    # epoch=2 and hand back a stale open set on long replays
-    epochs = sorted(
-        _glob.glob(store_root + "/epoch=*"),
-        key=lambda p: int(p.rsplit("=", 1)[1]),
+def _cap_and_pack(gated, prev, source_cap, budget: int) -> DataFrame:
+    """The shard pipeline's cap+pack tail over ``gated`` (source,
+    doc_id, n_toks) given the running ``prev`` totals snapshot (source,
+    total_toks, n_kept).
+
+    ONE window pass computes both the cap rank and the running token
+    prefix (same partitioning+ordering -> one sort, no extra exchange),
+    and ONE broadcast join attaches both state columns.  The cap filter
+    is safe AFTER the prefix sum because the kept rows are a per-source
+    PREFIX in doc_id order: for every surviving row, cum_before over
+    the gated relation equals cum_before over the capped relation."""
+    from pyspark.sql import Window
+
+    rk_w = Window.partitionBy("source").orderBy("doc_id")
+    cum_w = rk_w.rowsBetween(Window.unboundedPreceding, -1)
+    placed = (
+        gated.withColumn("rk", F.row_number().over(rk_w))
+        .withColumn("cum_before", F.coalesce(F.sum("n_toks").over(cum_w), F.lit(0)))
+        .join(F.broadcast(prev), "source", "left")
     )
-    final_open = spark.read.parquet(epochs[-1]).select(
-        "user_id", "status", "valid_from_us",
-        F.lit(None).cast("long").alias("valid_to_us"),
+    if source_cap is not None:
+        placed = placed.filter(
+            F.coalesce(F.col("n_kept"), F.lit(0)) + F.col("rk") <= int(source_cap)
+        )
+    return _chunks(
+        placed.withColumn(
+            "start_tok",
+            (F.coalesce(F.col("total_toks"), F.lit(0)) + F.col("cum_before")).cast("long"),
+        ),
+        budget,
     )
-    hist = spark.read.parquet(out_root + "/epoch=*").select(
-        "user_id", "status", "valid_from_us", "valid_to_us"
+
+
+def _add_totals(prev: DataFrame, packed: DataFrame, *extra) -> DataFrame:
+    """The next totals snapshot: ``prev`` (source, total_toks, n_kept,
+    ...) plus the tokens and row counts ``packed`` adds per source."""
+    bsum = packed.groupBy("source").agg(
+        F.sum("n_toks").alias("b_toks"), F.count("*").alias("b_kept")
     )
-    return hist.unionByName(final_open).withColumn(
-        "is_current", F.col("valid_to_us").isNull()
+    return prev.join(bsum, "source", "full_outer").select(
+        "source",
+        (F.coalesce(F.col("total_toks"), F.lit(0)) + F.coalesce(F.col("b_toks"), F.lit(0)))
+        .cast("long")
+        .alias("total_toks"),
+        (F.coalesce(F.col("n_kept"), F.lit(0)) + F.coalesce(F.col("b_kept"), F.lit(0)))
+        .cast("long")
+        .alias("n_kept"),
+        *extra,
     )
 
 
@@ -1810,107 +1184,30 @@ def _pipeline_shards_epoch(
     budget: int,
     source_cap: int | None = None,
 ) -> None:
-    """One foreachBatch step of the composed corpus-refresh pipeline
-    (module-level so retry-idempotence is unit-testable): near-dup
-    screen of the batch against the kept store -> quality gate ->
-    per-source quota cap -> packed-offset assignment from the
-    per-epoch totals snapshot.
+    """One epoch of the composed corpus-refresh pipeline (module-level
+    so retry-idempotence is unit-testable): near-dup screen of the
+    batch against the kept store -> quality gate -> per-source quota
+    cap -> packed-offset assignment from the per-epoch totals snapshot.
 
     The cap is EXACT under ordered ingest: batches arrive in doc_id
     order, so prev-epoch kept count + within-batch rank IS the global
     per-source row_number — the running-count state (one long per
     source, carried in the totals snapshot) reproduces the batch
-    pipeline's windowed cap without ever seeing the full corpus.
-
-    Retry-idempotent by construction: the dedup store and shard output
-    are epoch-keyed overwrite directories, the dedup screen reads only
-    STRICTLY EARLIER epochs (a replayed epoch must not meet its own
-    prior output — every doc is its own near-dup), and pack offsets /
-    cap counts derive from the epoch-(N-1) totals snapshot plus batch
-    content, so a replayed epoch reproduces identical bytes."""
-    from pyspark.sql import Window
-
-    from qaapi_spark.operators.dedup import (
-        _hashed_shingle_sets,
-        minhash_band_arrays,
-    )
+    pipeline's windowed cap without ever seeing the full corpus."""
     from qaapi_spark.operators.textstats import ws_tokens
 
     spark = bdf.sparkSession
+    kept_store = EpochStore(spark, store_dir + "/data")
+    totals = EpochStore(spark, totals_root)
+    out_store = EpochStore(spark, out_root)
     # staged slices arrive as ONE file -> one partition; repartition
     # unconditionally (the old getNumPartitions probe paid a Py4J
     # RDD-conversion round trip per epoch just to learn that)
     bdf = bdf.repartition(8)
-    sets = (
-        _hashed_shingle_sets(bdf, 2, "text", "doc_id")
-        .filter(F.size("sh") > 0)
-        .persist()
-    )
-    # one NESTED higher-order expression instead of num_hashes separate
-    # array_min columns: identical values (xxhash64(int i, shingle) for
-    # i in 0..n-1 — sequence elements are INT like the old F.lit(i)),
-    # but the logical tree is O(1) wide instead of O(num_hashes), and
-    # every downstream action re-analyzes this lineage (~1 s/epoch of
-    # pure driver-side analysis at 64 hashes, measured round 11)
-    signed = sets.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(F.col("sh"), lambda v: F.xxhash64(i, v))
-            ),
-        ).alias("sig"),
-    )
-    bands_arr = minhash_band_arrays(signed, num_hashes, n_bands).persist()
-    keys = bands_arr.select("id", F.explode("bands").alias("bk")).select(
-        "id", "bk.band", "bk.bsig"
-    )
-
-    def jaccard_ge(pairs, sa, sb):
-        j = (
-            pairs.join(sa.select(F.col("id"), F.col("sh").alias("sh_a")), "id")
-            .join(
-                sb.select(F.col("id").alias("other"), F.col("sh").alias("sh_b")),
-                "other",
-            )
-            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "j",
-                F.round(
-                    F.col("inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                    4,
-                ),
-            )
-        )
-        return j.filter(F.col("j") >= threshold)
-
-    if os.path.isdir(store_dir + "/data"):
-        rec = _read_pq(spark, store_dir + "/data").filter(
-            F.col("epoch") < int(epoch_id)
-        )
-        store = rec.select(
-            F.col("id").alias("other"), F.explode("bands").alias("bk")
-        ).select("bk.band", "bk.bsig", "other")
-        kept_sets = rec.select("id", "sh")
-        cand = keys.join(store, ["band", "bsig"]).select("id", "other").distinct()
-        dup = jaccard_ge(cand, sets, kept_sets).select("id").distinct()
-        keys = keys.join(dup, "id", "left_anti")
-    a, b = keys.alias("a"), keys.alias("b")
-    wpairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") > F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"))
-        .distinct()
-    )
-    smaller = jaccard_ge(wpairs, sets, sets).select("id").distinct()
-    kept_ids = (
-        keys.select("id").distinct().join(smaller, "id", "left_anti").persist()
-    )
+    sets, bands_arr, keys = _batch_bands(bdf, num_hashes, n_bands)
+    kept_ids = _greedy_kept(
+        keys, sets, kept_store.read(before=epoch_id), threshold
+    ).persist()
 
     # quality gate + pack-offset assignment over this epoch's survivors
     gated = (
@@ -1922,83 +1219,23 @@ def _pipeline_shards_epoch(
         )
         .filter(F.col("n_toks") >= min_toks)
     )
-    prev_dir = os.path.join(totals_root, f"epoch={int(epoch_id) - 1}")
-    if int(epoch_id) > 0 and os.path.isdir(prev_dir):
-        prev = _read_pq(spark, prev_dir, key=totals_root + "#e")
-    else:
-        prev = spark.createDataFrame(
-            [], "source string, total_toks long, n_kept long"
-        )
-    # ONE window pass computes both the cap rank and the running token
-    # prefix (same partitioning+ordering -> one sort, no extra
-    # exchange), and ONE broadcast join attaches both state columns.
-    # The cap filter is safe to apply AFTER the prefix sum because the
-    # kept rows are a per-source PREFIX in doc_id order: for every
-    # surviving row, cum_before over the gated relation equals
-    # cum_before over the capped relation.
-    rk_w = Window.partitionBy("source").orderBy("doc_id")
-    cum_w = rk_w.rowsBetween(Window.unboundedPreceding, -1)
-    placed = (
-        gated.withColumn("rk", F.row_number().over(rk_w))
-        .withColumn(
-            "cum_before", F.coalesce(F.sum("n_toks").over(cum_w), F.lit(0))
-        )
-        .join(F.broadcast(prev), "source", "left")
-    )
-    if source_cap is not None:
-        placed = placed.filter(
-            F.coalesce(F.col("n_kept"), F.lit(0)) + F.col("rk") <= source_cap
-        )
-    placed = placed.withColumn(
-        "start_tok",
-        (F.coalesce(F.col("total_toks"), F.lit(0)) + F.col("cum_before"))
-        .cast("long"),
-    )
-    out = placed.select(
-        "source",
-        "doc_id",
-        F.col("n_toks").cast("long").alias("n_toks"),
-        "start_tok",
-        F.floor(F.col("start_tok") / F.lit(budget)).cast("long").alias("first_chunk"),
-        F.floor((F.col("start_tok") + F.col("n_toks") - 1) / F.lit(budget))
-        .cast("long")
-        .alias("last_chunk"),
-    ).withColumn("n_chunks", F.col("last_chunk") - F.col("first_chunk") + 1)
+    prev = totals.latest(epoch_id, "source string, total_toks long, n_kept long")
     # pin the SKINNY pack rows so the totals snapshot aggregates the
-    # same materialization the shard write emits (r16, guide §2.6):
+    # same materialization the shard write emits (r16):
     # the snapshot previously waited for the shard write and re-read
     # the just-written file, serializing its job behind the write —
     # pinned, all three epoch writes are independent and overlap in
-    # ONE _par_writes batch (3 serialized jobs -> max of 3).  Unlike
+    # ONE par_writes batch (3 serialized jobs -> max of 3).  Unlike
     # the fat sh/bands delta the r14 A/B rejected persisting, `out` is
     # 7 narrow columns of this epoch's survivors.
-    out = out.persist()
+    out = _cap_and_pack(gated, prev, source_cap, budget).persist()
     try:
-        epoch_out = os.path.join(out_root, f"epoch={int(epoch_id)}")
-        bsum = out.groupBy("source").agg(
-            F.sum("n_toks").alias("b_toks"), F.count("*").alias("b_kept")
-        )
-        totals = prev.join(bsum, "source", "full_outer").select(
-            "source",
-            (
-                F.coalesce(F.col("total_toks"), F.lit(0))
-                + F.coalesce(F.col("b_toks"), F.lit(0))
-            ).cast("long").alias("total_toks"),
-            (
-                F.coalesce(F.col("n_kept"), F.lit(0))
-                + F.coalesce(F.col("b_kept"), F.lit(0))
-            ).cast("long").alias("n_kept"),
-        )
-        _par_writes(
-            lambda: out.coalesce(1).write.mode("overwrite").parquet(epoch_out),
-            lambda: bands_arr.join(kept_ids, "id", "left_semi")
-            .join(sets, "id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{store_dir}/data/epoch={int(epoch_id)}"),
-            lambda: totals.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(totals_root, f"epoch={int(epoch_id)}")
+        par_writes(
+            out_store.writer(out, epoch_id),
+            kept_store.writer(
+                bands_arr.join(kept_ids, "id", "left_semi").join(sets, "id"), epoch_id
             ),
+            totals.writer(_add_totals(prev, out), epoch_id),
         )
     finally:
         out.unpersist()
@@ -2041,26 +1278,11 @@ def stream_pipeline_corpus_to_shards(
     candidates only) plus two per-source windows over the batch — no
     stage rescans history."""
     raw = spark.read.parquet(docs_path)
-    mm = _footer_min_max(docs_path, "doc_id")  # no-job lo/hi (exact)
-    lo, hi = mm if mm else raw.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="docs_c2s_stream_")
-    for i in range(n_splits):
-        hi_pad = (1 << 60) if i == n_splits - 1 else 0
-        (
-            raw.filter(
-                (F.col("doc_id") >= int(lo) + i * step)
-                & (F.col("doc_id") < int(lo) + (i + 1) * step + hi_pad)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    _stage_monotonic_mtimes(stage_dir)
-    store_dir = _scratch(prefix="c2s_store_")
-    totals_root = _scratch(prefix="c2s_totals_")
-    out_root = _scratch(prefix="c2s_out_")
+    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
+    stage_dir, schema = stage_slices("docs_c2s_stream_", slices)
+    store_dir = scratch_dir("c2s_store_")
+    totals_root = scratch_dir("c2s_totals_")
+    out_root = scratch_dir("c2s_out_")
 
     def merge_batch(bdf, epoch_id: int) -> None:
         _pipeline_shards_epoch(
@@ -2069,68 +1291,15 @@ def stream_pipeline_corpus_to_shards(
             source_cap=source_cap,
         )
 
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/slice=*")
-    )
-    # same scoping rationale as stream_neardup_dedup: an epoch chains
-    # ~10 small jobs over a micro-batch; AQE's materialize-then-replan
-    # adds serial latency with nothing to re-plan at this size.  The
-    # shuffle width drops to 8 for the stream's duration (the
-    # stream_scd2 state_partitions pattern): every shuffle here moves
-    # a few hundred rows, so 32-partition exchanges are pure
-    # task-scheduling overhead — results are partitioning-invariant
-    # (deterministic windows/joins; epoch files stay 1-file coalesced).
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", None)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="c2s_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev_aqe is None:
-            spark.conf.unset("spark.sql.adaptive.enabled")
-        else:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-
-    return spark.read.parquet(out_root + "/epoch=*").select(
+    run_epochs(spark, schema, stage_dir, merge_batch, ORDERED_CONF)
+    return EpochStore(spark, out_root).read().select(
         "source", "doc_id", "n_toks", "start_tok",
         "first_chunk", "last_chunk", "n_chunks",
     )
 
 
-def _verified_jaccard_pairs(pairs, sa, sb, threshold: float):
-    """Exact bigram-Jaccard verification of LSH candidate ``pairs``
-    (id, other) against shingle-set relations ``sa``/``sb`` (id, sh):
-    keep pairs whose rounded Jaccard clears ``threshold``.  Shared by
-    the CC insert epoch (within-batch + cross-corpus edges) and the
-    retraction epoch's survivor re-screen
-    (streaming/retraction._cc_rt_delete_epoch)."""
-    j = (
-        pairs.join(sa.select(F.col("id"), F.col("sh").alias("sh_a")), "id")
-        .join(
-            sb.select(F.col("id").alias("other"), F.col("sh").alias("sh_b")),
-            "other",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "j",
-            F.round(
-                F.col("inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                4,
-            ),
-        )
-    )
-    return j.filter(F.col("j") >= threshold).select("id", "other")
+# driver union-find gate of the CC epochs' contracted graphs (edges)
+_LABEL_EDGE_GATE = 100_000
 
 
 def _propagate_min_labels(spark, edges, dist_nodes):
@@ -2145,190 +1314,36 @@ def _propagate_min_labels(spark, edges, dist_nodes):
     gate (a genuinely dup-heavy batch at cluster scale) the
     distributed min-label operator takes over unchanged, seeded with
     ``dist_nodes`` (one ``id`` column) plus the edge endpoints.
-    Labels are min ids by induction in both branches."""
-    from qaapi_spark.operators.graph import connected_components
+    Labels are min ids by induction in both branches; edges with a
+    null endpoint are dropped on both."""
+    from qaapi_spark.operators.graph import connected_components, union_find_min
 
-    _EDGE_GATE = 100_000
-    edge_rows = edges.limit(_EDGE_GATE + 1).collect()
-    if len(edge_rows) <= _EDGE_GATE:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for ra, rb in ((find(r[0]), find(r[1])) for r in edge_rows):
-            if ra != rb:
-                # min id wins the root — labels stay min doc_ids
-                lo2, hi2 = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi2] = lo2
-        touched = {int(r[0]) for r in edge_rows} | {int(r[1]) for r in edge_rows}
-        comp_rows = [(n_, int(find(n_))) for n_ in sorted(touched)]
-        return spark.createDataFrame(comp_rows, "node long, comp long").persist()
-    nodes = dist_nodes.unionByName(
-        edges.select(F.col("other").alias("id"))
-    ).distinct()
+    edges = edges.filter(F.col("id").isNotNull() & F.col("other").isNotNull())
+    edge_rows = edges.limit(_LABEL_EDGE_GATE + 1).collect()
+    if len(edge_rows) <= _LABEL_EDGE_GATE:
+        comp = union_find_min(edge_rows)
+        return spark.createDataFrame(
+            sorted(comp.items()), "node long, comp long"
+        ).persist()
+    nodes = dist_nodes.unionByName(edges.select(F.col("other").alias("id"))).distinct()
     return connected_components(
         nodes, edges, node_col="id", src_col="id", dst_col="other"
     ).persist()
 
 
-def _has_epochs(root: str) -> bool:
-    """Whether an epoch-keyed store holds any delta yet.  The scratch
-    roots are pre-created empty by mkdtemp, so a bare isdir reads an
-    empty directory (UNABLE_TO_INFER_SCHEMA) — presence means at least
-    one ``epoch=`` delta dir."""
-    return os.path.isdir(root) and any(
-        e.startswith("epoch=") for e in os.listdir(root)
-    )
+def _latest_labels(labels: EpochStore, before: int | None = None):
+    """Each doc's label from its newest delta with epoch < ``before``
+    (all when None), or None before the first delta."""
+    from pyspark.sql import Window
 
-
-def _frontier_max_doc_id(spark, root: str, epoch_lt: int):
-    """Max ``doc_id`` across an epoch-keyed store's deltas with epoch <
-    ``epoch_lt`` — the ordered-ingest frontier.  Read from the parquet
-    FOOTER statistics (driver-side pyarrow metadata, no Spark job: the
-    guard runs every epoch and a full read would add a job per
-    micro-batch); falls back to one Spark aggregate if any file lacks
-    min/max stats.  None when no prior delta exists."""
-    import glob as _g
-
-    import pyarrow.parquet as _pq
-
-    files: list[str] = []
-    for d in _g.glob(os.path.join(root, "epoch=*")):
-        try:
-            e = int(d.rsplit("=", 1)[1])
-        except ValueError:
-            continue
-        if e < int(epoch_lt):
-            files.extend(_g.glob(os.path.join(d, "*.parquet")))
-    if not files:
+    df = labels.read(before)
+    if df is None:
         return None
-    mx = None
-    try:
-        for f in files:
-            md = _pq.ParquetFile(f).metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            idx = names.index("doc_id")
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    raise LookupError("missing column statistics")
-                mx = st.max if mx is None else max(mx, st.max)
-        return mx
-    except (LookupError, ValueError, OSError):
-        return (
-            spark.read.parquet(root)
-            .filter(F.col("epoch") < int(epoch_lt))
-            .agg(F.max("doc_id"))
-            .collect()[0][0]
-        )
-
-
-def _read_deleted(
-    spark, del_root: str, epoch_id: int | None = None, key_col: str = "doc_id"
-):
-    """The retracted subject keys recorded so far (one ``key_col``
-    column — doc_id for the corpus streams, user_id for SCD2 erasure),
-    or None when no delete epoch has written yet.  ``epoch_id`` filters
-    to strictly earlier epochs (retry-idempotence: a replayed epoch
-    never meets its own tombstones); None reads every epoch (the
-    final-result read).  _store_recover first: the tombstone root is a
-    compactable epoch store like the others (ADVICE r11 #1)."""
-    if not _store_recover(del_root) or not _has_epochs(del_root):
-        return None
-    df = _read_pq(spark, del_root)
-    if epoch_id is not None:
-        df = df.filter(F.col("epoch") < int(epoch_id))
-    return df.select(key_col)
-
-
-def _ordered_frontier_check_async(bdf, prev_max, msg_fn):
-    """Async form of the ordered-ingest guard (guide §2.6): the batch
-    min(doc_id) agg — the guard's only Spark job — runs on a driver
-    thread and the returned ``check()`` raises at the END of the epoch,
-    overlapping the probe with the epoch's real work.  Deferral is safe
-    for the same reason as the reinsert guard: the batch still fails
-    inside foreachBatch with the identical exception, and the epoch's
-    interim writes are epoch-keyed overwrites no reader consumes after
-    a failed query."""
-    if prev_max is None:
-        return lambda: None
-    from concurrent.futures import ThreadPoolExecutor
-
-    agg = bdf.agg(F.min("doc_id"))
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(agg.collect)
-    pool.shutdown(wait=False)
-
-    def check() -> None:
-        batch_min = fut.result()[0][0]
-        if batch_min is not None and int(batch_min) <= int(prev_max):
-            raise ValueError(msg_fn(batch_min))
-
-    return check
-
-
-
-def _reject_tombstoned_reinsert(bdf, del_root: str | None, epoch_id: int) -> None:
-    """Raise when an insert batch carries a doc_id that was already
-    RETRACTED (ADVICE r12 #1): tombstones filter every standing-store
-    read, so a re-inserted retracted doc would participate in
-    within-batch greedy/edge decisions (it can block a live near-dup or
-    become a component's min label) and then silently vanish from later
-    reads — corrupting survivors' kept flags / labels instead of
-    erroring.  The ExactSubstr stream catches this for free via its
-    doc_id-ordered frontier (which counts del_root footer stats); the
-    CC-label and near-dup insert epochs have no frontier, so they call
-    this explicit semi-join guard.  Retry-idempotent: the tombstone
-    read filters ``epoch < epoch_id``, so a replayed insert epoch never
-    trips on tombstones written after it."""
-    _reject_tombstoned_reinsert_async(bdf, del_root, epoch_id)()
-
-
-def _reject_tombstoned_reinsert_async(bdf, del_root: str | None, epoch_id: int):
-    """Async form of the guard (optimization guide §2.6 — overlap
-    independent jobs): starts the tombstone semi-join probe on a
-    driver thread and returns ``check()``, which the epoch calls AFTER
-    its main chain so the probe's ~0.1-0.5 s job overlaps the epoch's
-    real work instead of serializing in front of it.  Deferring the
-    raise is safe: the batch still fails inside foreachBatch (identical
-    exception, identical stream failure), and everything the epoch
-    wrote meanwhile is an epoch-keyed overwrite no reader consumes
-    because the failed query's final relation is never built."""
-    if del_root is None:
-        return lambda: None
-    tomb = _read_deleted(bdf.sparkSession, del_root, epoch_id)
-    if tomb is None:
-        return lambda: None
-    from concurrent.futures import ThreadPoolExecutor
-
-    probe = (
-        bdf.select("doc_id").join(F.broadcast(tomb), "doc_id", "left_semi").limit(3)
-    )
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(probe.collect)
-    pool.shutdown(wait=False)
-
-    def check() -> None:
-        hits = fut.result()
-        if hits:
-            _raise_tombstoned(hits)
-
-    return check
-
-
-def _raise_tombstoned(hits) -> None:
-    raise ValueError(
-        "re-insert of tombstoned doc_id(s) "
-        f"{sorted(r[0] for r in hits)}: retracted ids are permanent "
-        "(GDPR-shaped) — tombstones filter standing-store reads, so "
-        "a re-inserted doc would silently corrupt the maintained "
-        "relation instead of erroring"
+    lab_w = Window.partitionBy("doc_id").orderBy(F.desc("epoch"))
+    return (
+        df.withColumn("rn", F.row_number().over(lab_w))
+        .filter(F.col("rn") == 1)
+        .select("doc_id", "comp")
     )
 
 
@@ -2342,12 +1357,12 @@ def _cc_labels_epoch(
     n_bands: int,
     del_root: str | None = None,
 ) -> None:
-    """One foreachBatch step of incremental connected-component
-    maintenance over the near-dup graph (module-level so
-    retry-idempotence is unit-testable): discover this batch's verified
-    near-dup edges (within-batch + vs the standing corpus), CONTRACT
-    existing components to their label supernodes, run min-label
-    propagation on the contracted graph only, and write a label DELTA.
+    """One epoch of incremental connected-component maintenance over
+    the near-dup graph (module-level so retry-idempotence is
+    unit-testable): discover this batch's verified near-dup edges
+    (within-batch + vs the standing corpus), CONTRACT existing
+    components to their label supernodes, run min-label propagation
+    on the contracted graph only, and write a label DELTA.
 
     Why contraction is the 100 TB shape: a new edge can merge two
     standing components, so greedy ordered dedup can't maintain labels
@@ -2368,167 +1383,98 @@ def _cc_labels_epoch(
     label-partitioned layout would bound the relabel scan; the delta
     contract is what makes that a drop-in).
 
-    Retry-idempotent: all reads filter epoch < N (a replayed epoch
-    never meets its own prior output), all writes are epoch-keyed
-    overwrite.
-
     ``del_root`` (r12, retraction support): when set, band-store and
     label reads anti-join the tombstoned doc_ids recorded there by
     `streaming/retraction._cc_rt_delete_epoch`, so post-delete inserts
-    edge only to live docs; None (the insert-only catalog stream)
-    leaves every read unchanged.
+    edge only to live docs, and a re-insert of a tombstoned doc_id is
+    rejected; None (the insert-only catalog stream) leaves every read
+    unchanged.
     """
-    from pyspark.sql import Window
-
-    from qaapi_spark.operators.dedup import (
-        _hashed_shingle_sets,
-        minhash_band_arrays,
-    )
-
     spark = bdf.sparkSession
-    # tombstone-reinsert guard overlapped with the epoch chain (§2.6);
-    # checked after the writes settle, before the batch commits
-    chk_reinsert = _reject_tombstoned_reinsert_async(bdf, del_root, epoch_id)
-    bdf = bdf.repartition(8)
-    sets = (
-        _hashed_shingle_sets(bdf, 2, "text", "doc_id")
-        .filter(F.size("sh") > 0)
-        .persist()
-    )
-    signed = sets.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(
-                F.transform(F.col("sh"), lambda v: F.xxhash64(i, v))
-            ),
-        ).alias("sig"),
-    )
-    bands_arr = minhash_band_arrays(signed, num_hashes, n_bands).persist()
-    keys = bands_arr.select("id", F.explode("bands").alias("bk")).select(
-        "id", "bk.band", "bk.bsig"
-    )
+    bands = EpochStore(spark, store_dir + "/data")
+    labels = EpochStore(spark, label_root)
+    with Guards() as guards:
+        dels = tombstones(spark, del_root, epoch_id)
+        guards.no_reinsert(bdf, dels)
+        bdf = bdf.repartition(8)
+        sets, bands_arr, keys = _batch_bands(bdf, num_hashes, n_bands)
+        # within-batch verified edges (undirected, id > other)
+        new_edges = _verified_jaccard_pairs(_within_pairs(keys), sets, sets, threshold)
 
-    # within-batch verified edges (undirected, id > other)
-    a, b = keys.alias("a"), keys.alias("b")
-    wcand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") > F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"))
-        .distinct()
-    )
-    new_edges = _verified_jaccard_pairs(wcand, sets, sets, threshold)
-
-    # latest standing labels (empty on first epoch).  _store_recover,
-    # not a bare isdir (ADVICE r11 #1): compact_epoch_store promotes
-    # these roots via _store_swap, and a crash between its two renames
-    # leaves the root absent with state stranded at .__swap_old__ — a
-    # bare check would silently treat the batch as first-epoch and
-    # discard all accumulated labels/bands.  Call BOTH (no `and`
-    # short-circuit) so each root heals even when the other is absent.
-    have_bands = _store_recover(store_dir + "/data")
-    have_labels = _store_recover(label_root)
-    have_state = have_bands and have_labels
-    if have_state:
-        rec = _read_pq(spark, store_dir + "/data").filter(
-            F.col("epoch") < int(epoch_id)
-        )
-        # retraction support: tombstoned docs leave the standing corpus
-        # logically — their band rows and label rows are filtered from
-        # every read instead of rewriting historical epoch files
-        dels = _read_deleted(spark, del_root, epoch_id) if del_root else None
-        if dels is not None:
-            rec = rec.join(
-                dels.select(F.col("doc_id").alias("id")), "id", "left_anti"
+        # latest standing labels (none on the first epoch)
+        rec = bands.read(before=epoch_id)
+        labels_now = _latest_labels(labels, epoch_id)
+        if rec is not None and labels_now is not None:
+            # retraction support: tombstoned docs leave the standing
+            # corpus logically — their band rows and label rows are
+            # filtered from every read instead of rewriting historical
+            # epoch files
+            if dels is not None:
+                rec = rec.join(dels.select(F.col("doc_id").alias("id")), "id", "left_anti")
+                labels_now = labels_now.join(dels, "doc_id", "left_anti")
+            labels_now = labels_now.persist()
+            # cross edges vs the standing corpus, old endpoint -> its label
+            ccand = keys.join(_band_keys(rec, "other"), ["band", "bsig"])
+            cross = _verified_jaccard_pairs(
+                ccand.select("id", "other").distinct(), sets, rec.select("id", "sh"), threshold
             )
-        store = rec.select(
-            F.col("id").alias("other"), F.explode("bands").alias("bk")
-        ).select("bk.band", "bk.bsig", "other")
-        old_sets = rec.select("id", "sh")
-        lab_w = Window.partitionBy("doc_id").orderBy(F.desc("epoch"))
-        labels_now = (
-            spark.read.parquet(label_root)
-            .filter(F.col("epoch") < int(epoch_id))
-            .withColumn("rn", F.row_number().over(lab_w))
-            .filter(F.col("rn") == 1)
-            .select("doc_id", "comp")
-        )
-        if dels is not None:
-            labels_now = labels_now.join(dels, "doc_id", "left_anti")
-        labels_now = labels_now.persist()
-        # cross edges vs the standing corpus, old endpoint -> its label
-        ccand = keys.join(store, ["band", "bsig"]).select("id", "other").distinct()
-        cross = _verified_jaccard_pairs(ccand, sets, old_sets, threshold)
-        cross_lab = (
-            cross.join(
-                labels_now.select(
-                    F.col("doc_id").alias("other"), F.col("comp").alias("olabel")
-                ),
-                "other",
+            cross_lab = (
+                cross.join(
+                    labels_now.select(
+                        F.col("doc_id").alias("other"), F.col("comp").alias("olabel")
+                    ),
+                    "other",
+                )
+                .select("id", F.col("olabel").alias("other"))
+                .distinct()
             )
-            .select("id", F.col("olabel").alias("other"))
-            .distinct()
-        )
-        edges = new_edges.unionByName(cross_lab)
-    else:
-        labels_now = None
-        edges = new_edges
+            edges = new_edges.unionByName(cross_lab)
+        else:
+            labels_now = None
+            edges = new_edges
 
-    # The contracted graph is bounded by the BATCH's verified edge
-    # count (supernodes fold whole standing components into one row),
-    # so nothing corpus- or batch-sized reaches the driver — see
-    # _propagate_min_labels for the union-find gate / distributed
-    # fallback split.
-    comp = _propagate_min_labels(spark, edges, sets.select("id"))
+        # The contracted graph is bounded by the BATCH's verified edge
+        # count (supernodes fold whole standing components into one
+        # row), so nothing corpus- or batch-sized reaches the driver —
+        # see _propagate_min_labels for the union-find gate /
+        # distributed fallback split.
+        comp = _propagate_min_labels(spark, edges, sets.select("id"))
 
-    # EVERY batch doc gets a label — docs whose shingle set is empty
-    # (< 2 words) can never pair, exactly like the oracle's seed row,
-    # so they label as their own singleton component via the coalesce
-    batch_labels = (
-        bdf.select("doc_id")
-        .join(
-            comp.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left"
+        # EVERY batch doc gets a label — docs whose shingle set is
+        # empty (< 2 words) can never pair, exactly like the oracle's
+        # seed row, so they label as their own singleton component via
+        # the coalesce
+        batch_labels = (
+            bdf.select("doc_id")
+            .join(comp.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left")
+            .select("doc_id", F.coalesce("comp", F.col("doc_id")).alias("comp"))
         )
-        .select("doc_id", F.coalesce("comp", F.col("doc_id")).alias("comp"))
-    )
-    delta = batch_labels
-    if labels_now is not None:
-        # old supernodes whose label shrank: rewrite their members
-        changed = comp.filter(F.col("comp") < F.col("node")).select(
-            F.col("node").alias("old_label"), F.col("comp").alias("new_comp")
-        )
-        relabeled = (
-            labels_now.join(
-                changed, labels_now["comp"] == changed["old_label"]
-            )
-            .select("doc_id", F.col("new_comp").alias("comp"))
-            # batch rows already carry their final label
-            .join(batch_labels.select("doc_id"), "doc_id", "left_anti")
-        )
-        delta = batch_labels.unionByName(relabeled)
-    try:
-        # label delta and band-store delta are independent consumers of
-        # pinned inputs — overlap their write jobs (_par_writes)
-        _par_writes(
-            lambda: delta.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(label_root, f"epoch={int(epoch_id)}")
-            ),
-            lambda: bands_arr.join(sets, "id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{store_dir}/data/epoch={int(epoch_id)}"),
-        )
-    finally:
-        comp.unpersist()
+        delta = batch_labels
         if labels_now is not None:
-            labels_now.unpersist()
-        bands_arr.unpersist()
-        sets.unpersist()
-    chk_reinsert()
+            # old supernodes whose label shrank: rewrite their members
+            changed = comp.filter(F.col("comp") < F.col("node")).select(
+                F.col("node").alias("old_label"), F.col("comp").alias("new_comp")
+            )
+            relabeled = (
+                labels_now.join(changed, labels_now["comp"] == changed["old_label"])
+                .select("doc_id", F.col("new_comp").alias("comp"))
+                # batch rows already carry their final label
+                .join(batch_labels.select("doc_id"), "doc_id", "left_anti")
+            )
+            delta = batch_labels.unionByName(relabeled)
+        try:
+            # label delta and band-store delta are independent
+            # consumers of pinned inputs — overlap their write jobs
+            par_writes(
+                labels.writer(delta, epoch_id),
+                bands.writer(bands_arr.join(sets, "id"), epoch_id),
+            )
+        finally:
+            comp.unpersist()
+            if labels_now is not None:
+                labels_now.unpersist()
+            bands_arr.unpersist()
+            sets.unpersist()
 
 
 def stream_cc_labels_incremental(
@@ -2561,64 +1507,18 @@ def stream_cc_labels_incremental(
     write — no stage recomputes standing components from scratch.
     """
     raw = spark.read.parquet(docs_path)
-    mm = _footer_min_max(docs_path, "doc_id")  # no-job lo/hi (exact)
-    lo, hi = mm if mm else raw.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="docs_cc_stream_")
-    for i in range(n_splits):
-        hi_pad = (1 << 60) if i == n_splits - 1 else 0
-        (
-            raw.filter(
-                (F.col("doc_id") >= int(lo) + i * step)
-                & (F.col("doc_id") < int(lo) + (i + 1) * step + hi_pad)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    _stage_monotonic_mtimes(stage_dir)
-    store_dir = _scratch(prefix="cc_store_")
-    label_root = _scratch(prefix="cc_labels_")
+    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
+    stage_dir, schema = stage_slices("docs_cc_stream_", slices)
+    store_dir = scratch_dir("cc_store_")
+    label_root = scratch_dir("cc_labels_")
 
     def merge_batch(bdf, epoch_id: int) -> None:
         _cc_labels_epoch(
             bdf, epoch_id, store_dir, label_root, threshold, num_hashes, n_bands
         )
 
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/slice=*")
-    )
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", None)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="cc_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev_aqe is None:
-            spark.conf.unset("spark.sql.adaptive.enabled")
-        else:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-
-    from pyspark.sql import Window
-
-    lab_w = Window.partitionBy("doc_id").orderBy(F.desc("epoch"))
-    return (
-        spark.read.parquet(label_root)
-        .withColumn("rn", F.row_number().over(lab_w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "comp")
-    )
+    run_epochs(spark, schema, stage_dir, merge_batch, ORDERED_CONF)
+    return _latest_labels(EpochStore(spark, label_root))
 
 
 def _exsub_epoch(
@@ -2628,11 +1528,10 @@ def _exsub_epoch(
     out_root: str,
     min_len: int,
 ) -> None:
-    """One foreachBatch step of streaming ExactSubstr dedup (Lee et
-    al. ACL'22 §3 under ordered ingest; module-level so
-    retry-idempotence is unit-testable): trim the BATCH's documents
-    against the standing window-digest store, then append the batch's
-    digests to the store.
+    """One epoch of streaming ExactSubstr dedup (Lee et al. ACL'22 §3
+    under ordered ingest; module-level so retry-idempotence is
+    unit-testable): trim the BATCH's documents against the standing
+    window-digest store, then append the batch's digests to the store.
 
     Why the stream EQUALS the batch apply relation: the batch picks
     the corpus-wide FIRST (doc_id, pos) occurrence per window digest
@@ -2650,35 +1549,27 @@ def _exsub_epoch(
     co-locates; volume is O(distinct windows) x 16 bytes).  Per-epoch
     work: batch windows + one digest semi-join + the shared trim tail
     — nothing rescans earlier documents.
-
-    Retry-idempotent: reads filter epoch < N, writes are epoch-keyed
-    overwrite (a replayed epoch never meets its own digests).
     """
     from pyspark.sql import Window
 
-    from qaapi_spark.operators.dedup import (
-        _all_window_positions,
-        _apply_trim,
-        _cut_sets,
-    )
+    from qaapi_spark.operators.dedup import _all_window_positions, _apply_trim, _cut_sets
     from qaapi_spark.operators.textstats import ws_tokens
 
     spark = bdf.sparkSession
+    digests = EpochStore(spark, digest_root)
+    out = EpochStore(spark, out_root)
     bdf = bdf.repartition(8)
-
-    # ordered-ingest GUARD (VERDICT r11 next #6): the stream's EXACT
-    # equality with the batch apply holds only under doc_id-ordered
-    # arrival — a batch landing behind the standing frontier would
-    # silently produce a DIFFERENT relation (its occurrences are
-    # earlier than already-emitted canonicals, which this stream never
-    # revokes).  Reject it loudly instead: the frontier comes from the
-    # emitted rows' parquet footer stats (driver-side, no job; at
-    # 100 TB a counter in the commit log), the batch min is one tiny
-    # agg.
-    chk_order = lambda: None  # noqa: E731 - trivial no-op default
-    if _has_epochs(out_root):
-        prev_max = _frontier_max_doc_id(spark, out_root, epoch_id)
-        chk_order = _ordered_frontier_check_async(
+    with Guards() as guards:
+        # ordered-ingest GUARD (VERDICT r11 next #6): the stream's EXACT
+        # equality with the batch apply holds only under doc_id-ordered
+        # arrival — a batch landing behind the standing frontier would
+        # silently produce a DIFFERENT relation (its occurrences are
+        # earlier than already-emitted canonicals, which this stream
+        # never revokes).  Reject it loudly instead: the frontier comes
+        # from the emitted rows' footer stats (at 100 TB a counter in
+        # the commit log), the batch min is one tiny agg.
+        prev_max = out.max_before("doc_id", epoch_id)
+        guards.frontier(
             bdf,
             prev_max,
             lambda batch_min: (
@@ -2691,55 +1582,41 @@ def _exsub_epoch(
             ),
         )
 
-    wins = _all_window_positions(bdf, min_len, "text", "doc_id").persist()
-
-    # non-canonical batch occurrences: digest already in the store
-    # (any earlier occurrence beats the whole batch) ...
-    # _store_recover, not a bare isdir (ADVICE r11 #1): the digest
-    # store is compact_epoch_store-promoted, so a swap-crash strands it
-    # at .__swap_old__ — recover restores it instead of silently
-    # re-canonicalizing the whole batch as first-epoch.
-    store = None
-    if _store_recover(digest_root) and int(epoch_id) > 0:
-        store = spark.read.parquet(digest_root).filter(
-            F.col("epoch") < int(epoch_id)
-        ).select("h")
-        seen = wins.join(store, "h", "left_semi").select("doc_id", "pos")
-    else:
-        seen = None
-    # ... or a strictly earlier in-batch occurrence of the same digest
-    w = Window.partitionBy("h").orderBy("doc_id", "pos")
-    later = (
-        wins.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") >= 2)
-        .select("doc_id", "pos")
-    )
-    nc = later if seen is None else later.unionByName(seen)
-    cut = _cut_sets(nc, min_len)
-    base = bdf.select(
-        "doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks")
-    )
-    try:
-        # append only digests the store has NEVER seen, so the store is
-        # truly O(distinct windows) x 16 bytes — a digest recurring in
-        # every epoch would otherwise be stored once per epoch
-        new_h = wins.select("h").distinct()
+        wins = _all_window_positions(bdf, min_len, "text", "doc_id").persist()
+        # non-canonical batch occurrences: digest already in the store
+        # (any earlier occurrence beats the whole batch) ...
+        store = digests.read(before=epoch_id)
         if store is not None:
-            new_h = new_h.join(store, "h", "left_anti")
-        # trimmed rows and digest delta both hang off pinned `wins` —
-        # overlap their write jobs (_par_writes)
-        _par_writes(
-            lambda: _apply_trim(base, cut)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_root, f"epoch={int(epoch_id)}")),
-            lambda: new_h.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(digest_root, f"epoch={int(epoch_id)}")
-            ),
+            store = store.select("h")
+            seen = wins.join(store, "h", "left_semi").select("doc_id", "pos")
+        else:
+            seen = None
+        # ... or a strictly earlier in-batch occurrence of the same digest
+        w = Window.partitionBy("h").orderBy("doc_id", "pos")
+        later = (
+            wins.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") >= 2)
+            .select("doc_id", "pos")
         )
-    finally:
-        wins.unpersist()
-    chk_order()
+        nc = later if seen is None else later.unionByName(seen)
+        cut = _cut_sets(nc, min_len)
+        base = bdf.select("doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks"))
+        try:
+            # append only digests the store has NEVER seen, so the store
+            # is truly O(distinct windows) x 16 bytes — a digest
+            # recurring in every epoch would otherwise be stored once
+            # per epoch
+            new_h = wins.select("h").distinct()
+            if store is not None:
+                new_h = new_h.join(store, "h", "left_anti")
+            # trimmed rows and digest delta both hang off pinned `wins`
+            # — overlap their write jobs
+            par_writes(
+                out.writer(_apply_trim(base, cut), epoch_id),
+                digests.writer(new_h, epoch_id),
+            )
+        finally:
+            wins.unpersist()
 
 
 def stream_exact_substring_apply(
@@ -2759,54 +1636,16 @@ def stream_exact_substring_apply(
     ordered ingest — no LSH, no probabilistic caveat — and shares its
     oracle."""
     raw = spark.read.parquet(docs_path)
-    mm = _footer_min_max(docs_path, "doc_id")  # no-job lo/hi (exact)
-    lo, hi = mm if mm else raw.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    step = max(1, (int(hi) - int(lo) + n_splits) // n_splits)
-    stage_dir = _scratch(prefix="docs_exsub_stream_")
-    for i in range(n_splits):
-        hi_pad = (1 << 60) if i == n_splits - 1 else 0
-        (
-            raw.filter(
-                (F.col("doc_id") >= int(lo) + i * step)
-                & (F.col("doc_id") < int(lo) + (i + 1) * step + hi_pad)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(stage_dir, f"slice={i}"))
-        )
-    _stage_monotonic_mtimes(stage_dir)
-    digest_root = _scratch(prefix="exsub_digests_")
-    out_root = _scratch(prefix="exsub_out_")
+    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
+    stage_dir, schema = stage_slices("docs_exsub_stream_", slices)
+    digest_root = scratch_dir("exsub_digests_")
+    out_root = scratch_dir("exsub_out_")
 
     def merge_batch(bdf, epoch_id: int) -> None:
         _exsub_epoch(bdf, epoch_id, digest_root, out_root, min_len)
 
-    stream = (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir + "/slice=*")
-    )
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", None)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", _scratch(prefix="exsub_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev_aqe is None:
-            spark.conf.unset("spark.sql.adaptive.enabled")
-        else:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-
-    return spark.read.parquet(out_root + "/epoch=*").select(
+    run_epochs(spark, schema, stage_dir, merge_batch, ORDERED_CONF)
+    return EpochStore(spark, out_root).read().select(
         "doc_id", "n_toks", "n_kept", "text_dedup"
     )
 
@@ -2839,8 +1678,8 @@ def compact_epoch_store(
 
     Crash-safe: the folded store is fully written to ``root + '.next'``
     (later epochs copied over), then promoted with the
-    rename-trash-rename _store_swap; _store_recover self-heals a crash
-    between the renames.  Returns the number of delta dirs folded.
+    rename-trash-rename `swap`; `recover` self-heals a crash between
+    the renames.  Returns the number of delta dirs folded.
 
     READER INVALIDATION (ADVICE r11 #5): the swap replaces the store's
     files out from under any lazy DataFrame previously returned over it
@@ -2849,20 +1688,16 @@ def compact_epoch_store(
     with missing-file errors.  Collect outstanding results BEFORE
     compacting, or re-read the root afterwards; the same applies to
     in-flight epochs (only compact epochs the stream has finished)."""
-    import glob as _glob
     import shutil
 
-    epochs = sorted(
-        _glob.glob(os.path.join(root, "epoch=*")),
-        key=lambda p: int(p.rsplit("=", 1)[1]),
-    )
-    old = [p for p in epochs if int(p.rsplit("=", 1)[1]) <= int(upto)]
-    later = [p for p in epochs if int(p.rsplit("=", 1)[1]) > int(upto)]
+    store = EpochStore(spark, root)
+    epochs = store.epochs()
+    old = [e for e in epochs if e <= int(upto)]
     if len(old) <= 1:
         return 0
     # basePath keeps the epoch partition-discovery column when reading
     # the delta dirs directly (a bare multi-path read drops it)
-    df = spark.read.option("basePath", root).parquet(*old)
+    df = spark.read.option("basePath", root).parquet(*map(store.path, old))
     if mode == "latest":
         from pyspark.sql import Window
 
@@ -2876,12 +1711,11 @@ def compact_epoch_store(
         folded = df.drop("epoch").distinct()
     else:
         raise ValueError(f"unknown compaction mode: {mode}")
-    nxt = root + ".next"
-    shutil.rmtree(nxt, ignore_errors=True)
-    folded.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(nxt, f"epoch={int(upto)}")
-    )
-    for p in later:
-        shutil.copytree(p, os.path.join(nxt, os.path.basename(p)))
-    _store_swap(root)
+    nxt = EpochStore(spark, root + ".next")
+    shutil.rmtree(nxt.root, ignore_errors=True)
+    nxt.write(folded, upto)
+    for e in epochs:
+        if e > int(upto):
+            shutil.copytree(store.path(e), nxt.path(e))
+    swap(root)
     return len(old)

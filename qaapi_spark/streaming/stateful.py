@@ -11,16 +11,11 @@ formulation would require reprocessing all history each run).
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from typing import Any, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from qaapi_spark.session import scratch_dir as _scratch_dir
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -115,183 +110,20 @@ def stream_sessionize(spark: SparkSession, events_path: str) -> DataFrame:
     emitted — an unbounded stream would close them via the processing-
     time timeout path.
     """
-    from qaapi_spark.sources.tables import events_stream_spec
+    from qaapi_spark.streaming.epochs import run_to_memory
+    from qaapi_spark.streaming.incremental import _linked_events
 
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    stage_dir = _scratch_dir(prefix="events_sess_")
-    os.symlink(os.path.abspath(events_path), os.path.join(stage_dir, "part-0.parquet"))
-
-    stream = normalize_ts(
-        spark.readStream.schema(raw_schema).format("parquet").load(stage_dir)
-    ).select("user_id", "ts")
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        _sessionize_group,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    name = "sessions_" + uuid.uuid4().hex[:8]
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API): per-user
-# running totals.  The sessionizer above uses the older
-# applyInPandasWithState; this operator exercises the NEW state API —
-# typed ValueState handles, class-based processor — which is where
-# custom stateful operators are headed (applyInPandasWithState is the
-# legacy surface).
-# --------------------------------------------------------------------------
-
-try:  # the class-based API needs pyspark >= 4.0; import-gate for older envs
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotalsProcessor(StatefulProcessor):
-        """ValueState-backed cumulative (n_events, sum_cents) per user.
-
-        Money accumulates as INTEGER CENTS (round(value*100)): integer
-        addition is associative, so the running total is independent of
-        arrival order / batch boundaries — the property that makes the
-        streamed result hash-checkable against a batch SQL aggregate
-        (a double accumulator would drift by summation order).
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n BIGINT, cents BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            import numpy as np
-
-            n, cents = self._totals.get() if self._totals.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(
-                    np.rint(pdf["value"].to_numpy(dtype=np.float64) * 100.0)
-                    .astype(np.int64)
-                    .sum()
-                )
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover
-    _RunningTotalsProcessor = None  # type: ignore[assignment]
-
-
-def transform_with_state_available() -> bool:
-    """True when the runtime can actually execute transformWithState
-    InPandas: the API shipped in pyspark >= 4.0 AND its state-server
-    protocol needs google.protobuf at runtime."""
-    if _RunningTotalsProcessor is None:
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_running_totals(
-    spark: SparkSession, events_path: str, state_partitions: int = 8
-) -> DataFrame:
-    """Per-user running (n_events, sum_cents) via transformWithState
-    InPandas, exercised across >= 2 micro-batches (the event table is
-    staged as two half-files with maxFilesPerTrigger=1, so state must
-    carry between batches).  Emitted totals are monotone per user, so
-    the FINAL totals are the per-user max — deterministic and equal to
-    the batch aggregate, hence oracle-checkable.
-
-    transformWithState requires the RocksDB state store; the provider
-    conf is scoped to this stream and restored after.
-    """
-    if _RunningTotalsProcessor is None:  # pragma: no cover
-        raise NotImplementedError("transformWithStateInPandas needs pyspark >= 4.0")
-    if not transform_with_state_available():
-        # this container ships pyspark 4.1 but NO google.protobuf, which
-        # the transformWithState state-server protocol needs; the
-        # operator is real and runs wherever protobuf exists
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(python -m pip install protobuf)"
-        )
-
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    stage_dir = _scratch_dir(prefix="events_tws_")
-    halves_dir = _scratch_dir(prefix="events_tws_halves_")
-    src = spark.read.schema(raw_schema).parquet(os.path.abspath(events_path))
-    for tag, half in (
-        ("a", src.filter(F.col("event_id") % 2 == 0)),
-        ("b", src.filter(F.col("event_id") % 2 == 1)),
-    ):
-        out = os.path.join(halves_dir, tag)
-        half.coalesce(1).write.mode("overwrite").parquet(out)
-        (part,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
-        os.symlink(os.path.join(out, part), os.path.join(stage_dir, f"{tag}.parquet"))
-
-    stream = normalize_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(stage_dir)
-    ).select("user_id", "value")
-    totals = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotalsProcessor(),
-        outputStructType="user_id BIGINT, n_events BIGINT, sum_cents BIGINT",
-        outputMode="Update",
-        timeMode="None",
-    )
-    name = "running_totals_" + uuid.uuid4().hex[:8]
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            totals.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    # totals are monotone per user => final state == per-user max
-    return (
-        spark.sql(f"SELECT * FROM {name}")
+    _, open_stream = _linked_events(spark, events_path, "events_sess_")
+    sessions = (
+        open_stream()
+        .select("user_id", "ts")
         .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("sum_cents").alias("sum_cents"),
+        .applyInPandasWithState(
+            _sessionize_group,
+            OUTPUT_SCHEMA,
+            STATE_SCHEMA,
+            "append",
+            GroupStateTimeout.NoTimeout,
         )
     )
+    return run_to_memory(sessions, "append")

@@ -16,8 +16,17 @@ def duck():
     return duck_connection(SF_SMOKE)
 
 
-@pytest.mark.slow  # full driver-gate replica (~20 min); check_oracle.py covers it
-@pytest.mark.parametrize("name", sorted(CATALOG))
+# Full driver-gate replica (~20 min) in the slow tier, check_oracle.py
+# covers it at sf0.01; the streaming twins (stream_*) hash-check in the
+# default tier too, because their shared epoch machinery
+# (streaming/epochs.py) is the code most of them run through.
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=() if n.startswith("stream_") else pytest.mark.slow)
+        for n in sorted(CATALOG)
+    ],
+)
 def test_query_matches_oracle(spark, duck, name):
     spec = CATALOG[name]
     sdf = spec.fn(spark, SF_SMOKE)

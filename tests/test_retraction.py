@@ -458,7 +458,7 @@ def test_stage_ops_with_deletes_returns_delivery_ops(spark):
     raw = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(20)], "doc_id long, text string"
     )
-    stage, ops = _stage_ops_with_deletes(spark, raw, 3, 1, 2)
+    stage, ops, _ = _stage_ops_with_deletes(spark, raw, 3, 1, 2)
     staged = spark.read.parquet(stage)
     by_slice = {
         r["slice"]: r["op"]
@@ -468,7 +468,7 @@ def test_stage_ops_with_deletes_returns_delivery_ops(spark):
 
 
 def test_par_writes_runs_all_and_propagates():
-    from qaapi_spark.streaming.incremental import _par_writes
+    from qaapi_spark.streaming.epochs import par_writes as _par_writes
 
     hits = []
     _par_writes(lambda: hits.append(1), lambda: hits.append(2))
@@ -811,7 +811,7 @@ def test_purge_tombstoned_full_purge_and_accounting(spark, tmp_path):
     it erases the epoch dirs in place, returns the erased count, and
     the store behaves as never-written (readers guard on _has_epochs);
     a second purge is a 0-row no-op and fresh inserts still land."""
-    from qaapi_spark.streaming.incremental import _has_epochs
+    from qaapi_spark.streaming.epochs import EpochStore
     from qaapi_spark.streaming.retraction import (
         _exsub_rt_delete_epoch,
         _exsub_rt_insert_epoch,
@@ -828,11 +828,11 @@ def test_purge_tombstoned_full_purge_and_accounting(spark, tmp_path):
         spark.createDataFrame([(0,)], "doc_id long"), 1, occ, out, delr, 10
     )
     assert purge_tombstoned(spark, occ, delr) > 0
-    assert not _has_epochs(occ)
+    assert not EpochStore(spark, occ).has_epochs()
     assert purge_tombstoned(spark, occ, delr) == 0  # idempotent no-op
     # the fused out store purges fully too (its only row was doc 0)
     assert purge_tombstoned(spark, out, delr) == 1
-    assert not _has_epochs(out)
+    assert not EpochStore(spark, out).has_epochs()
     # the frontier survives in del_root: reinsert rejected, fresh ok
     with pytest.raises(ValueError, match="out-of-order ingest"):
         _exsub_rt_insert_epoch(mk([(0, _PASSAGE)]), 2, occ, out, delr, 10)
@@ -1081,11 +1081,11 @@ def test_uo_rejects_reinsert_of_tombstoned_id(spark, tmp_path):
 
 def _scd2_final(spark, out, store, delr):
     from pyspark.sql import functions as F
-    from qaapi_spark.streaming.incremental import _has_epochs, _store_recover
+    from qaapi_spark.streaming.epochs import EpochStore
     from qaapi_spark.streaming.retraction import _scd2_state_before
 
     hist = spark.read.parquet(out)
-    if _store_recover(delr) and _has_epochs(delr):
+    if EpochStore(spark, delr).has_epochs():
         tomb = (
             spark.read.parquet(delr)
             .groupBy("user_id")
@@ -1296,7 +1296,7 @@ def test_stage_ops_reverse_odd_splits_tombstones_only_ingested(spark):
         [(i, f"doc {i}") for i in range(30)], "doc_id long, text string"
     )
     for n_splits in (2, 3, 5):
-        stage, _ops = _stage_ops_with_deletes(
+        stage, _ops, _ = _stage_ops_with_deletes(
             spark, raw, 3, 1, n_splits, reverse=True
         )
         staged = spark.read.parquet(stage)
@@ -1756,7 +1756,7 @@ def test_footer_min_max_matches_aggregate(spark, tmp_path):
     guess when statistics are absent or the column is not integer."""
     from pyspark.sql import functions as F
 
-    from qaapi_spark.streaming.incremental import _footer_min_max
+    from qaapi_spark.streaming.epochs import footer_min_max as _footer_min_max
 
     # real corpus file (single file path)
     docs = "/root/testdata/sf0.001/documents.parquet"
@@ -1801,7 +1801,7 @@ def test_footer_readers_partitioned_and_empty_dirs(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from qaapi_spark.sources.tables import footer_rows, parquet_files
-    from qaapi_spark.streaming.incremental import _footer_min_max
+    from qaapi_spark.streaming.epochs import footer_min_max as _footer_min_max
 
     part = str(tmp_path / "part_dir")
     spark.createDataFrame(
@@ -1834,8 +1834,8 @@ def test_stage_ops_footer_path_equals_aggregate_path(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(src)
     raw = spark.read.parquet(src)
 
-    stage_a, ops_a = _stage_ops_with_deletes(spark, raw, 3, 1, 2)
-    stage_f, ops_f = _stage_ops_with_deletes(
+    stage_a, ops_a, _ = _stage_ops_with_deletes(spark, raw, 3, 1, 2)
+    stage_f, ops_f, _ = _stage_ops_with_deletes(
         spark, raw, 3, 1, 2, src_path=src
     )
     assert ops_a == ops_f
@@ -1856,7 +1856,7 @@ def test_footer_ts_min_max_us_matches_aggregate(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from qaapi_spark.sources.tables import events_stream_spec
-    from qaapi_spark.streaming.incremental import _footer_ts_min_max_us
+    from qaapi_spark.streaming.epochs import footer_min_max
 
     # real events table (timestamp[us] vintage in current testdata)
     events = "/root/testdata/sf0.001/events.parquet"
@@ -1865,7 +1865,7 @@ def test_footer_ts_min_max_us_matches_aggregate(spark, tmp_path):
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
     )
     exp = tuple(narrow.agg(F.min("us"), F.max("us")).collect()[0])
-    assert _footer_ts_min_max_us(events) == exp
+    assert footer_min_max(events, "ts") == exp
 
     # timestamp[ns] vintage: write with pyarrow, read through the same
     # nanosAsLong + div-1000 normalize path the stagers use
@@ -1884,13 +1884,14 @@ def test_footer_ts_min_max_us_matches_aggregate(spark, tmp_path):
         spark.read.schema(raw_schema2).parquet(ns_file)
     ).select(F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
     exp2 = tuple(narrow2.agg(F.min("us"), F.max("us")).collect()[0])
-    assert _footer_ts_min_max_us(ns_file) == exp2 == (
+    assert footer_min_max(ns_file, "ts") == exp2 == (
         min(ns_vals) // 1000, max(ns_vals) // 1000
     )
 
-    # decline cases: missing column, non-timestamp column, empty dir
-    assert _footer_ts_min_max_us(ns_file, "no_such") is None
-    assert _footer_ts_min_max_us(ns_file, "user_id") is None
+    # decline cases: missing column, empty dir; an integer column
+    # reports its own values (one reader serves both column kinds)
+    assert footer_min_max(ns_file, "no_such") is None
+    assert footer_min_max(ns_file, "user_id") == (1, 3)
     empty = tmp_path / "empty"
     empty.mkdir()
-    assert _footer_ts_min_max_us(str(empty)) is None
+    assert footer_min_max(str(empty), "ts") is None

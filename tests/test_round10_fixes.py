@@ -27,10 +27,8 @@ def test_store_swap_crash_window_recovers(spark):
     promoting the new one must NOT look like first-epoch — the
     recovery helper restores the stranded state before the merge's
     existence check."""
-    from qaapi_spark.streaming.incremental import (
-        _merge_weighted_sample_batch,
-        _store_recover,
-    )
+    from qaapi_spark.streaming.epochs import recover as _store_recover
+    from qaapi_spark.streaming.incremental import _merge_weighted_sample_batch
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     half = docs.filter(F.col("doc_id") % 2 == 0)
@@ -60,11 +58,9 @@ def test_store_recover_first_epoch_and_stale_trash(spark):
     """First epoch (nothing on disk) must report no store; a stale
     trash left by a crash AFTER promotion must not clobber the newer
     store."""
-    from qaapi_spark.streaming.incremental import (
-        _merge_weighted_sample_batch,
-        _store_recover,
-        _store_swap,
-    )
+    from qaapi_spark.streaming.epochs import recover as _store_recover
+    from qaapi_spark.streaming.epochs import swap as _store_swap
+    from qaapi_spark.streaming.incremental import _merge_weighted_sample_batch
 
     store = _store("swapfresh_")
     assert _store_recover(store) is False
@@ -89,7 +85,9 @@ def test_stage_monotonic_mtimes_orders_slices(tmp_path):
     """ADVICE r9 #3: after stamping, every file in slice=i has a
     strictly smaller mtime than every file in slice=j for i<j, even
     when the slices were written out of order / with tied mtimes."""
-    from qaapi_spark.streaming.incremental import _stage_monotonic_mtimes
+    from qaapi_spark.streaming.epochs import (
+        stage_monotonic_mtimes as _stage_monotonic_mtimes,
+    )
 
     stage = str(tmp_path)
     # write slices in REVERSE order with deliberately tied mtimes

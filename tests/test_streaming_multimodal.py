@@ -97,41 +97,6 @@ def test_stream_neardup_drops_cross_batch_duplicate(spark, tmp_path):
     assert all(i in kept for i in range(43, 60, 2))
 
 
-def test_transform_with_state_running_totals(spark, sf_dir):
-    """transformWithStateInPandas running totals == batch aggregate.
-
-    Skips where the runtime lacks protobuf (this container): the
-    operator itself is complete — cross-batch ValueState, RocksDB
-    provider, integer-cents determinism — and runs wherever
-    `google.protobuf` exists."""
-    import pytest
-
-    from qaapi_spark.streaming.stateful import (
-        stream_running_totals,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        with pytest.raises(NotImplementedError):
-            stream_running_totals(spark, f"{sf_dir}/events.parquet")
-        pytest.skip("google.protobuf absent: transformWithState cannot execute here")
-
-    from pyspark.sql import functions as F
-
-    from qaapi_spark.sources.tables import read_table
-
-    streamed = stream_running_totals(spark, f"{sf_dir}/events.parquet")
-    batch = (
-        read_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
-        )
-    )
-    assert sorted(streamed.collect()) == sorted(batch.collect())
-
-
 def test_streaming_checkpoint_resume_exactly_once(spark, tmp_path):
     """Stop/restart a file-source stream against the SAME checkpoint:
     the restarted query must process only the files that arrived while

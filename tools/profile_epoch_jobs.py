@@ -3,9 +3,11 @@
 profile_stream.py says WHICH epoch is slow; this says WHY: it times
 every blocking driver action (collect/count/toPandas/parquet write)
 issued inside each epoch callback, with the action's plan description
-truncated, and counts Spark jobs per epoch via job groups (thunks run
-through _par_writes are re-grouped inside their pool thread so
-overlapped write jobs are counted too).
+truncated, and counts Spark jobs per epoch via job groups.  Its one
+streaming patch point is the epoch runner's ``_epoch``
+(qaapi_spark/streaming/epochs.py); work an epoch submits to driver
+threads (par_writes, guard probes) is re-grouped inside the pool
+thread so overlapped jobs are counted too.
 
 Usage: python tools/profile_epoch_jobs.py <sf_dir> <catalog_name>
 """
@@ -64,58 +66,47 @@ def main() -> None:
     _wrap_action(DataFrameWriter, "parquet")
     _wrap_action(DataFrameWriter, "save")
 
-    import qaapi_spark.streaming.incremental as inc
-    import qaapi_spark.streaming.retraction as rt
+    from concurrent.futures import ThreadPoolExecutor
 
-    # group every epoch's jobs (including _par_writes pool threads)
-    epoch_groups: list[tuple[str, str, float]] = []
+    from qaapi_spark.streaming import epochs
 
-    def patch_epoch(mod, fname):
-        orig = getattr(mod, fname)
+    # group every epoch's jobs, including its driver-thread work
+    epoch_groups: list[tuple[str, float]] = []
+    orig_epoch = epochs._epoch
 
-        def wrapped(bdf, epoch_id, *a, **kw):
-            group = f"epoch_{fname}_{int(epoch_id)}"
-            _PHASE[0] = group
-            sc.setJobGroup(group, group)
-            t0 = time.time()
-            try:
-                return orig(bdf, epoch_id, *a, **kw)
-            finally:
-                epoch_groups.append((group, fname, time.time() - t0))
-                sc.setJobGroup(None, None)
-                _PHASE[0] = "?"
+    def grouped_epoch(fn, bdf, epoch_id):
+        group = f"epoch_{int(epoch_id)}"
+        _PHASE[0] = group
+        sc.setJobGroup(group, group)
+        t0 = time.time()
+        try:
+            return orig_epoch(fn, bdf, epoch_id)
+        finally:
+            epoch_groups.append((group, time.time() - t0))
+            sc.setJobGroup(None, None)
+            _PHASE[0] = "?"
 
-        setattr(mod, fname, wrapped)
+    orig_submit = ThreadPoolExecutor.submit
 
-    orig_par = inc._par_writes
-
-    def par_writes_grouped(*thunks):
+    def grouped_submit(self, fn, *a, **kw):
         group = _PHASE[0]
+        if group == "?":
+            return orig_submit(self, fn, *a, **kw)
 
-        def regroup(t):
-            def run():
-                sc.setJobGroup(group, group + "_w")
-                return t()
+        def run(*a2, **kw2):
+            sc.setJobGroup(group, group + "_w")
+            return fn(*a2, **kw2)
 
-            return run
+        return orig_submit(self, run, *a, **kw)
 
-        return orig_par(*[regroup(t) for t in thunks])
-
-    inc._par_writes = par_writes_grouped
-    rt._par_writes = par_writes_grouped
-
-    for mod in (rt, inc):
-        for fname in list(vars(mod)):
-            if ("_rt_insert_epoch" in fname or "_rt_delete_epoch" in fname
-                    or "_uo_epoch" in fname or fname.endswith("_epoch")):
-                if callable(getattr(mod, fname)):
-                    patch_epoch(mod, fname)
+    epochs._epoch = grouped_epoch
+    ThreadPoolExecutor.submit = grouped_submit
 
     t0 = time.time()
     rows = len(CATALOG[name].fn(spark, sf_dir).collect())
     total = time.time() - t0
     print(f"\n== {name}: total={total:.2f}s rows={rows}")
-    for group, fname, wall in epoch_groups:
+    for group, wall in epoch_groups:
         jids = sorted(tracker.getJobIdsForGroup(group))
         n_stages = n_tasks = 0
         for jid in jids:

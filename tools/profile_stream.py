@@ -3,13 +3,13 @@
 The streaming twins cost nearly the same at sf0.001 as at sf0.1
 (bench_history), so their wall time is fixed per-epoch machinery, not
 data.  This tool decomposes one query's wall time into phases by
-monkey-patching the shared harness helpers with timestamped wrappers:
+wrapping the two patch points of the shared epoch runner
+(qaapi_spark/streaming/epochs.py) with timestamped wrappers:
 
-  stage     - _stage_ops_with_deletes / _write_slices (staging write)
-  stream    - _run_ordered_stream wall (trigger+checkpoint machinery
-              plus the epochs inside it)
-  probe     - the _route_op_batch homogeneity probe (per epoch)
-  epoch[i/d]- the insert/delete epoch callbacks (per epoch)
+  stream    - `_drain`: stream wall (trigger+checkpoint machinery plus
+              the epochs inside it), once per stream
+  epoch[i]  - `_epoch`: each epoch callback (routing included)
+  setup     - query start to the first stream start (staging, bounds)
   final     - plan build + collect of the returned relation
 
 Usage: python tools/profile_stream.py <sf_dir> [--repeat N] <name>...
@@ -27,21 +27,6 @@ from qaapi_spark.plans.catalog import CATALOG  # noqa: E402
 from qaapi_spark.session import get_spark, release_kernel_caches  # noqa: E402
 
 
-def _patch(mod, name, phases, key=None):
-    orig = getattr(mod, name)
-    tag = key or name
-
-    def wrapped(*a, **kw):
-        t0 = time.time()
-        try:
-            return orig(*a, **kw)
-        finally:
-            phases.append((tag, time.time() - t0))
-
-    setattr(mod, name, wrapped)
-    return orig
-
-
 def main() -> None:
     args = sys.argv[1:]
     sf_dir = args.pop(0)
@@ -52,48 +37,23 @@ def main() -> None:
     spark = get_spark("profile-stream")
     spark.sparkContext.setLogLevel("ERROR")
 
-    import qaapi_spark.streaming.incremental as inc
-    import qaapi_spark.streaming.retraction as rt
+    from qaapi_spark.streaming import epochs
 
-    phases: list[tuple[str, float]] = []
+    phases: list[tuple[str, float, float]] = []  # (tag, start, seconds)
+    drain, epoch = epochs._drain, epochs._epoch
 
-    # retraction harness
-    origs = []
-    for mod, nm, key in [
-        (rt, "_stage_ops_with_deletes", "stage"),
-        (rt, "_run_ordered_stream", "stream"),
-        (inc, "_write_slices", "stage_write"),
-        (inc, "_run_ordered_stream", "stream"),
-    ]:
-        if hasattr(mod, nm):
-            origs.append((mod, nm, _patch(mod, nm, phases, key)))
-
-    # probe + epoch routing: wrap _route_op_batch to time the probe
-    # (its first agg/collect) separately from the routed epoch fn
-    rt_route = rt._route_op_batch
-
-    def route_timed(bdf, epoch_id, ins_fn, del_fn, key_col="doc_id", ops=None):
-        def ins_t(b, e):
+    def timed(tag_fn, orig):
+        def wrapped(*a, **kw):
             t0 = time.time()
             try:
-                return ins_fn(b, e)
+                return orig(*a, **kw)
             finally:
-                phases.append((f"epoch_i[{e}]", time.time() - t0))
+                phases.append((tag_fn(*a), t0, time.time() - t0))
 
-        def del_t(d, e):
-            t0 = time.time()
-            try:
-                return del_fn(d, e)
-            finally:
-                phases.append((f"epoch_d[{e}]", time.time() - t0))
+        return wrapped
 
-        t0 = time.time()
-        try:
-            return rt_route(bdf, epoch_id, ins_t, del_t, key_col, ops=ops)
-        finally:
-            phases.append((f"route[{epoch_id}]", time.time() - t0))
-
-    rt._route_op_batch = route_timed
+    epochs._drain = timed(lambda *a: "stream", drain)
+    epochs._epoch = timed(lambda fn, bdf, e: f"epoch[{e}]", epoch)
 
     for r in range(repeat):
         for name in args:
@@ -106,33 +66,23 @@ def main() -> None:
             t_collect = time.time() - t1
             total = time.time() - t0
             print(f"[{r}] {name}: total={total:.3f}s rows={n}")
-            # billed-to-stream = stream wall minus the epochs+probes
-            # inside it (trigger/checkpoint/listing overhead)
-            stream_wall = sum(d for k, d in phases if k == "stream")
-            inner = sum(
-                d for k, d in phases
-                if k.startswith(("route", "epoch_"))
-            )
-            probe_only = stream_wall and stream_wall - sum(
-                d for k, d in phases if k.startswith("route")
-            )
-            for k, d in phases:
+            starts = [t for k, t, _ in phases if k == "stream"]
+            if starts:
+                print(f"      {'setup':>14}: {min(starts) - t0:.3f}s")
+            for k, _, d in phases:
                 print(f"      {k:>14}: {d:.3f}s")
+            # billed-to-stream = stream wall minus the epochs inside it
+            # (trigger/checkpoint/listing overhead)
+            stream_wall = sum(d for k, _, d in phases if k == "stream")
+            epochs_s = sum(d for k, _, d in phases if k.startswith("epoch"))
             if stream_wall:
                 print(f"      {'engine_overhead':>14}: "
-                      f"{stream_wall - inner:.3f}s  (stream - epochs/probes)")
-            epochs = sum(d for k, d in phases if k.startswith("epoch_"))
-            routes = sum(d for k, d in phases if k.startswith("route"))
-            print(
-                f"      build={t_build:.3f}s final_collect={t_collect:.3f}s "
-                f"probes={routes - epochs:.3f}s"
-            )
+                      f"{stream_wall - epochs_s:.3f}s  (stream - epochs)")
+            print(f"      build={t_build:.3f}s final_collect={t_collect:.3f}s")
             release_kernel_caches()
             spark.sparkContext._jvm.System.gc()
 
-    for mod, nm, orig in origs:
-        setattr(mod, nm, orig)
-    rt._route_op_batch = rt_route
+    epochs._drain, epochs._epoch = drain, epoch
 
 
 if __name__ == "__main__":
