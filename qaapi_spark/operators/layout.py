@@ -1,99 +1,30 @@
-"""Data-layout operators: how tables are *written* so later scans are
-cheap.  At 100 TB the write path decides query cost — partition
+"""Data-layout operators: how a table's physical layout makes later
+scans cheap.  At 100 TB the layout decides query cost — partition
 pruning, file sizing, and clustering do more for scan time than any
 plan-level optimization.
 
-  - partitioned writes: hive-style ``partitionBy`` directories so an
-    equality/range predicate on the partition key prunes at the
-    *directory* level before any file is opened (explain shows the
-    pruned count in ``partition filters``).
-  - small-file compaction: landing zones accumulate thousands of tiny
-    files (one per extraction batch/window — the reference lands one
-    JSON per window, SURVEY S8); each file costs a task + footer read,
-    so periodic compaction to ~target-sized files keeps task counts
-    proportional to bytes, not batches.
-  - range-clustered writes: ``repartitionByRange`` + in-partition sort
-    gives every file a narrow min/max on the cluster key; parquet
-    row-group stats then let *any* engine skip files on range
-    predicates (the layout analog of an index).
-  - Z-ordered writes: Morton-interleave two columns and range-cluster
-    on the code — every file covers a compact 2-D tile, so stats-based
-    skipping works on either column (a lexicographic sort only helps
-    the leading one).
+  - Z-order planning: Morton-interleave two columns (`morton_code`);
+    `zorder_tiles` histograms the 2-D tiles a z-ordered writer would
+    range-partition on, and `zonemap_skipping_compare` counts the
+    files a 2-D range predicate must read under a linear vs a Morton
+    layout — per-file min/max pruning, exactly what parquet row-group
+    stats allow (a lexicographic sort only helps the leading column).
+  - bucketed pairs: `write_bucketed_pair` lays two tables out
+    pre-hash-partitioned on the join key, so joins between them run
+    without an Exchange.
+  - `file_key_ranges`: the per-file min/max a range-pruning scan
+    consults.
+
+Directory-level concerns live elsewhere: listing, footers and the
+crash-safe replace in ``sources/tables.py``; in-place small-file
+compaction in ``maintain.compact_files``; bucket-partitioned curated
+tables in ``operators/partitioned.py``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: Sequence[str], mode: str = "overwrite"
-) -> None:
-    """Hive-style partitioned parquet write (dir per partition value).
-
-    Partition columns should be low-cardinality (date, region, type):
-    each distinct combination is a directory, and pruning wins only
-    when predicates hit whole directories.
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def compact_small_files(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 128 << 20,
-) -> int:
-    """Rewrite a many-small-files dataset into ~target-sized files;
-    returns the output file count.
-
-    File count = ceil(input_bytes / target): coalesce (not repartition)
-    so compaction is shuffle-free — tasks just concatenate row groups.
-    """
-    import math
-
-    df = spark.read.parquet(src_path)
-    # input volume from file metadata (driver-side listing), not a scan
-    total = _dir_bytes(spark, src_path)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df.coalesce(n_files).write.mode("overwrite").parquet(dst_path)
-    return n_files
-
-
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes of parquet files under ``path`` (driver-side listing)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    total = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            total += int(f.getLen())
-    return total
-
-
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_col: str,
-    n_files: int,
-    mode: str = "overwrite",
-) -> None:
-    """Range-partition on ``cluster_col`` and sort within partitions:
-    every output file covers a disjoint key range, so min/max parquet
-    stats skip whole files for range predicates."""
-    (
-        df.repartitionByRange(n_files, F.col(cluster_col))
-        .sortWithinPartitions(cluster_col)
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def file_key_ranges(spark: SparkSession, path: str, key: str) -> list[tuple[str, int, int]]:
@@ -101,16 +32,10 @@ def file_key_ranges(spark: SparkSession, path: str, key: str) -> list[tuple[str,
     range-pruning scan consults; used by tests to prove disjointness."""
     import pyarrow.parquet as pq
 
+    from qaapi_spark.sources.tables import parquet_files
+
     out = []
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().toUri().getPath()
-        if not name.endswith(".parquet"):
-            continue
+    for name in parquet_files(path):
         md = pq.ParquetFile(name).metadata
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[key]
         mins, maxs = [], []
@@ -150,51 +75,7 @@ def morton_code(x, y):
     )
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_x: str,
-    col_y: str,
-    n_files: int,
-    mode: str = "overwrite",
-) -> None:
-    """Two-dimensional clustering: min-max normalize both columns to
-    16-bit grids (one tiny stats job), range-partition + sort on the
-    Morton interleave, write parquet.
-
-    Every output file then covers a compact *tile* in (x, y) space, so
-    min/max row-group stats skip files for predicates on EITHER
-    column — the layout analog of a composite index, without the
-    single-dimension bias of sorting on (x, y) lexicographically.
-    Sorting on x alone leaves y spans at 100% of the domain per file;
-    the Morton curve bounds both at roughly 1/sqrt(n_files).
-    """
-    lo_x, hi_x, lo_y, hi_y = df.agg(
-        F.min(col_x), F.max(col_x), F.min(col_y), F.max(col_y)
-    ).collect()[0]
-
-    def norm(c, lo, hi):
-        span = float(hi - lo) or 1.0
-        return F.least(
-            F.lit(65535),
-            F.greatest(
-                F.lit(0),
-                F.floor((c.cast("double") - F.lit(float(lo))) / F.lit(span) * 65535).cast("int"),
-            ),
-        )
-
-    z = morton_code(norm(F.col(col_x), lo_x, hi_x), norm(F.col(col_y), lo_y, hi_y))
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-# DuckDB twin of the Morton spread/interleave below, generated by the
+# DuckDB twin of the Morton spread/interleave above, generated by the
 # same mask sequence so the two stay in lock-step (masks in decimal:
 # 0x00FF00FF, 0x0F0F0F0F, 0x33333333, 0x55555555).
 def _spread_sql(c: str) -> str:
@@ -247,8 +128,8 @@ def zorder_tiles(
 ) -> DataFrame:
     """Z-order tile histogram: (tile, n, min_z, max_z) per top-
     ``tile_bits`` Morton tile of the (col_x, col_y) plane — the
-    observability query behind `write_zordered` (how many rows land in
-    each 2-D tile, and how tight the codes are within it), and the
+    observability query behind a z-ordered layout (how many rows land
+    in each 2-D tile, and how tight the codes are within it), and the
     clustering key a writer would range-partition on.
 
     Scale shape: one min/max aggregate (1 row, broadcast back), then a
@@ -335,11 +216,6 @@ def write_bucketed_pair(
         )
 
 
-def drop_bucketed_pair(spark: SparkSession, db: str) -> None:
-    """Drop the demo database and its tables (CASCADE removes files)."""
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-
-
 def zonemap_skipping_compare(
     df: DataFrame,
     col_x: str,
@@ -352,8 +228,7 @@ def zonemap_skipping_compare(
     many of 2^file_bits files must be READ under (a) a linear layout
     clustered on col_x alone vs (b) a Morton/z-order layout on
     (col_x, col_y) — the planner-side quantification of WHY 2-D
-    clustering wins (`write_zordered` is the writer this estimates
-    for).  Files are value-range chunks (top ``file_bits`` bits of the
+    clustering wins.  Files are value-range chunks (top ``file_bits`` bits of the
     16-bit normalized sort key), pruning consults only per-file
     min/max of the raw columns — exactly what parquet row-group
     zone maps store.  A file is read iff its [min, max] envelope on

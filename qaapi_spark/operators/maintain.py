@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from qaapi_spark.sources.tables import footer_rows, parquet_files, recover, swap
+
 
 def _maybe_broadcast(batch: DataFrame, hint: bool) -> DataFrame:
     return F.broadcast(batch) if hint else batch
@@ -278,8 +280,8 @@ def retract_join_view(
         .parquet(os.path.join(del_root, f"epoch={int(epoch)}"))
     )
     if purge_debt_ratio is not None:
-        d = _store_rows(del_root)
-        v = _store_rows(view_root)
+        d = footer_rows(del_root)
+        v = footer_rows(view_root)
         if d and v and d > float(purge_debt_ratio) * v:
             compact_view(spark, view_root, del_root, key_col)
     view = spark.read.parquet(view_root)
@@ -369,15 +371,6 @@ def _has_tombstones(del_root: str) -> bool:
     )
 
 
-def _store_rows(root: str) -> int | None:
-    """Total row count of an epoch-keyed store from parquet FOOTER
-    metadata (driver-side pyarrow, no Spark job); None when unreadable
-    or empty."""
-    from qaapi_spark.sources.tables import footer_rows
-
-    return footer_rows(root)
-
-
 def compact_view(spark, view_root: str, del_root: str, key_col: str) -> int:
     """Tombstone-debt compaction for a retractable MV store: physical
     erasure of the tombstoned keys (`purge_tombstoned`'s crash-safe
@@ -411,22 +404,6 @@ def compact_view(spark, view_root: str, del_root: str, key_col: str) -> int:
     return erased
 
 
-def list_parquet_files(spark, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) of every parquet data file under ``path`` — the
-    listing a compaction planner consults."""
-    out = []
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().toUri().getPath()
-        if name.endswith(".parquet"):
-            out.append((name, int(f.getLen())))
-    return out
-
-
 def compact_files(
     spark,
     path: str,
@@ -448,40 +425,28 @@ def compact_files(
     deployments — this single-directory version is the per-partition
     unit of that loop.
 
-    The swap is write-to-sibling + two renames (old -> trash,
-    new -> old).  Readers never observe a HALF-WRITTEN directory, but
-    the two-rename window is not reader-atomic: between the renames
-    the dataset is briefly absent at ``path`` (a concurrent reader
-    gets FileNotFound), so run this only inside a single-writer,
-    no-concurrent-reader maintenance window — the same contract as
-    Hive/Iceberg's non-transactional rewrite (ADVICE r8 #3).  Crash
-    recovery: a crash between the renames strands the data at
-    ``<path>.__compact_old__``; on entry this function detects that
-    state (trash present, ``path`` absent) and restores the trash
-    before compacting, so a rerun self-heals.
+    The swap is the shared crash-safe one (``sources.tables.swap``):
+    the compacted files land at ``<path>.next``, then two renames
+    (old -> trash, new -> old).  Readers never observe a HALF-WRITTEN
+    directory, but the two-rename window is not reader-atomic: between
+    the renames the dataset is briefly absent at ``path`` (a
+    concurrent reader gets FileNotFound), so run this only inside a
+    single-writer, no-concurrent-reader maintenance window — the same
+    contract as Hive/Iceberg's non-transactional rewrite (ADVICE r8
+    #3).  Crash recovery: a crash between the renames strands the data
+    at ``<path>.__swap_old__``; on entry this function `recover`s it
+    before compacting, so a rerun self-heals.  ``path`` is a local
+    directory (the listing and the renames are driver-side).
 
     Returns {files_before, bytes_before, files_after, bytes_after,
     rows} for the caller's audit log."""
     import math
+    import os
 
-    jvm0 = spark._jvm
-    trash0 = path.rstrip("/") + ".__compact_old__"
-    fs0 = jvm0.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-    if fs0.exists(
-        jvm0.org.apache.hadoop.fs.Path(trash0)
-    ) and not fs0.exists(jvm0.org.apache.hadoop.fs.Path(path)):
-        # Prior run crashed between the two renames: recover the
-        # stranded original before doing anything else.
-        if not fs0.rename(
-            jvm0.org.apache.hadoop.fs.Path(trash0),
-            jvm0.org.apache.hadoop.fs.Path(path),
-        ):
-            raise IOError(f"compact_files: could not recover {trash0}")
-
-    files = list_parquet_files(spark, path)
-    bytes_before = sum(b for _, b in files)
+    path = path.rstrip("/")
+    recover(path)
+    before = [os.path.getsize(f) for f in parquet_files(path)]
+    bytes_before = sum(before)
     n_out = max(1, math.ceil(bytes_before / float(target_file_bytes)))
     df = spark.read.parquet(path)
     if sort_col is not None:
@@ -489,33 +454,15 @@ def compact_files(
             sort_col
         )
     else:
-        # shuffle-free: tasks concatenate row groups (the
-        # layout.compact_small_files copy-variant's rewrite, reused
-        # here under the in-place swap)
+        # shuffle-free: tasks concatenate row groups
         compacted = df.coalesce(n_out)
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    trash = path.rstrip("/") + ".__compact_old__"
-    compacted.write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
-
-    def _p(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs.delete(_p(trash), True)
-    if not fs.rename(_p(path), _p(trash)):
-        raise IOError(f"compact_files: could not stage {path} aside")
-    if not fs.rename(_p(tmp), _p(path)):
-        fs.rename(_p(trash), _p(path))  # roll back
-        raise IOError(f"compact_files: could not swap in compacted {path}")
-    fs.delete(_p(trash), True)
-    after = list_parquet_files(spark, path)
+    compacted.write.mode("overwrite").parquet(path + ".next")
+    swap(path)
+    after = [os.path.getsize(f) for f in parquet_files(path)]
     return {
-        "files_before": len(files),
+        "files_before": len(before),
         "bytes_before": bytes_before,
         "files_after": len(after),
-        "bytes_after": sum(b for _, b in after),
+        "bytes_after": sum(after),
         "rows": spark.read.parquet(path).count(),
     }

@@ -81,33 +81,3 @@ def run_checks(
         )
         results.append((f"references_{col}", int(orphans)))
     return spark.createDataFrame(results, "check string, n_violations long")
-
-
-def observed_write(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, "F.Column"],
-    mode: str = "overwrite",
-) -> dict:
-    """Write ``df`` to parquet while collecting data-quality metrics
-    IN THE SAME PASS via ``df.observe`` — no second scan of the data.
-
-    ``metrics`` maps metric name -> aggregate Column (e.g.
-    ``{"n": F.count(F.lit(1)), "null_keys": F.sum(F.col("k").isNull()
-    .cast("long"))}``).  Returns the observed metric dict after the
-    write action completes.
-
-    At 100 TB this is the difference between "write + audit" costing
-    one scan or two: the observation rides the write job's task
-    metrics (AggregatingAccumulator), adding no shuffle and no extra
-    read.  The reference audits its loads with follow-up probe queries
-    (SURVEY §2: row-count checks after COPY/MERGE); this is the
-    single-pass Spark-native equivalent.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    df.observe(obs, *[c.alias(n) for n, c in metrics.items()]).write.mode(
-        mode
-    ).parquet(path)
-    return obs.get

@@ -347,23 +347,6 @@ def srp_lsh_topk(
     return topk_per_group(scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
 
 
-def keep_representatives(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Corpus minus near-duplicates: group the pair graph into connected
-    components and keep the min-id row of each component (isolated rows
-    keep themselves)."""
-    from qaapi_spark.operators.graph import connected_components
-
-    comp = connected_components(
-        df.select(id_col), pairs, node_col=id_col, src_col="id_a", dst_col="id_b"
-    )
-    keepers = comp.filter(F.col("comp") == F.col("node")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(keepers, id_col, "left_semi")
-
-
 def pq_codebook(
     corpus: DataFrame,
     m: int = 16,

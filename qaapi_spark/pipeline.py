@@ -16,23 +16,27 @@ reconciliation as one deterministic function:
   scores       delete-then-insert by eval    (S15, Update...sql:140-170)
   comments     delete-then-insert by contact (S15, Update...sql:176-215)
 
-Scale notes: targets are plain parquet dirs rewritten via
-write-temp-then-swap (atomic enough for a single writer; Delta MERGE is
-the multi-writer upgrade path, SURVEY §4.3).  The batch side of every
-join is broadcast — it is a bounded trailing window by construction.
+Scale notes: targets are plain parquet dirs.  A rewritten table is
+written whole to ``<table>.next`` and promoted by the crash-safe
+``sources.tables.swap``: every crash point leaves the new table or
+the old one (under its trash name) on disk, and ``read`` recovers the
+latter before anything reads the table.  That is one writer per
+table; Delta MERGE is the multi-writer upgrade path, SURVEY §4.3.
+The batch side of every join is broadcast — it is a bounded trailing
+window by construction.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from qaapi_spark import transforms as T
 from qaapi_spark.operators.maintain import delete_semi_anti, merge_insert_only, merge_upsert
+from qaapi_spark.operators.partitioned import read_partitioned
 from qaapi_spark.sources.landing import read_entity
+from qaapi_spark.sources.tables import recover, swap
 
 CURATED = [
     "t_qa_forms",
@@ -90,24 +94,18 @@ class CalabrioPipeline:
 
     def read(self, table: str) -> DataFrame | None:
         p = self._path(table)
-        if not os.path.exists(p):
-            return None
-        df = self.spark.read.parquet(p)
-        from qaapi_spark.operators.partitioned import PCOL
-
-        return df.drop(PCOL) if PCOL in df.columns else df
+        recover(p)
+        return read_partitioned(self.spark, p)
 
     def _swap_write(self, df: DataFrame, table: str) -> None:
-        """Write-temp-then-swap so a target is never read and
-        overwritten in the same plan (self-overwrite corruption)."""
+        """Write ``<table>.next``, then `swap` it in, so a target is
+        never read and overwritten in the same plan (self-overwrite
+        corruption) and a crash never leaves the table missing."""
         final = self._path(table)
-        tmp = final + ".tmp-" + uuid.uuid4().hex[:8]
         if self.output_partitions is not None:
             df = df.coalesce(self.output_partitions)
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+        df.write.mode("overwrite").parquet(final + ".next")
+        swap(final)
 
     def _reconcile(
         self,
@@ -120,7 +118,7 @@ class CalabrioPipeline:
     ) -> None:
         """One table's batch reconciliation: partition-scoped when
         ``self.partitioned`` (rewrites only affected contact-id
-        buckets), full write-temp-then-swap otherwise.  Both paths
+        buckets), a whole-table `_swap_write` otherwise.  Both paths
         apply the same ``merge_fn(target, batch)`` relational merge."""
         if self.partitioned:
             from qaapi_spark.operators.partitioned import merge_partitioned

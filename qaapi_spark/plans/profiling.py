@@ -155,7 +155,7 @@ _CDC_CUT = "1995-06-01"
     "= all orders with P-status promoted): full-outer join on the key "
     "classifies every row insert/update/delete/unchanged — the diff "
     "that drives incremental downstream refresh, and the relational "
-    "core of operators/versioned.py time travel "
+    "core of snapshot time travel "
     "(extension: change data capture)",
 )
 def cdc_diff_order_snapshots(spark, sf_dir):
@@ -386,7 +386,7 @@ def _zorder_oracle() -> str:
     "tiles hold how many rows, how tight the codes are per tile), "
     "and the clustering key a 100 TB writer range-partitions on for "
     "2-D data-skipping (extension; operators/layout.zorder_tiles; "
-    "cf. write_zordered + tests/test_layout.py)",
+    "cf. tests/test_layout.py)",
 )
 def layout_zorder_tiles(spark, sf_dir):
     from qaapi_spark.operators.layout import zorder_tiles
@@ -470,7 +470,7 @@ def bucketed_join_revenue_by_segment(spark, sf_dir):
     "read under a linear x-clustered layout vs a Morton z-order "
     "layout, with per-file min/max pruning exactly as parquet "
     "row-group stats allow — the quantified WHY behind "
-    "write_zordered: linear prunes on x only (y spans the domain in "
+    "z-ordering: linear prunes on x only (y spans the domain in "
     "every file), the Morton tiles bound both dimensions; one min/max "
     "broadcast + map-only coding + two 64-group rollups (extension; "
     "operators/layout.zonemap_skipping_compare)",

@@ -1,4 +1,18 @@
-"""Readers for the driver-provided parquet tables (TESTDATA.md).
+"""Parquet tables on disk: the driver-provided inputs (TESTDATA.md)
+and every parquet directory the engine writes.
+
+This is the one module that knows a table's directory layout:
+
+- `read_table` / `events_stream_spec`: the input readers;
+- `parquet_files`: the one data-file lister (Spark's reader semantics);
+- `footer_rows` / `footer_min_max`: row counts and column ranges from
+  parquet footers, driver-side, no Spark job;
+- `swap` / `recover`: the one crash-safe whole-directory replace.  A
+  writer lands the new table at ``<dir>.next`` and calls `swap`; a
+  reader calls `recover` first.  Curated tables
+  (``pipeline._swap_write``), compaction (``maintain.compact_files``)
+  and the streaming epoch stores all go through it, and no other
+  module renames a directory.
 
 Parquet scans go through Spark's vectorized reader; Catalyst pushes
 filters and prunes columns into the scan, so callers should express
@@ -6,6 +20,8 @@ projections/filters declaratively rather than materializing wide reads.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,7 +50,6 @@ def parquet_files(path: str) -> list[str]:
     Spark's reader semantics: recursive, skipping ``_``/``.``-prefixed
     metadata files (which Spark's scans ignore)."""
     import glob
-    import os
 
     if not os.path.isdir(path):
         return [path]
@@ -60,6 +75,107 @@ def footer_rows(path: str):
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return None
+
+
+def swap(root: str) -> None:
+    """Crash-safe promote of ``root + '.next'`` (fully written by the
+    caller) to ``root``.
+
+    The old rmtree-then-move pattern had a window (ADVICE r9 #2): dying
+    between the two calls left NO store, and the next epoch's existence
+    check treated the replayed batch as first-epoch — silently
+    discarding all accumulated state.  Here the old store is renamed
+    (atomic) to a recoverable trash name before the new one is renamed
+    (atomic) into place, so every crash point leaves either the store
+    or its trash on disk for :func:`recover` to restore."""
+    import shutil
+
+    trash = root + ".__swap_old__"
+    shutil.rmtree(trash, ignore_errors=True)
+    if os.path.isdir(root):
+        os.rename(root, trash)
+    os.rename(root + ".next", root)
+    shutil.rmtree(trash, ignore_errors=True)
+
+
+def recover(root: str) -> bool:
+    """Entry-time self-heal + existence check for a `swap`-promoted
+    store: a crash between the two renames strands the state at
+    ``.__swap_old__`` with ``root`` absent — restore it (the streaming
+    engine replays the uncommitted batch, and every merge is
+    retry-idempotent).  A dangling ``.next`` needs no handling: the
+    replayed merge rewrites it in overwrite mode.
+
+    Returns whether the store exists after recovery — the ONLY
+    condition under which a merge may skip reading prior state
+    (first-epoch); any other read error must propagate (ADVICE r8 #2)."""
+    trash = root + ".__swap_old__"
+    if not os.path.isdir(root) and os.path.isdir(trash):
+        os.rename(trash, root)
+    return os.path.isdir(root)
+
+
+def footer_min_max(src, col: str):
+    """(min, max) of column ``col`` from parquet FOOTER statistics —
+    driver-side pyarrow, no Spark job.  ``src`` is a file, a (possibly
+    partitioned) dir, or a list of files.  Integer columns give their
+    values; timestamp columns give unix MICROSECONDS.
+
+    Exactness: min/max statistics are exact for fixed-width physical
+    types (truncation applies only to BYTE_ARRAY/FLBA), and both the
+    stats and Spark's F.min/F.max ignore nulls.  Timestamps use the raw
+    int64 stats (``min_raw``/``max_raw``, never the lossy logical
+    accessors):
+    - timestamp[us] (NTZ): the engine pins session tz UTC, so the
+      NTZ->TIMESTAMP cast is value-preserving and unix_micros == raw;
+    - timestamp[us, tz=UTC]: isAdjustedToUTC micros ARE unix micros;
+    - timestamp[ns]: read via nanosAsLong + ``timestamp_micros(ts div
+      1000)`` (events_stream_spec), so us == raw div 1000; ``div``
+      truncates toward zero while ``//`` floors — identical only for
+      raw >= 0, so negative raws decline.
+    min/max commute with these strictly monotonic conversions.  Files
+    without row groups contribute nothing, so files that hold no rows
+    give (None, None), as the aggregate would.
+
+    Returns None — the caller falls back to one Spark aggregate — when
+    there are no files, a row group lacks stats (a writer may disable
+    them, ADVICE r9 #4), or the column is missing or of another type."""
+    import pyarrow.parquet as pq
+
+    files = parquet_files(src) if isinstance(src, str) else list(src)
+    if not files:
+        return None
+    lo = hi = None
+    try:
+        for f in files:
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
+            idx = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
+            t = str(pf.schema_arrow.field(col).type)
+            if t.startswith(("int", "uint")):
+                div = None
+            elif t in ("timestamp[us]", "timestamp[us, tz=UTC]"):
+                div = 1
+            elif t in ("timestamp[ns]", "timestamp[ns, tz=UTC]"):
+                div = 1000
+            else:
+                return None
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(idx).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                if div is None:
+                    a, b = st.min, st.max
+                else:
+                    a, b = st.min_raw, st.max_raw
+                    if not isinstance(a, int) or not isinstance(b, int) or a < 0:
+                        return None
+                    a, b = a // div, b // div
+                lo = a if lo is None else min(lo, a)
+                hi = b if hi is None else max(hi, b)
+    except Exception:
+        return None
+    return lo, hi
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

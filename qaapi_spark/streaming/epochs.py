@@ -14,8 +14,11 @@ implementation of each piece:
   whole-store replace-and-swap, and the schema memo with its drift
   check;
 - `Guards`: the async ordered-ingest and tombstone-reinsert guards;
-- `footer_min_max`: the parquet-footer statistics reader;
 - `par_writes`: overlapped independent epoch writes.
+
+The directory-level pieces a store stands on — the crash-safe `swap`
+and `recover`, the file lister and the footer readers — live in
+``sources/tables.py``, shared with the curated tables and compaction.
 
 Epoch contract (every store, every twin):
 
@@ -42,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qaapi_spark.session import register_ephemeral_cache, scratch_dir
+from qaapi_spark.sources.tables import footer_min_max, parquet_files, recover, swap
 
 # Session conf of the streams that chain many small jobs per epoch.
 # AQE's per-shuffle materialize-then-replan adds serial latency to
@@ -255,46 +259,6 @@ def at_width(df: DataFrame, width: int | None) -> DataFrame:
 # --- stores -------------------------------------------------------------
 
 
-def swap(root: str) -> None:
-    """Crash-safe promote of ``root + '.next'`` (fully written by the
-    caller) to ``root``.
-
-    The old rmtree-then-move pattern had a window (ADVICE r9 #2): dying
-    between the two calls left NO store, and the next epoch's existence
-    check treated the replayed batch as first-epoch — silently
-    discarding all accumulated state.  Here the old store is renamed
-    (atomic) to a recoverable trash name before the new one is renamed
-    (atomic) into place, so every crash point leaves either the store
-    or its trash on disk for :func:`recover` to restore — mirroring
-    compact_files' ``.__compact_old__`` self-heal
-    (operators/maintain.py)."""
-    import shutil
-
-    trash = root + ".__swap_old__"
-    shutil.rmtree(trash, ignore_errors=True)
-    if os.path.isdir(root):
-        os.rename(root, trash)
-    os.rename(root + ".next", root)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def recover(root: str) -> bool:
-    """Entry-time self-heal + existence check for a `swap`-promoted
-    store: a crash between the two renames strands the state at
-    ``.__swap_old__`` with ``root`` absent — restore it (the streaming
-    engine replays the uncommitted batch, and every merge is
-    retry-idempotent).  A dangling ``.next`` needs no handling: the
-    replayed merge rewrites it in overwrite mode.
-
-    Returns whether the store exists after recovery — the ONLY
-    condition under which a merge may skip reading prior state
-    (first-epoch); any other read error must propagate (ADVICE r8 #2)."""
-    trash = root + ".__swap_old__"
-    if not os.path.isdir(root) and os.path.isdir(trash):
-        os.rename(trash, root)
-    return os.path.isdir(root)
-
-
 # store root -> schema of the data it holds (epoch column excluded).
 # Set by the first write, or by the first read of a store this process
 # did not write; cleared between harness queries.
@@ -329,8 +293,10 @@ class EpochStore:
         return os.path.join(self.root, f"epoch={int(epoch)}")
 
     def epochs(self, before: int | None = None) -> list:
-        """Sorted epoch numbers present, only those < ``before`` when given."""
-        if not os.path.isdir(self.root):
+        """Sorted epoch numbers present, only those < ``before`` when
+        given — after `recover`, so every reader of the store sees a
+        swap-stranded store restored instead of an empty one."""
+        if not recover(self.root):
             return []
         es = []
         for d in os.listdir(self.root):
@@ -349,7 +315,7 @@ class EpochStore:
         read an empty directory (UNABLE_TO_INFER_SCHEMA); and a bare
         check after a swap-crash would discard the stranded state
         (ADVICE r11 #1)."""
-        return recover(self.root) and bool(self.epochs())
+        return bool(self.epochs())
 
     # writes
 
@@ -390,7 +356,7 @@ class EpochStore:
     def read(self, before: int | None = None) -> DataFrame | None:
         """Every delta with epoch < ``before`` (all when None), with the
         ``epoch`` column; None when no such delta exists."""
-        es = self.epochs(before) if recover(self.root) else []
+        es = self.epochs(before)
         if not es:
             return None
         from pyspark.sql.types import IntegerType, StructField, StructType
@@ -424,8 +390,6 @@ class EpochStore:
         ordered-ingest frontier.  From footer statistics (driver-side,
         no job: the guard runs every epoch); one Spark aggregate if any
         file lacks them.  None when no such delta exists."""
-        from qaapi_spark.sources.tables import parquet_files
-
         files = [f for e in self.epochs(before) for f in parquet_files(self.path(e))]
         if not files:
             return None
@@ -531,71 +495,3 @@ class Guards:
             bdf.select("doc_id").join(F.broadcast(tomb), "doc_id", "left_semi").limit(3),
             check,
         )
-
-
-# --- footer statistics --------------------------------------------------
-
-
-def footer_min_max(src, col: str):
-    """(min, max) of column ``col`` from parquet FOOTER statistics —
-    driver-side pyarrow, no Spark job.  ``src`` is a file, a (possibly
-    partitioned) dir, or a list of files.  Integer columns give their
-    values; timestamp columns give unix MICROSECONDS.
-
-    Exactness: min/max statistics are exact for fixed-width physical
-    types (truncation applies only to BYTE_ARRAY/FLBA), and both the
-    stats and Spark's F.min/F.max ignore nulls.  Timestamps use the raw
-    int64 stats (``min_raw``/``max_raw``, never the lossy logical
-    accessors):
-    - timestamp[us] (NTZ): the engine pins session tz UTC, so the
-      NTZ->TIMESTAMP cast is value-preserving and unix_micros == raw;
-    - timestamp[us, tz=UTC]: isAdjustedToUTC micros ARE unix micros;
-    - timestamp[ns]: read via nanosAsLong + ``timestamp_micros(ts div
-      1000)`` (events_stream_spec), so us == raw div 1000; ``div``
-      truncates toward zero while ``//`` floors — identical only for
-      raw >= 0, so negative raws decline.
-    min/max commute with these strictly monotonic conversions.  Files
-    without row groups contribute nothing, so files that hold no rows
-    give (None, None), as the aggregate would.
-
-    Returns None — the caller falls back to one Spark aggregate — when
-    there are no files, a row group lacks stats (a writer may disable
-    them, ADVICE r9 #4), or the column is missing or of another type."""
-    import pyarrow.parquet as pq
-
-    from qaapi_spark.sources.tables import parquet_files
-
-    files = parquet_files(src) if isinstance(src, str) else list(src)
-    if not files:
-        return None
-    lo = hi = None
-    try:
-        for f in files:
-            pf = pq.ParquetFile(f)
-            md = pf.metadata
-            idx = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
-            t = str(pf.schema_arrow.field(col).type)
-            if t.startswith(("int", "uint")):
-                div = None
-            elif t in ("timestamp[us]", "timestamp[us, tz=UTC]"):
-                div = 1
-            elif t in ("timestamp[ns]", "timestamp[ns, tz=UTC]"):
-                div = 1000
-            else:
-                return None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                if div is None:
-                    a, b = st.min, st.max
-                else:
-                    a, b = st.min_raw, st.max_raw
-                    if not isinstance(a, int) or not isinstance(b, int) or a < 0:
-                        return None
-                    a, b = a // div, b // div
-                lo = a if lo is None else min(lo, a)
-                hi = b if hi is None else max(hi, b)
-    except Exception:
-        return None
-    return lo, hi

@@ -35,19 +35,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qaapi_spark.session import scratch_dir
+from qaapi_spark.sources.tables import footer_min_max, swap
 from qaapi_spark.streaming.epochs import (
     ORDERED_CONF,
     STATE_CONF,
     EpochStore,
     Guards,
-    footer_min_max,
     foreach_epoch,
     par_writes,
     range_slices,
     run_epochs,
     run_to_memory,
     stage_slices,
-    swap,
     tombstones,
 )
 
@@ -130,9 +129,12 @@ def stream_landing_reconcile(
 
     def upsert_batch(batch_df: DataFrame, epoch_id: int) -> None:
         new = T.contacts_curated(batch_df).dropDuplicates(["contact_id"])
-        tgt = pipe.read("t_contacts")
-        merged = new if tgt is None else merge_insert_only(tgt, new, ["contact_id"])
-        pipe._swap_write(merged, "t_contacts")
+        pipe._reconcile(
+            "t_contacts",
+            new,
+            ["contact_id"],
+            lambda t, b: merge_insert_only(t, b, ["contact_id"]),
+        )
 
     foreach_epoch(
         stream, upsert_batch, checkpoint=warehouse_dir + "/_checkpoints/contacts"

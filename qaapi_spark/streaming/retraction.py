@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qaapi_spark.session import scratch_dir
-from qaapi_spark.sources.tables import footer_rows
+from qaapi_spark.sources.tables import footer_rows, swap
 from qaapi_spark.streaming.epochs import (
     ORDERED_CONF,
     STATE_CONF,
@@ -74,7 +74,6 @@ from qaapi_spark.streaming.epochs import (
     range_slices,
     run_epochs,
     stage_slices,
-    swap,
     tombstones,
 )
 from qaapi_spark.streaming.incremental import (

@@ -1,64 +1,14 @@
-"""Write-path layout operators: partition pruning, compaction, and
-range clustering actually produce the layouts that make 100 TB scans
-cheap — verified from the physical plan and parquet file stats."""
+"""Layout operators: scan pushdown, bucketed joins, z-order planning
+and in-place compaction actually produce the layouts that make 100 TB
+scans cheap — verified from the physical plan and parquet file stats."""
 
 from __future__ import annotations
 
-import glob
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
-from qaapi_spark.operators.layout import (
-    compact_small_files,
-    file_key_ranges,
-    write_partitioned,
-    write_range_clustered,
-)
 from qaapi_spark.sources.tables import read_table
 
 from tests.conftest import SF_SMOKE
-
-
-def test_partitioned_write_prunes(spark):
-    events = read_table(spark, SF_SMOKE, "events")
-    out = tempfile.mkdtemp(prefix="layout_part_")
-    write_partitioned(events.withColumn("dt", F.to_date("ts")), out, ["event_type"])
-    # hive-style dirs exist
-    dirs = {d for d in os.listdir(out) if d.startswith("event_type=")}
-    assert len(dirs) >= 2
-    back = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    # the scan carries a partition filter => directory-level pruning
-    assert "event_type" in plan and "PartitionFilters" in plan
-    got = back.count()
-    want = events.filter(F.col("event_type") == "click").count()
-    assert got == want
-
-
-def test_compaction_reduces_file_count(spark):
-    events = read_table(spark, SF_SMOKE, "events")
-    src = tempfile.mkdtemp(prefix="layout_many_")
-    events.repartition(64).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(f"{src}/*.parquet")) == 64
-    dst = tempfile.mkdtemp(prefix="layout_compact_")
-    n = compact_small_files(spark, src, dst, target_file_bytes=1 << 30)
-    assert n == 1
-    assert len(glob.glob(f"{dst}/*.parquet")) == 1
-    assert spark.read.parquet(dst).count() == events.count()
-
-
-def test_range_clustered_files_are_disjoint(spark):
-    orders = read_table(spark, SF_SMOKE, "orders")
-    out = tempfile.mkdtemp(prefix="layout_range_")
-    write_range_clustered(orders, out, "o_orderkey", n_files=8)
-    ranges = sorted(file_key_ranges(spark, out, "o_orderkey"), key=lambda r: r[1])
-    assert len(ranges) >= 2
-    for (_, _, hi), (_, lo2, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo2  # disjoint key ranges => min/max stats skip files
-    # row preservation
-    assert spark.read.parquet(out).count() == orders.count()
 
 
 def test_q6_filters_reach_the_scan(spark):
@@ -72,35 +22,6 @@ def test_q6_filters_reach_the_scan(spark):
     pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
     for col in ("l_discount", "l_quantity"):
         assert col in pushed, f"{col} not pushed: {pushed}"
-
-
-def test_zorder_bounds_both_dimensions(spark):
-    """Z-order layout: per-file spans must be narrow on BOTH columns,
-    where a single-column sort leaves the other at ~full domain."""
-    from qaapi_spark.operators.layout import write_zordered
-
-    orders = read_table(spark, SF_SMOKE, "orders")
-    zdir = tempfile.mkdtemp(prefix="layout_z_")
-    write_zordered(orders, zdir, "o_custkey", "o_orderkey", n_files=16)
-    assert spark.read.parquet(zdir).count() == orders.count()
-
-    def mean_span_frac(path, key):
-        ranges = file_key_ranges(spark, path, key)
-        gmin = min(r[1] for r in ranges)
-        gmax = max(r[2] for r in ranges)
-        spans = [(hi - lo) / max(gmax - gmin, 1) for _, lo, hi in ranges]
-        return sum(spans) / len(spans)
-
-    # one-dimensional clustering for contrast: o_custkey files are
-    # tight, o_orderkey files cover nearly the whole domain
-    rdir = tempfile.mkdtemp(prefix="layout_r_")
-    write_range_clustered(orders, rdir, "o_custkey", n_files=16)
-    assert mean_span_frac(rdir, "o_custkey") < 0.15
-    assert mean_span_frac(rdir, "o_orderkey") > 0.8
-
-    # Morton tiles: both dimensions bounded well below the full domain
-    assert mean_span_frac(zdir, "o_custkey") < 0.5
-    assert mean_span_frac(zdir, "o_orderkey") < 0.5
 
 
 def test_parquet_scan_pushdown_and_column_pruning(spark):
@@ -296,17 +217,17 @@ def test_compact_files_reduces_count_and_preserves_content(spark, tmp_path):
     """Compaction must cut the file count to ceil(bytes/target),
     preserve every row, keep the directory readable at the SAME path,
     and leave no tmp/trash siblings behind."""
-    import glob as _glob
     import os as _os
 
-    from qaapi_spark.operators.maintain import compact_files, list_parquet_files
+    from qaapi_spark.operators.maintain import compact_files
+    from qaapi_spark.sources.tables import parquet_files
 
     path = str(tmp_path / "t")
     df = spark.range(10000).select(
         F.col("id"), (F.col("id") % 97).alias("k")
     )
     df.repartition(24).write.parquet(path)
-    before = list_parquet_files(spark, path)
+    before = parquet_files(path)
     assert len(before) == 24
     stats = compact_files(spark, path, target_file_bytes=1 << 30, sort_col="id")
     assert stats["files_before"] == 24
@@ -315,8 +236,8 @@ def test_compact_files_reduces_count_and_preserves_content(spark, tmp_path):
     got = spark.read.parquet(path)
     assert got.count() == 10000
     assert got.agg(F.sum("id")).collect()[0][0] == sum(range(10000))
-    assert not _os.path.exists(path + ".__compact_tmp__")
-    assert not _os.path.exists(path + ".__compact_old__")
+    assert not _os.path.exists(path + ".next")
+    assert not _os.path.exists(path + ".__swap_old__")
 
 
 def test_compact_files_sorted_output_is_zonemap_tight(spark, tmp_path):

@@ -158,27 +158,3 @@ def test_dq_checks_detect_violations(spark):
         "in_range_price": 1,
         "references_fk": 1,
     }
-
-
-def test_observed_write_single_pass_metrics(spark, tmp_path):
-    """observe() collects DQ metrics during the write itself — the
-    returned metrics equal a direct aggregate, with no second scan."""
-    from pyspark.sql import functions as F
-
-    from qaapi_spark.operators.quality import observed_write
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "c"), (None, "d")], "k long, v string"
-    )
-    out = str(tmp_path / "observed")
-    got = observed_write(
-        df,
-        out,
-        {
-            "n_rows": F.count(F.lit(1)),
-            "null_k": F.sum(F.col("k").isNull().cast("long")),
-            "null_v": F.sum(F.col("v").isNull().cast("long")),
-        },
-    )
-    assert got == {"n_rows": 4, "null_k": 1, "null_v": 1}
-    assert spark.read.parquet(out).count() == 4

@@ -17,13 +17,17 @@ def duck():
 
 
 # Full driver-gate replica (~20 min) in the slow tier, check_oracle.py
-# covers it at sf0.01; the streaming twins (stream_*) hash-check in the
-# default tier too, because their shared epoch machinery
-# (streaming/epochs.py) is the code most of them run through.
+# covers it at sf0.01.  Families whose shared storage code most of them
+# run through hash-check in the default tier too: the streaming twins
+# (streaming/epochs.py), and the curated-table pipeline, compaction and
+# maintained views (the crash-safe directory swap in sources/tables.py).
+_DEFAULT_TIER = ("stream_", "calabrio_pipeline_", "maintain_", "mv_")
+
+
 @pytest.mark.parametrize(
     "name",
     [
-        pytest.param(n, marks=() if n.startswith("stream_") else pytest.mark.slow)
+        pytest.param(n, marks=() if n.startswith(_DEFAULT_TIER) else pytest.mark.slow)
         for n in sorted(CATALOG)
     ],
 )

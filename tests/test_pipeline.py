@@ -110,3 +110,49 @@ def test_multi_table_reconcile_failures_all_surface(spark, tmp_path, monkeypatch
         pipe.run_batch(FIX)
     got = {str(e) for e in ei.value.exceptions}
     assert got == {f"boom:{t}" for t in fail_tables}
+
+
+def test_contacts_replace_crash_keeps_prior_table(spark, tmp_path, monkeypatch, batch2_dir):
+    """A crash while a batch lands a curated table must leave that
+    table's previous state recoverable: the old write path removed the
+    table before moving the new one into place, so dying in between
+    lost every row.  Each rename/replace whose destination is
+    ``t_contacts`` raises once during batch 2; a fresh pipeline must
+    then read batch 1's rows, and rerunning batch 2 must land the same
+    table an uninterrupted run does."""
+    import os
+
+    def rows(pipe):
+        return sorted(map(tuple, pipe.read("t_contacts").collect()))
+
+    wh = str(tmp_path / "crash_wh")
+    CalabrioPipeline(spark, wh).run_batch(FIX, collect_counts=False)
+    before = rows(CalabrioPipeline(spark, wh))
+
+    armed = [True]
+
+    def crashing(real):
+        def op(src, dst, *a, **kw):
+            if armed[0] and os.fspath(dst).rstrip("/").endswith(os.sep + "t_contacts"):
+                armed[0] = False
+                raise OSError("simulated crash while landing t_contacts")
+            return real(src, dst, *a, **kw)
+
+        return op
+
+    monkeypatch.setattr(os, "replace", crashing(os.replace))
+    monkeypatch.setattr(os, "rename", crashing(os.rename))
+    with pytest.raises(OSError, match="simulated crash"):
+        CalabrioPipeline(spark, wh).run_batch(batch2_dir, collect_counts=False)
+    assert not armed[0], "the t_contacts replace was never reached"
+    monkeypatch.undo()
+
+    fresh = CalabrioPipeline(spark, wh)
+    assert fresh.read("t_contacts") is not None
+    assert rows(fresh) == before
+
+    fresh.run_batch(batch2_dir, collect_counts=False)
+    clean = CalabrioPipeline(spark, str(tmp_path / "clean_wh"))
+    clean.run_batch(FIX, collect_counts=False)
+    clean.run_batch(batch2_dir, collect_counts=False)
+    assert rows(CalabrioPipeline(spark, wh)) == rows(clean)

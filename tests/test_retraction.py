@@ -1756,7 +1756,7 @@ def test_footer_min_max_matches_aggregate(spark, tmp_path):
     guess when statistics are absent or the column is not integer."""
     from pyspark.sql import functions as F
 
-    from qaapi_spark.streaming.epochs import footer_min_max as _footer_min_max
+    from qaapi_spark.sources.tables import footer_min_max as _footer_min_max
 
     # real corpus file (single file path)
     docs = "/root/testdata/sf0.001/documents.parquet"
@@ -1801,7 +1801,7 @@ def test_footer_readers_partitioned_and_empty_dirs(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from qaapi_spark.sources.tables import footer_rows, parquet_files
-    from qaapi_spark.streaming.epochs import footer_min_max as _footer_min_max
+    from qaapi_spark.sources.tables import footer_min_max as _footer_min_max
 
     part = str(tmp_path / "part_dir")
     spark.createDataFrame(
@@ -1856,7 +1856,7 @@ def test_footer_ts_min_max_us_matches_aggregate(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from qaapi_spark.sources.tables import events_stream_spec
-    from qaapi_spark.streaming.epochs import footer_min_max
+    from qaapi_spark.sources.tables import footer_min_max
 
     # real events table (timestamp[us] vintage in current testdata)
     events = "/root/testdata/sf0.001/events.parquet"

@@ -27,7 +27,7 @@ def test_store_swap_crash_window_recovers(spark):
     promoting the new one must NOT look like first-epoch — the
     recovery helper restores the stranded state before the merge's
     existence check."""
-    from qaapi_spark.streaming.epochs import recover as _store_recover
+    from qaapi_spark.sources.tables import recover as _store_recover
     from qaapi_spark.streaming.incremental import _merge_weighted_sample_batch
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
@@ -58,8 +58,8 @@ def test_store_recover_first_epoch_and_stale_trash(spark):
     """First epoch (nothing on disk) must report no store; a stale
     trash left by a crash AFTER promotion must not clobber the newer
     store."""
-    from qaapi_spark.streaming.epochs import recover as _store_recover
-    from qaapi_spark.streaming.epochs import swap as _store_swap
+    from qaapi_spark.sources.tables import recover as _store_recover
+    from qaapi_spark.sources.tables import swap as _store_swap
     from qaapi_spark.streaming.incremental import _merge_weighted_sample_batch
 
     store = _store("swapfresh_")
@@ -79,6 +79,24 @@ def test_store_recover_first_epoch_and_stale_trash(spark):
     _store_swap(store)
     assert not os.path.isdir(store + ".__swap_old__")
     assert sorted(tuple(r) for r in spark.read.parquet(store).collect()) == good
+
+
+def test_compact_epoch_store_recovers_stranded_store(spark, tmp_path):
+    """A store stranded under the swap trash by a crashed swap must be
+    recovered and compacted, not read as an empty store and skipped."""
+    from qaapi_spark.streaming.epochs import EpochStore
+    from qaapi_spark.streaming.incremental import compact_epoch_store
+
+    root = str(tmp_path / "digests")
+    store = EpochStore(spark, root)
+    for e in range(3):
+        store.write(spark.range(e * 10, e * 10 + 10).toDF("h"), e)
+    want = sorted(r[0] for r in spark.read.parquet(root).select("h").collect())
+
+    os.rename(root, root + ".__swap_old__")
+    assert compact_epoch_store(spark, root, "distinct", upto=1) == 2
+    assert store.epochs() == [1, 2]
+    assert sorted(r[0] for r in spark.read.parquet(root).select("h").collect()) == want
 
 
 def test_stage_monotonic_mtimes_orders_slices(tmp_path):

@@ -65,8 +65,9 @@ def test_stream_weighted_sample_merge_propagates_store_corruption(spark):
 
 def test_compact_files_recovers_stranded_trash(spark, tmp_path):
     """ADVICE r8 #3: a crash between rename(path->trash) and
-    rename(tmp->path) strands the dataset in .__compact_old__; a
-    rerun must recover it and complete the compaction."""
+    rename(next->path) strands the dataset in the shared swap trash
+    (.__swap_old__); a rerun must recover it and complete the
+    compaction."""
     from qaapi_spark.operators.maintain import compact_files
 
     path = str(tmp_path / "tbl")
@@ -75,13 +76,13 @@ def test_compact_files_recovers_stranded_trash(spark, tmp_path):
     )
     before = {tuple(r) for r in spark.read.parquet(path).collect()}
     # simulate the crash window: data staged aside, path absent
-    shutil.move(path, path + ".__compact_old__")
+    shutil.move(path, path + ".__swap_old__")
     assert not os.path.exists(path)
     stats = compact_files(spark, path, target_file_bytes=1 << 30)
     after = {tuple(r) for r in spark.read.parquet(path).collect()}
     assert after == before
     assert stats["files_after"] == 1
-    assert not os.path.exists(path + ".__compact_old__")
+    assert not os.path.exists(path + ".__swap_old__")
 
 
 def test_dense_vocab_collect_bounded(spark):
