@@ -124,25 +124,3 @@ def sample_frames(media: DataFrame, stride: int = 10) -> DataFrame:
         F.col("meta.n_frames").alias("n_frames"),
         F.explode(idx).alias("frame_idx"),
     )
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payload through an Arrow kernel that
-    would call the codec; fake path re-emits payload and stamps the
-    new dimensions into metadata (real resize gated on codec libs)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": pdf["payload"],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        gen, "media_id long, kind string, payload binary, width int, height int"
-    )

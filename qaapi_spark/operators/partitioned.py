@@ -1,26 +1,30 @@
 """Partition-scoped maintenance: rewrite only the partitions a batch
 touches (VERDICT r2 next-round #4).
 
-The plain maintenance path (``operators/maintain.py`` +
-``pipeline._swap_write``) reconciles a trailing-window batch by
-rewriting the WHOLE curated table — oracle-correct, but at 100 TB every
-batch pays a full-table write.  The scalable shape, short of adopting a
-table format like Delta, is hash-bucket partitioning on the merge key:
+Every curated table the pipeline merges into is laid out in hash
+buckets on the merge key, short of adopting a table format like Delta:
 
-  * curated tables are laid out as ``path/<pcol>=<bucket>/`` parquet,
-    where ``bucket = pmod(xxhash64(key), n_buckets)`` — deterministic,
-    so a given key lives in exactly one partition forever;
+  * a table is ``path/<pcol>=<bucket>/`` parquet, where
+    ``bucket = pmod(xxhash64(key), n_buckets)`` — deterministic, so a
+    given key lives in exactly one bucket forever.  An unpartitioned
+    table is the one-bucket case of the same layout;
   * a batch's affected buckets = buckets of the batch keys, UNION the
     target buckets currently holding any batch merge-key (guards
     against a key whose partitioning attribute drifted upstream —
     found with a column-pruned semi-join scan, far cheaper than a
     rewrite);
-  * the merge runs against ONLY the affected partitions (partition
-    pruning at the scan), and the result is written back with dynamic
-    partition overwrite, which replaces exactly the partitions present
-    in the written frame and leaves every other partition's files
-    untouched (asserted by tests/test_partitioned_merge.py on file
-    mtimes+inodes).
+  * the merge runs against ONLY the affected buckets (partition pruning
+    at the scan) and writes them to ``path.next``.  The plan reads
+    ``path`` and writes elsewhere, so it needs no checkpoint;
+  * every file of every untouched bucket is hard-linked into
+    ``path.next`` (``sources.tables.link_into_next``): same inode, same
+    mtime, no data copied (asserted by tests/test_partitioned_merge.py);
+  * ``sources.tables.swap`` commits.  An affected bucket the merge
+    emptied has no dir in ``path.next``, so it simply disappears, and
+    every crash point leaves either the old table or the new one.
+
+Trade-off: each batch makes one ``link`` call per untouched file.  That
+is metadata only, on local paths, as ``swap`` already assumes.
 
 Reference semantics preserved: these helpers compose with the J2/J3/J5
 relational merges in ``operators/maintain.py`` (Update...sql:36-134) —
@@ -35,6 +39,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from qaapi_spark.sources.tables import link_into_next, parquet_files, recover, swap
 
 PCOL = "__pbucket"
 
@@ -51,31 +57,33 @@ def write_partitioned(
     path: str,
     key_col: str,
     n_buckets: int,
-    dynamic: bool = False,
     coalesce: int | None = None,
 ) -> None:
-    """Write ``df`` bucket-partitioned by ``key_col``.  With
-    ``dynamic`` the write overwrites ONLY the bucket directories
-    present in ``df`` (dynamic partition overwrite); without it the
-    whole table is replaced."""
+    """Write ``df`` bucket-partitioned by ``key_col``, replacing
+    whatever is at ``path``; ``coalesce`` caps the write tasks (one
+    task writes one file per bucket it holds)."""
     out = df.withColumn(PCOL, bucket_of(key_col, n_buckets))
     if coalesce is not None:
-        # spread per partition dir, not per table: repartition on the
-        # bucket before write so each dir gets `coalesce` file(s)
-        out = out.repartition(max(1, coalesce * n_buckets), PCOL)
-    writer = out.write.mode("overwrite").partitionBy(PCOL)
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.parquet(path)
+        out = out.coalesce(coalesce)
+    out.write.mode("overwrite").partitionBy(PCOL).parquet(path)
+
+
+def _read_raw(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at ``path`` with its bucket column, after recovering a
+    crashed `swap`; None when it does not exist or holds no data file
+    (a partitioned write of an empty frame leaves no file to take a
+    schema from, so an emptied table reads as absent)."""
+    if not recover(path) or not parquet_files(path):
+        return None
+    return spark.read.parquet(path)
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a bucket-partitioned table back as its logical relation
-    (the physical bucket column stays behind the curtain)."""
-    if not os.path.exists(path):
-        return None
-    df = spark.read.parquet(path)
-    return df.drop(PCOL) if PCOL in df.columns else df
+    (the physical bucket column stays behind the curtain); None when
+    the table is absent or holds no data file (see `_read_raw`)."""
+    raw = _read_raw(spark, path)
+    return None if raw is None else raw.drop(PCOL)
 
 
 def affected_buckets(
@@ -93,7 +101,10 @@ def affected_buckets(
     partition key IS the (single) merge key, the target scan is skipped:
     bucketing is deterministic, so batch keys can only live in batch
     buckets.  Bounded by ``n_buckets`` rows — the collect is driver-safe.
+    One bucket holds the whole table, so it needs no probe job.
     """
+    if n_buckets == 1:
+        return [0]
     b = batch.select(bucket_of(key_col, n_buckets).alias("b"))
     if scope_df is not None:
         b = b.unionByName(scope_df.select(bucket_of(key_col, n_buckets).alias("b")))
@@ -120,7 +131,7 @@ def merge_partitioned(
 ) -> None:
     """Apply ``merge_fn(scoped_target, batch) -> merged`` to the
     bucket-partitioned table at ``path``, rewriting only the affected
-    bucket directories.
+    bucket directories, and commit with one `swap`.
 
     ``key_col`` is the partitioning key (defaults to ``keys[0]``); it
     must be functionally stable per merge key — the affected-bucket
@@ -129,41 +140,23 @@ def merge_partitioned(
     partitions the merge may shrink (delete scopes).
     """
     key_col = key_col or keys[0]
-    if not os.path.exists(path):
-        write_partitioned(batch, path, key_col, n_buckets, coalesce=coalesce)
-        return
-    raw = spark.read.parquet(path)
-    buckets = affected_buckets(raw, batch, keys, key_col, n_buckets, scope_df=scope_df)
-    if not buckets:
-        return
-    # partition pruning: the filter on the partition column reaches the
-    # scan, so unaffected bucket dirs are never read OR written
-    scoped = raw.filter(F.col(PCOL).isin(buckets)).drop(PCOL)
-    merged = merge_fn(scoped, batch)
-    # dynamic overwrite replaces only partitions PRESENT in the written
-    # frame: an affected bucket whose rows were all deleted would keep
-    # its stale files.  Find emptied buckets BEFORE the write (the plan
-    # reads the very files the write replaces), then drop their dirs
-    # explicitly (bounded by n_buckets; single-writer layout, same
-    # assumption as _swap_write).  Materialize `merged` with an eager
-    # localCheckpoint first: the probe and the write then both read the
-    # checkpoint — one pass instead of two over the merge join, and no
-    # cache-eviction gamble that would re-read the replaced files
-    # mid-write.  The checkpoint is bucket-scoped (affected partitions
-    # only), so its footprint is bounded by the batch's blast radius,
-    # not the table.
-    merged = merged.localCheckpoint(eager=True)
-    present = {
-        r["b"]
-        for r in merged.select(bucket_of(key_col, n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    }
-    write_partitioned(
-        merged, path, key_col, n_buckets, dynamic=True, coalesce=coalesce
-    )
-    import shutil
-
-    for b in buckets:
-        if b not in present:
-            shutil.rmtree(os.path.join(path, f"{PCOL}={b}"), ignore_errors=True)
+    staged = path + ".next"
+    raw = _read_raw(spark, path)
+    if raw is None:
+        write_partitioned(batch, staged, key_col, n_buckets, coalesce=coalesce)
+    else:
+        buckets = affected_buckets(raw, batch, keys, key_col, n_buckets, scope_df=scope_df)
+        if not buckets:
+            return
+        # partition pruning: the filter on the partition column reaches
+        # the scan, so untouched bucket dirs are never read
+        scoped = raw.filter(F.col(PCOL).isin(buckets)).drop(PCOL)
+        write_partitioned(
+            merge_fn(scoped, batch), staged, key_col, n_buckets, coalesce=coalesce
+        )
+        rewritten = {f"{PCOL}={b}" for b in buckets}
+        link_into_next(
+            path,
+            [d for d in os.listdir(path) if d.startswith(PCOL + "=") and d not in rewritten],
+        )
+    swap(path)

@@ -289,9 +289,10 @@ _PIPELINE_ORACLE = f"""
     oracle=_PIPELINE_ORACLE,
     doc="EP1/EP2 end-to-end: two trailing-window batches through the full "
     "pipeline (full-replace, insert-only merge, delete-vanished + upsert, "
-    "delete-then-insert), returning the final t_qa_evaluations; the oracle "
-    "reconstructs the same reconciliation in SQL; ref SURVEY §3 + "
-    "Update...sql:85-134",
+    "delete-then-insert), returning the final t_qa_evaluations; each table "
+    "is one bucket of the partition-scoped merge, rewritten to "
+    "<table>.next and swapped in per batch; the oracle reconstructs the "
+    "same reconciliation in SQL; ref SURVEY §3 + Update...sql:85-134",
 )
 def calabrio_pipeline_incremental(spark, sf_dir):
     import tempfile
@@ -304,10 +305,10 @@ def calabrio_pipeline_incremental(spark, sf_dir):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        # full write-then-swap maintenance (the r1/r2-measured path);
-        # the partition-scoped 100 TB path is its own catalog query
-        # below (calabrio_pipeline_partitioned) so both maintenance
-        # modes stay independently oracle-verified and timed
+        # one bucket per table: each batch rewrites it whole and swaps
+        # it in; the 8-bucket 100 TB layout is its own catalog query
+        # below (calabrio_pipeline_partitioned), so both layouts of the
+        # one merge path stay independently oracle-verified and timed
         pipe = CalabrioPipeline(
             spark,
             _scratch_dir(prefix="calabrio_e2e_"),
@@ -325,12 +326,12 @@ def calabrio_pipeline_incremental(spark, sf_dir):
     oracle=_PIPELINE_ORACLE,
     doc="same two-batch reconciliation through the PARTITION-SCOPED "
     "maintenance path (operators/partitioned.py): curated tables are "
-    "contact-id hash buckets and batch 2 rewrites ONLY affected "
-    "buckets via dynamic partition overwrite (untouched-file "
-    "invariant asserted in tests/test_partitioned_merge.py) — the "
-    "100 TB merge shape; identical result, hence identical oracle; "
-    "small-fixture wall time is job-latency-bound (~30 tiny jobs), "
-    "see SCALE.md",
+    "8 contact-id hash buckets and batch 2 rewrites ONLY affected "
+    "buckets into <table>.next, hard-links the untouched ones "
+    "(untouched-file invariant asserted in "
+    "tests/test_partitioned_merge.py) and commits with one crash-safe "
+    "swap — the 100 TB merge shape; identical result, hence identical "
+    "oracle; small-fixture wall time is job-latency-bound, see SCALE.md",
 )
 def calabrio_pipeline_partitioned(spark, sf_dir):
     import tempfile

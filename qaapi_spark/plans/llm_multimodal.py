@@ -203,6 +203,7 @@ def stream_landing_reconcile_contacts(spark, sf_dir):
     import os
     import tempfile
 
+    from qaapi_spark.operators.partitioned import read_partitioned
     from qaapi_spark.streaming.incremental import stream_landing_reconcile
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -214,7 +215,9 @@ def stream_landing_reconcile_contacts(spark, sf_dir):
         os.symlink(p, os.path.join(land, os.path.basename(p)))
     wh = _scratch_dir(prefix="stream_wh_")
     stream_landing_reconcile(spark, land, wh)
-    return spark.read.parquet(f"{wh}/t_contacts").orderBy("contact_id")
+    # curated tables are bucket dirs: the bucket reader drops the
+    # physical bucket column
+    return read_partitioned(spark, f"{wh}/t_contacts").orderBy("contact_id")
 
 
 @query(

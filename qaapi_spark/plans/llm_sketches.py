@@ -138,13 +138,13 @@ def _cms_md5_pairs(key, depth: int, width: int):
     ``key`` — the one expression both CMS kernels explode inline (the
     r4 gotcha: routing a generator through a named array column breaks
     Catalyst generator fusion)."""
-    from qaapi_spark.operators.sketches import _bucket
+    from qaapi_spark.operators.sketches import cms_bucket
 
     return F.array(
         *[
             F.struct(
                 F.lit(r).alias("row"),
-                _bucket(r, key, width, "md5").alias("bucket"),
+                cms_bucket(r, key, width).alias("bucket"),
             )
             for r in range(depth)
         ]
@@ -231,10 +231,9 @@ def sketch_cms_user_counts(spark, sf_dir):
     # counter kernel (integer sums are grouping-independent, so this
     # is bit-identical to counting straight off the events — the
     # mergeability property the windowed companion is built on).  The
-    # operator-level single-shot path stays `operators/sketches
-    # .cms_build`; the catalog pair shares the kernel so the corpus
-    # is hashed ONCE for both queries and the md5 expression compile
-    # is paid once per session (VERDICT r6 #2).
+    # catalog pair shares the kernel so the corpus is hashed ONCE for
+    # both queries and the md5 expression compile is paid once per
+    # session (VERDICT r6 #2).
     sketch = (
         _cms_hourly(spark, sf_dir)
         .groupBy("row", "bucket")

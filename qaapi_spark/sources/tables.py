@@ -9,10 +9,12 @@ This is the one module that knows a table's directory layout:
   parquet footers, driver-side, no Spark job;
 - `swap` / `recover`: the one crash-safe whole-directory replace.  A
   writer lands the new table at ``<dir>.next`` and calls `swap`; a
-  reader calls `recover` first.  Curated tables
-  (``pipeline._swap_write``), compaction (``maintain.compact_files``)
-  and the streaming epoch stores all go through it, and no other
-  module renames a directory.
+  reader calls `recover` first.  Curated tables (the full replace in
+  ``pipeline._swap_write`` and every bucket merge in
+  ``partitioned.merge_partitioned``, which hard-links the buckets it
+  leaves alone into ``.next`` with `link_into_next`), compaction
+  (``maintain.compact_files``) and the streaming epoch stores all go
+  through it, and no other module renames or links a file.
 
 Parquet scans go through Spark's vectorized reader; Catalyst pushes
 filters and prunes columns into the scan, so callers should express
@@ -96,6 +98,19 @@ def swap(root: str) -> None:
         os.rename(root, trash)
     os.rename(root + ".next", root)
     shutil.rmtree(trash, ignore_errors=True)
+
+
+def link_into_next(root: str, subdirs: list[str]) -> None:
+    """Hard-link every file of each ``root/<subdir>`` into
+    ``root + '.next'/<subdir>``, so a `swap` that replaces only part of
+    a table carries the untouched part over without copying it.  A link
+    keeps the file's inode and mtime, and costs one metadata call per
+    file (local paths, like `swap`)."""
+    for d in subdirs:
+        src, dst = os.path.join(root, d), os.path.join(root + ".next", d)
+        os.makedirs(dst, exist_ok=True)
+        for f in os.listdir(src):
+            os.link(os.path.join(src, f), os.path.join(dst, f))
 
 
 def recover(root: str) -> bool:

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from qaapi_spark.operators.maintain import merge_insert_only, merge_upsert
@@ -108,6 +109,106 @@ def test_merge_partitioned_scope_df_shrinks_unrepresented_bucket(spark, tmp_path
     )
     got = {(r["contact_id"], r["txt"]) for r in read_partitioned(spark, path).collect()}
     assert got == {(1, "a"), (3, "c")}
+
+
+def test_merge_partitioned_emptied_table_reads_absent(spark, tmp_path):
+    """A merge that deletes every row leaves no data file to take a
+    schema from: the table reads as absent, and the next batch lands
+    as a first write."""
+    path = str(tmp_path / "tbl_empty")
+
+    def upsert(t, b):
+        return merge_upsert(t, b, ["contact_id"])
+
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "contact_id long, txt string")
+    merge_partitioned(spark, path, base, ["contact_id"], upsert, n_buckets=1)
+    scope = spark.createDataFrame([(1,), (2,)], "contact_id long")
+    merge_partitioned(
+        spark, path, spark.createDataFrame([], "contact_id long, txt string"),
+        ["contact_id"],
+        lambda t, b: t.join(scope, "contact_id", "left_anti").unionByName(b),
+        n_buckets=1, scope_df=scope,
+    )
+    assert read_partitioned(spark, path) is None
+    batch = spark.createDataFrame([(3, "c")], "contact_id long, txt string")
+    merge_partitioned(spark, path, batch, ["contact_id"], upsert, n_buckets=1)
+    assert sorted(map(tuple, read_partitioned(spark, path).collect())) == [(3, "c")]
+
+
+def test_merge_partitioned_crash_keeps_prior_table(spark, tmp_path, monkeypatch):
+    """A crash while a bucket merge commits must leave the table as it
+    was before the batch.  The batch inserts a row into one bucket and,
+    through ``scope_df``, empties contact 2's bucket.  The first
+    ``rmtree`` of a bucket dir under the table, or the first rename
+    onto the table, raises.  A fresh read must give the pre-batch rows
+    (a commit that lands the insert but not the delete shows the
+    deleted row again), and rerunning the batch must equal an
+    uninterrupted run."""
+    import shutil
+
+    n_buckets = 4
+    gone = _bucket(spark, 2, n_buckets)
+    # contact 2 alone in its bucket, so the batch empties that bucket;
+    # the inserted contact lands in another one
+    keys = [2] + [k for k in range(3, 40) if _bucket(spark, k, n_buckets) != gone][:3]
+    new_key = next(k for k in range(100, 200) if _bucket(spark, k, n_buckets) != gone)
+    base = spark.createDataFrame(
+        [(k, f"t{k}") for k in keys], "contact_id long, txt string"
+    )
+    scope = spark.createDataFrame([(2,)], "contact_id long")
+    batch = spark.createDataFrame([(new_key, "new")], "contact_id long, txt string")
+
+    def load(path):
+        merge_partitioned(
+            spark, path, base, ["contact_id"],
+            lambda t, b: merge_upsert(t, b, ["contact_id"]),
+            n_buckets=n_buckets, coalesce=1,
+        )
+
+    def apply_batch(path):
+        merge_partitioned(
+            spark, path, batch, ["contact_id"],
+            lambda t, b: t.join(scope, "contact_id", "left_anti").unionByName(b),
+            n_buckets=n_buckets, coalesce=1, scope_df=scope,
+        )
+
+    def rows(path):
+        return sorted(map(tuple, read_partitioned(spark, path).collect()))
+
+    path = str(tmp_path / "crash_tbl")
+    load(path)
+    before = rows(path)
+    armed = [True]
+
+    def crash_if(hit, real):
+        def op(*a, **kw):
+            if armed[0] and hit(*a):
+                armed[0] = False
+                raise OSError("simulated crash while committing the merge")
+            return real(*a, **kw)
+
+        return op
+
+    bucket_dir = os.path.join(path, PCOL + "=")
+    monkeypatch.setattr(shutil, "rmtree", crash_if(
+        lambda p, *_: os.fspath(p).startswith(bucket_dir), shutil.rmtree
+    ))
+    monkeypatch.setattr(os, "rename", crash_if(
+        lambda src, dst, *_: os.fspath(dst).rstrip("/") == path, os.rename
+    ))
+    with pytest.raises(OSError, match="simulated crash"):
+        apply_batch(path)
+    assert not armed[0], "the commit was never reached"
+    monkeypatch.undo()
+
+    assert rows(path) == before
+
+    apply_batch(path)
+    clean = str(tmp_path / "clean_tbl")
+    load(clean)
+    apply_batch(clean)
+    assert rows(path) == rows(clean)
+    assert (2, "t2") not in rows(path) and (new_key, "new") in rows(path)
 
 
 def test_partitioned_pipeline_equals_full_rewrite(spark, tmp_path):

@@ -156,3 +156,35 @@ def test_contacts_replace_crash_keeps_prior_table(spark, tmp_path, monkeypatch, 
     clean.run_batch(FIX, collect_counts=False)
     clean.run_batch(batch2_dir, collect_counts=False)
     assert rows(CalabrioPipeline(spark, wh)) == rows(clean)
+
+
+@pytest.mark.parametrize("partitioned", [True, False], ids=["buckets", "one_bucket"])
+def test_seeded_corpus_matches_etl_model(spark, tmp_path, partitioned):
+    """A seeded Calabrio corpus (duplicates, non-SCORED states, null
+    evaluators, vanished evaluations, re-scores, deleted and edited
+    comments, edited and new contacts) through an initial load and two
+    trailing windows must land exactly the rows of an independent
+    DuckDB replay of the four merge rules, in both bucket layouts, and
+    leave no staged or trash table behind."""
+    import os
+
+    from perfbench.datagen import CalabrioCorpus
+    from perfbench.etl_model import TABLES, EtlModel
+
+    corpus = CalabrioCorpus(2)
+    landings = [str(tmp_path / "landing" / f"{i:03d}") for i in range(3)]
+    corpus.initial_landing(landings[0])
+    for d in landings[1:]:
+        corpus.next_window(d)
+
+    wh = str(tmp_path / "wh")
+    pipe = CalabrioPipeline(spark, wh, partitioned=partitioned)
+    model = EtlModel()
+    try:
+        for d in landings:
+            pipe.run_batch(d, collect_counts=False)
+            model.apply_batch(d)
+        assert model.mismatches(wh) == {t: 0 for t in TABLES}
+    finally:
+        model.close()
+    assert not [n for n in os.listdir(wh) if n.endswith((".next", ".__swap_old__"))]

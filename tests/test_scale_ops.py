@@ -103,11 +103,14 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
 
 
 def test_cms_overestimate_bound(spark):
-    from qaapi_spark.operators.sketches import cms_build, cms_point_estimates
+    """sketch_cms_user_counts (d=4, w=1024) against exact per-user
+    counts: CMS never underestimates, and overestimates by at most
+    eps*N (loose)."""
+    from qaapi_spark.plans.catalog import CATALOG
 
     e = read_table(spark, SF_SMOKE, "events")
-    sketch = cms_build(e, "user_id", depth=4, width=1024)
-    est = {r["key"]: r["est"] for r in cms_point_estimates(e, sketch, "user_id").collect()}
+    q = CATALOG["sketch_cms_user_counts"].fn(spark, SF_SMOKE)
+    est = {r["key"]: r["est"] for r in q.collect()}
     exact = {
         r["user_id"]: r["cnt"]
         for r in e.groupBy("user_id").agg(F.count("*").alias("cnt")).collect()

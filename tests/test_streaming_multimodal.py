@@ -7,7 +7,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from qaapi_spark.operators.multimodal import decode_features, resize_stub, sample_frames, synthesize_media
+from qaapi_spark.operators.multimodal import decode_features, sample_frames, synthesize_media
+from qaapi_spark.operators.partitioned import read_partitioned
 from qaapi_spark.sources.tables import read_table
 from qaapi_spark.streaming.incremental import stream_landing_reconcile
 
@@ -36,7 +37,7 @@ def test_stream_landing_reconcile_insert_only(spark, tmp_path):
     out2 = stream_landing_reconcile(spark, str(landing), wh)
     assert out2["t_contacts"] == 41  # insert-only: dup id 1 ignored
 
-    t = spark.read.parquet(wh + "/t_contacts")
+    t = read_partitioned(spark, wh + "/t_contacts")
     # existing row kept its original value (insert-only semantics)
     assert t.filter(F.col("contact_id") == 1).collect()[0]["cjp_session_id"] == "CALL-00001"
 
@@ -60,14 +61,6 @@ def test_multimodal_frame_sample_bounds(spark, sf_dir):
     s = sample_frames(m, stride=10)
     bad = s.filter((F.col("frame_idx") < 0) | (F.col("frame_idx") >= F.col("n_frames")))
     assert bad.count() == 0
-
-
-def test_multimodal_resize_passthrough(spark, sf_dir):
-    m = synthesize_media(read_table(spark, sf_dir, "documents"))
-    r = resize_stub(m, 224, 224)
-    row = r.filter(F.col("media_id") == 0).collect()[0]
-    assert row["width"] == 224 and row["height"] == 224
-    assert isinstance(row["payload"], (bytes, bytearray)) and len(row["payload"]) > 0
 
 
 def test_stream_neardup_drops_cross_batch_duplicate(spark, tmp_path):

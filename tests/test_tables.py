@@ -3,7 +3,9 @@ directories: every whole-table replace in ``qaapi_spark`` lands the new
 table at ``<dir>.next`` and calls its crash-safe ``swap``.  A second
 rename scheme elsewhere would reopen the crash window ``swap`` closes
 (old table deleted before the new one is in place), so this guard
-parses the package and fails on any other call that moves a path."""
+parses the package and fails on any other call that moves a path.
+A hard link counts as a move: a bucket merge links the buckets it
+leaves alone into ``<dir>.next`` before the swap."""
 
 from __future__ import annotations
 
@@ -16,12 +18,14 @@ PKG = Path(qaapi_spark.__file__).resolve().parent
 OWNER = PKG / "sources" / "tables.py"
 
 # (module, function) pairs that move a path on the local filesystem
-_MOVERS = {("os", "rename"), ("os", "renames"), ("os", "replace"), ("shutil", "move")}
+_MOVERS = {
+    ("os", "rename"), ("os", "renames"), ("os", "replace"), ("os", "link"), ("shutil", "move")
+}
 
 
 def path_moves(source: str) -> list[str]:
     """``line: call`` of every path-moving call in ``source``:
-    ``os.rename``/``os.renames``/``os.replace``/``shutil.move`` (also
+    ``os.rename``/``os.renames``/``os.replace``/``os.link``/``shutil.move`` (also
     through ``import os as x`` or ``from shutil import move``), and
     any ``.rename(...)`` method call — Hadoop ``FileSystem.rename``
     through py4j, or ``pathlib.Path.rename``."""
@@ -60,10 +64,10 @@ def test_path_moves_detects_every_spelling():
         "from shutil import move as mv\nfrom os import replace\n"
         "os.rename(a, b)\n_os.replace(a, b)\nshutil.move(a, b)\n"
         "mv(a, b)\nreplace(a, b)\nfs.rename(p, q)\n"
-        "s.replace('x', 'y')\nos.path.join(a, b)\n"
+        "s.replace('x', 'y')\nos.path.join(a, b)\nos.link(a, b)\n"
     )
     assert [h.split(":")[0] for h in path_moves(src)] == [
-        "6", "7", "8", "9", "10", "11"
+        "6", "7", "8", "9", "10", "11", "14"
     ]
 
 

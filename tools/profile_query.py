@@ -4,7 +4,9 @@ At sf0.1 the base tables are single-digit MB, so per-query wall time is
 dominated by fixed costs — number of jobs (driver round-trips), stages
 (shuffle boundaries), and tasks (scheduling overhead) — rather than
 data-proportional compute.  This tool makes those counts visible per
-query so optimization targets the structure, not guesses.
+query so optimization targets the structure, not guesses.  Jobs are
+those in the query's job group plus the ungrouped jobs started while
+it ran (pool threads do not inherit the group).
 
 Usage: python tools/profile_query.py <sf_dir> [--repeat N] <name> [name...]
 """
@@ -36,12 +38,19 @@ def main() -> None:
     for r in range(repeat):
         for name in args:
             group = f"prof_{name}_{r}"
+            ungrouped = set(tracker.getJobIdsForGroup(None))
             sc.setJobGroup(group, name)
             t0 = time.time()
             n = len(CATALOG[name].fn(spark, sf_dir).collect())
             dt = time.time() - t0
             sc.setJobGroup(None, None)
-            job_ids = sorted(tracker.getJobIdsForGroup(group))
+            # pool threads (e.g. run_batch's per-table reconciles) do not
+            # inherit the job group: count the ungrouped jobs the query
+            # started too
+            job_ids = sorted(
+                set(tracker.getJobIdsForGroup(group))
+                | (set(tracker.getJobIdsForGroup(None)) - ungrouped)
+            )
             n_stages = 0
             n_tasks = 0
             for jid in job_ids:
