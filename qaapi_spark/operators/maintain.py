@@ -92,19 +92,22 @@ def delete_semi_anti(
     """J5: DELETE WHERE k1 IN (scope) AND k2 NOT IN (keep)
     (Update...sql:88-92,143-146,179-182).
 
-    Identifies victims via semi-join on ``scope_keys`` + anti-join on
-    ``keep_keys`` and returns target minus victims.  Uses anti-join
-    semantics, NOT SQL `NOT IN`: a NULL in ``keep`` must not void the
-    whole delete (SURVEY §2.4 J5 caution — regression fixture in tests).
+    The survivors are two disjoint parts: rows outside the scope
+    (anti-join on ``scope_keys``) and in-scope rows whose ``keep_keys``
+    are kept (semi-join, then semi-join on ``keep_keys``).  That is
+    target minus victims as a multiset — duplicate rows and NULL keys
+    included — with no aggregate shuffle.  Uses join semantics, NOT SQL
+    `NOT IN`: a NULL in ``keep`` must not void the whole delete (SURVEY
+    §2.4 J5 caution — regression fixture in tests).  Semi and anti joins
+    ignore duplicates on the build side, so neither side is deduplicated.
     """
-    victims = (
-        target.join(F.broadcast(scope.select(*scope_keys).distinct()), list(scope_keys), "left_semi")
-        .join(F.broadcast(keep.select(*keep_keys).distinct()), list(keep_keys), "left_anti")
-        # USING-joins hoist key columns to the front; exceptAll is
-        # positional, so restore the target's column order explicitly
-        .select(*target.columns)
+    scope_b = F.broadcast(scope.select(*scope_keys))
+    outside = target.join(scope_b, list(scope_keys), "left_anti")
+    kept = target.join(scope_b, list(scope_keys), "left_semi").join(
+        F.broadcast(keep.select(*keep_keys)), list(keep_keys), "left_semi"
     )
-    return target.exceptAll(victims)
+    # USING-joins hoist key columns to the front: restore target order
+    return outside.unionByName(kept).select(*target.columns)
 
 
 def overwrite(df: DataFrame, path: str) -> None:

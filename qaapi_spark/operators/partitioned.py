@@ -15,7 +15,10 @@ buckets on the merge key, short of adopting a table format like Delta:
     rewrite);
   * the merge runs against ONLY the affected buckets (partition pruning
     at the scan) and writes them to ``path.next``.  The plan reads
-    ``path`` and writes elsewhere, so it needs no checkpoint;
+    ``path`` and writes elsewhere, so it needs no checkpoint.  The write
+    is rebalanced on the bucket column (AQE's optimize-write), so each
+    bucket lands as one file unless it outgrows the advisory partition
+    size;
   * every file of every untouched bucket is hard-linked into
     ``path.next`` (``sources.tables.link_into_next``): same inode, same
     mtime, no data copied (asserted by tests/test_partitioned_merge.py);
@@ -23,8 +26,11 @@ buckets on the merge key, short of adopting a table format like Delta:
     emptied has no dir in ``path.next``, so it simply disappears, and
     every crash point leaves either the old table or the new one.
 
-Trade-off: each batch makes one ``link`` call per untouched file.  That
-is metadata only, on local paths, as ``swap`` already assumes.
+Trade-offs: each batch makes one ``link`` call per untouched file.  That
+is metadata only, on local paths, as ``swap`` already assumes.  One
+file per bucket costs one shuffle stage per write; without it every
+write task leaves a file in every bucket it holds (3-5 small files per
+bucket per batch, which every later read and link pays for).
 
 Reference semantics preserved: these helpers compose with the J2/J3/J5
 relational merges in ``operators/maintain.py`` (Update...sql:36-134) —
@@ -60,10 +66,15 @@ def write_partitioned(
     coalesce: int | None = None,
 ) -> None:
     """Write ``df`` bucket-partitioned by ``key_col``, replacing
-    whatever is at ``path``; ``coalesce`` caps the write tasks (one
-    task writes one file per bucket it holds)."""
+    whatever is at ``path``.  By default AQE rebalances the rows on the
+    bucket column first, so each bucket up to the advisory partition
+    size is one task and one file, and only larger buckets split;
+    ``coalesce`` instead caps the write tasks with no shuffle (one task
+    writes one file per bucket it holds)."""
     out = df.withColumn(PCOL, bucket_of(key_col, n_buckets))
-    if coalesce is not None:
+    if coalesce is None:
+        out = out.hint("rebalance", PCOL)
+    else:
         out = out.coalesce(coalesce)
     out.write.mode("overwrite").partitionBy(PCOL).parquet(path)
 

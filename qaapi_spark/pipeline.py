@@ -27,13 +27,23 @@ and ``read`` recovers the latter before anything reads the table.
 That is one writer per table; Delta MERGE is the multi-writer upgrade
 path, SURVEY §4.3.  The batch side of every join is broadcast — it is
 a bounded trailing window by construction.
+
+Each landed batch is parsed once: ``run_batch`` computes each curated
+batch relation (contacts, QA contacts, evaluations, scores, comments)
+into executor memory before the merges that read it, and frees it when
+the batch returns, failed or not.  The bucket probes, broadcasts and
+merge plans then scan those rows instead of re-parsing and
+re-deduplicating the landed JSON.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from qaapi_spark import transforms as T
 # a module reference, so wrappers installed on merge_partitioned are seen
@@ -61,6 +71,27 @@ def _future_exc(f) -> "BaseException | None":
         return None
     except BaseException as e:  # noqa: BLE001 - gathered, then re-raised
         return e
+
+
+def _materialize(df: DataFrame, cached: list) -> DataFrame:
+    """``df`` computed once into executor memory and read back as a
+    frame over the cached rows.  The cached JVM RDD goes on ``cached``
+    before it is filled, so the caller frees it even if this fails.
+
+    Not ``persist()``: AQE wraps each scan of a cached relation in a
+    query stage of its own, so no exchange above one is reused, and
+    every broadcast of the batch in a merge plan runs as a separate job.
+    Not ``localCheckpoint()``: freeing a checkpoint drops the only copy
+    of its rows, so a frame derived from it fails if computed later.
+    These rows keep their lineage: once freed, they recompute from the
+    landing files.  The frame carries no size estimate, so a join that
+    should broadcast it must say so (every batch-side join here does).
+    """
+    rows = df._jdf.javaRDD().cache()
+    cached.append(rows)
+    rows.count()
+    session = df.sparkSession
+    return DataFrame(session._jsparkSession.createDataFrame(rows, df._jdf.schema()), session)
 
 
 class CalabrioPipeline:
@@ -133,6 +164,19 @@ class CalabrioPipeline:
             scope_df=scope_df,
         )
 
+    def _delete_insert(self, table: str, batch: DataFrame, scope: DataFrame) -> None:
+        """S15 delete-then-insert: drop the target rows of every
+        ``scope`` contact, then append ``batch``.  The delete scope can
+        shrink buckets the inserted rows never touch, so it widens the
+        bucket probe too."""
+        self._reconcile(
+            table,
+            batch,
+            ["contact_id"],
+            lambda t, b: t.join(F.broadcast(scope), "contact_id", "left_anti").unionByName(b),
+            scope_df=scope,
+        )
+
     # -- one incremental batch ------------------------------------------
     def run_batch(self, landing_dir: str, collect_counts: bool = True) -> dict[str, int]:
         """One trailing-window batch.  An entity whose landing file is
@@ -171,46 +215,49 @@ class CalabrioPipeline:
                 spark, f"{landing_dir}/fix_comments_raw.json", "comments"
             )
 
-        # Independent tables reconcile CONCURRENTLY: each target is its
-        # own directory and no table's merge reads another's output
-        # within a batch, so the per-table action chains (bucket probe,
-        # staged write, link and swap) can overlap — at fixture scale
-        # the cost is ~30 tiny jobs of scheduler latency, and overlapping
-        # them is the same lever the reference pulls with
-        # thread-per-pipeline (X1, Start.py); on a cluster the scheduler
-        # interleaves stages from concurrent jobs across executors (FIFO
-        # pools).
-        work: list = []
+        # The curated batch relations, each materialized once below
+        # (`_materialize`) and read by every plan of the tables that use
+        # it, the delete scopes included.
+        batches: dict[str, DataFrame] = {}
+        # contacts: batch-internal duplicates collapse before the merge
+        if contacts is not None:
+            batches["contacts"] = T.contacts_curated(contacts).dropDuplicates(["contact_id"])
+        if qa_contacts is not None:
+            batches["qa_contacts"] = T.contacts_curated(qa_contacts).dropDuplicates(["contact_id"])
+        if evals is not None:
+            batches["evals"] = T.evaluations_curated(evals)
+            batches["scores"] = T.scores_flatten(evals)
+        # the reference scopes the comments delete by the QA contacts
+        # staging ids (Update...sql:181); when only the qa route landed
+        # (all_contacts=False flow), use it — the all_contacts route
+        # keeps priority for the mixed-fixture case the oracle queries pin
+        scope = next((n for n in ("contacts", "qa_contacts") if n in batches), None)
+        if comments is not None and scope is not None:
+            batches["comments"] = T.comments_curated(comments)
+
+        # per table: (the batch relations it reads, its reconcile over
+        # their materialized frames)
+        work: list[tuple[tuple[str, ...], Callable[..., None]]] = []
 
         # forms: full replace (S14) — inherently a whole-table write
         if forms is not None:
-            work.append(lambda: self._swap_write(T.forms_flatten(forms), "t_qa_forms"))
+            work.append(((), lambda: self._swap_write(T.forms_flatten(forms), "t_qa_forms")))
 
         # contacts: insert-only merge (J2) — existing rows keep their
-        # original values; batch-internal duplicates collapse first
-        if contacts is not None:
-            new_contacts = T.contacts_curated(contacts).dropDuplicates(["contact_id"])
-            work.append(lambda: self._reconcile(
-                "t_contacts",
-                new_contacts,
-                ["contact_id"],
-                lambda t, b: merge_insert_only(t, b, ["contact_id"]),
-            ))
-        if qa_contacts is not None:
-            new_qa = T.contacts_curated(qa_contacts).dropDuplicates(["contact_id"])
-            work.append(lambda: self._reconcile(
-                "t_qa_contacts",
-                new_qa,
-                ["contact_id"],
-                lambda t, b: merge_insert_only(t, b, ["contact_id"]),
-            ))
+        # original values
+        for name, table in (("contacts", "t_contacts"), ("qa_contacts", "t_qa_contacts")):
+            if name in batches:
+                work.append(((name,), lambda batch, table=table: self._reconcile(
+                    table,
+                    batch,
+                    ["contact_id"],
+                    lambda t, b: merge_insert_only(t, b, ["contact_id"]),
+                )))
 
         # evaluations: delete evals whose contact is in this batch but
         # which vanished upstream (J5), then upsert the batch (J3).
         # The matched-update column list excludes evaluated_date,
         # mirroring Update...sql:128-130.
-        batch_evals = T.evaluations_curated(evals) if evals is not None else None
-
         def _merge_evals(t: DataFrame, b: DataFrame) -> DataFrame:
             t = delete_semi_anti(
                 t,
@@ -229,74 +276,69 @@ class CalabrioPipeline:
                 ],
             )
 
-        if batch_evals is not None:
-            work.append(lambda: self._reconcile(
-                "t_qa_evaluations", batch_evals, ["evaluation_id"], _merge_evals
-            ))
+        if "evals" in batches:
+            work.append((("evals",), lambda b: self._reconcile(
+                "t_qa_evaluations", b, ["evaluation_id"], _merge_evals
+            )))
 
             # scores: delete-then-insert per contact in batch (S15/J5);
             # the delete scope (batch contacts) can shrink buckets the
             # inserted rows never touch, so it rides along as scope_df
-            batch_scores = T.scores_flatten(evals)
-            eval_contacts = batch_evals.select("contact_id").distinct()
-            work.append(lambda: self._reconcile(
-                "t_qa_evaluation_scores",
-                batch_scores,
-                ["contact_id"],
-                lambda t, b: t.join(
-                    eval_contacts, "contact_id", "left_anti"
-                ).unionByName(b),
-                scope_df=eval_contacts,
-            ))
+            work.append((("evals", "scores"), lambda e, b: self._delete_insert(
+                "t_qa_evaluation_scores", b, e.select("contact_id")
+            )))
 
         # comments: delete-then-insert per contact in batch (S15,
         # Update...sql:176-182 "to address the possibility that a
-        # comment was deleted").  The reference scopes this delete by
-        # the QA contacts staging ids (Update...sql:181); when only the
-        # qa route landed (all_contacts=False flow), use it — the
-        # all_contacts route keeps priority for the mixed-fixture case
-        # the oracle queries pin.
-        scope_contacts = contacts if contacts is not None else qa_contacts
-        if comments is not None and scope_contacts is not None:
-            batch_comments = T.comments_curated(comments)
-            contact_ids = scope_contacts.select(
-                scope_contacts.id.alias("contact_id")
-            ).distinct()
-            work.append(lambda: self._reconcile(
-                "t_qa_evaluation_comments",
-                batch_comments,
-                ["contact_id"],
-                lambda t, b: t.join(
-                    contact_ids, "contact_id", "left_anti"
-                ).unionByName(b),
-                scope_df=contact_ids,
-            ))
+        # comment was deleted")
+        if "comments" in batches:
+            work.append(((scope, "comments"), lambda c, b: self._delete_insert(
+                "t_qa_evaluation_comments", b, c.select("contact_id")
+            )))
 
-        if len(work) == 1:
-            work[0]()
-        elif work:
-            from concurrent.futures import ThreadPoolExecutor
+        # Independent tables reconcile CONCURRENTLY: each target is its
+        # own directory and no table's merge reads another's output
+        # within a batch.  Each batch relation materializes on its own
+        # thread, and each table's chain (bucket probe, staged write,
+        # link and swap) starts as soon as the relations it reads are
+        # ready — no barrier across tables.  A batch is a few dozen
+        # small jobs, so overlapping them hides scheduler latency: the
+        # lever the reference pulls with thread-per-pipeline (X1,
+        # Start.py); on a cluster the scheduler interleaves stages from
+        # concurrent jobs across executors (FIFO pools).
+        def _chain(needs: tuple[str, ...], reconcile: Callable[..., None]) -> None:
+            reconcile(*[ready[name].result() for name in needs])
 
-            with ThreadPoolExecutor(max_workers=len(work)) as pool:
+        cached: list = []
+        try:
+            with ThreadPoolExecutor(max_workers=max(1, len(batches) + len(work))) as pool:
+                ready = {n: pool.submit(_materialize, df, cached) for n, df in batches.items()}
+                chains = [pool.submit(_chain, *w) for w in work]
                 # wait for ALL tables, then surface every failure —
                 # raising on the first future would silently drop
                 # exceptions from the others (they still ran; their
-                # writes are per-table idempotent reconciles)
-                errs = [
+                # writes are per-table idempotent reconciles).  A failed
+                # materialization also fails every table that reads it:
+                # report it once.
+                errs = list(dict.fromkeys(
                     e
-                    for f in [pool.submit(w) for w in work]
+                    for f in [*ready.values(), *chains]
                     if (e := _future_exc(f)) is not None
-                ]
-            if len(errs) == 1:
-                raise errs[0]
-            if errs:
-                # BaseExceptionGroup: _future_exc gathers BaseException
-                # (a worker can raise KeyboardInterrupt/SystemExit),
-                # which plain ExceptionGroup rejects with a TypeError
-                # that would mask the real failures.  It downgrades
-                # itself to ExceptionGroup when all members are
-                # Exception subclasses.
-                raise BaseExceptionGroup("reconcile failures", errs)
+                ))
+        finally:
+            # free every cached batch, whatever failed
+            for rows in cached:
+                rows.unpersist(False)
+        if len(errs) == 1:
+            raise errs[0]
+        if errs:
+            # BaseExceptionGroup: _future_exc gathers BaseException
+            # (a worker can raise KeyboardInterrupt/SystemExit),
+            # which plain ExceptionGroup rejects with a TypeError
+            # that would mask the real failures.  It downgrades
+            # itself to ExceptionGroup when all members are
+            # Exception subclasses.
+            raise BaseExceptionGroup("reconcile failures", errs)
 
         if not collect_counts:
             return {}

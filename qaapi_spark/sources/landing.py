@@ -15,6 +15,7 @@ ON_ERROR='skip_file'`.  Spark equivalents:
 
 from __future__ import annotations
 
+import glob
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,14 +40,18 @@ def read_entity(spark: SparkSession, pattern_or_path: str, entity: str) -> DataF
     `pattern_or_path` may be a glob — the reference collapses
     all_contacts_*.json into one COPY pattern
     (modules/qa_api_handler.py:270-273,281-287); a glob read is the
-    Spark-native union of those batches.
+    Spark-native union of those batches.  A glob is expanded here and
+    Spark gets the sorted file list: handed the raw pattern, Spark's
+    streaming-metadata probe logs a FileNotFoundException trace for it.
+    A pattern that matches nothing passes through, so Spark's
+    path-not-found error is unchanged.
     """
     schema = ENTITY_SCHEMAS[entity]
     return (
         spark.read.schema(schema)
         .option("multiLine", "true")
         .option("mode", "DROPMALFORMED")
-        .json(pattern_or_path)
+        .json(sorted(glob.glob(pattern_or_path)) or pattern_or_path)
     )
 
 

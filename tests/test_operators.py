@@ -3,6 +3,9 @@ cases (SURVEY.md §5.2 fixture list)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from qaapi_spark.functions.dialect import regexp_substr, regexp_substr_occ
@@ -47,6 +50,34 @@ def test_delete_semi_anti_null_key_does_not_void_delete(spark):
     keep = spark.createDataFrame([(101,), (None,)], "eval_id long")
     out = rows(delete_semi_anti(target, scope, ["contact_id"], keep, ["eval_id"]), "eval_id")
     assert out == [(101,), (102,)]  # 100 deleted despite NULL in keep
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_delete_semi_anti_matches_except_all(spark, seed):
+    """The two-part survivor union equals ``target.exceptAll(victims)``
+    as a multiset, with NULL keys in the target, the scope and the keep
+    set, duplicated target rows, and duplicated build-side keys."""
+    rng = random.Random(seed)
+
+    def key(n):
+        return None if rng.random() < 0.15 else rng.randrange(n)
+
+    rows_t = [(key(40), key(12), rng.choice(["a", "b", None])) for _ in range(120)]
+    rows_t += rng.sample(rows_t, 30)  # duplicated target rows
+    schema = "eval_id long, contact_id long, v string"
+    target = spark.createDataFrame(rows_t, schema)
+    scope = spark.createDataFrame([(key(12),) for _ in range(8)], "contact_id long")
+    keep = spark.createDataFrame([(key(40),) for _ in range(25)], "eval_id long")
+
+    out = delete_semi_anti(target, scope, ["contact_id"], keep, ["eval_id"])
+    victims = (
+        target.join(scope.distinct(), ["contact_id"], "left_semi")
+        .join(keep.distinct(), ["eval_id"], "left_anti")
+        .select(*target.columns)
+    )
+    want = target.exceptAll(victims)
+    assert out.columns == target.columns
+    assert rows(out, *target.columns) == rows(want, *target.columns)
 
 
 def test_dedup_keep_latest_tiebreak(spark):

@@ -159,17 +159,22 @@ def test_contacts_replace_crash_keeps_prior_table(spark, tmp_path, monkeypatch, 
 
 
 @pytest.mark.parametrize("partitioned", [True, False], ids=["buckets", "one_bucket"])
-def test_seeded_corpus_matches_etl_model(spark, tmp_path, partitioned):
+def test_seeded_corpus_matches_etl_model(spark, tmp_path, monkeypatch, partitioned):
     """A seeded Calabrio corpus (duplicates, non-SCORED states, null
     evaluators, vanished evaluations, re-scores, deleted and edited
     comments, edited and new contacts) through an initial load and two
     trailing windows must land exactly the rows of an independent
     DuckDB replay of the four merge rules, in both bucket layouts, and
-    leave no staged or trash table behind."""
+    leave no staged or trash table behind.  Every batch, the failed one
+    included, frees the batch relations it cached, and every bucket of
+    every merged table is one data file."""
+    import glob
     import os
 
     from perfbench.datagen import CalabrioCorpus
     from perfbench.etl_model import TABLES, EtlModel
+    from qaapi_spark.operators import partitioned as bucketed
+    from qaapi_spark.sources.tables import parquet_files
 
     corpus = CalabrioCorpus(2)
     landings = [str(tmp_path / "landing" / f"{i:03d}") for i in range(3)]
@@ -179,11 +184,29 @@ def test_seeded_corpus_matches_etl_model(spark, tmp_path, partitioned):
 
     wh = str(tmp_path / "wh")
     pipe = CalabrioPipeline(spark, wh, partitioned=partitioned)
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+
+    def failing_merge(*a, **kw):
+        raise RuntimeError("merge failed")
+
     model = EtlModel()
     try:
-        for d in landings:
+        for i, d in enumerate(landings):
+            n_cached = cached().size()
+            if partitioned and i == len(landings) - 1:
+                # every merge raises once the batches it reads are cached
+                # (layout-independent, so checked in one layout)
+                with monkeypatch.context() as m:
+                    m.setattr(bucketed, "merge_partitioned", failing_merge)
+                    with pytest.raises(ExceptionGroup):
+                        pipe.run_batch(d, collect_counts=False)
+                assert cached().size() == n_cached
             pipe.run_batch(d, collect_counts=False)
+            assert cached().size() == n_cached
             model.apply_batch(d)
+            buckets = glob.glob(os.path.join(wh, "*", f"{bucketed.PCOL}=*"))
+            assert buckets
+            assert {b: len(parquet_files(b)) for b in buckets} == {b: 1 for b in buckets}
         assert model.mismatches(wh) == {t: 0 for t in TABLES}
     finally:
         model.close()

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from qaapi_spark.operators.joins import as_of_join
@@ -94,6 +95,17 @@ def test_read_entity_drops_malformed_file(spark, tmp_path):
 
     df = read_entity(spark, f"{tmp_path}/all_contacts_*.json", "all_contacts")
     assert df.count() == 30  # only the intact batch file's rows
+
+
+def test_read_entity_unmatched_glob_keeps_spark_error(spark, tmp_path):
+    """A glob is expanded before Spark sees it; one that matches no file
+    still fails the way Spark's own glob read does."""
+    from pyspark.errors import AnalysisException
+
+    from qaapi_spark.sources.landing import read_entity
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_entity(spark, f"{tmp_path}/all_contacts_*.json", "all_contacts")
 
 
 def test_csv_permissive_corrupt_record_capture(spark):

@@ -12,13 +12,14 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qaapi_spark.plans import CATALOG  # noqa: E402
 from qaapi_spark.session import get_spark, release_kernel_caches  # noqa: E402
