@@ -1393,12 +1393,14 @@ def exact_substring_apply(
 
 
 def _apply_trim(base: DataFrame, cut: DataFrame) -> DataFrame:
-    """(doc_id, n_toks, n_kept, text_dedup) for every row of ``base``
-    (doc_id, toks) after removing the 1-based token positions in
-    ``cut`` — either exploded (doc_id, tok_pos) rows or pre-aggregated
-    (doc_id, cut_set: array<int>) rows (see :func:`_cut_sets`).  Shared
-    by the batch apply and the streaming epoch steps, so their trim
-    semantics are structurally identical.
+    """(doc_id, n_toks, n_kept, text_dedup, *rest) for every row of
+    ``base`` (doc_id, toks, *rest) after removing the 1-based token
+    positions in ``cut`` — either exploded (doc_id, tok_pos) rows or
+    pre-aggregated (doc_id, cut_set: array<int>) rows (see
+    :func:`_cut_sets`).  Any ``rest`` columns of ``base`` pass through
+    unchanged (the streaming twins carry the original text this way,
+    with no second join).  Shared by the batch apply and the streaming
+    epoch steps, so their trim semantics are structurally identical.
 
     r15 restructure (guide §2.3/§2.4 — same output, fewer/lighter
     exchanges): the r14 form posexploded every dirty doc to one row
@@ -1443,6 +1445,7 @@ def _apply_trim(base: DataFrame, cut: DataFrame) -> DataFrame:
             )
         )
         .alias("text_dedup"),
+        *(c for c in base.columns if c not in ("doc_id", "toks")),
     )
 
 

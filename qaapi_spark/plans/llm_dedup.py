@@ -1333,7 +1333,7 @@ def dedup_exact_substring_doc_stats(spark, sf_dir):
 # 16-byte binary (Spark), so the trimmed text is engine-exact string
 # equality.  Shared by the batch apply AND its streaming twin (ordered
 # ingest makes the stream exactly equal — see
-# streaming/incremental._exsub_epoch).
+# streaming/retraction.stream_exact_substring_apply).
 _EXSUB_APPLY_ORACLE = f"""
     WITH {_DD_SUBSTR_DPOS},
     nc AS (
@@ -1401,14 +1401,16 @@ def dedup_exact_substring_apply(spark, sf_dir):
     "stream_exact_substring_apply",
     # EXACT equality with the batch apply relation under ordered
     # ingest — canonical = earliest occurrence, so the stream's
-    # per-epoch digest-store screen reproduces the corpus-wide first
-    # pick with no probabilistic caveat; the oracle is shared.
+    # per-epoch occurrence-index screen reproduces the corpus-wide
+    # first pick with no probabilistic caveat; the oracle is shared.
     oracle=_EXSUB_APPLY_ORACLE,
     doc="STREAMING ExactSubstr dedup (extension, SURVEY §2.9): the "
     "trimmed corpus maintained incrementally as documents land — each "
-    "micro-batch trims against the standing window-digest store "
-    "(16-byte digests, epoch-keyed append; one semi-join per epoch) "
-    "and its emitted rows are IMMUTABLE, because the canonical "
+    "micro-batch trims against the standing occurrence index "
+    "(h, doc_id, pos per window, epoch-keyed append; one digest "
+    "semi-join per epoch) through the same insert epoch as "
+    "stream_exsub_apply_with_deletes, with no tombstones, and its "
+    "emitted rows are IMMUTABLE, because the canonical "
     "occurrence of any window is the earliest and can never be "
     "revoked by later arrivals.  The batch kernel re-aggregates the "
     "whole corpus per run; here a new epoch costs only its own "
@@ -1418,7 +1420,7 @@ def dedup_exact_substring_apply(spark, sf_dir):
     "unit-tested",
 )
 def stream_exact_substring_apply_q(spark, sf_dir):
-    from qaapi_spark.streaming.incremental import stream_exact_substring_apply
+    from qaapi_spark.streaming.retraction import stream_exact_substring_apply
 
     return stream_exact_substring_apply(
         spark, f"{sf_dir}/documents.parquet", min_len=_SUBSTR_L

@@ -304,15 +304,17 @@ def stream_dedup_events_q(spark, sf_dir):
     ORDER BY doc_id
     """,
     doc="incremental NEAR-dup dedup: documents stream in micro-batches, "
-    "each screened against the accumulated minhash-LSH band-key store "
+    "each screened against the accumulated minhash-LSH band keys "
     "of all kept docs with exact Jaccard verification of every "
-    "candidate (foreachBatch; band keys + kept shingle sets are the "
-    "state) — the streaming near-dup half of the dedup surface, "
+    "candidate (foreachBatch; one store row per ingested doc — band "
+    "keys, shingle set, keep decision — is the state, written by the "
+    "same insert epoch as stream_neardup_with_deletes, with no "
+    "tombstones) — the streaming near-dup half of the dedup surface, "
     "hash-checked against a batch SQL reconstruction (extension, "
     "SURVEY §2.9)",
 )
 def stream_neardup_dedup_docs(spark, sf_dir):
-    from qaapi_spark.streaming.incremental import stream_neardup_dedup
+    from qaapi_spark.streaming.retraction import stream_neardup_dedup
 
     # micro-batches are corpus-fractions: few shuffle partitions (the
     # query materializes eagerly, so the conf restores before returning)

@@ -597,8 +597,10 @@ def pipeline_corpus_to_shards_exactsubstr(spark, sf_dir):
     "ordered ingest: prev-epoch kept count + within-batch rank IS the "
     "global row_number), and appends the rest to training shards from "
     "an O(|sources|) totals+counts snapshot — the production ingest "
-    "wave: no stage rescans history, dedup state is the kept corpus's "
-    "band keys + shingle sets, cap/pack state is |sources| rows.  "
+    "wave: no stage rescans history, dedup state is one row per "
+    "ingested doc (band keys, shingle set, keep decision, source, "
+    "n_toks), cap/pack state is |sources| rows — the insert epoch of "
+    "stream_pipeline_shards_with_deletes, run with no tombstones.  "
     "Epoch-keyed overwrite writes + strictly-earlier-epoch store "
     "reads make every epoch retry-idempotent (replayed epochs "
     "reproduce identical bytes — unit-tested).  The one designed "
@@ -607,7 +609,7 @@ def pipeline_corpus_to_shards_exactsubstr(spark, sf_dir):
     "without future knowledge (extension, SURVEY §2.9)",
 )
 def stream_pipeline_corpus_to_shards_q(spark, sf_dir):
-    from qaapi_spark.streaming.incremental import stream_pipeline_corpus_to_shards
+    from qaapi_spark.streaming.retraction import stream_pipeline_corpus_to_shards
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -550,11 +550,12 @@ def events_mad_outliers(spark, sf_dir):
     "over (batch + open rows), never a history rescan; state "
     "snapshots are per-epoch so replays are byte-identical. Under the "
     "ordered-ingest contract the emitted union + final open set is "
-    "bit-equal to the batch build and shares its oracle (extension, "
-    "SURVEY §2.9; streaming/incremental.stream_scd2_history)",
+    "bit-equal to the batch build and shares its oracle; each epoch is "
+    "the insert epoch of stream_scd2_with_deletes (extension, "
+    "SURVEY §2.9; streaming/retraction.stream_scd2_history)",
 )
 def stream_scd2_history_q(spark, sf_dir):
-    from qaapi_spark.streaming.incremental import stream_scd2_history
+    from qaapi_spark.streaming.retraction import stream_scd2_history
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return stream_scd2_history(spark, f"{sf_dir}/events.parquet").orderBy(

@@ -15,16 +15,19 @@ Three shapes:
   - foreachBatch twins that fold each staged slice (an epoch) into
     parquet stores they own: mergeable state (HLL registers, weighted
     top-k, first-seen days), epoch-keyed appends (IVF assignments, PQ
-    codes, covariance moments, near-dup keep decisions), ordered-ingest
-    snapshots (packed offsets, SCD2 open rows, the corpus-to-shards
-    pipeline) and incrementally maintained relations (CC labels,
-    ExactSubstr trims) — plus the landing-directory reconcile
-    (`stream_landing_reconcile`), EP1 as a stream;
+    codes, covariance moments), ordered-ingest snapshots (packed
+    offsets) and an incrementally maintained relation (CC labels) —
+    plus the landing-directory reconcile (`stream_landing_reconcile`),
+    EP1 as a stream;
   - `compact_epoch_store`, the periodic fold of an epoch store's deltas.
 
 The stager, runners, stores, guards and the epoch contract they obey
 live in `streaming/epochs.py`; streaming/retraction.py adds the
-delete-capable twins.
+delete-capable twins.  Four families — ExactSubstr apply, greedy
+near-dup, corpus-to-shards and SCD2 — have ONE insert epoch each, in
+streaming/retraction.py, where their insert-only twins live too and
+run it with no tombstone store (as `stream_cc_labels_incremental` runs
+`_cc_labels_epoch` here).
 """
 
 from __future__ import annotations
@@ -250,128 +253,10 @@ def _within_pairs(keys: DataFrame) -> DataFrame:
     )
 
 
-def _greedy_kept(keys, sets, rec, threshold: float) -> DataFrame:
-    """The greedy min-id near-dup decision of a batch: drop every doc
-    with a verified near-dup among the standing kept docs ``rec`` (id,
-    bands, sh; None on the first epoch), then, within the batch, drop a
-    doc iff a smaller-id survivor is a verified near-dup.  Returns the
-    kept batch ids."""
-    if rec is not None:
-        cand = keys.join(_band_keys(rec, "other"), ["band", "bsig"])
-        dup = (
-            _verified_jaccard_pairs(
-                cand.select("id", "other").distinct(), sets, rec.select("id", "sh"), threshold
-            )
-            .select("id")
-            .distinct()
-        )
-        keys = keys.join(dup, "id", "left_anti")
-    smaller = (
-        _verified_jaccard_pairs(_within_pairs(keys), sets, sets, threshold)
-        .select("id")
-        .distinct()
-    )
-    return keys.select("id").distinct().join(smaller, "id", "left_anti")
-
-
 def _parity_slices(df: DataFrame, id_col: str) -> list:
     """Two slices by ``id_col`` parity: two micro-batches, so each
     store genuinely accumulates across epochs."""
     return [df.filter(F.col(id_col) % 2 == 0), df.filter(F.col(id_col) % 2 == 1)]
-
-
-def stream_neardup_dedup(
-    spark: SparkSession,
-    docs_path: str,
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    n_bands: int = 16,
-) -> DataFrame:
-    """Incremental NEAR-dup dedup: documents arrive in micro-batches
-    (one file per trigger) and each batch is screened against the
-    accumulated minhash-LSH band-key store of every document kept so
-    far, with EXACT Jaccard verification of every candidate — the
-    streaming half of the near-dup surface, where stream_dedup_events
-    is the exact half.
-
-    Per batch:
-      1. map-only minhash signatures + band keys for the batch;
-      2. cross-batch: (batch doc, kept doc) candidate pairs by band
-         equi-join against the store, verified with exact shingle-set
-         Jaccard >= threshold against the kept-sets store — only
-         verified near-dups drop;
-      3. within the batch, greedy min-id over VERIFIED pairs: drop a
-         doc iff a smaller-id batch survivor is a true near-dup;
-      4. append survivors' band keys and shingle sets to the store.
-
-    Because candidates are exactly verified (and r=4 banding misses a
-    true pair with probability (1-j^4)^16 ~ 2.2e-4 at j=0.8 — equality
-    with the exact pair relation is asserted empirically by the oracle
-    gate at every SF, same trade as minhash_lsh_verified_pairs, where
-    r=2's moderate-similarity candidate flood made the verify join >80%
-    of runtime), the kept set is DETERMINISTIC — a pure function of
-    (batch partition, id order, exact pair relation) — which is what
-    lets the driver hash-check this stream against a batch SQL oracle
-    (VERDICT r2 next-round #5).
-
-    State per kept doc: n_bands 24-byte band keys (the probe side) +
-    its int64 shingle set (the verify side — the same information a
-    production system keeps by retaining the kept corpus itself),
-    stored as ONE nested row (id, bands: array<struct<band, bsig>>,
-    sh) so each epoch commits a single store write instead of two
-    (VERDICT r3 #5: nesting halves the per-epoch write jobs and store
-    re-open cost — the probe side is recovered with one narrow
-    explode, no shuffle).  Band probes are equi-joins with the batch
-    as the small side; the verify join touches only candidate pairs,
-    so cost tracks true-dup density, never corpus size.
-
-    Contract note: a document whose text yields ZERO shingles (shorter
-    than the shingle width) produces no minhash signature and is
-    dropped from the kept output — same convention as the batch
-    minhash/jaccard kernels, which cannot score empty sets.
-    """
-    batch_df = spark.read.parquet(docs_path)
-    stage_dir, schema = stage_slices(
-        "docs_neardup_stream_", _parity_slices(batch_df, "doc_id")
-    )
-    store = EpochStore(spark, scratch_dir("neardup_store_"))
-
-    def dedup_batch(bdf: DataFrame, epoch_id: int) -> None:
-        # one file per trigger => the batch arrives as ONE partition;
-        # spread it so the signature kernel parallelizes — but only to
-        # a SMALL floor, not defaultParallelism: an epoch runs ~8
-        # chained jobs over a micro-batch, and at 32-way the per-task
-        # overhead of those jobs outweighs the extra cores (measured
-        # 7.5 -> 6.4 s/epoch-pair at sf0.1 going 32 -> 8; the r6
-        # stream_ivf_assign lesson).  Batches that already arrive with
-        # >= 8 splits (a genuinely large micro-batch on a cluster)
-        # keep their natural partitioning — no forced shuffle.
-        if bdf.rdd.getNumPartitions() < 8:
-            bdf = bdf.repartition(8)
-        sets, bands_arr, keys = _batch_bands(bdf, num_hashes, n_bands)
-        # single consumer (the store write) — no persist needed
-        kept_ids = _greedy_kept(keys, sets, store.read(before=epoch_id), threshold)
-        try:
-            # SINGLE epoch write (round 10: was two): the nested store
-            # row (id, bands[], sh) already identifies the kept docs,
-            # so the kept-docs relation derives from the store with one
-            # final semi-join against the corpus AFTER the stream ends
-            # instead of a per-epoch bdf join + second write job; one
-            # file, so the store re-read every later epoch pays minimal
-            # per-file open cost.
-            store.write(bands_arr.join(kept_ids, "id", "left_semi").join(sets, "id"), epoch_id)
-        finally:
-            bands_arr.unpersist()
-            sets.unpersist()
-
-    run_epochs(spark, schema, stage_dir, dedup_batch, ORDERED_CONF)
-    # kept docs = the store's ids (exactly the survivors, every epoch)
-    # re-attached to the corpus once
-    kept = store.read().select(F.col("id").alias("doc_id"))
-    return (
-        batch_df.join(kept, "doc_id", "left_semi")
-        .select("doc_id", "lang", "source")
-    )
 
 
 def _attribution(open_stream, left_type, right_type, horizon, watermark, how):
@@ -1019,287 +904,6 @@ def stream_pack_chunks(
     )
 
 
-_SCD2_STATE = "user_id long, status string, event_id long, valid_from_us long"
-
-
-def _scd2_stage_rows(spark: SparkSession, events_path: str):
-    """The SCD2 twins' staged projection of the events: (user_id,
-    status, event_id, us) with ``us`` the unix micros of ``ts``, whose
-    footer statistics bound the time slices."""
-    from qaapi_spark.sources.tables import events_stream_spec
-
-    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
-    return normalize_ts(spark.read.schema(raw_schema).parquet(events_path)).select(
-        "user_id",
-        F.col("event_type").alias("status"),
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-
-
-def _scd2_marked(prev: DataFrame, bdf: DataFrame) -> DataFrame:
-    """One SCD2 epoch's change rows: the standing open rows ``prev``
-    and the batch, collapsed to status changes per user in (us,
-    event_id) order, each carrying ``valid_to_us`` = the next change's
-    start (null for the still-open one).  A state row is always a
-    change — it was one when recorded; in-batch it has no predecessor."""
-    from pyspark.sql import Window
-
-    combined = prev.select(
-        "user_id", "status", "event_id",
-        F.col("valid_from_us").alias("us"), F.lit(True).alias("is_state"),
-    ).unionByName(
-        bdf.select("user_id", "status", "event_id", "us", F.lit(False).alias("is_state"))
-    )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    changes = combined.withColumn("prev", F.lag("status").over(w)).filter(
-        F.col("prev").isNull() | (F.col("status") != F.col("prev"))
-    )
-    return changes.withColumn("valid_to_us", F.lead("us").over(w))
-
-
-def _scd2_closed(marked: DataFrame) -> DataFrame:
-    return marked.filter(F.col("valid_to_us").isNotNull()).select(
-        "user_id", "status", F.col("us").alias("valid_from_us"), "valid_to_us"
-    )
-
-
-def _scd2_open(marked: DataFrame) -> DataFrame:
-    return marked.filter(F.col("valid_to_us").isNull()).select(
-        "user_id", "status", "event_id", F.col("us").alias("valid_from_us")
-    )
-
-
-def _scd2_result(hist: DataFrame, state: EpochStore) -> DataFrame:
-    """Emitted history + the final open rows, as the batch SCD2 relation."""
-    final_open = state.latest(None, _SCD2_STATE).select(
-        "user_id", "status", "valid_from_us",
-        F.lit(None).cast("long").alias("valid_to_us"),
-    )
-    return hist.select("user_id", "status", "valid_from_us", "valid_to_us").unionByName(
-        final_open
-    ).withColumn("is_current", F.col("valid_to_us").isNull())
-
-
-def stream_scd2_history(
-    spark: SparkSession,
-    events_path: str,
-    n_splits: int = 3,
-) -> DataFrame:
-    """Streaming SCD2 (type-2) history maintenance — the CDC-apply
-    shape: status events arrive in time-ordered micro-batches, each
-    batch CLOSES intervals whose successor has now arrived and emits
-    them append-only, and the state carries exactly one OPEN row per
-    user (the current interval).  History rows are immutable once
-    emitted; only the |users|-row open set ever updates — at 100 TB
-    this is why SCD2 is maintained from a stream rather than rebuilt:
-    per epoch the work is one user-keyed window over (batch + open
-    rows), never a history rescan.
-
-    Time-ordered ingest is the CONTRACT (CDC logs are ordered):
-    slices are event-time ranges staged as one sorted file each.
-    Under it the emitted union + final open set is bit-equal to the
-    batch `scd2_user_status_history` relation, so the stream shares
-    its oracle.  State snapshots are per-epoch (the r9
-    stream_pack_chunks pattern), so a replayed epoch reproduces
-    identical bytes — no retry double-count class.
-    """
-    narrow = _scd2_stage_rows(spark, events_path)
-    slices, _, _ = range_slices(narrow, "us", n_splits, src=events_path, src_col="ts")
-    stage_dir, schema = stage_slices(
-        "events_scd2_stream_", slices, ("user_id", "us", "event_id")
-    )
-    state_root = scratch_dir("scd2_store_")
-    out = EpochStore(spark, scratch_dir("scd2_out_"))
-
-    def merge_batch(bdf, epoch_id: int) -> None:
-        state = EpochStore(bdf.sparkSession, state_root)
-        marked = _scd2_marked(state.latest(epoch_id, _SCD2_STATE), bdf)
-        out.write(_scd2_closed(marked), epoch_id, width=None)
-        state.write(_scd2_open(marked), epoch_id)
-
-    run_epochs(spark, schema, stage_dir, merge_batch, STATE_CONF)
-    return _scd2_result(out.read(), EpochStore(spark, state_root))
-
-
-def _cap_and_pack(gated, prev, source_cap, budget: int) -> DataFrame:
-    """The shard pipeline's cap+pack tail over ``gated`` (source,
-    doc_id, n_toks) given the running ``prev`` totals snapshot (source,
-    total_toks, n_kept).
-
-    ONE window pass computes both the cap rank and the running token
-    prefix (same partitioning+ordering -> one sort, no extra exchange),
-    and ONE broadcast join attaches both state columns.  The cap filter
-    is safe AFTER the prefix sum because the kept rows are a per-source
-    PREFIX in doc_id order: for every surviving row, cum_before over
-    the gated relation equals cum_before over the capped relation."""
-    from pyspark.sql import Window
-
-    rk_w = Window.partitionBy("source").orderBy("doc_id")
-    cum_w = rk_w.rowsBetween(Window.unboundedPreceding, -1)
-    placed = (
-        gated.withColumn("rk", F.row_number().over(rk_w))
-        .withColumn("cum_before", F.coalesce(F.sum("n_toks").over(cum_w), F.lit(0)))
-        .join(F.broadcast(prev), "source", "left")
-    )
-    if source_cap is not None:
-        placed = placed.filter(
-            F.coalesce(F.col("n_kept"), F.lit(0)) + F.col("rk") <= int(source_cap)
-        )
-    return _chunks(
-        placed.withColumn(
-            "start_tok",
-            (F.coalesce(F.col("total_toks"), F.lit(0)) + F.col("cum_before")).cast("long"),
-        ),
-        budget,
-    )
-
-
-def _add_totals(prev: DataFrame, packed: DataFrame, *extra) -> DataFrame:
-    """The next totals snapshot: ``prev`` (source, total_toks, n_kept,
-    ...) plus the tokens and row counts ``packed`` adds per source."""
-    bsum = packed.groupBy("source").agg(
-        F.sum("n_toks").alias("b_toks"), F.count("*").alias("b_kept")
-    )
-    return prev.join(bsum, "source", "full_outer").select(
-        "source",
-        (F.coalesce(F.col("total_toks"), F.lit(0)) + F.coalesce(F.col("b_toks"), F.lit(0)))
-        .cast("long")
-        .alias("total_toks"),
-        (F.coalesce(F.col("n_kept"), F.lit(0)) + F.coalesce(F.col("b_kept"), F.lit(0)))
-        .cast("long")
-        .alias("n_kept"),
-        *extra,
-    )
-
-
-def _pipeline_shards_epoch(
-    bdf,
-    epoch_id: int,
-    store_dir: str,
-    totals_root: str,
-    out_root: str,
-    threshold: float,
-    num_hashes: int,
-    n_bands: int,
-    min_toks: int,
-    budget: int,
-    source_cap: int | None = None,
-) -> None:
-    """One epoch of the composed corpus-refresh pipeline (module-level
-    so retry-idempotence is unit-testable): near-dup screen of the
-    batch against the kept store -> quality gate -> per-source quota
-    cap -> packed-offset assignment from the per-epoch totals snapshot.
-
-    The cap is EXACT under ordered ingest: batches arrive in doc_id
-    order, so prev-epoch kept count + within-batch rank IS the global
-    per-source row_number — the running-count state (one long per
-    source, carried in the totals snapshot) reproduces the batch
-    pipeline's windowed cap without ever seeing the full corpus."""
-    from qaapi_spark.operators.textstats import ws_tokens
-
-    spark = bdf.sparkSession
-    kept_store = EpochStore(spark, store_dir + "/data")
-    totals = EpochStore(spark, totals_root)
-    out_store = EpochStore(spark, out_root)
-    # staged slices arrive as ONE file -> one partition; repartition
-    # unconditionally (the old getNumPartitions probe paid a Py4J
-    # RDD-conversion round trip per epoch just to learn that)
-    bdf = bdf.repartition(8)
-    sets, bands_arr, keys = _batch_bands(bdf, num_hashes, n_bands)
-    kept_ids = _greedy_kept(
-        keys, sets, kept_store.read(before=epoch_id), threshold
-    ).persist()
-
-    # quality gate + pack-offset assignment over this epoch's survivors
-    gated = (
-        bdf.join(kept_ids.withColumnRenamed("id", "doc_id"), "doc_id", "left_semi")
-        .select(
-            "source",
-            "doc_id",
-            F.size(ws_tokens(F.lower(F.col("text")))).alias("n_toks"),
-        )
-        .filter(F.col("n_toks") >= min_toks)
-    )
-    prev = totals.latest(epoch_id, "source string, total_toks long, n_kept long")
-    # pin the SKINNY pack rows so the totals snapshot aggregates the
-    # same materialization the shard write emits (r16):
-    # the snapshot previously waited for the shard write and re-read
-    # the just-written file, serializing its job behind the write —
-    # pinned, all three epoch writes are independent and overlap in
-    # ONE par_writes batch (3 serialized jobs -> max of 3).  Unlike
-    # the fat sh/bands delta the r14 A/B rejected persisting, `out` is
-    # 7 narrow columns of this epoch's survivors.
-    out = _cap_and_pack(gated, prev, source_cap, budget).persist()
-    try:
-        par_writes(
-            out_store.writer(out, epoch_id),
-            kept_store.writer(
-                bands_arr.join(kept_ids, "id", "left_semi").join(sets, "id"), epoch_id
-            ),
-            totals.writer(_add_totals(prev, out), epoch_id),
-        )
-    finally:
-        out.unpersist()
-        kept_ids.unpersist()
-        bands_arr.unpersist()
-        sets.unpersist()
-
-
-def stream_pipeline_corpus_to_shards(
-    spark: SparkSession,
-    docs_path: str,
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    n_bands: int = 16,
-    min_toks: int = 16,
-    budget: int = 128,
-    n_splits: int = 2,
-    source_cap: int | None = None,
-) -> DataFrame:
-    """The incremental corpus-refresh wave: near-dup dedup -> quality
-    gate -> per-source quota cap -> concat-and-chunk shard formation
-    composed in ONE foreachBatch pipeline (VERDICT r9 next #5) — what
-    a production ingest wave runs when new documents land: screen them
-    against the standing kept corpus, gate the survivors, stop
-    over-quota sources, append the rest to training shards without
-    recomputing earlier offsets.
-
-    Ordered ingest is the CONTRACT (shard offsets and cap ranks
-    accumulate in doc_id order): slices are doc_id ranges staged as
-    one sorted file each with explicit monotonic mtimes.  Under it the
-    dedup decisions are the stream_neardup_dedup greedy relation, the
-    running-count cap equals the batch pipeline's global per-source
-    row_number cap, and the offsets equal the batch pack over the
-    capped survivors — so the composition is hash-checkable against
-    one batch SQL oracle.
-
-    State per epoch: the kept store (bands + shingle sets, epoch-keyed
-    append) and the |sources|-row totals+counts snapshot; per-epoch
-    work is the batch screen (band equi-join + exact verify of
-    candidates only) plus two per-source windows over the batch — no
-    stage rescans history."""
-    raw = spark.read.parquet(docs_path)
-    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
-    stage_dir, schema = stage_slices("docs_c2s_stream_", slices)
-    store_dir = scratch_dir("c2s_store_")
-    totals_root = scratch_dir("c2s_totals_")
-    out_root = scratch_dir("c2s_out_")
-
-    def merge_batch(bdf, epoch_id: int) -> None:
-        _pipeline_shards_epoch(
-            bdf, epoch_id, store_dir, totals_root, out_root,
-            threshold, num_hashes, n_bands, min_toks, budget,
-            source_cap=source_cap,
-        )
-
-    run_epochs(spark, schema, stage_dir, merge_batch, ORDERED_CONF)
-    return EpochStore(spark, out_root).read().select(
-        "source", "doc_id", "n_toks", "start_tok",
-        "first_chunk", "last_chunk", "n_chunks",
-    )
-
-
 # driver union-find gate of the CC epochs' contracted graphs (edges)
 _LABEL_EDGE_GATE = 100_000
 
@@ -1523,135 +1127,6 @@ def stream_cc_labels_incremental(
     return _latest_labels(EpochStore(spark, label_root))
 
 
-def _exsub_epoch(
-    bdf,
-    epoch_id: int,
-    digest_root: str,
-    out_root: str,
-    min_len: int,
-) -> None:
-    """One epoch of streaming ExactSubstr dedup (Lee et al. ACL'22 §3
-    under ordered ingest; module-level so retry-idempotence is
-    unit-testable): trim the BATCH's documents against the standing
-    window-digest store, then append the batch's digests to the store.
-
-    Why the stream EQUALS the batch apply relation: the batch picks
-    the corpus-wide FIRST (doc_id, pos) occurrence per window digest
-    as canonical and cuts every other occurrence.  Under doc_id-
-    ordered ingest, every earlier occurrence lives in an earlier (or
-    the same) epoch, so a batch occurrence is non-canonical iff its
-    digest exists in the store OR an earlier in-batch occurrence
-    exists — and an OLD document's canonicity can never be revoked by
-    later arrivals (its occurrence stays first), so emitted rows are
-    immutable.  No probabilistic screen anywhere: the equality is
-    EXACT, and the stream shares dedup_exact_substring_apply's oracle.
-
-    State: the digest store — 16-byte window digests, epoch-keyed
-    append (at 100 TB, bucket it by digest so the per-epoch semi-join
-    co-locates; volume is O(distinct windows) x 16 bytes).  Per-epoch
-    work: batch windows + one digest semi-join + the shared trim tail
-    — nothing rescans earlier documents.
-    """
-    from pyspark.sql import Window
-
-    from qaapi_spark.operators.dedup import _all_window_positions, _apply_trim, _cut_sets
-    from qaapi_spark.operators.textstats import ws_tokens
-
-    spark = bdf.sparkSession
-    digests = EpochStore(spark, digest_root)
-    out = EpochStore(spark, out_root)
-    bdf = bdf.repartition(8)
-    with Guards() as guards:
-        # ordered-ingest GUARD (VERDICT r11 next #6): the stream's EXACT
-        # equality with the batch apply holds only under doc_id-ordered
-        # arrival — a batch landing behind the standing frontier would
-        # silently produce a DIFFERENT relation (its occurrences are
-        # earlier than already-emitted canonicals, which this stream
-        # never revokes).  Reject it loudly instead: the frontier comes
-        # from the emitted rows' footer stats (at 100 TB a counter in
-        # the commit log), the batch min is one tiny agg.
-        prev_max = out.max_before("doc_id", epoch_id)
-        guards.frontier(
-            bdf,
-            prev_max,
-            lambda batch_min: (
-                "out-of-order ingest: batch min doc_id "
-                f"{batch_min} <= standing frontier {prev_max}; "
-                "stream_exact_substring_apply requires doc_id-"
-                "ordered arrival (its canonical picks are "
-                "irrevocable) — re-stage the corpus in order or "
-                "use the retraction-capable variant to repair"
-            ),
-        )
-
-        wins = _all_window_positions(bdf, min_len, "text", "doc_id").persist()
-        # non-canonical batch occurrences: digest already in the store
-        # (any earlier occurrence beats the whole batch) ...
-        store = digests.read(before=epoch_id)
-        if store is not None:
-            store = store.select("h")
-            seen = wins.join(store, "h", "left_semi").select("doc_id", "pos")
-        else:
-            seen = None
-        # ... or a strictly earlier in-batch occurrence of the same digest
-        w = Window.partitionBy("h").orderBy("doc_id", "pos")
-        later = (
-            wins.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") >= 2)
-            .select("doc_id", "pos")
-        )
-        nc = later if seen is None else later.unionByName(seen)
-        cut = _cut_sets(nc, min_len)
-        base = bdf.select("doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks"))
-        try:
-            # append only digests the store has NEVER seen, so the store
-            # is truly O(distinct windows) x 16 bytes — a digest
-            # recurring in every epoch would otherwise be stored once
-            # per epoch
-            new_h = wins.select("h").distinct()
-            if store is not None:
-                new_h = new_h.join(store, "h", "left_anti")
-            # trimmed rows and digest delta both hang off pinned `wins`
-            # — overlap their write jobs
-            par_writes(
-                out.writer(_apply_trim(base, cut), epoch_id),
-                digests.writer(new_h, epoch_id),
-            )
-        finally:
-            wins.unpersist()
-
-
-def stream_exact_substring_apply(
-    spark: SparkSession,
-    docs_path: str,
-    min_len: int = 10,
-    n_splits: int = 2,
-) -> DataFrame:
-    """Streaming ExactSubstr dedup: the trimmed corpus maintained
-    incrementally as documents land — each micro-batch trims against
-    the standing window-digest store and its rows never change again
-    (the canonical occurrence is always the earliest, so history is
-    immutable).  The batch kernel re-aggregates the WHOLE corpus per
-    run; here the corpus-sized work happened once, spread over the
-    epochs, and a new epoch costs only its own windows + one digest
-    semi-join.  EXACTLY equals dedup_exact_substring_apply under
-    ordered ingest — no LSH, no probabilistic caveat — and shares its
-    oracle."""
-    raw = spark.read.parquet(docs_path)
-    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
-    stage_dir, schema = stage_slices("docs_exsub_stream_", slices)
-    digest_root = scratch_dir("exsub_digests_")
-    out_root = scratch_dir("exsub_out_")
-
-    def merge_batch(bdf, epoch_id: int) -> None:
-        _exsub_epoch(bdf, epoch_id, digest_root, out_root, min_len)
-
-    run_epochs(spark, schema, stage_dir, merge_batch, ORDERED_CONF)
-    return EpochStore(spark, out_root).read().select(
-        "doc_id", "n_toks", "n_kept", "text_dedup"
-    )
-
-
 def compact_epoch_store(
     spark: SparkSession,
     root: str,
@@ -1662,14 +1137,14 @@ def compact_epoch_store(
     """Fold the epoch deltas <= ``upto`` of an epoch-keyed store into
     ONE delta directory at epoch=``upto`` — the periodic maintenance
     the delta-writing streams (stream_cc_labels_incremental's label
-    store, stream_exact_substring_apply's digest store) are designed
-    around: without it every later epoch's store read opens every
-    historical delta file.
+    store, the ExactSubstr twins' digest-keyed occurrence index) are
+    designed around: without it every later epoch's store read opens
+    every historical delta file.
 
     ``mode='latest'``: keep each ``key_cols`` group's row from its
     highest epoch (the label store's latest-wins contract).
-    ``mode='distinct'``: set semantics — distinct rows (the digest
-    store).
+    ``mode='distinct'``: set semantics — distinct rows (the occurrence
+    index, the tombstones).
 
     CONTRACT PRESERVATION: readers filter ``epoch < N``.  Folding
     epochs [0..upto] to a single epoch=``upto`` delta keeps every such

@@ -1,5 +1,17 @@
 """Deletion/retraction maintenance for the incremental streaming
-stores (VERDICT r11 next #2 — the named capability gap).
+stores (VERDICT r11 next #2 — the named capability gap), and the one
+insert epoch of each family that has it.
+
+Four families — ExactSubstr apply, greedy near-dup, the composed
+corpus-to-shards pipeline and SCD2 history — keep ONE insert epoch
+each (`_exsub_rt_insert_epoch`, `_nd_rt_insert_epoch`,
+`_c2s_rt_insert_epoch`, `_scd2_rt_insert_epoch`).  The insert-only
+public twin of each family (`stream_exact_substring_apply`,
+`stream_neardup_dedup`, `stream_pipeline_corpus_to_shards`,
+`stream_scd2_history`) lives next to its ``*_with_deletes`` twin and
+runs that epoch with ``del_root=None``: no tombstone store, so every
+tombstone read is None and every store id is unique.  CC labels work
+the same way from streaming/incremental.py (`_cc_labels_epoch`).
 
 The reference itself reconciles upstream deletions: its staging
 refresh runs DELETE-then-MERGE so rows retracted at the source leave
@@ -34,13 +46,17 @@ sub-gaps:
   windows whose every occurrence is retracted vanish from the live
   index, so a future arrival of the same text is canonical again.
 
-Honest state-cost delta vs the insert-only twins: re-election needs
+State cost of one insert epoch per family: re-election needs
 per-OCCURRENCE provenance — (h, doc_id, pos) for every window, not the
 O(distinct-windows) digest set — plus the raw text of docs being
 recomputed (carried as a column of the emitted store and projected
 away in the public relation; a deployment already has the corpus in
-object storage).  The insert-only variants keep their cheaper stores;
-this module is the opt-in retraction-capable shape.
+object storage); the near-dup stores keep a row for every ingested
+doc, dropped ones included, with its keep decision.  The insert-only
+twins pay the same: one store shape per family, read and written by
+one epoch, is what lets a deployment add retraction later without
+migrating state.  ``_occ_delta``'s ``occ_k`` bound caps the
+occurrence index where boilerplate makes it too large.
 At 100 TB both stores bucket by their join key (h / doc_id) and every
 delete epoch touches only the tombstoned docs' components/digests —
 never the corpus.
@@ -77,19 +93,13 @@ from qaapi_spark.streaming.epochs import (
     tombstones,
 )
 from qaapi_spark.streaming.incremental import (
-    _SCD2_STATE,
-    _add_totals,
     _band_keys,
     _batch_bands,
-    _cap_and_pack,
     _cc_labels_epoch,
+    _chunks,
     _latest_labels,
+    _parity_slices,
     _propagate_min_labels,
-    _scd2_closed,
-    _scd2_marked,
-    _scd2_open,
-    _scd2_result,
-    _scd2_stage_rows,
     _verified_jaccard_pairs,
     _within_pairs,
 )
@@ -375,7 +385,7 @@ def _live(df: DataFrame, spark, del_root: str | None) -> DataFrame:
     return df if dels is None else df.join(dels, "doc_id", "left_anti")
 
 
-# --- ExactSubstr apply under retraction -----------------------------
+# --- ExactSubstr apply: insert-only and under retraction ------------
 
 
 def _occ_delta(wins, occ_k: int | None):
@@ -459,12 +469,16 @@ def _write_width(est_rows: int | None, rows_per_file: int | None) -> int:
 
 def _trim_rows(docs: DataFrame, cut) -> DataFrame:
     """The emitted rows of ``docs`` (doc_id, text) trimmed by ``cut``,
-    with the original ``text`` fused in (the corpus archive)."""
+    with the original ``text`` fused in (the corpus archive).  The text
+    rides through the trim's own projection: a join back to ``docs``
+    would broadcast it in one more job per epoch."""
     from qaapi_spark.operators.dedup import _apply_trim
     from qaapi_spark.operators.textstats import ws_tokens
 
-    base = docs.select("doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks"))
-    return _apply_trim(base, cut).join(docs, "doc_id")
+    return _apply_trim(
+        docs.select("doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks"), "text"),
+        cut,
+    )
 
 
 def _texts_of(out: EpochStore, epoch_id: int, docs: DataFrame) -> DataFrame:
@@ -485,14 +499,14 @@ def _exsub_rt_insert_epoch(
     epoch_id: int,
     occ_root: str,
     out_root: str,
-    del_root: str,
+    del_root: str | None,
     min_len: int,
     occ_k: int | None = None,
 ) -> None:
-    """Insert epoch of the retraction-capable streaming ExactSubstr
-    apply: same trim semantics as `_exsub_epoch` (a batch occurrence is
+    """The insert epoch of both streaming ExactSubstr apply twins
+    (``del_root=None``: the insert-only one).  A batch occurrence is
     cut iff its digest has an earlier LIVE occurrence — in the store or
-    earlier in the batch), but the standing index is read through the
+    earlier in the batch; the standing index is read through the
     tombstone set, and the state written is re-election-capable:
 
     - occurrence index (h, doc_id, pos) — EVERY window, not just
@@ -512,18 +526,18 @@ def _exsub_rt_insert_epoch(
     occ, out = EpochStore(spark, occ_root), EpochStore(spark, out_root)
     bdf = bdf.repartition(8)
     with Guards() as guards:
-        # ordered-ingest guard (VERDICT r11 next #6, same contract as
-        # _exsub_epoch): the frontier counts RETRACTED docs too — a
+        # ordered-ingest guard (VERDICT r11 next #6): the EXACT
+        # equality with the batch apply holds only under doc_id-ordered
+        # arrival, since a later insert never revokes an emitted
+        # canonical.  The frontier counts RETRACTED docs too — a
         # tombstoned id stays used (re-insert is forbidden; tombstones
         # filter standing-store reads, so a re-insert would be silently
         # invisible rather than wrong — reject it here instead).  The
         # out store covers every ingested doc, and del_root is
         # consulted TOO so the frontier survives purge_tombstoned
         # physically erasing the max-id doc's rows from the out store.
-        maxes = [
-            s.max_before("doc_id", epoch_id)
-            for s in (out, EpochStore(spark, del_root))
-        ]
+        stores = [out] if del_root is None else [out, EpochStore(spark, del_root)]
+        maxes = [s.max_before("doc_id", epoch_id) for s in stores]
         prev_max = max((m for m in maxes if m is not None), default=None)
         guards.frontier(
             bdf,
@@ -850,6 +864,51 @@ def _latest_trimmed(spark, out_root: str, del_root: str | None = None) -> DataFr
     return _live(out, spark, del_root)
 
 
+def stream_exact_substring_apply(
+    spark: SparkSession,
+    docs_path: str,
+    min_len: int = 10,
+    n_splits: int = 2,
+) -> DataFrame:
+    """Streaming ExactSubstr dedup (Lee et al. ACL'22 §3 under ordered
+    ingest): the trimmed corpus maintained incrementally as documents
+    land — each micro-batch runs `_exsub_rt_insert_epoch` with no
+    tombstone store, trimming against the standing occurrence index,
+    and its rows never change again.  The batch kernel re-aggregates
+    the WHOLE corpus per run; here the corpus-sized work happened once,
+    spread over the epochs, and a new epoch costs only its own windows
+    + one digest semi-join.
+
+    Why the stream EQUALS the batch apply relation: the batch picks the
+    corpus-wide FIRST (doc_id, pos) occurrence per window digest as
+    canonical and cuts every other occurrence.  Under doc_id-ordered
+    ingest (guarded: an out-of-order batch raises), every earlier
+    occurrence lives in an earlier (or the same) epoch, so a batch
+    occurrence is non-canonical iff its digest is in the index OR an
+    earlier in-batch occurrence exists — and with no retractions an
+    old document's canonicity is never revoked, so each doc is emitted
+    once.  No LSH, no probabilistic caveat: it shares
+    dedup_exact_substring_apply's oracle.
+
+    State: the retraction twin's — every occurrence (h, doc_id, pos)
+    and the emitted rows with their original text fused in — so the
+    insert-only twin runs the same epoch as
+    `stream_exact_substring_apply_with_deletes`."""
+    raw = spark.read.parquet(docs_path)
+    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
+    stage_dir, schema = stage_slices("docs_exsub_stream_", slices)
+    occ_root = scratch_dir("exsub_occ_")
+    out_root = scratch_dir("exsub_out_")
+    run_epochs(
+        spark, schema, stage_dir,
+        lambda b, e: _exsub_rt_insert_epoch(b, e, occ_root, out_root, None, min_len),
+        ORDERED_CONF,
+    )
+    return EpochStore(spark, out_root).read().select(
+        "doc_id", "n_toks", "n_kept", "text_dedup"
+    )
+
+
 def stream_exact_substring_apply_with_deletes(
     spark: SparkSession,
     docs_path: str,
@@ -1093,22 +1152,23 @@ def stream_exact_substring_apply_unordered_with_deletes(
     return _latest_trimmed(spark, out_root, del_root)
 
 
-# --- Greedy near-dup keep/drop under retraction ----------------------
+# --- Greedy near-dup keep/drop: insert-only and under retraction -----
 
 
 def _nd_rt_insert_epoch(
     bdf,
     epoch_id: int,
     band_root: str,
-    del_root: str,
+    del_root: str | None,
     threshold: float,
     num_hashes: int,
     n_bands: int,
 ) -> None:
-    """Insert epoch of the retraction-capable greedy near-dup stream:
-    the stream_neardup_dedup decision pipeline (cross-screen against
-    kept live docs, then greedy min-id within the batch's survivors),
-    with the state made retraction-ready:
+    """The insert epoch of both greedy near-dup twins
+    (``del_root=None``: `stream_neardup_dedup`): the `_nd_rt_decide`
+    decision (cross-screen against kept live docs, then greedy min-id
+    within the batch's survivors), with the state made
+    retraction-ready:
 
     - the store keeps EVERY eligible batch doc as ONE row
       (id, bands, sh, kept, arrival) — dropped docs may resurrect, so
@@ -1149,24 +1209,28 @@ def _nd_rt_decide(
     bdf,
     epoch_id: int,
     band_root: str,
-    del_root: str,
+    del_root: str | None,
     threshold: float,
     num_hashes: int,
     n_bands: int,
-    unique_when_undeleted: bool = False,
 ):
-    """The shared greedy insert-epoch DECISION of the retraction-capable
-    near-dup streams (extracted r13 so the composed shard pipeline can
-    reuse it): minhash-band the batch, cross-screen against the KEPT
-    live store rows, then greedy min-id within the batch's survivors.
+    """The shared greedy insert-epoch DECISION of the near-dup and
+    corpus-to-shards twins (extracted r13 so the composed shard
+    pipeline can reuse it): minhash-band the batch, cross-screen
+    against the KEPT live store rows, then greedy min-id within the
+    batch's survivors.
     Returns ``(sets, bands_arr, dropped)`` — ``sets``/``bands_arr``
     PERSISTED (the caller owns the unpersist), ``dropped`` the batch
     ids losing the greedy decision."""
     spark = bdf.sparkSession
+    # a staged slice arrives as ONE partition; spread it to a small
+    # floor, not defaultParallelism: an epoch chains several jobs over
+    # a micro-batch, and at 32-way their per-task overhead outweighed
+    # the extra cores (sf0.1: 7.5 -> 6.4 s per epoch pair at 8-way)
     bdf = bdf.repartition(8)
     sets, bands_arr, keys = _batch_bands(bdf, num_hashes, n_bands)
     dropped_cross = None
-    rows = _nd_live_rows(spark, band_root, del_root, epoch_id, unique_when_undeleted)
+    rows = _nd_live_rows(spark, band_root, del_root, epoch_id)
     if rows is not None:
         rec = rows.filter(F.col("kept"))
         cand = keys.join(_band_keys(rec, "other"), ["band", "bsig"])
@@ -1193,13 +1257,7 @@ def _nd_rt_decide(
     return sets, bands_arr, dropped
 
 
-def _nd_live_rows(
-    spark,
-    band_root: str,
-    del_root: str,
-    epoch_id: int | None,
-    unique_when_undeleted: bool = False,
-):
+def _nd_live_rows(spark, band_root: str, del_root: str | None, epoch_id: int | None):
     """Current store row of every LIVE doc as of epoch ``epoch_id``
     (None: the final read): the fused store's latest-wins row per id
     (a delete epoch's decision flip outranks the insert row), minus the
@@ -1220,31 +1278,26 @@ def _nd_live_rows(
     cache write + cache read of full rows vs a pruned parquet scan of
     the same rows.
 
-    ``unique_when_undeleted``: only DELETE epochs ever write a second
-    row for an id (the decision delta), and each delete epoch writes
-    its band-store delta strictly before its tombstones commit the
-    foreachBatch — so when del_root has no epoch < epoch_id, every
-    store id is unique and the latest-wins window is a no-op the
-    caller may skip (a full sort-per-id over the store).  Opt-in per
-    call site so the near-dup family's certified plan is untouched;
-    the shard pipeline passes True (2 of its 4 store reads skip)."""
+    Only DELETE epochs ever write a second row for an id (the decision
+    delta), and every delete epoch writes tombstones in the same
+    foreachBatch — so when ``del_root`` has no epoch < ``epoch_id``
+    (always, for the insert-only twins), every store id is unique and
+    the latest-wins window (a sort per id over the store) is skipped."""
     from pyspark.sql import Window
 
     dels = tombstones(spark, del_root, epoch_id)
     live = EpochStore(spark, band_root).read(before=epoch_id)
     if live is None:
         return None
-    if dels is None and unique_when_undeleted:
+    if dels is None:
         return live.drop("epoch")
     w = Window.partitionBy("id").orderBy(F.desc("epoch"))
-    live = (
+    return (
         live.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn", "epoch")
+        .join(dels.select(F.col("doc_id").alias("id")), "id", "left_anti")
     )
-    if dels is not None:
-        live = live.join(dels.select(F.col("doc_id").alias("id")), "id", "left_anti")
-    return live
 
 
 def _pinning():
@@ -1407,6 +1460,75 @@ def _nd_rt_component_recompute(dels, rows, threshold: float, pin):
     return comp, kept_all
 
 
+def stream_neardup_dedup(
+    spark: SparkSession,
+    docs_path: str,
+    threshold: float = 0.8,
+    num_hashes: int = 64,
+    n_bands: int = 16,
+) -> DataFrame:
+    """Incremental NEAR-dup dedup: documents arrive in micro-batches
+    (one parity slice per trigger) and each batch runs
+    `_nd_rt_insert_epoch` with no tombstone store — screened against
+    the accumulated minhash-LSH band keys of every document kept so
+    far, with EXACT Jaccard verification of every candidate; the
+    streaming half of the near-dup surface, where stream_dedup_events
+    is the exact half.
+
+    Per batch (`_nd_rt_decide`):
+      1. map-only minhash signatures + band keys for the batch;
+      2. cross-batch: (batch doc, kept doc) candidate pairs by band
+         equi-join against the store's kept rows, verified with exact
+         shingle-set Jaccard >= threshold — only verified near-dups
+         drop;
+      3. within the batch, greedy min-id over VERIFIED pairs: drop a
+         doc iff a smaller-id batch survivor is a true near-dup;
+      4. one store write: every batch doc's row with its decision.
+
+    Because candidates are exactly verified (and r=4 banding misses a
+    true pair with probability (1-j^4)^16 ~ 2.2e-4 at j=0.8 — equality
+    with the exact pair relation is asserted empirically by the oracle
+    gate at every SF, same trade as minhash_lsh_verified_pairs), the
+    kept set is DETERMINISTIC — a pure function of (batch partition,
+    id order, exact pair relation) — which is what lets this stream
+    hash-check against a batch SQL oracle.
+
+    State per ingested doc: ONE nested store row (id, bands, sh, kept,
+    arrival) — n_bands 24-byte band keys (the probe side, recovered
+    with one narrow explode), its int64 shingle set (the verify side)
+    and the keep decision.  Dropped docs keep their row too (the
+    retraction twin's store, where a drop can be revoked); band probes
+    read the kept rows only.  The verify join touches only candidate
+    pairs, so cost tracks true-dup density, never corpus size.
+
+    Contract note: a document whose text yields ZERO shingles (shorter
+    than the shingle width) produces no minhash signature and is
+    dropped from the kept output — same convention as the batch
+    minhash/jaccard kernels, which cannot score empty sets.
+    """
+    raw = spark.read.parquet(docs_path)
+    stage_dir, schema = stage_slices(
+        "docs_neardup_stream_", _parity_slices(raw, "doc_id")
+    )
+    band_root = scratch_dir("neardup_store_")
+    run_epochs(
+        spark, schema, stage_dir,
+        lambda b, e: _nd_rt_insert_epoch(
+            b, e, band_root, None, threshold, num_hashes, n_bands
+        ),
+        ORDERED_CONF,
+    )
+    return _nd_kept_docs(spark, raw, band_root, None)
+
+
+def _nd_kept_docs(spark, raw: DataFrame, band_root: str, del_root: str | None):
+    """The kept docs of a near-dup store as (doc_id, lang, source)."""
+    kept = _nd_live_rows(spark, band_root, del_root, None).filter(
+        F.col("kept")
+    ).select(F.col("id").alias("doc_id"))
+    return raw.join(kept, "doc_id", "left_semi").select("doc_id", "lang", "source")
+
+
 def stream_neardup_with_deletes(
     spark: SparkSession,
     docs_path: str,
@@ -1439,15 +1561,63 @@ def stream_neardup_with_deletes(
         ),
         lambda d, e: _nd_rt_delete_epoch(d, e, band_root, del_root, threshold),
     )
-    kept = _nd_live_rows(spark, band_root, del_root, None).filter(
-        F.col("kept")
-    ).select(F.col("id").alias("doc_id"))
-    return raw.join(kept, "doc_id", "left_semi").select("doc_id", "lang", "source")
+    return _nd_kept_docs(spark, raw, band_root, del_root)
 
 
-# --- Composed shard pipeline under retraction -------------------------
+# --- Composed shard pipeline: insert-only and under retraction --------
 
 _TOTALS = "source string, total_toks long, n_kept long, rebuilt_epoch long"
+
+
+def _cap_and_pack(gated, prev, source_cap, budget: int) -> DataFrame:
+    """The shard pipeline's cap+pack tail over ``gated`` (source,
+    doc_id, n_toks) given the running ``prev`` totals snapshot (source,
+    total_toks, n_kept).
+
+    ONE window pass computes both the cap rank and the running token
+    prefix (same partitioning+ordering -> one sort, no extra exchange),
+    and ONE broadcast join attaches both state columns.  The cap filter
+    is safe AFTER the prefix sum because the kept rows are a per-source
+    PREFIX in doc_id order: for every surviving row, cum_before over
+    the gated relation equals cum_before over the capped relation."""
+    from pyspark.sql import Window
+
+    rk_w = Window.partitionBy("source").orderBy("doc_id")
+    cum_w = rk_w.rowsBetween(Window.unboundedPreceding, -1)
+    placed = (
+        gated.withColumn("rk", F.row_number().over(rk_w))
+        .withColumn("cum_before", F.coalesce(F.sum("n_toks").over(cum_w), F.lit(0)))
+        .join(F.broadcast(prev), "source", "left")
+    )
+    if source_cap is not None:
+        placed = placed.filter(
+            F.coalesce(F.col("n_kept"), F.lit(0)) + F.col("rk") <= int(source_cap)
+        )
+    return _chunks(
+        placed.withColumn(
+            "start_tok",
+            (F.coalesce(F.col("total_toks"), F.lit(0)) + F.col("cum_before")).cast("long"),
+        ),
+        budget,
+    )
+
+
+def _add_totals(prev: DataFrame, packed: DataFrame, *extra) -> DataFrame:
+    """The next totals snapshot: ``prev`` (source, total_toks, n_kept,
+    ...) plus the tokens and row counts ``packed`` adds per source."""
+    bsum = packed.groupBy("source").agg(
+        F.sum("n_toks").alias("b_toks"), F.count("*").alias("b_kept")
+    )
+    return prev.join(bsum, "source", "full_outer").select(
+        "source",
+        (F.coalesce(F.col("total_toks"), F.lit(0)) + F.coalesce(F.col("b_toks"), F.lit(0)))
+        .cast("long")
+        .alias("total_toks"),
+        (F.coalesce(F.col("n_kept"), F.lit(0)) + F.coalesce(F.col("b_kept"), F.lit(0)))
+        .cast("long")
+        .alias("n_kept"),
+        *extra,
+    )
 
 
 def _totals_before(spark, totals_root: str, epoch_id: int | None = None):
@@ -1467,7 +1637,7 @@ def _c2s_rt_insert_epoch(
     bdf,
     epoch_id: int,
     band_root: str,
-    del_root: str,
+    del_root: str | None,
     totals_root: str,
     out_root: str,
     threshold: float,
@@ -1477,9 +1647,10 @@ def _c2s_rt_insert_epoch(
     budget: int,
     source_cap,
 ) -> None:
-    """Insert epoch of the retraction-capable corpus-to-shards
-    pipeline: the `_nd_rt_decide` greedy dedup decision, then the
-    gate -> cap -> pack tail from the running totals snapshot.
+    """The insert epoch of both corpus-to-shards twins
+    (``del_root=None``: `stream_pipeline_corpus_to_shards`): the
+    `_nd_rt_decide` greedy dedup decision, then the gate -> cap -> pack
+    tail from the running totals snapshot.
 
     The fused store row extends the near-dup retraction store with the
     pipeline's per-doc inputs — (id, bands, sh, kept, arrival, source,
@@ -1495,8 +1666,7 @@ def _c2s_rt_insert_epoch(
     with Guards() as guards:
         guards.no_reinsert(bdf, tombstones(spark, del_root, epoch_id))
         sets, bands_arr, dropped = _nd_rt_decide(
-            bdf, epoch_id, band_root, del_root, threshold, num_hashes, n_bands,
-            unique_when_undeleted=True,
+            bdf, epoch_id, band_root, del_root, threshold, num_hashes, n_bands
         )
         pinned += [bands_arr, sets]
         try:
@@ -1593,9 +1763,7 @@ def _c2s_rt_delete_epoch(
     pinned, pin = _pinning()
     dels = pin(ddf.select("doc_id").distinct())
     try:
-        rows = _nd_live_rows(
-            spark, band_root, del_root, epoch_id, unique_when_undeleted=True
-        )
+        rows = _nd_live_rows(spark, band_root, del_root, epoch_id)
         if rows is None:
             tomb.write(dels, epoch_id)
             return
@@ -1707,6 +1875,62 @@ def _c2s_rt_delete_epoch(
             df.unpersist()
 
 
+def stream_pipeline_corpus_to_shards(
+    spark: SparkSession,
+    docs_path: str,
+    threshold: float = 0.8,
+    num_hashes: int = 64,
+    n_bands: int = 16,
+    min_toks: int = 16,
+    budget: int = 128,
+    n_splits: int = 2,
+    source_cap: int | None = None,
+) -> DataFrame:
+    """The incremental corpus-refresh wave: near-dup dedup -> quality
+    gate -> per-source quota cap -> concat-and-chunk shard formation
+    composed in ONE foreachBatch pipeline — what a production ingest
+    wave runs when new documents land: screen them against the
+    standing kept corpus, gate the survivors, stop over-quota sources,
+    append the rest to training shards without recomputing earlier
+    offsets.  Each epoch is `_c2s_rt_insert_epoch` with no tombstone
+    store.
+
+    Ordered ingest is the CONTRACT (shard offsets and cap ranks
+    accumulate in doc_id order): slices are doc_id ranges staged as
+    one sorted file each with explicit monotonic mtimes.  The cap is
+    EXACT under it: prev-epoch kept count + within-batch rank IS the
+    global per-source row_number, so the running-count state (one long
+    per source, carried in the totals snapshot) reproduces the batch
+    pipeline's windowed cap without ever seeing the full corpus.  The
+    dedup decisions are the stream_neardup_dedup greedy relation and
+    the offsets equal the batch pack over the capped survivors — so
+    the composition is hash-checkable against one batch SQL oracle.
+
+    State per epoch: the fused store row per ingested doc (bands +
+    shingle set + decision + source/n_toks) and the |sources|-row
+    totals+counts snapshot; per-epoch work is the batch screen (band
+    equi-join + exact verify of candidates only) plus two per-source
+    windows over the batch — no stage rescans history."""
+    raw = spark.read.parquet(docs_path)
+    slices, _, _ = range_slices(raw, "doc_id", n_splits, src=docs_path)
+    stage_dir, schema = stage_slices("docs_c2s_stream_", slices)
+    band_root = scratch_dir("c2s_store_")
+    totals_root = scratch_dir("c2s_totals_")
+    out_root = scratch_dir("c2s_out_")
+    run_epochs(
+        spark, schema, stage_dir,
+        lambda b, e: _c2s_rt_insert_epoch(
+            b, e, band_root, None, totals_root, out_root,
+            threshold, num_hashes, n_bands, min_toks, budget, source_cap,
+        ),
+        ORDERED_CONF,
+    )
+    return EpochStore(spark, out_root).read().select(
+        "source", "doc_id", "n_toks", "start_tok",
+        "first_chunk", "last_chunk", "n_chunks",
+    )
+
+
 def stream_pipeline_corpus_to_shards_with_deletes(
     spark: SparkSession,
     docs_path: str,
@@ -1786,7 +2010,69 @@ def _c2s_final_rows(
     return _live(out, spark, del_root)
 
 
-# --- SCD2 history under subject erasure --------------------------------
+# --- SCD2 history: insert-only and under subject erasure --------------
+
+
+_SCD2_STATE = "user_id long, status string, event_id long, valid_from_us long"
+
+
+def _scd2_stage_rows(spark: SparkSession, events_path: str):
+    """The SCD2 twins' staged projection of the events: (user_id,
+    status, event_id, us) with ``us`` the unix micros of ``ts``, whose
+    footer statistics bound the time slices."""
+    from qaapi_spark.sources.tables import events_stream_spec
+
+    raw_schema, normalize_ts = events_stream_spec(spark, events_path)
+    return normalize_ts(spark.read.schema(raw_schema).parquet(events_path)).select(
+        "user_id",
+        F.col("event_type").alias("status"),
+        "event_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+    )
+
+
+def _scd2_marked(prev: DataFrame, bdf: DataFrame) -> DataFrame:
+    """One SCD2 epoch's change rows: the standing open rows ``prev``
+    and the batch, collapsed to status changes per user in (us,
+    event_id) order, each carrying ``valid_to_us`` = the next change's
+    start (null for the still-open one).  A state row is always a
+    change — it was one when recorded; in-batch it has no predecessor."""
+    from pyspark.sql import Window
+
+    combined = prev.select(
+        "user_id", "status", "event_id",
+        F.col("valid_from_us").alias("us"), F.lit(True).alias("is_state"),
+    ).unionByName(
+        bdf.select("user_id", "status", "event_id", "us", F.lit(False).alias("is_state"))
+    )
+    w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    changes = combined.withColumn("prev", F.lag("status").over(w)).filter(
+        F.col("prev").isNull() | (F.col("status") != F.col("prev"))
+    )
+    return changes.withColumn("valid_to_us", F.lead("us").over(w))
+
+
+def _scd2_closed(marked: DataFrame) -> DataFrame:
+    return marked.filter(F.col("valid_to_us").isNotNull()).select(
+        "user_id", "status", F.col("us").alias("valid_from_us"), "valid_to_us"
+    )
+
+
+def _scd2_open(marked: DataFrame) -> DataFrame:
+    return marked.filter(F.col("valid_to_us").isNull()).select(
+        "user_id", "status", "event_id", F.col("us").alias("valid_from_us")
+    )
+
+
+def _scd2_result(hist: DataFrame, state: EpochStore) -> DataFrame:
+    """Emitted history + the final open rows, as the batch SCD2 relation."""
+    final_open = state.latest(None, _SCD2_STATE).select(
+        "user_id", "status", "valid_from_us",
+        F.lit(None).cast("long").alias("valid_to_us"),
+    )
+    return hist.select("user_id", "status", "valid_from_us", "valid_to_us").unionByName(
+        final_open
+    ).withColumn("is_current", F.col("valid_to_us").isNull())
 
 
 def _scd2_state_before(spark, store_root: str, epoch_id: int | None = None):
@@ -1815,10 +2101,9 @@ def _scd2_rt_insert_epoch(
     out_root: str,
     rows_per_file: int | None = None,
 ) -> None:
-    """One insert epoch of the retraction-capable SCD2 stream — the
-    `stream_scd2_history` merge verbatim (close intervals append-only,
-    carry one open row per user), reading the latest-earlier state
-    snapshot (delete epochs interleave).  A user erased by an earlier
+    """The insert epoch of both SCD2 twins (close intervals
+    append-only, carry one open row per user), reading the
+    latest-earlier state snapshot (delete epochs interleave).  A user erased by an earlier
     delete epoch has NO open row, so their next event legitimately
     re-opens a fresh history — re-subscription after erasure is the
     one retraction contract where the subject key returning is normal,
@@ -1869,6 +2154,44 @@ def _scd2_rt_delete_epoch(
         )
     finally:
         dels.unpersist()
+
+
+def stream_scd2_history(
+    spark: SparkSession,
+    events_path: str,
+    n_splits: int = 3,
+) -> DataFrame:
+    """Streaming SCD2 (type-2) history maintenance — the CDC-apply
+    shape: status events arrive in time-ordered micro-batches, each
+    batch CLOSES intervals whose successor has now arrived and emits
+    them append-only, and the state carries exactly one OPEN row per
+    user (the current interval).  Each epoch is `_scd2_rt_insert_epoch`
+    (no delete epoch ever runs).  History rows are immutable once
+    emitted; only the |users|-row open set ever updates — at 100 TB
+    this is why SCD2 is maintained from a stream rather than rebuilt:
+    per epoch the work is one user-keyed window over (batch + open
+    rows), never a history rescan.
+
+    Time-ordered ingest is the CONTRACT (CDC logs are ordered):
+    slices are event-time ranges staged as one sorted file each.
+    Under it the emitted union + final open set is bit-equal to the
+    batch `scd2_user_status_history` relation, so the stream shares
+    its oracle.  State snapshots are per-epoch, so a replayed epoch
+    reproduces identical bytes — no retry double-count class.
+    """
+    narrow = _scd2_stage_rows(spark, events_path)
+    slices, _, _ = range_slices(narrow, "us", n_splits, src=events_path, src_col="ts")
+    stage_dir, schema = stage_slices(
+        "events_scd2_stream_", slices, ("user_id", "us", "event_id")
+    )
+    state_root = scratch_dir("scd2_store_")
+    out_root = scratch_dir("scd2_out_")
+    run_epochs(
+        spark, schema, stage_dir,
+        lambda b, e: _scd2_rt_insert_epoch(b, e, state_root, out_root),
+        STATE_CONF,
+    )
+    return _scd2_result(EpochStore(spark, out_root).read(), EpochStore(spark, state_root))
 
 
 def stream_scd2_with_deletes(

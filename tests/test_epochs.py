@@ -51,11 +51,11 @@ def test_epoch_guard_future_consumed_when_epoch_body_raises(
     propagates out of the epoch."""
     from qaapi_spark.operators import dedup
     from qaapi_spark.streaming import epochs
-    from qaapi_spark.streaming.incremental import _exsub_epoch
+    from qaapi_spark.streaming.retraction import _exsub_rt_insert_epoch
 
-    dig, out = str(tmp_path / "dig"), str(tmp_path / "out")
+    occ, out = str(tmp_path / "occ"), str(tmp_path / "out")
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    _exsub_epoch(mk([(20, _PASSAGE)]), 0, dig, out, 10)
+    _exsub_rt_insert_epoch(mk([(20, _PASSAGE)]), 0, occ, out, None, 10)
 
     consumed = []
     start = epochs.Guards.start
@@ -73,7 +73,7 @@ def test_epoch_guard_future_consumed_when_epoch_body_raises(
     monkeypatch.setattr(epochs.Guards, "start", recording_start)
     monkeypatch.setattr(dedup, "_all_window_positions", failing_windows)
     with pytest.raises(RuntimeError, match="epoch body failed"):
-        _exsub_epoch(mk([(21, _FILLER)]), 1, dig, out, 10)
+        _exsub_rt_insert_epoch(mk([(21, _FILLER)]), 1, occ, out, None, 10)
     assert len(consumed) == 1 and consumed[0][0][0] == 21
 
 

@@ -351,17 +351,75 @@ def test_exsub_rejects_out_of_order_ingest(spark, tmp_path):
     doc_id frontier would silently produce a different relation —
     the epoch must REJECT it, while in-order (and replayed) epochs
     still pass."""
-    from qaapi_spark.streaming.incremental import _exsub_epoch
+    from qaapi_spark.streaming.retraction import _exsub_rt_insert_epoch
 
-    dig, out = str(tmp_path / "dig"), str(tmp_path / "out")
+    occ, out = str(tmp_path / "occ"), str(tmp_path / "out")
     mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    _exsub_epoch(mk([(20, _PASSAGE)]), 0, dig, out, 10)
+
+    def epoch(rows, e):
+        _exsub_rt_insert_epoch(mk(rows), e, occ, out, None, 10)
+
+    epoch([(20, _PASSAGE)], 0)
     with pytest.raises(ValueError, match="out-of-order ingest"):
-        _exsub_epoch(mk([(5, _FILLER)]), 1, dig, out, 10)
+        epoch([(5, _FILLER)], 1)
     # a retry of epoch 0 reads the frontier at epoch < 0 — no false trip
-    _exsub_epoch(mk([(20, _PASSAGE)]), 0, dig, out, 10)
+    epoch([(20, _PASSAGE)], 0)
     # and the in-order successor is accepted
-    _exsub_epoch(mk([(21, _FILLER)]), 1, dig, out, 10)
+    epoch([(21, _FILLER)], 1)
+
+
+def test_exsub_insert_epoch_job_budget(spark, tmp_path, monkeypatch):
+    """The ExactSubstr insert epoch both twins run must not spend more
+    Spark jobs per epoch than the insert-only epoch it replaced did on
+    the same two-batch input.  That epoch, measured under the stream's
+    ORDERED_CONF with driver-thread jobs counted: 3 jobs in epoch 0
+    and 6 in epoch 1.  Batches are parquet scans, as in the stream: a
+    join fusing ``text`` back into the trimmed rows broadcasts that
+    scan in one more job (4 in epoch 0)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from qaapi_spark.streaming.epochs import ORDERED_CONF, session_conf
+    from qaapi_spark.streaming.retraction import _exsub_rt_insert_epoch
+
+    sc = spark.sparkContext
+    group = ["?"]
+    submit = ThreadPoolExecutor.submit
+
+    def grouped_submit(self, fn, *a, **kw):
+        # par_writes and the guards run jobs on pool threads, which do
+        # not inherit the caller's job group
+        g = group[0]
+
+        def run(*a2, **kw2):
+            sc.setJobGroup(g, g)
+            return fn(*a2, **kw2)
+
+        return submit(self, run, *a, **kw)
+
+    monkeypatch.setattr(ThreadPoolExecutor, "submit", grouped_submit)
+    occ, out = str(tmp_path / "occ"), str(tmp_path / "out")
+    batches = [
+        [(0, _PASSAGE + " tail zero"), (1, _FILLER)],
+        [(20, "x " + _PASSAGE), (21, _FILLER + " y")],
+    ]
+    jobs = []
+    for e, rows in enumerate(batches):
+        path = str(tmp_path / f"batch{e}")
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+        bdf = spark.read.schema("doc_id long, text string").parquet(path)
+        group[0] = f"exsub_budget_{os.getpid()}_{id(tmp_path)}_{e}"
+        sc.setJobGroup(group[0], group[0])
+        try:
+            with session_conf(spark, ORDERED_CONF):
+                _exsub_rt_insert_epoch(bdf, e, occ, out, None, 10)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group[0])))
+    assert jobs[0] <= 3 and jobs[1] <= 6, jobs
+    trimmed = {
+        r["doc_id"]: r["n_kept"] for r in spark.read.parquet(out).collect()
+    }
+    assert trimmed == {0: 14, 1: 12, 20: 1, 21: 1}
 
 
 def test_exsub_rt_rejects_reinsert_of_tombstoned_id(spark, tmp_path):

@@ -213,7 +213,7 @@ def test_pipeline_shards_epoch_retry_idempotent(spark, tmp_path):
     reproduce identical bytes — including the dedup decisions, which
     must NOT screen the batch against its own prior output (every doc
     is its own near-dup)."""
-    from qaapi_spark.streaming.incremental import _pipeline_shards_epoch
+    from qaapi_spark.streaming.retraction import _c2s_rt_insert_epoch
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
@@ -225,15 +225,15 @@ def test_pipeline_shards_epoch_retry_idempotent(spark, tmp_path):
     out = str(tmp_path / "out")
 
     def run(bdf, epoch):
-        _pipeline_shards_epoch(
-            bdf, epoch, store, totals, out,
+        _c2s_rt_insert_epoch(
+            bdf, epoch, store, None, totals, out,
             threshold=0.8, num_hashes=64, n_bands=16, min_toks=16, budget=128,
             source_cap=15,
         )
 
     run(b0, 0)
     run(b1, 1)
-    first = (_read_tree(spark, out), _read_tree(spark, store + "/data"),
+    first = (_read_tree(spark, out), _read_tree(spark, store),
              _read_tree(spark, totals))
     assert first[0], "pipeline produced no shard rows"
 
@@ -241,7 +241,7 @@ def test_pipeline_shards_epoch_retry_idempotent(spark, tmp_path):
     # retry against a store that already holds both epochs)
     run(b1, 1)
     run(b0, 0)
-    second = (_read_tree(spark, out), _read_tree(spark, store + "/data"),
+    second = (_read_tree(spark, out), _read_tree(spark, store),
               _read_tree(spark, totals))
     assert second == first
 

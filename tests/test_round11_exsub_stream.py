@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 _PASSAGE = " ".join(f"w{i}" for i in range(12))  # 12 tokens >= min_len 10
 _FILLER = " ".join(f"f{i}" for i in range(12))
+# the public relation's columns (the out store also carries the text)
+_PUBLIC = ("doc_id", "n_toks", "n_kept", "text_dedup")
 
 
 def _mk_docs(spark, path, rows):
@@ -23,7 +25,7 @@ def test_canonical_stays_late_copy_trims(spark, tmp_path):
     The stream must leave doc 0 INTACT and cut the passage from doc 20
     — and match the batch apply exactly."""
     from qaapi_spark.operators.dedup import exact_substring_apply
-    from qaapi_spark.streaming.incremental import stream_exact_substring_apply
+    from qaapi_spark.streaming.retraction import stream_exact_substring_apply
 
     docs = str(tmp_path / "docs.parquet")
     rows = [
@@ -56,7 +58,7 @@ def test_canonical_stays_late_copy_trims(spark, tmp_path):
 def test_within_batch_first_occurrence_is_canonical(spark, tmp_path):
     """Two copies arriving in the SAME epoch: the lower (doc_id, pos)
     keeps the passage, the other is cut — the batch tiebreak."""
-    from qaapi_spark.streaming.incremental import stream_exact_substring_apply
+    from qaapi_spark.streaming.retraction import stream_exact_substring_apply
 
     docs = str(tmp_path / "docs.parquet")
     _mk_docs(
@@ -73,40 +75,41 @@ def test_exsub_epoch_retry_idempotent(spark, tmp_path):
     """A replayed epoch reproduces identical trimmed rows: reads filter
     epoch < N (the replay never meets its own digests), writes are
     epoch-keyed overwrite."""
-    from qaapi_spark.streaming.incremental import _exsub_epoch
+    from qaapi_spark.streaming.retraction import _exsub_rt_insert_epoch
 
-    digests = str(tmp_path / "digests")
+    occ = str(tmp_path / "occ")
     out = str(tmp_path / "out")
     b0 = spark.createDataFrame([(0, _PASSAGE)], "doc_id long, text string")
     b1 = spark.createDataFrame(
         [(20, "x " + _PASSAGE)], "doc_id long, text string"
     )
-    _exsub_epoch(b0, 0, digests, out, 10)
-    _exsub_epoch(b1, 1, digests, out, 10)
-    first = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(out, "epoch=1")).collect()
-    )
+
+    def rows(epoch):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(os.path.join(out, f"epoch={epoch}"))
+            .select(*_PUBLIC)
+            .collect()
+        )
+
+    _exsub_rt_insert_epoch(b0, 0, occ, out, None, 10)
+    _exsub_rt_insert_epoch(b1, 1, occ, out, None, 10)
+    first = rows(1)
     assert first == [(20, 13, 1, "x")]
-    _exsub_epoch(b1, 1, digests, out, 10)  # replay
-    again = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(out, "epoch=1")).collect()
-    )
-    assert again == first
+    _exsub_rt_insert_epoch(b1, 1, occ, out, None, 10)  # replay
+    assert rows(1) == first
     # the canonical epoch-0 row is untouched
-    e0 = spark.read.parquet(os.path.join(out, "epoch=0")).collect()
-    assert [tuple(r) for r in e0] == [(0, 12, 12, _PASSAGE.lower())]
+    assert rows(0) == [(0, 12, 12, _PASSAGE.lower())]
 
 
 def test_compact_digest_store_preserves_trim(spark, tmp_path):
-    """Folding the digest store's epochs into one distinct delta must
-    leave the next epoch's trim identical."""
-    from qaapi_spark.streaming.incremental import (
-        _exsub_epoch,
-        compact_epoch_store,
-    )
+    """Folding the digest-keyed occurrence store's epochs into one
+    distinct delta must leave the next epoch's trim identical."""
+    from qaapi_spark.streaming.incremental import compact_epoch_store
+    from qaapi_spark.streaming.retraction import _exsub_rt_insert_epoch
 
     def run(compact: bool, sub: str):
-        digests = str(tmp_path / sub / "digests")
+        occ = str(tmp_path / sub / "occ")
         out = str(tmp_path / sub / "out")
         batches = [
             [(0, _PASSAGE)],
@@ -116,16 +119,14 @@ def test_compact_digest_store_preserves_trim(spark, tmp_path):
         for i, rows in enumerate(batches):
             if compact and i == 2:
                 n = compact_epoch_store(
-                    spark, digests, "distinct", upto=1, key_cols=("h",)
+                    spark, occ, "distinct", upto=1, key_cols=("h",)
                 )
                 assert n == 2
             b = spark.createDataFrame(rows, "doc_id long, text string")
-            _exsub_epoch(b, i, digests, out, 10)
+            _exsub_rt_insert_epoch(b, i, occ, out, None, 10)
         return sorted(
             tuple(r)
-            for r in spark.read.parquet(out + "/epoch=*")
-            .select("doc_id", "n_toks", "n_kept", "text_dedup")
-            .collect()
+            for r in spark.read.parquet(out + "/epoch=*").select(*_PUBLIC).collect()
         )
 
     assert run(False, "plain") == run(True, "compacted")

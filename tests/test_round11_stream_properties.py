@@ -39,13 +39,13 @@ def _epoch_batches(spark, texts, n_splits):
 @_SETTINGS
 def test_stream_exsub_equals_batch_apply(spark, tmp_path_factory, texts, n_splits):
     from qaapi_spark.operators.dedup import exact_substring_apply
-    from qaapi_spark.streaming.incremental import _exsub_epoch
+    from qaapi_spark.streaming.retraction import _exsub_rt_insert_epoch
 
     rows, batches = _epoch_batches(spark, texts, n_splits)
     base = tmp_path_factory.mktemp("exsub")
-    digests, out = str(base / "digests"), str(base / "out")
+    occ, out = str(base / "occ"), str(base / "out")
     for i, b in enumerate(batches):
-        _exsub_epoch(b, i, digests, out, 3)
+        _exsub_rt_insert_epoch(b, i, occ, out, None, 3)
     streamed = sorted(
         (r["doc_id"], r["n_toks"], r["n_kept"], r["text_dedup"])
         for r in spark.read.parquet(out + "/epoch=*")

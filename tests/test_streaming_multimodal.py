@@ -66,7 +66,7 @@ def test_multimodal_frame_sample_bounds(spark, sf_dir):
 def test_stream_neardup_drops_cross_batch_duplicate(spark, tmp_path):
     """A near-identical copy arriving in a LATER micro-batch must be
     dropped by the accumulated band-key store; unique docs survive."""
-    from qaapi_spark.streaming.incremental import stream_neardup_dedup
+    from qaapi_spark.streaming.retraction import stream_neardup_dedup
 
     # every "unique" doc is built from id-derived tokens only (no shared
     # template words — shared bigrams would make them true near-dups)
