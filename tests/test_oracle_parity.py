@@ -17,11 +17,21 @@ def duck():
 
 
 # Full driver-gate replica (~20 min) in the slow tier, check_oracle.py
-# covers it at sf0.01.  Families whose shared storage code most of them
-# run through hash-check in the default tier too: the streaming twins
-# (streaming/epochs.py), and the curated-table pipeline, compaction and
-# maintained views (the crash-safe directory swap in sources/tables.py).
-_DEFAULT_TIER = ("stream_", "calabrio_pipeline_", "maintain_", "mv_")
+# covers it at sf0.01.  Families whose shared code most of them run
+# through hash-check in the default tier too: the streaming twins
+# (streaming/epochs.py), the curated-table pipeline, compaction and
+# maintained views (the crash-safe directory swap in sources/tables.py),
+# and the dedup family plus the two near-dup graph queries (the LSH
+# toolkit and pair kernels in operators/dedup.py).
+_DEFAULT_TIER = (
+    "stream_",
+    "calabrio_pipeline_",
+    "maintain_",
+    "mv_",
+    "dedup_",
+    "graph_pagerank_neardup",
+    "graph_triangles_neardup",
+)
 
 
 @pytest.mark.parametrize(

@@ -48,34 +48,6 @@ def test_sparse_prefix_filter_equals_dense_kernel(spark, texts, threshold):
     assert sparse == dense
 
 
-@given(texts=_corpora)
-@_SETTINGS
-def test_minhash_estimates_bounded_and_symmetric_free(spark, texts):
-    """LSH candidates: id_a < id_b always, est_jaccard in [0, 1], and a
-    verbatim duplicate pair always surfaces (identical signatures
-    collide in every band)."""
-    from pyspark.sql import functions as F
-
-    from qaapi_spark.operators.dedup import minhash_lsh_pairs
-    from qaapi_spark.session import release_kernel_caches
-
-    rows = [(i, t) for i, t in enumerate(texts)]
-    dup_src = next((t for t in texts if len(t.split()) >= 2), None)
-    if dup_src is not None:
-        rows.append((len(texts), dup_src))  # verbatim copy
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = minhash_lsh_pairs(df, 0.0).collect()
-    release_kernel_caches()
-    assert all(r.id_a < r.id_b for r in got)
-    assert all(0.0 <= r.est_jaccard <= 1.0 for r in got)
-    if dup_src is not None:
-        src_id = texts.index(dup_src)
-        assert any(
-            r.id_a == src_id and r.id_b == len(texts) and r.est_jaccard == 1.0
-            for r in got
-        )
-
-
 @given(
     target_keys=st.lists(st.integers(0, 6), min_size=0, max_size=6, unique=True),
     batch_keys=st.lists(st.integers(0, 6), min_size=0, max_size=6, unique=True),
@@ -107,16 +79,19 @@ def test_band_arrays_explode_equals_band_keys(spark):
     from pyspark.sql import functions as F
 
     from qaapi_spark.operators.dedup import (
+        _hashed_shingle_sets,
+        _minhash_sig,
         minhash_band_arrays,
         minhash_band_keys,
-        minhash_signatures,
     )
 
     df = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(20)],
         "doc_id long, text string",
     )
-    signed = minhash_signatures(df, 16)
+    signed = _hashed_shingle_sets(df, 2, "text", "doc_id").select(
+        "id", _minhash_sig(F.col("sh"), 16).alias("sig")
+    )
     keys = minhash_band_keys(signed, 16, 4)
     via_arrays = (
         minhash_band_arrays(signed, 16, 4)

@@ -1,17 +1,12 @@
 """Round-11 tests: the ExactSubstr APPLY step (trimmed corpus,
 canonical-occurrence semantics) and the cross-source attribution
-report, plus the ADVICE r10 assertions — the LSH candidate set covers
-every exact >=0.8 Jaccard pair on the check corpora (#1), and
-doc_stats emits EVERY document including clean ones (#3)."""
+report, plus the ADVICE r10 assertion that doc_stats emits EVERY
+document including clean ones (#3).  The LSH-coverage assertion (#1)
+lives in tests/test_dedup_pairs.py."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from tests.conftest import SF_SMOKE
-
-SF_GATE = "/root/testdata/sf0.01"
 
 
 # ---------------------------------------------------------------- apply
@@ -156,52 +151,3 @@ def test_exact_substring_attribution_direction(spark):
     }
     # docs 2 and 3 both borrow the 10-token window canonical in doc 1
     assert got == {("src_b", "src_a"): 2}
-
-
-# --------------------------------------------------- LSH coverage (#1)
-
-@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_GATE])
-def test_lsh_candidates_cover_exact_pairs(spark, sf_dir):
-    """ADVICE r10 #1: the stream dedup oracles model the minhash-LSH
-    screen as EXACT all-pairs Jaccard — valid only while the LSH
-    candidate set (64 hashes / 16 bands, the stream's config) covers
-    every exact >=0.8 pair on the check corpora.  Assert it does."""
-    from qaapi_spark.operators.dedup import (
-        _hashed_shingle_sets,
-        minhash_band_keys,
-        ngram_jaccard_pairs_auto,
-    )
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs_auto(d, 0.8, n=2).collect()
-    }
-    assert exact, "check corpus must contain true near-dup pairs"
-    sets = _hashed_shingle_sets(d, 2, "text", "doc_id")
-    signed = sets.filter(F.size("sh") > 0).select(
-        "id",
-        F.array(
-            *[
-                F.array_min(
-                    F.transform(F.col("sh"), lambda v: F.xxhash64(F.lit(i), v))
-                )
-                for i in range(64)
-            ]
-        ).alias("sig"),
-    )
-    bands = minhash_band_keys(signed, 64, 16)
-    cand = {
-        (r["id_a"], r["id_b"])
-        for r in bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-        .collect()
-    }
-    assert exact <= cand, f"LSH misses true pairs: {sorted(exact - cand)[:5]}"

@@ -1,7 +1,7 @@
 """Round-7 operator invariants beyond the oracle gate: sign-bit
 packing edge cases, binary-Hamming screen recall against brute-force
-cosine, and the probe-stripe sparse containment's equivalence to the
-full relation restricted to the stripe."""
+cosine, and hash-negative sampling.  (The probe-stripe containment test
+lives in tests/test_dedup_pairs.py.)"""
 
 from __future__ import annotations
 
@@ -54,25 +54,6 @@ def test_hamming_topk_exact_on_smoke(spark):
     for q, rs in by_q.items():
         assert len(rs) == 5
         assert all(r["cand_id"] != q for r in rs)
-
-
-def test_containment_sparse_stripe_equals_full_restricted(spark):
-    """The probe-stripe sparse containment must equal the unrestricted
-    relation filtered to the stripe (the stripe only prunes the src
-    side, never changes a surviving pair's score)."""
-    from qaapi_spark.operators.dedup import containment_pairs_sparse
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    full = {
-        (r["src"], r["dst"]): r["containment"]
-        for r in containment_pairs_sparse(d, 0.4).collect()
-        if r["src"] % 25 == 0
-    }
-    striped = {
-        (r["src"], r["dst"]): r["containment"]
-        for r in containment_pairs_sparse(d, 0.4, src_mod=25).collect()
-    }
-    assert striped == full and len(striped) > 0
 
 
 def test_hash_negative_samples_invariants(spark):

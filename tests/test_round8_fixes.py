@@ -1,60 +1,13 @@
-"""Round-8 regression tests for the ADVICE r7 fixes: the sparse
-containment route must reuse a memoized shingle relation instead of
-re-tokenizing, and the binary-Hamming screen must enforce its
-query-side driver/executor ceiling instead of assuming it."""
+"""Round-8 regression test for the ADVICE r7 fixes: the binary-Hamming
+screen must enforce its query-side driver/executor ceiling instead of
+assuming it.  (The memoized-shingle containment tests live in
+tests/test_dedup_pairs.py.)"""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-
-
-def test_containment_sparse_accepts_memoized_sets(spark):
-    """Passing a precomputed `_sets` relation must give the identical
-    pair set as the inline tokenize path (the auto selector hands its
-    persisted pricing relation through to the sparse route)."""
-    from qaapi_spark.operators.dedup import (
-        _hashed_shingle_sets,
-        containment_pairs_sparse,
-    )
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    inline = {
-        (r["src"], r["dst"]): r["containment"]
-        for r in containment_pairs_sparse(d, 0.4).collect()
-    }
-    sets = _hashed_shingle_sets(d, 2, "text", "doc_id").persist()
-    try:
-        memoized = {
-            (r["src"], r["dst"]): r["containment"]
-            for r in containment_pairs_sparse(d, 0.4, _sets=sets).collect()
-        }
-    finally:
-        sets.unpersist()
-    assert inline == memoized and len(inline) > 0
-
-
-def test_containment_auto_reuses_sets_on_sparse_route(spark):
-    """Force the sparse regime (dense_max_vocab=0) and verify the auto
-    selector's output still matches the direct sparse call — i.e. the
-    handed-through `_sets` relation computes the same pairs."""
-    from qaapi_spark.operators.dedup import (
-        containment_pairs_auto,
-        containment_pairs_sparse,
-    )
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    via_auto = {
-        (r["src"], r["dst"]): r["containment"]
-        for r in containment_pairs_auto(d, 0.4, dense_max_vocab=0).collect()
-    }
-    direct = {
-        (r["src"], r["dst"]): r["containment"]
-        for r in containment_pairs_sparse(d, 0.4).collect()
-    }
-    assert via_auto == direct and len(direct) > 0
 
 
 def test_hamming_query_ceiling_enforced(spark):
@@ -74,21 +27,3 @@ def test_hamming_query_ceiling_enforced(spark):
         assert len(out) == 12
     finally:
         sim._HAMMING_QUERY_MAX = old
-
-
-def test_dense_jaccard_inline_sets_single_tokenize(spark):
-    """Direct dense-kernel call (no _sets) still returns the exact
-    pair relation after the persist-for-the-guard fix."""
-    from qaapi_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_sparse,
-    )
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    dense = {
-        (r[0], r[1]): r[2] for r in ngram_jaccard_pairs(d, 0.3).collect()
-    }
-    sparse = {
-        (r[0], r[1]): r[2] for r in ngram_jaccard_pairs_sparse(d, 0.3).collect()
-    }
-    assert dense == sparse and len(dense) > 0

@@ -1,77 +1,13 @@
-"""Round-9 composed-pipeline tests (VERDICT r8 next #7): the
-span-granularity document MinHash and the budgeted two-stage
-SRP -> cross-encoder-style rerank pipeline."""
+"""Round-9 composed-pipeline tests (VERDICT r8 next #7): the budgeted
+two-stage SRP -> cross-encoder-style rerank pipeline and the
+corpus-to-shards stages.  (The span-granularity document MinHash tests
+live in tests/test_dedup_pairs.py.)"""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-
-
-def _span_sets(spark):
-    from qaapi_spark.plans.llm_text import _spark_spans
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    return _spark_spans(d).groupBy("doc_id").agg(
-        F.collect_set("span_key").alias("sh")
-    )
-
-
-def test_minhash_spans_equals_exact_span_jaccard(spark):
-    """The banded+verified output must equal the exact all-pairs
-    span-Jaccard relation (banding escape probability at j>=0.8 with
-    r=2 over 32 bands is ~7e-15, so any divergence is a bug, not
-    LSH variance)."""
-    from qaapi_spark.operators.dedup import minhash_lsh_verified_pairs_from_sets
-
-    sets = _span_sets(spark).persist()
-    try:
-        got = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in minhash_lsh_verified_pairs_from_sets(
-                sets, 0.8, num_hashes=64, n_bands=32, id_col="doc_id"
-            ).collect()
-        }
-        a = sets.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("sh").alias("sh_a"),
-            F.size("sh").alias("na"),
-        )
-        b = sets.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("sh").alias("sh_b"),
-            F.size("sh").alias("nb"),
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        exact = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in a.join(b, F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "jaccard", F.round(inter / (F.col("na") + F.col("nb") - inter), 4)
-            )
-            .filter(F.col("jaccard") >= 0.8)
-            .select("id_a", "id_b", "jaccard")
-            .collect()
-        }
-    finally:
-        sets.unpersist()
-    assert got == exact and len(got) > 0
-
-
-def test_minhash_from_sets_drops_empty_sets(spark):
-    """Ids with an empty element set must drop (no signature is
-    definable), not crash array_min or emit a pair."""
-    from qaapi_spark.operators.dedup import minhash_lsh_verified_pairs_from_sets
-
-    sets = spark.createDataFrame(
-        [(1, [10, 20, 30]), (2, [10, 20, 30]), (3, [])],
-        "doc_id long, sh array<long>",
-    )
-    rows = minhash_lsh_verified_pairs_from_sets(
-        sets, 0.8, num_hashes=64, n_bands=32, id_col="doc_id"
-    ).collect()
-    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in rows] == [(1, 2, 1.0)]
 
 
 def test_two_stage_ce_pool_containment_and_blend(spark):
