@@ -13,9 +13,17 @@ Catalyst expressions — no Python in the hot path:
   - SRP-LSH (signed random projection): the embedding analog of
     simhash.  Hyperplane signs come from a deterministic md5-seeded
     ±1 matrix, so the operator is reproducible across runs/engines
-    with no fitted model; signatures and the exact rerank are Arrow
-    GEMM kernels (dense vector math — see operators/similarity.py),
-    and the bucket join is an equi-join on (band, key) id-triples.
+    with no fitted model; signatures are an Arrow GEMM kernel (dense
+    vector math — see operators/similarity.py), and the bucket join is
+    an equi-join on (band, key) id-triples.
+
+The approximate top-k operators (SRP-LSH, PQ, IVFADC) and the dense
+tf-idf screen run on operators/similarity.py's one broadcast-query
+kernel: the query side (and the tf-idf vocabulary, and each codebook
+stripe) comes to the driver through ``_collect_bounded`` and its
+``_QUERY_MAX`` gate, ADC and fixed-point scores stream through
+``_stream_topk``'s per-batch partial top-k, and every candidate set is
+refined by ``_exact_rerank``.
 
 Scale notes (100 TB): TF-IDF/BM25 shuffle keys are (doc_id, term) —
 uniformly spread; the df-side broadcast stays small because vocabulary
@@ -28,12 +36,22 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Sequence
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from qaapi_spark.operators.similarity import (
+    _collect_bounded,
+    _exact_rerank,
+    _no_pairs,
+    _stream_topk,
+    _unit_rows,
+)
 from qaapi_spark.operators.textstats import ws_tokens
-from qaapi_spark.operators.windows import topk_per_group
 
 
 def term_frequencies(
@@ -90,7 +108,7 @@ def bm25_scores(
     toks = df.select(
         F.col(id_col).alias("id"), ws_tokens(F.lower(F.col(text_col))).alias("toks")
     ).select("id", "toks", F.size("toks").alias("dl"))
-    n_docs, sum_dl = toks.agg(F.count("*"), F.sum("dl")).collect()[0]
+    n_docs, sum_dl = toks.agg(F.count("*"), F.sum("dl")).first()
     avgdl = float(sum_dl) / float(n_docs)
 
     matches = (
@@ -138,8 +156,6 @@ def srp_quantize(m):
     the emb_quantize_int8 recipe: identical IEEE ops in numpy and SQL,
     so both engines derive bit-identical integers from the same raw
     embedding values."""
-    import numpy as np
-
     return np.floor(m.astype(np.float64) * _SRP_QUANT + 0.5).astype(np.int64)
 
 
@@ -151,8 +167,6 @@ def seq_unit_matrix(m):
     numpy's pairwise/SIMD ``linalg.norm`` drifts in the last ulp,
     which matters whenever a DISCRETE decision (argmin code, top-k
     cut) is taken on arithmetic derived from the unit vector."""
-    import numpy as np
-
     m = np.asarray(m, dtype=np.float64)
     acc = np.zeros(len(m), dtype=np.float64)
     for d in range(m.shape[1]):
@@ -187,11 +201,6 @@ def srp_band_keys(
     candidate set vs the SQL oracle.  |dot| <= dim * 1e6 * max|x|
     stays far under 2^53, so the DuckDB double-sum twin is exact too.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     rows_per_band = n_planes // n_bands
     planes = np.array(srp_sign_matrix(n_planes, dim), dtype=np.int64)  # (P, dim)
     weights = 2 ** np.arange(rows_per_band - 1, -1, -1, dtype=np.int64)
@@ -253,42 +262,33 @@ def srp_lsh_topk(
     measures recall@5 = 0.86 at the lowest corpus-touch (~45%) of any
     config reaching the >= 0.8 serving bar on the synthetic
     near-random embeddings; cost curve in SCALE.md round 9."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     # kernel work is per-row CPU; single-file inputs arrive as one
     # partition, so spread them across every core first
-    par = spark.sparkContext.defaultParallelism
-    corpus = corpus.repartition(par)
+    corpus = corpus.repartition(spark.sparkContext.defaultParallelism)
 
     # queries are the bounded side (they broadcast into the rerank
     # anyway): collect once, derive the dimension, their band keys AND
     # the unit matrix driver-side — no distributed stage for the query
     # side at all.
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_index = {int(i): n for n, i in enumerate(q_ids)}
-    b = spark.sparkContext.broadcast((q_index, q_mat))
+    q_ids, q_vecs = _collect_bounded(queries.select(id_col, vec_col), "srp_lsh_topk queries")
+    if not len(q_ids):
+        return _no_pairs(queries)
+    q_raw = np.stack(q_vecs).astype(np.float64)
 
-    dim = q_mat.shape[1]
+    dim = q_raw.shape[1]
     rows_per_band = n_planes // n_bands
     planes = np.array(srp_sign_matrix(n_planes, dim), dtype=np.int64)
     weights = 2 ** np.arange(rows_per_band - 1, -1, -1, dtype=np.int64)
     # bits from the RAW vectors via the same fixed-point quantization
     # as the corpus kernel (sign is scale-invariant, so normalization
-    # is irrelevant here; q_mat stays normalized for the exact rerank)
-    q_raw = np.array([r[1] for r in q_rows], dtype=np.float64)
+    # is irrelevant here; the unit rows feed the exact rerank)
     q_bits = (srp_quantize(q_raw) @ planes.T) > 0
     q_keys = q_bits.reshape(len(q_ids), n_bands, rows_per_band).astype(np.int64) @ weights
     # multi-probe: the exact key plus every key at Hamming distance
     # <= n_probe_flips (1-flip only: distance-2 probe sets grow
     # quadratically for marginal recall — measured round 9).  Probe
-    # keys may collide with each other (q_id, band, key) — the
+    # keys may collide with each other (query_id, band, key) — the
     # candidate dedup below absorbs that.
     probe_keys = [q_keys]
     if n_probe_flips >= 1:
@@ -299,7 +299,7 @@ def srp_lsh_topk(
     q = spark.createDataFrame(
         pd.DataFrame(
             {
-                "q_id": np.repeat(q_ids, n_bands * n_probes),
+                "query_id": np.repeat(q_ids, n_bands * n_probes),
                 "band": np.tile(
                     np.repeat(np.arange(n_bands, dtype=np.int64), n_probes),
                     len(q_ids),
@@ -307,44 +307,25 @@ def srp_lsh_topk(
                 "key": stacked.ravel(),
             }
         ),
-        "q_id long, band int, key long",
+        "query_id long, band int, key long",
     )
 
     c = srp_band_keys(corpus, n_planes, n_bands, dim, vec_col, id_col).select(
-        F.col("id").alias("c_id"), "band", "key"
+        F.col("id").alias("cand_id"), "band", "key"
     )
     # queries-side band keys broadcast; the only shuffle left is the
-    # candidate-pair dedup + the c_id vector re-join
+    # candidate-pair dedup + the cand_id vector re-join
     cand = (
         F.broadcast(q)
         .join(c, ["band", "key"])
         # self-pairs always collide (identical signatures) and would
         # burn one of the k slots on cosine(q, q) = 1 — exclude them
         # here, matching the brute-force/IVF contract
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id")
-        .dropDuplicates(["q_id", "c_id"])
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id")
+        .dropDuplicates(["query_id", "cand_id"])
     )
-
-    cvec = cand.join(
-        corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("cv")), "c_id"
-    )
-
-    def rerank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx, qm = b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            rows = np.array([idx[int(i)] for i in pdf["q_id"]], dtype=np.int64)
-            cos = np.round(np.einsum("ij,ij->i", qm[rows], cm), round_to)
-            yield pd.DataFrame(
-                {"query_id": pdf["q_id"], "cand_id": pdf["c_id"], "cosine": cos}
-            )
-
-    scored = cvec.mapInPandas(rerank, "query_id long, cand_id long, cosine double")
-    return topk_per_group(scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
+    return _exact_rerank(cand, corpus, (q_ids, _unit_rows(q_vecs)), k, id_col, vec_col, round_to)
 
 
 def pq_codebook(
@@ -372,25 +353,23 @@ def pq_codebook(
     codebook is ksub rows however large the corpus: a bounded driver
     collect, broadcast to executors.
     """
-    import numpy as np
-
     n_fetch = max(ksub, train_rows) if train_iters > 0 else ksub
-    rows = (
+    (rows,) = _collect_bounded(
         corpus.filter(F.col(id_col) % seed_mod == 0)
         .orderBy(id_col)
         .limit(n_fetch)
-        .select(vec_col)
-        .collect()
+        .select(vec_col),
+        "pq_codebook seeds",
+        n_fetch,
     )
-    seeds = np.array([r[0] for r in rows], dtype=np.float64)
     if train_iters == 0:
         # sampled codebook: fixed-point int64 (engine-exact — the
         # encode argmin and ADC sums become exact integer arithmetic
         # reproducible in SQL, the srp_band_keys recipe); sequential
         # left-fold norms so the unit vectors match DuckDB bit-for-bit
-        seeds = srp_quantize(seq_unit_matrix(seeds))
+        seeds = srp_quantize(seq_unit_matrix(np.stack(rows)))
     else:
-        seeds /= np.linalg.norm(seeds, axis=1, keepdims=True)
+        seeds = _unit_rows(rows)
     dim = seeds.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -415,11 +394,6 @@ def pq_encode(
     the codes relation is what sits in memory/storage for serving
     (m bytes/vector vs 4d); scoring reads codes, not vectors.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     b = spark.sparkContext.broadcast(np.asarray(codebook))
 
@@ -430,14 +404,13 @@ def pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            v = np.stack(pdf["v"].to_numpy()).astype(np.float64)
             if int_cb:
                 # sampled-codebook path: exact integer distances over
                 # fixed-point unit vectors (argmin ties -> lowest code,
                 # same as SQL's ROW_NUMBER ORDER BY d2, code)
-                v = srp_quantize(seq_unit_matrix(v))
+                v = srp_quantize(seq_unit_matrix(np.stack(pdf["v"].to_numpy())))
             else:
-                v /= np.linalg.norm(v, axis=1, keepdims=True)
+                v = _unit_rows(pdf["v"])
             sl = v.reshape(len(v), m_, dsub)  # (n, m, dsub)
             # nearest centroid per subspace under L2 == max dot - ||c||^2/2
             codes = np.empty((len(v), m_), dtype=np.int64)
@@ -479,111 +452,51 @@ def pq_topk(
     each batch), queries and tables broadcast, and the only joins are
     candidate-sized.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     corpus = corpus.repartition(spark.sparkContext.defaultParallelism)
     cb = pq_codebook(corpus, m, ksub, seed_mod, vec_col, id_col, train_iters)
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    dsub = q_mat.shape[1] // m
+    q_ids, q_vecs = _collect_bounded(queries.select(id_col, vec_col), "pq_topk queries")
+    if not len(q_ids):
+        return _no_pairs(queries)
+    q_raw = np.stack(q_vecs).astype(np.float64)
+    q_mat = _unit_rows(q_vecs)
+    dsub = q_raw.shape[1] // m
     # ADC tables: T[q, j, c] = q_slice_j . centroid_{j,c}
-    if np.issubdtype(np.asarray(cb).dtype, np.integer):
+    if np.issubdtype(cb.dtype, np.integer):
         # sampled path: quantized query slices x int codebook — exact
         # int64 table entries, so ADC sums are order-independent and
         # the candidate cut is SQL-reproducible
-        q_raw = np.array([r[1] for r in q_rows], dtype=np.float64)
         q_z = srp_quantize(seq_unit_matrix(q_raw))
         tables = np.einsum("qjd,jcd->qjc", q_z.reshape(len(q_ids), m, dsub), cb)
     else:
         tables = np.einsum("qjd,jcd->qjc", q_mat.reshape(len(q_ids), m, dsub), cb)
-    q_index = {int(i): n for n, i in enumerate(q_ids)}
-    b = spark.sparkContext.broadcast((q_index, q_mat, tables))
-    n_keep = k * rerank_factor
-    int_adc = np.issubdtype(np.asarray(cb).dtype, np.integer)
 
     codes = pq_encode(corpus, cb, vec_col, id_col)
 
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _, _, tb = b.value  # (Q, m, ksub)
-        jj = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            # approx[q, n] = sum_j tb[q, j, cm[n, j]]
-            approx = tb[:, jj, cm].sum(axis=2)  # (Q, n)
-            keep = min(n_keep, approx.shape[1])
-            if int_adc:
-                # sampled-codebook path: the per-batch cut must be
-                # deterministic on (approx desc, cand_id asc) — ties at
-                # the boundary are REAL under exact integer ADC, and an
-                # argpartition tie-break would diverge from the SQL
-                # oracle's ROW_NUMBER.  Any global-top-n_keep row ranks
-                # inside its own batch's top-n_keep under the same
-                # order, so the downstream global cut sees every row
-                # the oracle keeps.
-                part = np.lexsort(
-                    (np.broadcast_to(ids, approx.shape), -approx), axis=1
-                )[:, :keep]
-            else:
-                part = np.argpartition(-approx, keep - 1, axis=1)[:, :keep]
-            qq = np.repeat(np.arange(len(tb)), keep)
-            nn = part.ravel()
-            yield pd.DataFrame(
-                {
-                    "q_idx": qq,
-                    "cand_id": ids[nn],
-                    "approx": approx[qq, nn],
-                }
-            )
+    def adc(side, pdf):
+        ids, tb = side  # (Q,), (Q, m, ksub)
+        cm = np.stack(pdf["codes"].to_numpy()).astype(np.int64)  # (n, m)
+        # approx[q, n] = sum_j tb[q, j, cm[n, j]].  The per-batch cut is
+        # the kernel's (approx desc, cand_id asc) lexsort: ties at the
+        # boundary are REAL under exact integer ADC (sums < 2^53 stay
+        # exact as doubles), and an argpartition tie-break would
+        # diverge from the SQL oracle's ROW_NUMBER.
+        yield ids, pdf["id"].to_numpy(dtype=np.int64), tb[:, np.arange(m), cm].sum(axis=2).astype(np.float64)
 
-    partial = codes.mapInPandas(adc, "q_idx long, cand_id long, approx double")
     # a query present in the corpus ADC-scores its own code near the
     # top and would burn one of the k slots on cosine(q, q) = 1 —
-    # exclude self-pairs, matching the brute-force/IVF contract
-    ids_by_idx = {v: k for k, v in q_index.items()}
-    self_of = F.create_map(
-        *[F.lit(x) for pair in ids_by_idx.items() for x in pair]
-    )
+    # exclude self-pairs AFTER the k*rerank_factor cut, as the SQL
+    # oracle does
     cand = (
-        topk_per_group(partial, ["q_idx"], [F.desc("approx"), F.asc("cand_id")], n_keep)
-        .filter(F.col("cand_id") != self_of[F.col("q_idx")])
-        .select("q_idx", "cand_id")
-        .dropDuplicates(["q_idx", "cand_id"])
+        _stream_topk(
+            codes, (q_ids, tables), adc, k * rerank_factor, "query_id long, cand_id long, approx double"
+        )
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id")
+        .dropDuplicates(["query_id", "cand_id"])
     )
-    cvec = cand.join(
-        corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")),
-        "cand_id",
-    )
-
-    def rerank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx, qm, _ = b.value
-        ids_sorted = np.array(sorted(idx, key=lambda i: idx[i]), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            qrow = pdf["q_idx"].to_numpy(dtype=np.int64)
-            cos = np.round(np.einsum("ij,ij->i", qm[qrow], cm), round_to)
-            yield pd.DataFrame(
-                {
-                    "query_id": ids_sorted[qrow],
-                    "cand_id": pdf["cand_id"],
-                    "cosine": cos,
-                }
-            )
-
-    scored = cvec.mapInPandas(rerank, "query_id long, cand_id long, cosine double")
-    return topk_per_group(scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
+    return _exact_rerank(cand, corpus, (q_ids, q_mat), k, id_col, vec_col, round_to)
 
 
 def ivfpq_topk(
@@ -625,47 +538,42 @@ def ivfpq_topk(
     At 100 TB the code relation (m bytes + cell id per vector) IS the
     index; a query reads ~nprobe/n_cells of it.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     corpus = corpus.repartition(spark.sparkContext.defaultParallelism)
 
     # --- bounded driver-side index build (stripe collects only) -----
-    c_rows = (
+    c_ids, c_vecs = _collect_bounded(
         corpus.filter(F.col(id_col) % n_centroids_mod == 0)
         .orderBy(id_col)
-        .select(id_col, vec_col)
-        .collect()
+        .select(id_col, vec_col),
+        "ivfpq_topk coarse centroids",
     )
-    c_ids = np.array([r[0] for r in c_rows], dtype=np.int64)
-    c_raw = np.array([r[1] for r in c_rows], dtype=np.float64)
-    c_unit = c_raw / np.linalg.norm(c_raw, axis=1, keepdims=True)
+    c_raw = np.stack(c_vecs).astype(np.float64)
+    c_unit = _unit_rows(c_vecs)
     c_z = srp_quantize(seq_unit_matrix(c_raw))  # (C, d) int64
     dim = c_raw.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
 
-    def _assign(raw: np.ndarray) -> np.ndarray:
-        """Coarse-cell INDEX per row: rank (rounded cosine desc,
-        centroid_id asc) — identical to nearest_broadcast/the SQL
-        assigned CTE."""
-        un = raw / np.linalg.norm(raw, axis=1, keepdims=True)
-        sims = np.round(un @ c_unit.T, round_to)
-        return np.lexsort((np.broadcast_to(c_ids, sims.shape), -sims), axis=1)[:, 0]
+    def nearest_cells(vecs, ids: np.ndarray, unit: np.ndarray, n: int) -> np.ndarray:
+        """Indices of each row's n nearest coarse cells: rank (rounded
+        cosine desc, centroid_id asc) — identical to nearest_broadcast/
+        the SQL assigned CTE."""
+        sims = np.round(_unit_rows(vecs) @ unit.T, round_to)
+        return np.lexsort((np.broadcast_to(ids, sims.shape), -sims), axis=1)[:, :n]
 
-    seed_rows = (
+    (seed_rows,) = _collect_bounded(
         corpus.filter(F.col(id_col) % seed_mod == 0)
         .orderBy(id_col)
         .limit(ksub)
-        .select(vec_col)
-        .collect()
+        .select(vec_col),
+        "ivfpq_topk codebook seeds",
+        ksub,
     )
-    seed_raw = np.array([r[0] for r in seed_rows], dtype=np.float64)
-    seed_res = srp_quantize(seq_unit_matrix(seed_raw)) - c_z[_assign(seed_raw)]
+    seed_raw = np.stack(seed_rows).astype(np.float64)
+    seed_cell = nearest_cells(seed_rows, c_ids, c_unit, 1)[:, 0]
+    seed_res = srp_quantize(seq_unit_matrix(seed_raw)) - c_z[seed_cell]
     # (m, ksub, dsub) residual subquantizers — int64
     cb = np.ascontiguousarray(
         seed_res.reshape(len(seed_res), m, dsub).transpose(1, 0, 2)
@@ -680,9 +588,7 @@ def ivfpq_topk(
             if not len(pdf):
                 continue
             raw = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            un = raw / np.linalg.norm(raw, axis=1, keepdims=True)
-            sims = np.round(un @ unit_.T, round_to)
-            a = np.lexsort((np.broadcast_to(ids_, sims.shape), -sims), axis=1)[:, 0]
+            a = nearest_cells(pdf["v"], ids_, unit_, 1)[:, 0]
             res = srp_quantize(seq_unit_matrix(raw)) - z_[a]  # (n, d) int64
             sl = res.reshape(len(res), m, dsub)
             codes = np.empty((len(res), m), dtype=np.int64)
@@ -702,87 +608,41 @@ def ivfpq_topk(
     ).mapInPandas(encode, "id long, cell long, codes array<long>")
 
     # --- query-side tables: per (query, probed cell) ADC LUT ---------
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_raw = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_mat = q_raw / np.linalg.norm(q_raw, axis=1, keepdims=True)
+    q_ids, q_vecs = _collect_bounded(queries.select(id_col, vec_col), "ivfpq_topk queries")
+    if not len(q_ids):
+        return _no_pairs(queries)
+    q_raw = np.stack(q_vecs).astype(np.float64)
+    q_mat = _unit_rows(q_vecs)
     q_z = srp_quantize(seq_unit_matrix(q_raw))
-    sims = np.round(q_mat @ c_unit.T, round_to)
-    order = np.lexsort((np.broadcast_to(c_ids, sims.shape), -sims), axis=1)
-    probes = order[:, : min(nprobe, len(c_ids))]  # (Q, nprobe) cell indices
-    # tables[(cell_id)] -> (q_idx array, (nq, m, ksub) int64 LUTs)
+    probes = nearest_cells(q_vecs, c_ids, c_unit, nprobe)  # (Q, nprobe) cell indices
+    # by_cell[cell_id] -> (query ids probing it, (nq, m, ksub) int64 LUTs)
     by_cell: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     for ci in np.unique(probes):
         qq = np.nonzero((probes == ci).any(axis=1))[0]
         qr = q_z[qq] - c_z[ci]  # (nq, d)
         luts = np.einsum("qjd,jcd->qjc", qr.reshape(len(qq), m, dsub), cb)
-        by_cell[int(c_ids[ci])] = (qq.astype(np.int64), luts)
-    q_index = {int(i): n for n, i in enumerate(q_ids)}
-    b_q = spark.sparkContext.broadcast((q_index, q_mat, by_cell))
-    n_keep = k * rerank_factor
+        by_cell[int(c_ids[ci])] = (q_ids[qq], luts)
 
-    def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _, _, cells = b_q.value
-        jj = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_q, out_c, out_s = [], [], []
-            for cell, grp in pdf.groupby("cell"):
-                entry = cells.get(int(cell))
-                if entry is None:
-                    continue
-                qq, luts = entry  # (nq,), (nq, m, ksub)
+    def adc(side, pdf):
+        _, cells = side
+        for cell, grp in pdf.groupby("cell"):
+            entry = cells.get(int(cell))
+            if entry is not None:
+                qids, luts = entry
                 cm = np.stack(grp["codes"].to_numpy()).astype(np.int64)
-                ids = grp["id"].to_numpy(dtype=np.int64)
-                approx = luts[:, jj, cm].sum(axis=2)  # (nq, n)
-                keep = min(n_keep, approx.shape[1])
-                part = np.lexsort(
-                    (np.broadcast_to(ids, approx.shape), -approx), axis=1
-                )[:, :keep]
-                out_q.append(np.repeat(qq, keep))
-                out_c.append(ids[part.ravel()])
-                out_s.append(np.take_along_axis(approx, part, axis=1).ravel())
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "q_idx": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "approx": np.concatenate(out_s).astype(np.float64),
-                }
-            )
+                approx = luts[:, np.arange(m), cm].sum(axis=2)  # (nq, n) exact int64
+                yield qids, grp["id"].to_numpy(dtype=np.int64), approx.astype(np.float64)
 
-    partial = codes.mapInPandas(adc, "q_idx long, cand_id long, approx double")
-    ids_by_idx = {v: kk for kk, v in q_index.items()}
-    self_of = F.create_map(*[F.lit(x) for pair in ids_by_idx.items() for x in pair])
+    # self-pairs drop AFTER the k*rerank_factor cut, as in pq_topk
     cand = (
-        topk_per_group(partial, ["q_idx"], [F.desc("approx"), F.asc("cand_id")], n_keep)
-        .filter(F.col("cand_id") != self_of[F.col("q_idx")])
-        .select("q_idx", "cand_id")
-        .dropDuplicates(["q_idx", "cand_id"])
+        _stream_topk(
+            codes, (q_ids, by_cell), adc, k * rerank_factor, "query_id long, cand_id long, approx double"
+        )
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select("query_id", "cand_id")
+        .dropDuplicates(["query_id", "cand_id"])
     )
-    cvec = cand.join(
-        corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")),
-        "cand_id",
-    )
-
-    def rerank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx, qm, _ = b_q.value
-        ids_sorted = np.array(sorted(idx, key=lambda i: idx[i]), dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            qrow = pdf["q_idx"].to_numpy(dtype=np.int64)
-            cos = np.round(np.einsum("ij,ij->i", qm[qrow], cm), round_to)
-            yield pd.DataFrame(
-                {"query_id": ids_sorted[qrow], "cand_id": pdf["cand_id"], "cosine": cos}
-            )
-
-    scored = cvec.mapInPandas(rerank, "query_id long, cand_id long, cosine double")
-    return topk_per_group(scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
+    return _exact_rerank(cand, corpus, (q_ids, q_mat), k, id_col, vec_col, round_to)
 
 
 def tfidf_cosine_topk_dense(
@@ -817,32 +677,21 @@ def tfidf_cosine_topk_dense(
     then matches-only and never dense) — the jaccard auto-selector
     argument in reverse.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    spark = df.sparkSession
     w = tf_idf(df, text_col, id_col, n_docs=n_docs).select(
         "id", "term", F.round("tfidf", 6).alias("w")
     )
-    vocab_rows = w.groupBy("term").agg(F.max(F.abs(F.col("w"))).alias("wmax")).collect()
-    dict_rows = sorted(r["term"] for r in vocab_rows)
-    if len(dict_rows) > max_vocab:
-        raise ValueError(
-            f"vocabulary {len(dict_rows)} exceeds dense bound {max_vocab}; "
-            "use the posting-join formulation"
-        )
-    tindex = {t: i for i, t in enumerate(dict_rows)}
-    nv = len(dict_rows)
+    terms, wmax = _collect_bounded(
+        w.groupBy("term").agg(F.max(F.abs(F.col("w"))).alias("wmax")),
+        "tfidf_cosine_topk_dense vocabulary (over the dense bound: use the "
+        "posting-join formulation)",
+        max_vocab,
+    )
+    tindex = {t: i for i, t in enumerate(sorted(terms))}
+    nv = len(tindex)
     # Exactness guard on the GLOBAL weight max (corpus side included —
     # queries are just the id%query_mod stripe, so a doc-only large
     # weight would otherwise silently break the oracle's double sums).
-    z_max = max(
-        (float(int(r["wmax"] * quant + 0.5)) for r in vocab_rows),
-        default=1.0,
-    )
-    z_max = max(1.0, z_max)
+    z_max = max([1.0, *(float(int(x * quant + 0.5)) for x in wmax)])
     if nv * z_max * z_max >= 2**53:
         raise ValueError(
             f"fixed-point dot overflow: vocab {nv} x zmax {z_max:.0f}^2 "
@@ -850,54 +699,36 @@ def tfidf_cosine_topk_dense(
             "formulation"
         )
 
-    def pack(ids, terms, ws):
-        m = np.zeros((len(ids), nv), dtype=np.int64)
+    def pack(ti, terms, ws):
+        """(n, |vocab|) fixed-point tf-idf rows — one spelling for the
+        query side on the driver and each corpus batch."""
+        m = np.zeros((len(terms), len(ti)), dtype=np.int64)
         for row, (ts, vs) in enumerate(zip(terms, ws)):
-            cols = [tindex[t] for t in ts]
+            cols = [ti[t] for t in ts]
             m[row, cols] = np.floor(np.asarray(vs, dtype=np.float64) * quant + 0.5).astype(np.int64)
         return m
 
-    q_rows = (
-        w.filter(F.col("id") % query_mod == 0)
-        .groupBy("id")
-        .agg(F.collect_list("term").alias("ts"), F.collect_list("w").alias("vs"))
-        .collect()
+    def agg_rows(rel: DataFrame) -> DataFrame:
+        return rel.groupBy("id").agg(
+            F.collect_list("term").alias("ts"), F.collect_list("w").alias("vs")
+        )
+
+    q_ids, q_ts, q_vs = _collect_bounded(
+        agg_rows(w.filter(F.col("id") % query_mod == 0)), "tfidf_cosine_topk_dense queries"
     )
-    q_ids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-    q_mat = pack(q_ids, [r["ts"] for r in q_rows], [r["vs"] for r in q_rows])
+    q_mat = pack(tindex, q_ts, q_vs)
     q_norm = np.sqrt((q_mat.astype(np.float64) ** 2).sum(axis=1))
-    b = spark.sparkContext.broadcast((tindex, q_ids, q_mat, q_norm))
 
-    docs = w.groupBy("id").agg(
-        F.collect_list("term").alias("ts"), F.collect_list("w").alias("vs")
+    def score(side, pdf):
+        qi, qm, qn, ti = side
+        ids = pdf["id"].to_numpy(dtype=np.int64)
+        m = pack(ti, pdf["ts"], pdf["vs"])
+        num = qm @ m.T  # (Q, batch) exact int64
+        dn = np.sqrt((m.astype(np.float64) ** 2).sum(axis=1))
+        ls = np.round(num / (qn[:, None] * dn[None, :]), 4)
+        ls[qi[:, None] == ids[None, :]] = -np.inf  # self
+        yield qi, ids, ls
+
+    return _stream_topk(
+        agg_rows(w), (q_ids, q_mat, q_norm, tindex), score, k_pool, "qid long, did long, ls double"
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ti, qi, qm, qn = b.value
-        nv_ = len(ti)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            m = np.zeros((len(ids), nv_), dtype=np.int64)
-            for row, (ts, vs) in enumerate(zip(pdf["ts"], pdf["vs"])):
-                cols = [ti[t] for t in ts]
-                m[row, cols] = np.floor(
-                    np.asarray(vs, dtype=np.float64) * quant + 0.5
-                ).astype(np.int64)
-            num = qm @ m.T  # (Q, batch) exact int64
-            dn = np.sqrt((m.astype(np.float64) ** 2).sum(axis=1))
-            ls = np.round(num / (qn[:, None] * dn[None, :]), 4)
-            ls[qi[:, None] == ids[None, :]] = -np.inf  # self
-            kk = min(k_pool, ls.shape[1])
-            order = np.lexsort((np.broadcast_to(ids, ls.shape), -ls), axis=1)[:, :kk]
-            out_q = np.repeat(qi, kk)
-            out_d = ids[order].ravel()
-            out_s = np.take_along_axis(ls, order, axis=1).ravel()
-            keep = np.isfinite(out_s)
-            yield pd.DataFrame(
-                {"qid": out_q[keep], "did": out_d[keep], "ls": out_s[keep]}
-            )
-
-    partial = docs.mapInPandas(gen, "qid long, did long, ls double")
-    return topk_per_group(partial, ["qid"], [F.desc("ls"), F.asc("did")], k_pool)

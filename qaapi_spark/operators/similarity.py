@@ -2,21 +2,32 @@
 
 Physical strategy: dense vector math is the one place where built-in
 expression folds lose badly to vectorized kernels, so the hot paths are
-Arrow-batched numpy GEMMs inside ``mapInPandas`` (one matrix multiply
-per Arrow batch — no per-row Python, no shuffle added):
+Arrow-batched numpy kernels inside ``mapInPandas`` (one matrix multiply
+per Arrow batch — no per-row Python, no shuffle added).
 
-  - ``nearest_broadcast``: stream the big side, broadcast the small
-    reference matrix (queries / centroids); per batch compute
-    B x R^T and take per-row top-k.  This is the scale shape: the
-    streamed side is unbounded, the broadcast side bounded.
-  - brute-force top-k: stream *candidates*, broadcast *queries*,
-    emit per-batch partial top-k per query, then a tiny global
-    top-k reduce — exact ANN baseline that survives an unbounded
-    corpus.
-  - pair mining (cosine >= threshold): broadcast the normalized
-    corpus matrix and stream it against itself (upper triangle).
-    Bounded-corpus operator; at 100 TB swap in the block-id
-    cross-join variant (same kernel per block pair).
+Every broadcast-query top-k here and in operators/retrieval.py is one
+kernel built from three helpers:
+
+  - ``_collect_bounded``: the broadcast side (query set, centroid
+    codebook, vocabulary) reaches the driver in ONE Arrow collect of at
+    most ``_QUERY_MAX`` + 1 rows, and the operator fails loudly above
+    the gate.  The gate bounds both sides: every kernel builds an
+    (n_query x batch) score grid per Arrow batch.
+  - ``_stream_topk``: stream the big side, broadcast the small one.
+    Per Arrow batch an operator's scoring function builds the (query x
+    candidate) score grid — GEMM, ADC lookup, popcount or fixed-point
+    dot, masked cells -inf — one lexsort cut keeps each query's top k
+    on (score desc, cand_id asc), and one ``topk_per_group`` reduces
+    the partials.  The cut is lossless: a global top-k row is in its own
+    batch's top-k under the same order.  Candidates can be arbitrarily
+    large; queries must fit in a broadcast.
+  - ``_exact_rerank``: approximate screens (IVF probes, SRP buckets,
+    PQ and IVFADC codes) hand a (query_id, cand_id) candidate relation
+    to one exact-cosine re-rank — filter, then refine, in one place.
+
+Pair mining (cosine >= threshold) broadcasts the normalized corpus and
+streams it against itself (upper triangle): a bounded-corpus operator,
+with the block-pair variant for an unbounded corpus.
 
 Expression-level ``dot``/``l2_norm`` (zip_with + aggregate) are kept
 for row-at-a-time composition in other plans.
@@ -24,7 +35,7 @@ for row-at-a-time composition in other plans.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -32,17 +43,133 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from qaapi_spark.operators.dedup import _popcount_u64
 from qaapi_spark.operators.windows import topk_per_group
 
 _PAIR_SCHEMA = "query_id long, cand_id long, cosine double"
 
-# Driver/executor ceiling for the binary-Hamming screen's query-side
-# collect+broadcast: the screen kernel builds an (n_query x batch)
-# int64 grid per Arrow batch, so n_query is the memory lever on BOTH
-# sides.  8192 queries x ~10k-row batches = ~650 MB of transient grid
-# per task — the practical edge on local[32]; catalog queries use
-# a few hundred.
-_HAMMING_QUERY_MAX: int = 8192
+# Driver/executor ceiling for every broadcast-side collect here and in
+# operators/retrieval.py: each kernel builds an (n_query x batch) score
+# grid per Arrow batch, so n_query is the memory lever on BOTH sides.
+# 8192 queries x ~10k-row batches = ~650 MB of transient grid per task
+# — the practical edge on local[32]; catalog queries use a few hundred.
+# A corpus-sized "query" relation would blow executor memory before it
+# blew the driver, so fail fast with the fix (swap roles or shard the
+# query set).
+_QUERY_MAX: int = 8192
+
+
+def _collect_bounded(
+    df: DataFrame, what: str, max_rows: int | None = None
+) -> tuple[np.ndarray, ...]:
+    """One numpy array per column of ``df``, in select order, from ONE
+    Arrow collect of at most ``max_rows`` (default ``_QUERY_MAX``) + 1
+    rows; more rows than the gate raise before anything is broadcast.
+
+    Scalar columns come back typed, list columns as object arrays of
+    per-row arrays — what an Arrow batch's pandas column holds, so the
+    same helpers read both sides.  An empty relation gives zero-length
+    arrays."""
+    cap = _QUERY_MAX if max_rows is None else max_rows
+    tbl = df.limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
+        raise ValueError(
+            f"{what}: more than {cap} rows would be collected to the driver "
+            "and broadcast; shard the relation or raise the gate deliberately"
+        )
+    return tuple(col.to_numpy() for col in tbl.columns)
+
+
+def _unit_rows(vectors) -> np.ndarray:
+    """(n, d) float64 matrix of the L2-normalized vectors of a list
+    column (an Arrow batch's pandas column or a ``_collect_bounded``
+    one); float32 widens to float64 exactly, as the Row path does."""
+    if not len(vectors):
+        return np.zeros((0, 0))
+    m = np.stack(vectors).astype(np.float64)
+    m /= np.linalg.norm(m, axis=1, keepdims=True)
+    return m
+
+
+def _stream_topk(
+    stream: DataFrame,
+    side: tuple,
+    score: Callable[[tuple, pd.DataFrame], Iterator[tuple]],
+    k: int,
+    schema: str = _PAIR_SCHEMA,
+    reduce: bool = True,
+) -> DataFrame:
+    """Per-query top ``k`` of ``stream`` scored against the broadcast
+    ``side``, a tuple led by the broadcast ids (empty: no rows).
+
+    ``score(side, pdf)`` yields (query ids, cand ids, score grid) per
+    Arrow batch — one grid, or one per IVFADC cell — with masked cells
+    at -inf.  One lexsort cut on (-score, cand_id) keeps k rows per
+    query per grid and drops non-finite cells; ``schema`` names the
+    (query, cand, score) columns, and one ``topk_per_group`` reduces the
+    partials unless ``reduce=False`` (each streamed row is a query)."""
+    q_col, c_col, s_col = (f.split()[0] for f in schema.split(","))
+    b = stream.sparkSession.sparkContext.broadcast(side)
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        side_ = b.value
+        if not len(side_[0]):
+            return
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            for q, c, s in score(side_, pdf):
+                kk = min(k, s.shape[1])
+                # rank by (-score, cand_id): lexsort is stable + deterministic
+                order = np.lexsort((np.broadcast_to(c, s.shape), -s), axis=1)[:, :kk]
+                cut = np.take_along_axis(s, order, axis=1).ravel()
+                keep = np.isfinite(cut)
+                yield pd.DataFrame(
+                    {q_col: np.repeat(q, kk)[keep], c_col: c[order].ravel()[keep], s_col: cut[keep]}
+                )
+
+    partial = stream.mapInPandas(gen, schema)
+    if not reduce:
+        return partial
+    return topk_per_group(partial, [q_col], [F.desc(s_col), F.asc(c_col)], k)
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    corpus: DataFrame,
+    q_side: tuple[np.ndarray, np.ndarray],
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_to: int = 4,
+) -> DataFrame:
+    """Exact-cosine top ``k`` over a (query_id, cand_id) candidate
+    relation: join each candidate's corpus vector, dot it with its
+    query's row of the broadcast ``q_side`` = (ids, unit rows), round,
+    and reduce on (cosine desc, cand_id asc).  Only candidate-sized
+    relations touch the full-precision vectors."""
+    b = cand.sparkSession.sparkContext.broadcast(q_side)
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        q_ids, q_mat = b.value
+        by_id = np.argsort(q_ids)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            qid = pdf["query_id"].to_numpy(dtype=np.int64)
+            rows = by_id[np.searchsorted(q_ids, qid, sorter=by_id)]
+            cos = np.round(np.einsum("ij,ij->i", q_mat[rows], _unit_rows(pdf["cv"])), round_to)
+            yield pd.DataFrame({"query_id": qid, "cand_id": pdf["cand_id"], "cosine": cos})
+
+    vecs = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
+    pairs = cand.join(vecs, "cand_id").select("query_id", "cand_id", "cv")
+    scored = pairs.mapInPandas(score, _PAIR_SCHEMA)
+    return topk_per_group(scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
+
+
+def _no_pairs(df: DataFrame) -> DataFrame:
+    """The empty (query_id, cand_id, cosine) result of an empty query side."""
+    return df.sparkSession.createDataFrame([], _PAIR_SCHEMA)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -69,15 +196,6 @@ def with_unit_vector(df: DataFrame, vec_col: str, out_col: str = "unit_vec") -> 
     )
 
 
-def _collect_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, L2-normalized float64 matrix) for a broadcast-sized side."""
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    return ids, mat
-
-
 def nearest_broadcast(
     stream: DataFrame,
     ref: DataFrame,
@@ -94,34 +212,22 @@ def nearest_broadcast(
     The reference side is collected + broadcast (bounded: query sets,
     centroid codebooks); the streamed side is unbounded.  Output
     (query_id=stream id, cand_id=ref id, cosine), ranked
-    deterministically on (rounded cosine desc, cand_id asc).
+    deterministically on (rounded cosine desc, cand_id asc).  Each
+    streamed row is its own query, so the per-batch cut is final.
     """
-    r_ids, r_mat = _collect_matrix(ref, ref_id, ref_vec)
-    spark = stream.sparkSession
-    b = spark.sparkContext.broadcast((r_ids, r_mat))
+    r_ids, r_vecs = _collect_bounded(ref.select(ref_id, ref_vec), "nearest_broadcast reference")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat = b.value
-        for pdf in batches:
-            s = np.stack(pdf[stream_vec].to_numpy()).astype(np.float64)
-            s /= np.linalg.norm(s, axis=1, keepdims=True)
-            sims = np.round(s @ mat.T, round_to)  # (batch, n_ref)
-            s_ids = pdf[stream_id].to_numpy(dtype=np.int64)
-            if exclude_self:
-                mask = s_ids[:, None] == ids[None, :]
-                sims[mask] = -np.inf
-            kk = min(k, sims.shape[1])
-            # rank by (-cosine, cand_id): lexsort is stable + deterministic
-            order = np.lexsort((np.broadcast_to(ids, sims.shape), -sims), axis=1)[:, :kk]
-            out_q = np.repeat(s_ids, kk)
-            out_c = ids[order].ravel()
-            out_s = np.take_along_axis(sims, order, axis=1).ravel()
-            keep = np.isfinite(out_s)
-            yield pd.DataFrame(
-                {"query_id": out_q[keep], "cand_id": out_c[keep], "cosine": out_s[keep]}
-            )
+    def score(side, pdf):
+        ids, mat = side
+        s_ids = pdf[stream_id].to_numpy(dtype=np.int64)
+        sims = np.round(_unit_rows(pdf[stream_vec]) @ mat.T, round_to)  # (batch, n_ref)
+        if exclude_self:
+            sims[s_ids[:, None] == ids[None, :]] = -np.inf
+        yield s_ids, ids, sims
 
-    return stream.select(stream_id, stream_vec).mapInPandas(gen, _PAIR_SCHEMA)
+    return _stream_topk(
+        stream.select(stream_id, stream_vec), (r_ids, _unit_rows(r_vecs)), score, k, reduce=False
+    )
 
 
 def cosine_topk_bruteforce(
@@ -138,30 +244,18 @@ def cosine_topk_bruteforce(
     query per batch leave the executor), then a global top-k reduce.
     Candidates can be arbitrarily large; queries must fit in a broadcast.
     """
-    q_ids, q_mat = _collect_matrix(queries, id_col, vec_col)
-    spark = candidates.sparkSession
-    b = spark.sparkContext.broadcast((q_ids, q_mat))
+    q_ids, q_vecs = _collect_bounded(queries.select(id_col, vec_col), "cosine_topk_bruteforce queries")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat = b.value
-        for pdf in batches:
-            c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            sims = np.round(mat @ c.T, round_to)  # (n_query, batch)
-            sims[q_ids[:, None] == c_ids[None, :]] = -np.inf  # self-match
-            kk = min(k, sims.shape[1])
-            order = np.lexsort((np.broadcast_to(c_ids, sims.shape), -sims), axis=1)[:, :kk]
-            out_q = np.repeat(ids, kk)
-            out_c = c_ids[order].ravel()
-            out_s = np.take_along_axis(sims, order, axis=1).ravel()
-            keep = np.isfinite(out_s)
-            yield pd.DataFrame(
-                {"query_id": out_q[keep], "cand_id": out_c[keep], "cosine": out_s[keep]}
-            )
+    def score(side, pdf):
+        ids, mat = side
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        sims = np.round(mat @ _unit_rows(pdf[vec_col]).T, round_to)  # (n_query, batch)
+        sims[ids[:, None] == c_ids[None, :]] = -np.inf  # self-match
+        yield ids, c_ids, sims
 
-    partial = candidates.select(id_col, vec_col).mapInPandas(gen, _PAIR_SCHEMA)
-    return topk_per_group(partial, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
+    return _stream_topk(
+        candidates.select(id_col, vec_col), (q_ids, _unit_rows(q_vecs)), score, k
+    )
 
 
 def cosine_topk_filtered(
@@ -184,43 +278,26 @@ def cosine_topk_filtered(
     — so a low-selectivity filter costs nothing extra and a
     high-selectivity one still never shuffles the corpus.
     """
-    from typing import Iterator
-
-    import pandas as pd
-
     # one collect so ids/vectors/filter values share a row order
-    rows = queries.select(id_col, vec_col, filter_col).collect()
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_lab = np.array([r[2] for r in rows], dtype=np.int64)
-    spark = candidates.sparkSession
-    b = spark.sparkContext.broadcast((q_ids, q_mat, q_lab))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat, lab = b.value
-        for pdf in batches:
-            c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_lab = pdf[filter_col].to_numpy(dtype=np.int64)
-            sims = np.round(mat @ c.T, round_to)  # (n_query, batch)
-            sims[ids[:, None] == c_ids[None, :]] = -np.inf  # self-match
-            sims[lab[:, None] != c_lab[None, :]] = -np.inf  # filter
-            kk = min(k, sims.shape[1])
-            order = np.lexsort((np.broadcast_to(c_ids, sims.shape), -sims), axis=1)[:, :kk]
-            out_q = np.repeat(ids, kk)
-            out_c = c_ids[order].ravel()
-            out_s = np.take_along_axis(sims, order, axis=1).ravel()
-            keep = np.isfinite(out_s)
-            yield pd.DataFrame(
-                {"query_id": out_q[keep], "cand_id": out_c[keep], "cosine": out_s[keep]}
-            )
-
-    partial = candidates.select(id_col, vec_col, filter_col).mapInPandas(
-        gen, _PAIR_SCHEMA
+    q_ids, q_vecs, q_lab = _collect_bounded(
+        queries.select(id_col, vec_col, filter_col), "cosine_topk_filtered queries"
     )
-    return topk_per_group(partial, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
+
+    def score(side, pdf):
+        ids, mat, lab = side
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        c_lab = pdf[filter_col].to_numpy(dtype=np.int64)
+        sims = np.round(mat @ _unit_rows(pdf[vec_col]).T, round_to)  # (n_query, batch)
+        sims[ids[:, None] == c_ids[None, :]] = -np.inf  # self-match
+        sims[lab[:, None] != c_lab[None, :]] = -np.inf  # filter
+        yield ids, c_ids, sims
+
+    return _stream_topk(
+        candidates.select(id_col, vec_col, filter_col),
+        (q_ids, _unit_rows(q_vecs), q_lab.astype(np.int64)),
+        score,
+        k,
+    )
 
 
 def mmr_topk(
@@ -250,10 +327,6 @@ def mmr_topk(
     every step's score arithmetic is bit-identical in DuckDB and the
     k greedy rounds unroll as chained CTEs (the Lloyd trick).
     """
-    from typing import Iterator  # noqa: F401
-
-    import pandas as pd
-
     pool_df = cosine_topk_bruteforce(
         queries, candidates, pool, id_col=id_col, vec_col=vec_col, round_to=round_to
     )
@@ -262,8 +335,7 @@ def mmr_topk(
 
     def mmr(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("cand_id", ignore_index=True)
-        m = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
+        m = _unit_rows(pdf["cv"])
         sims = np.round(m @ m.T, round_to)
         rel = pdf["cosine"].to_numpy(dtype=np.float64)
         cids = pdf["cand_id"].to_numpy(dtype=np.int64)
@@ -308,20 +380,18 @@ def embedding_near_dup_pairs(
     """All pairs (id_a < id_b) with cosine >= threshold (exact).
 
     Streams the corpus against a broadcast of itself (upper-triangle
-    GEMM).  Bounded-corpus shape: for an unbounded corpus, grid the
-    ids into blocks and run the same kernel per block pair.
+    GEMM), so the corpus is the broadcast side and ``_QUERY_MAX`` bounds
+    it.  Bounded-corpus shape: for an unbounded corpus, grid the ids
+    into blocks and run the same kernel per block pair.
     """
-    a_ids, a_mat = _collect_matrix(df, id_col, vec_col)
-    spark = df.sparkSession
-    b = spark.sparkContext.broadcast((a_ids, a_mat))
+    a_ids, a_vecs = _collect_bounded(df.select(id_col, vec_col), "embedding_near_dup_pairs corpus")
+    b = df.sparkSession.sparkContext.broadcast((a_ids, _unit_rows(a_vecs)))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat = b.value
         for pdf in batches:
-            s = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            s /= np.linalg.norm(s, axis=1, keepdims=True)
             s_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            sims = np.round(s @ mat.T, round_to)
+            sims = np.round(_unit_rows(pdf[vec_col]) @ mat.T, round_to)
             ii, jj = np.nonzero((sims >= threshold) & (s_ids[:, None] < ids[None, :]))
             yield pd.DataFrame(
                 {"query_id": s_ids[ii], "cand_id": ids[jj], "cosine": sims[ii, jj]}
@@ -354,8 +424,6 @@ def embedding_near_dup_pairs_blocked(
     the corpus: memory per task is two blocks, shuffle is keyed on the
     block pair.  Output identical to ``embedding_near_dup_pairs``.
     """
-    from typing import Iterator  # noqa: F401
-
     blk = (F.col(id_col) % n_blocks).cast("int")
     tagged = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), blk.alias("blk"))
     # replicate each row to all block pairs (min(bi,bj), max(bi,bj))
@@ -380,13 +448,9 @@ def embedding_near_dup_pairs_blocked(
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
             )
-        lm = np.stack(left["vec"].to_numpy()).astype(np.float64)
-        lm /= np.linalg.norm(lm, axis=1, keepdims=True)
-        rm = np.stack(right["vec"].to_numpy()).astype(np.float64)
-        rm /= np.linalg.norm(rm, axis=1, keepdims=True)
         l_ids = left["id"].to_numpy(dtype=np.int64)
         r_ids = right["id"].to_numpy(dtype=np.int64)
-        sims = np.round(lm @ rm.T, round_to)
+        sims = np.round(_unit_rows(left["vec"]) @ _unit_rows(right["vec"]).T, round_to)
         if bi == bj:
             # same-block: matrix holds both orderings; count each once
             ii, jj = np.nonzero((sims >= threshold) & (l_ids[:, None] < r_ids[None, :]))
@@ -431,16 +495,14 @@ def cosine_topk_ivf(
     (1) assign candidates to nearest centroid (broadcast codebook GEMM,
     map-only), (2) probe top-nprobe centroids per query, (3)
     shuffle-join probes x assignments on centroid_id and score only
-    those pairs.
+    those pairs (``_exact_rerank``).
 
     A caller may hand in a prefit codebook relation
     (``cents``: centroid_id, cvec) — e.g. the engine-exact distributed
     Lloyd centroids (operators/kmeans.lloyd_centroids_distributed),
     which keeps the trained-codebook configuration SQL-reproducible.
     """
-    if cents is not None:
-        pass
-    elif train_iters > 0:
+    if cents is None and train_iters > 0:
         from qaapi_spark.operators.kmeans import spherical_kmeans, training_sample
 
         sample = training_sample(candidates, train_rows, id_col, vec_col)
@@ -450,7 +512,7 @@ def cosine_topk_ivf(
             [(i, [float(x) for x in v]) for i, v in enumerate(fitted)],
             "centroid_id long, cvec array<double>",
         )
-    else:
+    elif cents is None:
         cents = candidates.filter(F.col(id_col) % n_centroids_mod == 0).select(
             F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec")
         )
@@ -463,31 +525,11 @@ def cosine_topk_ivf(
         ref_id="centroid_id", ref_vec="cvec", round_to=round_to,
     ).select(F.col("query_id"), F.col("cand_id").alias("centroid_id"))
 
-    cand_vecs = candidates.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"))
-    pairs = (
-        probes.join(assigned, "centroid_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .join(cand_vecs, "cand_id")
+    pairs = probes.join(assigned, "centroid_id").filter(F.col("query_id") != F.col("cand_id"))
+    q_ids, q_vecs = _collect_bounded(queries.select(id_col, vec_col), "cosine_topk_ivf queries")
+    return _exact_rerank(
+        pairs, candidates, (q_ids, _unit_rows(q_vecs)), k, id_col, vec_col, round_to
     )
-    q_ids, q_mat = _collect_matrix(queries, id_col, vec_col)
-    spark = candidates.sparkSession
-    b = spark.sparkContext.broadcast({int(i): v for i, v in zip(q_ids, q_mat)})
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmap = b.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c = np.stack(pdf["cvec"].to_numpy()).astype(np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
-            q = np.stack([qmap[int(x)] for x in pdf["query_id"]])
-            sims = np.round(np.einsum("ij,ij->i", q, c), round_to)
-            yield pd.DataFrame(
-                {"query_id": pdf["query_id"], "cand_id": pdf["cand_id"], "cosine": sims}
-            )
-
-    scored = pairs.select("query_id", "cand_id", "cvec").mapInPandas(score, _PAIR_SCHEMA)
-    return topk_per_group(scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k)
 
 
 def sign_bits(vec: Column, d: int = 64) -> Column:
@@ -536,74 +578,48 @@ def hamming_topk_binary(
     sets ever touch the full-precision vectors again (the float
     corpus is joined, not broadcast).  Deterministic ranking:
     (hamming asc, cand_id) for the pool, (rounded cosine desc,
-    cand_id) for the final k.
+    cand_id) for the final k.  The rerank is a JVM sequential fold
+    (``dot``), not ``_exact_rerank``'s numpy dot: it carries the pool's
+    ``hamming`` column through, and its rounded cosines are the ones
+    the oracle hash-checks.
 
     Contract: ``queries`` must be a subset (by ``id_col``) of
     ``candidates`` — the query bit vectors are read off the corpus
     packing, so an out-of-corpus query returns no rows.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from qaapi_spark.operators.dedup import _popcount_u64
-
-    spark = queries.sparkSession
     cb = candidates.select(
         F.col(id_col).alias("cand_id"), sign_bits(F.col(vec_col), d).alias("cbits")
     )
     # Query bits come off the same corpus packing (queries are a
     # filtered view of the corpus in every catalog use) — one bounded
     # collect of the query stripe's packed ints, broadcast to the
-    # screen kernel.  The bound is ENFORCED, not assumed (ADVICE r7
-    # #3, same contract as the dense-Jaccard pack's driver ceiling):
-    # the screen also materializes a (n_query x batch) int64 distance
-    # grid per Arrow batch, so a corpus-sized "query" relation would
-    # blow executor memory before it blew the driver — fail fast with
-    # the fix (swap roles or shard the query set).
-    q_stripe = cb.join(
-        F.broadcast(queries.select(F.col(id_col).alias("cand_id"))),
-        "cand_id",
-        "left_semi",
-    ).limit(_HAMMING_QUERY_MAX + 1)
-    q_rows = q_stripe.collect()
-    if len(q_rows) > _HAMMING_QUERY_MAX:
-        raise ValueError(
-            f"hamming_topk_binary: > {_HAMMING_QUERY_MAX} query vectors "
-            "would be collected/broadcast to the screen kernel; shard "
-            "the query relation or raise _HAMMING_QUERY_MAX deliberately"
-        )
-    q_ids = np.array([r["cand_id"] for r in q_rows], dtype=np.int64)
-    q_bits = np.array([r["cbits"] for r in q_rows], dtype=np.int64).view(np.uint64)
-    bq = spark.sparkContext.broadcast((q_ids, q_bits))
-
-    def screen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, bits = bq.value
-        if not len(ids):
-            return
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf["cand_id"].to_numpy(dtype=np.int64)
-            c_bits = pdf["cbits"].to_numpy(dtype=np.int64).view(np.uint64)
-            # (n_query, batch) XOR + popcount, int16-sized values
-            hd = _popcount_u64(bits[:, None] ^ c_bits[None, :]).astype(np.int64)
-            hd[ids[:, None] == c_ids[None, :]] = np.iinfo(np.int64).max  # self
-            kk = min(rerank_pool, hd.shape[1])
-            order = np.lexsort((np.broadcast_to(c_ids, hd.shape), hd), axis=1)[:, :kk]
-            out_q = np.repeat(ids, kk)
-            out_c = c_ids[order].ravel()
-            out_h = np.take_along_axis(hd, order, axis=1).ravel()
-            keep = out_h < np.iinfo(np.int64).max
-            yield pd.DataFrame(
-                {"query_id": out_q[keep], "cand_id": out_c[keep], "hamming": out_h[keep]}
-            )
-
-    partial = cb.mapInPandas(screen, "query_id long, cand_id long, hamming long")
-    pool = topk_per_group(
-        partial, ["query_id"], [F.asc("hamming"), F.asc("cand_id")], rerank_pool
+    # screen kernel.
+    q_ids, q_bits = _collect_bounded(
+        cb.join(
+            F.broadcast(queries.select(F.col(id_col).alias("cand_id"))),
+            "cand_id",
+            "left_semi",
+        ),
+        "hamming_topk_binary queries",
     )
+
+    def screen(side, pdf):
+        ids, bits = side
+        c_ids = pdf["cand_id"].to_numpy(dtype=np.int64)
+        c_bits = pdf["cbits"].to_numpy(dtype=np.int64).view(np.uint64)
+        # (n_query, batch) XOR + popcount; the pool ranks distance
+        # ascending, so the score is the negated distance
+        neg = -_popcount_u64(bits[:, None] ^ c_bits[None, :]).astype(np.float64)
+        neg[ids[:, None] == c_ids[None, :]] = -np.inf  # self
+        yield ids, c_ids, neg
+
+    pool = _stream_topk(
+        cb,
+        (q_ids, q_bits.view(np.uint64)),
+        screen,
+        rerank_pool,
+        "query_id long, cand_id long, neg_hamming double",
+    ).select("query_id", "cand_id", (-F.col("neg_hamming")).cast("long").alias("hamming"))
     uq = with_unit_vector(queries, vec_col).select(
         F.col(id_col).alias("query_id"), F.col("unit_vec").alias("uq")
     )

@@ -21,8 +21,11 @@ def duck():
 # through hash-check in the default tier too: the streaming twins
 # (streaming/epochs.py), the curated-table pipeline, compaction and
 # maintained views (the crash-safe directory swap in sources/tables.py),
-# and the dedup family plus the two near-dup graph queries (the LSH
-# toolkit and pair kernels in operators/dedup.py).
+# the dedup family plus the two near-dup graph queries (the LSH
+# toolkit and pair kernels in operators/dedup.py), and the vector
+# retrieval family (the broadcast-query top-k kernel in
+# operators/similarity.py; rows-only ann_topk_pq gets the determinism
+# check).
 _DEFAULT_TIER = (
     "stream_",
     "calabrio_pipeline_",
@@ -31,6 +34,12 @@ _DEFAULT_TIER = (
     "dedup_",
     "graph_pagerank_neardup",
     "graph_triangles_neardup",
+    "ann_",
+    "knn_",
+    "mmr_",
+    "hybrid_",
+    "pairs_mine_",
+    "retrieval_two_stage_ce",
 )
 
 

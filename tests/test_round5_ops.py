@@ -1,7 +1,8 @@
 """Round-5 operator invariants beyond the oracle gate: streamed-store
 equivalence for the PQ code index, triangle counts against an
-independent python recomputation, IVFADC determinism, and the
-unit-variance property whitening exists to provide."""
+independent python recomputation, and the unit-variance property
+whitening exists to provide.  (IVFADC determinism lives in
+tests/test_retrieval.py.)"""
 
 from __future__ import annotations
 
@@ -70,19 +71,6 @@ def test_triangles_match_python_recount(spark):
         assert t == tri[n], (n, t, tri[n])
         want_cc = round(2.0 * tri[n] / (deg * (deg - 1)), 4) if deg >= 2 else 0.0
         assert abs(cc - want_cc) < 1e-9
-
-
-def test_ivfpq_is_deterministic(spark):
-    """Two independent runs must produce identical rows — the exact
-    integer tie-breaks leave no room for run-to-run drift."""
-    from qaapi_spark.operators.retrieval import ivfpq_topk
-    from qaapi_spark.plans.catalog import t
-
-    e = t(spark, SF_SMOKE, "embeddings")
-    qs = e.filter(F.col("vec_id") % 100 == 0)
-    a = sorted(map(tuple, ivfpq_topk(qs, e, 5).collect()))
-    b = sorted(map(tuple, ivfpq_topk(qs, e, 5).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_whitening_axes_have_unit_variance(spark):

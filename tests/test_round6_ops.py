@@ -1,10 +1,8 @@
 """Round-6 operator invariants beyond the oracle gate: streamed moment
-store equals the batch covariance bit-for-bit (addition-mergeability),
-and filtered ANN's label restriction + per-label brute-force parity."""
+store equals the batch covariance bit-for-bit (addition-mergeability).
+(The filtered-ANN and MMR tests live in tests/test_retrieval.py.)"""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
@@ -29,88 +27,3 @@ def test_stream_covariance_equals_batch(spark):
         )
     )
     assert streamed == batch and len(streamed) > 0
-
-
-def test_filtered_ann_matches_per_label_bruteforce(spark):
-    """Every filtered result shares its query's label, and the ranking
-    equals unfiltered brute-force run on each label slice separately."""
-    from qaapi_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_filtered,
-    )
-
-    e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    qs = e.filter(F.col("vec_id") % 100 == 0)
-    got = cosine_topk_filtered(qs, e, 5).collect()
-    assert got, "query stripe must be non-empty"
-
-    lab = {r["vec_id"]: r["label"] for r in e.select("vec_id", "label").collect()}
-    for r in got:
-        assert lab[r["query_id"]] == lab[r["cand_id"]], r
-
-    want = []
-    for lb in sorted({lab[r["query_id"]] for r in got}):
-        sl = e.filter(F.col("label") == lb)
-        want += [
-            tuple(r)
-            for r in cosine_topk_bruteforce(
-                qs.filter(F.col("label") == lb), sl, 5
-            ).collect()
-        ]
-    assert sorted(map(tuple, got)) == sorted(want)
-
-
-def test_mmr_rank1_is_top1_and_diversifies(spark):
-    """Rank-1 must equal the pure-relevance top-1; later ranks must
-    maximize the lam*rel-(1-lam)*redundancy objective — verified by an
-    independent python greedy over the same pool; and the planted
-    near-duplicate twins force at least one divergence from pure
-    top-k ordering somewhere in the query stripe."""
-    import numpy as np
-
-    from qaapi_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        mmr_topk,
-    )
-
-    e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    qs = e.filter(F.col("vec_id") % 100 == 0)
-    got = mmr_topk(qs, e, k=5, pool=10).collect()
-    assert got
-
-    top = cosine_topk_bruteforce(qs, e, 10).collect()
-    pool = {}
-    for r in top:
-        pool.setdefault(r["query_id"], []).append((r["cand_id"], r["cosine"]))
-    vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-            for r in e.collect()}
-
-    def greedy(qid):
-        cands = sorted(pool[qid])
-        cids = np.array([c for c, _ in cands])
-        rel = np.array([s for _, s in cands])
-        m = np.stack([vecs[c] for c in cids])
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        sims = np.round(m @ m.T, 4)
-        sel, out = [], []
-        rem = list(range(len(cids)))
-        while rem and len(sel) < 5:
-            cur = rel if not sel else 0.5 * rel - 0.5 * sims[:, sel].max(axis=1)
-            pick = min(rem, key=lambda i: (-cur[i], cids[i]))
-            sel.append(pick)
-            out.append((int(cids[pick]), float(np.round(cur[pick], 5)) + 0.0))
-            rem.remove(pick)
-        return out
-
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["cand_id"], r["mmr"]))
-    diverged = False
-    for qid, rows in by_q.items():
-        rows.sort()
-        want = greedy(qid)
-        assert [(c, s) for _, c, s in rows] == want, (qid, rows, want)
-        topk_ids = [c for c, _ in sorted(pool[qid], key=lambda cs: (-cs[1], cs[0]))[:5]]
-        if [c for _, c, _ in rows] != topk_ids:
-            diverged = True
-    assert diverged, "MMR never diversified — pool has no redundancy?"

@@ -3,11 +3,12 @@
 profile_stream.py says WHICH epoch is slow; this says WHY: it times
 every blocking driver action (collect/count/toPandas/parquet write)
 issued inside each epoch callback, with the action's plan description
-truncated, and counts Spark jobs per epoch via job groups.  Its one
-streaming patch point is the epoch runner's ``_epoch``
-(qaapi_spark/streaming/epochs.py); work an epoch submits to driver
-threads (par_writes, guard probes) is re-grouped inside the pool
-thread so overlapped jobs are counted too.
+truncated, and counts Spark jobs per epoch via job groups, with stages
+run and skipped counted apart and tasks counted as completed tasks
+(profile_query.stage_counts).  Its one streaming patch point is the
+epoch runner's ``_epoch`` (qaapi_spark/streaming/epochs.py); work an
+epoch submits to driver threads (par_writes, guard probes) is
+re-grouped inside the pool thread so overlapped jobs are counted too.
 
 Usage: python tools/profile_epoch_jobs.py <sf_dir> <catalog_name>
 """
@@ -25,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
 from pyspark.sql.readwriter import DataFrameWriter  # noqa: E402
 
+from profile_query import stage_counts  # noqa: E402  (tools/ is sys.path[0])
 from qaapi_spark.plans.catalog import CATALOG  # noqa: E402
 from qaapi_spark.session import get_spark  # noqa: E402
 
@@ -108,21 +110,12 @@ def main() -> None:
     print(f"\n== {name}: total={total:.2f}s rows={rows}")
     for group, wall in epoch_groups:
         jids = sorted(tracker.getJobIdsForGroup(group))
-        n_stages = n_tasks = 0
-        for jid in jids:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
+        ran, skipped, n_tasks = stage_counts(tracker, jids)
         acts = [(a, dt) for ph, a, dt in ACTIONS if ph == group]
         acts_s = sum(dt for _, dt in acts)
         print(
-            f"  {group}: wall={wall:.2f}s jobs={len(jids)} "
-            f"stages={n_stages} tasks={n_tasks} actions_sum={acts_s:.2f}s"
+            f"  {group}: wall={wall:.2f}s jobs={len(jids)} stages_run={ran} "
+            f"stages_skipped={skipped} tasks={n_tasks} actions_sum={acts_s:.2f}s"
         )
         for a, dt in acts:
             print(f"      {dt:6.2f}s  {a}")
@@ -135,7 +128,8 @@ def main() -> None:
                 for sid in ji.stageIds:
                     si = tracker.getStageInfo(sid)
                     if si is not None:
-                        names.append(f"{si.name}[{si.numTasks}]")
+                        done = si.numCompletedTasks
+                        names.append(f"{si.name}[{done if done else 'skipped'}]")
                 print(f"      job {jid}: {'; '.join(names)}")
 
 

@@ -6,7 +6,9 @@ dominated by fixed costs — number of jobs (driver round-trips), stages
 data-proportional compute.  This tool makes those counts visible per
 query so optimization targets the structure, not guesses.  Jobs are
 those in the query's job group plus the ungrouped jobs started while
-it ran (pool threads do not inherit the group).
+it ran (pool threads do not inherit the group).  Stages that ran and
+stages that were skipped print separately, and tasks count completed
+tasks (see ``stage_counts``).
 
 Usage: python tools/profile_query.py <sf_dir> [--repeat N] <name> [name...]
 """
@@ -21,6 +23,30 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from qaapi_spark.plans.catalog import CATALOG  # noqa: E402
 from qaapi_spark.session import get_spark, release_kernel_caches  # noqa: E402
+
+
+def stage_counts(tracker, job_ids) -> tuple[int, int, int]:
+    """(stages run, stages skipped, tasks completed) over ``job_ids``.
+
+    A job lists every stage of its lineage, but a stage whose shuffle
+    output already exists is skipped and completes no task, so counting
+    listed stages and their ``numTasks`` follows lineage depth, not
+    work done."""
+    ran = skipped = tasks = 0
+    for jid in job_ids:
+        ji = tracker.getJobInfo(jid)
+        if ji is None:
+            continue
+        for sid in ji.stageIds:
+            si = tracker.getStageInfo(sid)
+            if si is None:
+                continue
+            if si.numCompletedTasks > 0:
+                ran += 1
+                tasks += si.numCompletedTasks
+            else:
+                skipped += 1
+    return ran, skipped, tasks
 
 
 def main() -> None:
@@ -51,20 +77,10 @@ def main() -> None:
                 set(tracker.getJobIdsForGroup(group))
                 | (set(tracker.getJobIdsForGroup(None)) - ungrouped)
             )
-            n_stages = 0
-            n_tasks = 0
-            for jid in job_ids:
-                ji = tracker.getJobInfo(jid)
-                if ji is None:
-                    continue
-                for sid in ji.stageIds:
-                    si = tracker.getStageInfo(sid)
-                    if si is not None:
-                        n_stages += 1
-                        n_tasks += si.numTasks
+            ran, skipped, n_tasks = stage_counts(tracker, job_ids)
             print(
                 f"[{r}] {name}: {dt:.3f}s rows={n} jobs={len(job_ids)} "
-                f"stages={n_stages} tasks={n_tasks}",
+                f"stages_run={ran} stages_skipped={skipped} tasks={n_tasks}",
                 flush=True,
             )
             release_kernel_caches()
